@@ -23,6 +23,13 @@ object GraftFunctions {
     make(exprs(0), exprs(1))
   }
 
+  /** Argument `what` of `fn`, which must fold to an int literal. */
+  private def intLit(e: Expression, fn: String, what: String): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn $what must be an integer literal, got $other")
+  }
+
   private def unary(name: String, make: Expression => Expression)
       : Seq[Expression] => Expression = { exprs =>
     if (exprs.length != 1)
@@ -37,12 +44,8 @@ object GraftFunctions {
     if (exprs.length != 3)
       throw new IllegalArgumentException(
         s"topk_pairs expects exactly 3 arguments, got ${exprs.length}")
-    val k = exprs(2) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"topk_pairs k must be an integer literal, got $other")
-    }
-    TopKPairs(exprs(0), exprs(1), k).toAggregateExpression()
+    TopKPairs(exprs(0), exprs(1), intLit(exprs(2), "topk_pairs", "k"))
+      .toAggregateExpression()
   }
 
   /** `shingle_gen(text, k, step)` — k and step must fold to int
@@ -51,12 +54,8 @@ object GraftFunctions {
     if (exprs.length != 3)
       throw new IllegalArgumentException(
         s"shingle_gen expects exactly 3 arguments, got ${exprs.length}")
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"shingle_gen $what must be an integer literal, got $other")
-    }
-    ShingleGen(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "step"))
+    ShingleGen(exprs(0), intLit(exprs(1), "shingle_gen", "k"),
+      intLit(exprs(2), "shingle_gen", "step"))
   }
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -65,7 +64,9 @@ object GraftFunctions {
       binary("sorted_intersect_size", SortedIntersectSize(_, _)),
     "minhash_sigs" -> unary("minhash_sigs", MinHashSigs(_)),
     "topk_pairs" -> topkBuilder,
-    "shingle_gen" -> shingleBuilder)
+    "shingle_gen" -> shingleBuilder,
+    "ngram_hashes" -> binary("ngram_hashes",
+      (t, n) => NgramHashes(t, intLit(n, "ngram_hashes", "n"))))
 
   /** Register on an existing session's function registry, and install
     * the engine's optimizer rewrites ([[graft.plans.RewriteLongDot]])

@@ -72,8 +72,18 @@ object MinHashSigs {
   private val Prefixes: Array[Array[Byte]] =
     Array.tabulate(NumHashes)(h => (h.toString + ":").getBytes("UTF-8"))
 
-  private val Digest: ThreadLocal[java.security.MessageDigest] =
+  /** Per-thread MD5 instance, shared by the md5-based kernels. */
+  private[functions] val Digest: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
+
+  /** The first 15 hex chars of a digest read as a base-16 number (the
+    * oracles' `conv(substring(md5(x), 1, 15), 16, 10)`): the big-endian
+    * long of bytes 0..7 `>>> 4`. */
+  def prefix60(d: Array[Byte]): Long =
+    (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
+      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
+      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
 
   /** First 60 bits of md5(prefix ++ token) per hash function, min over
     * tokens. Called from generated code — keep it static and tight. */
@@ -93,12 +103,7 @@ object MinHashSigs {
           md.reset()
           md.update(Prefixes(h))
           md.update(tb)
-          val d = md.digest()
-          // 15 hex chars = first 60 bits: BE long of bytes 0..7 >>> 4
-          val v = (((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-            ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-            ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-            ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)) >>> 4
+          val v = prefix60(md.digest())
           if (v < mins(h)) mins(h) = v
           h += 1
         }

@@ -88,32 +88,51 @@ object Materialize {
     materializeOnce(df)
   }
 
-  /** Release a tagged frame EARLY — iterative trainers drop iteration
-    * k−1's cache once iteration k is materialized (nothing reads k−1
-    * afterwards; on eviction the lineage recomputes), so a K-round loop
-    * holds one round's model in storage, not K. */
-  private[graft] def release(tag: String): Unit =
-    Option(matRegistry.remove(tag)).foreach(_.unpersist(blocking = true))
-
   /** Run independent Spark ACTIONS concurrently (guide §2.6 — the
     * scheduler happily runs several jobs at once; they are only
     * sequential because driver code calls them sequentially): one
     * job's task tail back-fills cores the other's stages free. Only
     * for actions with NO data or ordering dependency (separate output
-    * tables/dirs); exceptions propagate unwrapped so callers fail the
-    * same way they would sequentially. */
-  private[graft] def inParallel(fs: (() => Unit)*): Unit = {
+    * tables/dirs). Every job a closure starts carries a job tag unique
+    * to this call (`addJobTag`, so the caller's job group is kept). On
+    * the FIRST failure the pool is interrupted and the tag's jobs are
+    * cancelled — again every [[CancelPollMs]] until every sibling has
+    * returned, so a sibling that goes on to start its next job (a
+    * multi-job write, ANALYZE after a write) sees it cancelled too —
+    * and only then does the exception propagate, unwrapped: a failed
+    * call leaves no sibling running. The wait is bounded by
+    * [[CancelWaitS]]; driver-side work that ignores interrupts past
+    * that bound may still be running when the exception surfaces.
+    * No closures: nothing runs. */
+  private[graft] def inParallel(spark: SparkSession)(fs: (() => Unit)*): Unit = {
+    if (fs.isEmpty) return
+    val sc = spark.sparkContext
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
     try {
-      val futs = fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = f()
-      }))
-      futs.foreach { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+      fs.foreach(f => done.submit(() => { sc.addJobTag(tag); f() }))
+      fs.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            pool.shutdownNow()
+            val deadline = System.nanoTime() + CancelWaitS * 1000L * 1000 * 1000
+            do sc.cancelJobsWithTag(tag)
+            while (!pool.awaitTermination(CancelPollMs,
+                java.util.concurrent.TimeUnit.MILLISECONDS) &&
+              System.nanoTime() < deadline)
+            sc.cancelJobsWithTag(tag)
+            throw e.getCause
+        }
       }
     } finally pool.shutdown()
   }
+
+  /** [[inParallel]]'s re-cancel interval and bound on the wait for the
+    * siblings after a failure. */
+  private val CancelPollMs = 50L
+  private val CancelWaitS = 60L
 
   /** FIFA teams source columns (from the reference's cast list,
     * `etl_kaggle_to_big_query.py:91-107`) → target types. */
@@ -499,7 +518,7 @@ object Materialize {
     val orders = graft.sources.Tables.orders(spark, dir)
       .filter(col("o_orderkey").isNotNull)
     // the two generation writes target disjoint dirs — concurrent (§2.6)
-    inParallel(
+    inParallel(spark)(
       () => orders.filter(pmod(col("o_orderkey"), lit(2)) === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$out/gen1"),
@@ -536,7 +555,7 @@ object Materialize {
     // The aggregate reads the SOURCE, not the partitioned copy, so it
     // runs concurrently with the write (§2.6)
     var cutoff: Option[String] = None
-    inParallel(
+    inParallel(spark)(
       () => dayed.write.mode("overwrite").partitionBy("day").parquet(out),
       () => cutoff = Option(evs
         .agg(expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2").as("m"))
@@ -723,7 +742,7 @@ object Materialize {
     // the two bucketed CTAS target different tables — run them as
     // concurrent jobs so the small customer write back-fills the
     // orders write's task tail (§2.6)
-    inParallel(
+    inParallel(spark)(
       () => writeBucketed(graft.sources.Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_totalprice")), ot, "o_custkey", 8),
       () => writeBucketed(graft.sources.Tables.customer(spark, dir)
@@ -776,7 +795,7 @@ object Materialize {
       df.write.mode("overwrite").format("parquet").saveAsTable(t)
     // three independent tables: run the CTAS writes as concurrent jobs
     // (§2.6) — the orders/customer slivers back-fill lineitem's tail
-    inParallel(
+    inParallel(spark)(
       () => ctas(graft.sources.Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_extendedprice")), liT),
       () => ctas(graft.sources.Tables.orders(spark, dir)
@@ -795,7 +814,7 @@ object Materialize {
       liT -> "l_orderkey",
       oT -> "o_orderkey, o_custkey, o_totalprice",
       cT -> "c_custkey")
-    inParallel(all.map(t => () => {
+    inParallel(spark)(all.map(t => () => {
       spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${statCols(t)}"): Unit
     }): _*)
   }
@@ -832,11 +851,11 @@ object Materialize {
     * size through the `o_totalprice > ...` filter (filters don't shrink
     * size-only estimates), so the join of the filtered slice into
     * lineitem plans as a sort-merge join under a low broadcast
-    * threshold; with `ANALYZE .. FOR ALL COLUMNS` + `spark.sql.cbo
-    * .enabled`, FilterEstimation's min/max range math collapses the
-    * estimate and the SAME query broadcasts the sliver instead (and
-    * CostBasedJoinReorder may rewrite the deliberately-bad user join
-    * order outright). PlanSpec pins the stats-driven flip both ways;
+    * threshold; with `ANALYZE .. FOR COLUMNS` on the join and filter
+    * columns + `spark.sql.cbo.enabled`, FilterEstimation's min/max
+    * range math collapses the estimate and the SAME query broadcasts
+    * the sliver instead (and CostBasedJoinReorder may rewrite the
+    * deliberately-bad user join order outright). PlanSpec pins the stats-driven flip both ways;
     * the oracle is the plain SQL — stats must be value-invisible. At
     * 100 TB this is the difference between shuffling a fact table to
     * meet a 0.1% dimension slice and shipping the slice to the fact

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NgramHashes
 import graft.sources.Tables
 
 /** Deduplication operators over `documents` (north-star: the dedup half of
@@ -737,35 +738,26 @@ object DedupOps {
     * signal a pipeline thresholds to drop or trim boilerplate-heavy docs.
     *
     * Scale shape (the suffix-array-free formulation that distributes):
-    * shingle (map-only fan-out, ~n_tokens rows/doc) → hash-groupBy on the
-    * window hash for cross-doc counts → shuffle join back onto the
-    * exploded windows → per-doc aggregate. Three key-partitioned
-    * shuffles, no all-pairs stage, no driver data path; a window shared
-    * by millions of docs is one aggregation row joined back, never a
-    * pair explosion. Windows are 60-bit numeric md5 prefixes, keeping
-    * both aggregates pure HashAggregates (the min(string) lesson).
-    * The exploded windows feed two branches (the cross-doc counts and
-    * the join-back probe), so they are MATERIALIZED once to process
-    * scratch — otherwise each branch re-runs the shingle+md5 fan-out,
-    * the most expensive stage of the query (the self-join
-    * re-evaluation lesson, same fix as GraphOps.triangleCount). */
+    * a round-robin spread of the documents, then the per-doc distinct
+    * window hashes (map-only fan-out, ~n_tokens rows/doc, hashed by the
+    * compiled [[graft.functions.NgramHashes]] kernel) → hash-groupBy on
+    * the window hash for cross-doc counts → shuffle join back onto the
+    * exploded windows → per-doc aggregate. Key-partitioned shuffles
+    * only, no all-pairs stage, no driver data path; a window shared by
+    * millions of docs is one aggregation row joined back, never a pair
+    * explosion. Windows are 60-bit numeric md5 prefixes, keeping both
+    * aggregates pure HashAggregates. The exploded windows feed two
+    * branches (the cross-doc counts and the join-back probe), so they
+    * are materialized once in executor storage instead of re-running
+    * the fan-out per branch. */
   def substringDedup(spark: SparkSession, dir: String): DataFrame = {
-    val K = SubstrWindow
-    val terms = (0 until K).map(j => s"element_at(t, i + $j)").mkString(", ")
-    // in-memory columnar materialization instead of the former scratch-
-    // parquet round-trip (two consumers: cross-doc counts + join-back);
-    // see the lmScore note
     val windows = graft.ingest.Materialize.materializeOnce("substringDedup.windows",
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism) // spread shingling
-        .withColumn("t", split(col("text"), " "))
         // <K-token docs have no windows (empty list, not a 0/0 row); the
         // oracle's generate_series(1, len-K+1) is empty the same way
-        .select(col("doc_id"), explode(expr(
-          s"CASE WHEN size(t) >= $K THEN array_distinct(transform(" +
-            s"sequence(1, size(t) - ${K - 1}), " +
-            s"i -> cast(conv(substring(md5(concat_ws(' ', $terms)), 1, 15), 16, 10) AS BIGINT))) " +
-            "ELSE array() END")).as("wh")))
+        .select(col("doc_id"), explode(array_distinct(NgramHashes.ngramHashes(
+          split(col("text"), " "), SubstrWindow))).as("wh")))
     val byWindow = windows.groupBy("wh")
       .agg(countDistinct(col("doc_id")).as("nd"))
     windows.join(byWindow, "wh")
@@ -796,32 +788,35 @@ object DedupOps {
     *
     * Scale shape: the eval side is benchmark-sized — BOUNDED by the
     * [[DecontamEvalCap]] id cap, not corpus-proportional — so its
-    * distinct window hashes BROADCAST, and the corpus side stays one
-    * map-only shingle fan-out + broadcast probe + per-doc hash
-    * aggregate: ZERO shuffles of corpus-sized data (the per-doc
-    * aggregate partials combine map-side). Window hashes are the same
-    * 60-bit md5 prefixes as [[substringDedup]], so the probe is a
-    * long-equality hash lookup. Output is bounded by contaminated docs
-    * only. */
+    * distinct window hashes BROADCAST. The corpus side is a map-only
+    * window fan-out (the compiled [[graft.functions.NgramHashes]]
+    * kernel) + broadcast probe + per-doc hash aggregate, whose partials
+    * combine map-side. When the training documents scan as fewer
+    * splits than there are cores (a corpus stored in few large row
+    * groups), one round-robin exchange spreads them over the cores
+    * first; a scan with a split per core is not shuffled. The bounded
+    * eval side is never spread: the split filters push below any
+    * exchange, so a spread shared by both sides would be two. Window
+    * hashes are the same 60-bit md5 prefixes as [[substringDedup]], so
+    * the probe is a long-equality hash lookup. Output is bounded by
+    * contaminated docs only. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val K = SubstrWindow
-    val terms = (0 until K).map(j => s"element_at(t, i + $j)").mkString(", ")
     // per-doc DISTINCT window hashes (multiplicity is dedup's concern,
     // not decontamination's), <K-token docs have no windows
     def windows(docs: DataFrame): DataFrame = docs
-      .withColumn("t", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(t) >= $K THEN array_distinct(transform(" +
-          s"sequence(1, size(t) - ${K - 1}), " +
-          s"i -> cast(conv(substring(md5(concat_ws(' ', $terms)), 1, 15), 16, 10) AS BIGINT))) " +
-          "ELSE array() END")).as("wh"))
+      .select(col("doc_id"), explode(array_distinct(NgramHashes.ngramHashes(
+        split(col("text"), " "), SubstrWindow))).as("wh"))
     val docs = Tables.documents(spark, dir)
       .filter(col("text").isNotNull && col("doc_id").isNotNull)
     val isEval = col("doc_id") % DecontamModulus === 0 &&
       col("doc_id") < DecontamEvalCap
     val evalWh = windows(docs.filter(isEval))
       .select(col("wh"), lit(1L).as("hit")).distinct()
-    windows(docs.filter(!isEval))
+    val train = docs.filter(!isEval)
+    val cores = spark.sparkContext.defaultParallelism
+    // planning only (no job): the scan's split count
+    val spread = if (train.rdd.getNumPartitions < cores) train.repartition(cores) else train
+    windows(spread)
       .join(broadcast(evalWh), Seq("wh"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_win"),

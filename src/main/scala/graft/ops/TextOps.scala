@@ -531,25 +531,23 @@ object TextOps {
     * is boilerplate — both ends of `known_permille` are filter signals.
     *
     * Same distributed shape as [[DedupOps.substringDedup]] at window
-    * size 2: explode pairs (materialized once to scratch — they feed
-    * the corpus counts AND the join-back), hash-aggregate on the 60-bit
-    * numeric pair hash, shuffle join back, per-doc aggregate. Pair
-    * identity is the md5 prefix in BOTH engines, so hash collisions
-    * (if any) collide identically in the oracle. */
+    * size 2: explode the pair hashes (the compiled
+    * [[graft.functions.NgramHashes]] kernel, materialized once — they
+    * feed the corpus counts AND the join-back), hash-aggregate on the
+    * 60-bit numeric pair hash, shuffle join back, per-doc aggregate.
+    * Pair identity is the md5 prefix in BOTH engines, so hash
+    * collisions (if any) collide identically in the oracle. */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    // in-memory columnar materialization instead of the former scratch-
-    // parquet round-trip: the exploded pair hashes feed two consumers
-    // (the cross-doc counts and the join-back probe); materializeOnce
-    // keeps the one computed copy in executor storage (spilling at
-    // scale) and skips the parquet encode+decode
+    // the exploded pair hashes feed two consumers (the cross-doc counts
+    // and the join-back probe); materializeOnce keeps the one computed
+    // copy in executor storage (spilling at scale). `split` never yields
+    // null tokens, so the kernel's concat_ws join equals the oracle's
+    // concat
     val pairs = graft.ingest.Materialize.materializeOnce("lmScore.pairs",
       Tables.documents(spark, dir)
         .filter(col("text").isNotNull)
-        .withColumn("t", toks)
-        .select(col("doc_id"), explode(expr(
-          "CASE WHEN size(t) >= 2 THEN transform(sequence(1, size(t)-1), i -> " +
-            "cast(conv(substring(md5(concat(element_at(t,i), ' ', element_at(t,i+1))), 1, 15), 16, 10) AS BIGINT)) " +
-            "ELSE CAST(array() AS ARRAY<BIGINT>) END")).as("ph")))
+        .select(col("doc_id"),
+          explode(graft.functions.NgramHashes.ngramHashes(toks, 2)).as("ph")))
     val byPair = pairs.groupBy("ph").agg(count(lit(1)).as("cnt"))
     pairs.join(byPair, "ph")
       .groupBy("doc_id")

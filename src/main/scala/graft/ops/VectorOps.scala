@@ -225,23 +225,21 @@ object VectorOps {
   val IvfIters = 5
 
   /** Nearest-centroid assignment (the IVF coarse quantizer): the
-    * centroid set rides along as ONE broadcast sorted array row and
-    * each vector picks its argmax-cosine centroid with the compiled
-    * [[graft.functions.ArgAssign.argmaxCosineCid]] loop — ZERO shuffle
-    * of the corpus, pure scan throughput at 100 TB. Ties keep the
+    * centroid set is ONE sorted array passed as a scalar subquery (run
+    * once per query, its value shipped with each task), and each vector
+    * picks its argmax-cosine centroid with the compiled
+    * [[graft.functions.ArgAssign.argmaxCosineCid]] loop, which decodes
+    * the model once per task — a projection over the corpus, ZERO
+    * shuffle and no join, pure scan throughput at 100 TB. Ties keep the
     * LOWEST cid (strict-> scan over the cid-ascending array ≡ the
-    * oracle's `cos DESC, cid ASC`). The previous higher-order
-    * `aggregate` fold interpreted its lambda per (row × centroid) —
-    * CodegenFallback, guide §4 — on the hottest per-row loop of the
-    * ANN family; ExpressionSpec pins bit-equality to the fold. */
+    * oracle's `cos DESC, cid ASC`). */
   private def assignToLists(e: DataFrame, cents: DataFrame): DataFrame = {
     val centArr = cents.agg(
-      sort_array(collect_list(struct(col("cid"), col("cv"), col("cnrm")))).as("cents"))
-    e.crossJoin(broadcast(centArr))
-      .select(
-        graft.functions.ArgAssign.argmaxCosineCid(
-          col("qv"), col("nrm"), col("cents")).as("list_id"),
-        col("vec_id"), col("qv"), col("nrm"))
+      sort_array(collect_list(struct(col("cid"), col("cv"), col("cnrm")))))
+    e.select(
+      graft.functions.ArgAssign.argmaxCosineCid(
+        col("qv"), col("nrm"), centArr.scalar()).as("list_id"),
+      col("vec_id"), col("qv"), col("nrm"))
   }
 
   /** TRAINED coarse quantizer: the strided seed set refined by
@@ -272,11 +270,10 @@ object VectorOps {
     * [[annLsh]], the IVF-flat shape of FAISS/Milvus re-expressed as
     * dataframes:
     *
-    *  1. ASSIGN (map-side, ZERO shuffle): the centroid set rides along
-    *     as one broadcast array row; each vector picks its nearest
-    *     centroid with a higher-order `aggregate` argmax — no
-    *     crossJoin row blowup, no shuffle of the corpus. At 100 TB
-    *     this pass is pure scan throughput.
+    *  1. ASSIGN (map-side, ZERO shuffle): [[assignToLists]] — the
+    *     centroid set is one scalar-subquery array; each vector picks
+    *     its nearest centroid in a projection, no join, no shuffle of
+    *     the corpus. At 100 TB this pass is pure scan throughput.
     *  2. PROBE: each query ranks centroids and keeps [[IvfProbes]]
     *     lists (16 queries × K centroids — negligible).
     *  3. SEARCH: probes broadcast-join onto their lists, exact cosine
@@ -356,21 +353,20 @@ object VectorOps {
 
   /** Nearest-codeword assignment under EXACT integer L2
     * (‖a−b‖² = ‖a‖² + ‖b‖² − 2a·b — three integer terms, no doubles
-    * anywhere in the PQ path): all M codebooks ride along as ONE
-    * broadcast (m, cid)-sorted array row; the scan skips other
-    * subspaces' codewords and keeps the lowest cid on a tie (strict <
-    * over the sorted array ≡ the oracle's `d ASC, cid ASC`). Zero
-    * shuffle of the corpus — the same scan-side shape as the IVF
-    * coarse quantizer, and the same compiled-loop replacement of the
-    * interpreted fold ([[graft.functions.ArgAssign.argminL2Cid]],
-    * guide §4; ExpressionSpec pins bit-equality). */
+    * anywhere in the PQ path): all M codebooks are ONE (m, cid)-sorted
+    * array passed as a scalar subquery; the compiled
+    * [[graft.functions.ArgAssign.argminL2Cid]] loop decodes it once per
+    * task into per-subspace codebooks, scans only the row's subspace
+    * and keeps the lowest cid on a tie (strict < in array order ≡ the
+    * oracle's `d ASC, cid ASC`). A projection over the corpus — no
+    * join, zero shuffle — the same scan-side shape as the IVF coarse
+    * quantizer. */
   private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame = {
     val cbArr = cb.agg(sort_array(collect_list(
-      struct(col("m"), col("cid"), col("cv"), col("cnrm")))).as("cbs"))
-    sub.crossJoin(broadcast(cbArr))
-      .select(col("vec_id"), col("m"), col("sv"), col("snrm"),
-        graft.functions.ArgAssign.argminL2Cid(
-          col("sv"), col("snrm"), col("m"), col("cbs")).as("cid"))
+      struct(col("m"), col("cid"), col("cv"), col("cnrm")))))
+    sub.select(col("vec_id"), col("m"), col("sv"), col("snrm"),
+      graft.functions.ArgAssign.argminL2Cid(
+        col("sv"), col("snrm"), col("m"), cbArr.scalar()).as("cid"))
   }
 
   /** The shared Lloyd UPDATE step: elementwise truncating integer mean
@@ -430,7 +426,7 @@ object VectorOps {
     * vector read:
     *
     *  1. TRAIN [[pqCodebooks]] (per-subspace Lloyd under L2);
-    *  2. ENCODE the corpus — zero-shuffle broadcast argmin;
+    *  2. ENCODE the corpus — zero-shuffle argmin ([[pqAssign]]);
     *  3. ADC: codes join the broadcast distance table on (m, cid),
     *     sum the M partial distances → [[PqShortlist]] candidates
     *     per query;
@@ -516,8 +512,8 @@ object VectorOps {
     * deduplication by cluster-then-compare: train the coarse quantizer
     * (the SAME [[trainedCentroids]] Lloyd's k-means the IVF index
     * uses), assign every vector to its nearest centroid with the
-    * zero-shuffle broadcast argmax, then compute pairwise cosine ONLY
-    * within a cluster and drop every vector that has a same-cluster
+    * zero-shuffle argmax of [[assignToLists]], then compute pairwise
+    * cosine ONLY within a cluster and drop every vector that has a same-cluster
     * neighbor with cosine ≥ [[SemDedupCos]] and a smaller vec_id (the
     * min-id member of any similar pair always survives — a
     * deterministic stand-in for the paper's random keeper). This is

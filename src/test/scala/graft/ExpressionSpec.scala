@@ -114,10 +114,35 @@ class ExpressionSpec extends AnyFunSuite {
     for ((k, v) <- ref) assert(fast(k) == v, s"group $k: ${fast(k)} != $v")
   }
 
+  /** The interpreted argmax-cosine fold ArgmaxCosineCid replaces, over
+    * columns vec_id, qv, nrm and the model array `cents`. */
+  private def cosFold(df: org.apache.spark.sql.DataFrame) = df
+    .withColumn("best", aggregate(col("cents"),
+      struct(lit(-2.0).as("cos"), lit(-1L).as("cid")),
+      (acc, c) => {
+        val cs = graft.functions.LongDotProduct.longDot(col("qv"), c.getField("cv")) /
+          sqrt((col("nrm") * c.getField("cnrm")).cast("double"))
+        when(cs > acc.getField("cos"),
+          struct(cs.as("cos"), c.getField("cid").as("cid"))).otherwise(acc)
+      }))
+    .select(col("vec_id"), col("best.cid").as("cid"))
+
+  /** The interpreted argmin-L2 fold ArgminL2Cid replaces, over columns
+    * vec_id, m, sv, snrm and the codebook array `cbs`. */
+  private def l2Fold(df: org.apache.spark.sql.DataFrame) = df
+    .withColumn("best", aggregate(col("cbs"),
+      struct(lit(Long.MaxValue).as("d"), lit(-1L).as("cid")),
+      (acc, c) => {
+        val d = col("snrm") + c.getField("cnrm") -
+          graft.functions.LongDotProduct.longDot(col("sv"), c.getField("cv")) * 2
+        when(c.getField("m") === col("m") && d < acc.getField("d"),
+          struct(d.as("d"), c.getField("cid").as("cid"))).otherwise(acc)
+      }))
+    .select(col("vec_id"), col("best.cid").as("cid"))
+
   test("ArgAssign expressions ≡ the interpreted aggregate folds they replace, " +
       "null/NaN/empty/tie corners included") {
     import graft.functions.ArgAssign
-    import org.apache.spark.sql.Column
     // random vectors incl. null elements, null arrays, zero vectors
     // (NaN cosine), duplicate centroids (ties -> lowest cid)
     def vec(dim: Int): Seq[Option[Long]] = Seq.fill(dim)(
@@ -138,17 +163,7 @@ class ExpressionSpec extends AnyFunSuite {
         lit(0L), (a, x) => a + coalesce(x, lit(0L))))
       .withColumn("nrm", when(col("qv").isNotNull, col("nrm")))
       .crossJoin(broadcast(centArr))
-    def cosTo(c: Column): Column =
-      graft.functions.LongDotProduct.longDot(col("qv"), c.getField("cv")) /
-        sqrt((col("nrm") * c.getField("cnrm")).cast("double"))
-    val ref = base.withColumn("best", aggregate(col("cents"),
-        struct(lit(-2.0).as("cos"), lit(-1L).as("cid")),
-        (acc, c) => {
-          val cs = cosTo(c)
-          when(cs > acc.getField("cos"),
-            struct(cs.as("cos"), c.getField("cid").as("cid"))).otherwise(acc)
-        }))
-      .select(col("vec_id"), col("best.cid").as("cid"))
+    val ref = cosFold(base)
     val fast = base.select(col("vec_id"),
       ArgAssign.argmaxCosineCid(col("qv"), col("nrm"), col("cents")).as("cid"))
     val refM = ref.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
@@ -169,15 +184,7 @@ class ExpressionSpec extends AnyFunSuite {
       .withColumn("snrm", aggregate(zip_with(col("sv"), col("sv"), (x, y) => x * y),
         lit(0L), (a, x) => a + coalesce(x, lit(0L))))
       .crossJoin(broadcast(cbArr))
-    val refPq = subs.withColumn("best", aggregate(col("cbs"),
-        struct(lit(Long.MaxValue).as("d"), lit(-1L).as("cid")),
-        (acc, c) => {
-          val d = col("snrm") + c.getField("cnrm") -
-            graft.functions.LongDotProduct.longDot(col("sv"), c.getField("cv")) * 2
-          when(c.getField("m") === col("m") && d < acc.getField("d"),
-            struct(d.as("d"), c.getField("cid").as("cid"))).otherwise(acc)
-        }))
-      .select(col("vec_id"), col("best.cid").as("cid"))
+    val refPq = l2Fold(subs)
     val fastPq = subs.select(col("vec_id"),
       ArgAssign.argminL2Cid(col("sv"), col("snrm"), col("m"), col("cbs")).as("cid"))
     assert(refPq.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long].toString) ==
@@ -316,5 +323,145 @@ class ExpressionSpec extends AnyFunSuite {
       .select(col("id"), MinHashSigs.minhashSigs(col("toks")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
     assert(df == Map(1L -> false, 2L -> true, 3L -> true))
+  }
+
+  test("NgramHashes ≡ the transform(sequence) md5-window lambda it replaces, " +
+      "null tokens, short/empty/null arrays, multibyte tokens, both eval paths") {
+    import graft.functions.NgramHashes.ngramHashes
+    val vocab = Seq("a", "bb", "ccc", "ασδφ", "日本語", "é", "😀", "")
+    val arrays: Seq[Option[Seq[Option[String]]]] = Seq.fill(300)(
+      if (rnd.nextInt(25) == 0) None
+      else Some(Seq.fill(rnd.nextInt(14))(
+        if (rnd.nextInt(6) == 0) None else Some(vocab(rnd.nextInt(vocab.size)))))) ++
+      Seq(Some(Seq.empty), Some(Seq(None, None, None)), Some(Seq(Some("x"))))
+    def lambdaForm(n: Int): String = {
+      val terms = (0 until n).map(j => s"element_at(t, i + $j)").mkString(", ")
+      // the call sites' form; a null array (empty there, since size(NULL)
+      // is -1) maps to NULL here — explode() of either yields no rows
+      s"CASE WHEN t IS NULL THEN NULL WHEN size(t) >= $n THEN transform(" +
+        s"sequence(1, size(t) - ${n - 1}), " +
+        s"i -> cast(conv(substring(md5(concat_ws(' ', $terms)), 1, 15), 16, 10) AS BIGINT)) " +
+        "ELSE array() END"
+    }
+    val rows = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }
+    def hashes(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Seq[Long]]] =
+      df.collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val Seq(cg, interp) = Seq(spark, interpreted).map { s =>
+      import s.implicits._
+      // an RDD source, not a local relation: projections run in tasks
+      val in = s.sparkContext.parallelize(rows, 3).toDF("id", "t")
+      Seq(1, 2, 8).map { n =>
+        val fast = in.select(col("id"), ngramHashes(col("t"), n))
+        (hashes(fast), hashes(in.select(col("id"), expr(lambdaForm(n)))))
+      } -> in.select(ngramHashes(col("t"), 8)).queryExecution.executedPlan.toString
+    }
+    for (((got, _), mode) <- Seq(cg -> "codegen", interp -> "interpreted")) {
+      for (((fast, ref), n) <- got.zip(Seq(1, 2, 8))) {
+        assert(fast.size == rows.length && fast == ref, s"n=$n $mode")
+        assert(fast.values.exists(_.exists(_.nonEmpty)) && fast.values.exists(_.exists(_.isEmpty)))
+      }
+    }
+    assert(cg._2.contains("*(1) Project [ngram_hashes"), cg._2)
+    assert(!interp._2.contains("*("), interp._2)
+    graft.functions.GraftFunctions.register(spark)
+    rows.toDF("id", "t").createOrReplaceTempView("ngram_in")
+    val viaSql = hashes(spark.sql(
+      "SELECT id, ngram_hashes(t, 2) AS h FROM ngram_in WHERE id < 40"))
+    val viaCol = hashes(rows.toDF("id", "t").where(col("id") < 40)
+      .select(col("id"), ngramHashes(col("t"), 2)))
+    assert(viaSql == viaCol && viaSql.size == 40)
+    assert(intercept[Exception](spark.sql("SELECT ngram_hashes(t, id) FROM ngram_in").collect())
+      .getMessage.contains("integer literal"))
+  }
+
+  test("ArgAssign with the model as a scalar subquery ≡ the folds, clean " +
+      "models and null-riddled ones (nulls carried by the decoded form)") {
+    import graft.functions.ArgAssign
+    import org.apache.spark.sql.{Column, DataFrame}
+    def vec(dim: Int, nullEvery: Int): Seq[Option[Long]] = Seq.fill(dim)(
+      if (nullEvery > 0 && rnd.nextInt(nullEvery) == 0) None else Some(rnd.nextInt(21) - 10L))
+    def nrm(c: String): Column = aggregate(zip_with(col(c), col(c), (x, y) => x * y),
+      lit(0L), (a, x) => a + coalesce(x, lit(0L)))
+    def assertMixed(m: Map[Long, Any], what: String) =
+      assert(m.values.exists(_ == -1L) && m.values.exists {
+        case v: Long => v >= 0L
+        case _ => false
+      }, s"$what: both -1 and real ids must occur")
+    def collectIds(df: DataFrame): Map[Long, Any] =
+      df.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+
+    // rows: clean vectors, vectors with null elements, null vectors, zero vectors
+    val rowsQ = Seq.tabulate(400)(i => (i.toLong,
+      if (i % 37 == 0) None else Some(vec(8, if (i % 3 == 0) 8 else 0)))) :+
+      (1000L, Some(Seq.fill(8)(Option(0L))))
+    val base = spark.sparkContext.parallelize(rowsQ, 4).toDF("vec_id", "qv")
+      .withColumn("nrm", when(col("qv").isNotNull, nrm("qv")))
+    for (nullEvery <- Seq(0, 6)) {
+      val dupCv = vec(8, nullEvery)
+      val cents = ((0L until 10L).map(c => (Option(c), vec(8, nullEvery))) :+
+        (Option(10L), Seq.fill(8)(Option(0L))) :+ (Option(11L), dupCv) :+ (Option(12L), dupCv) :+
+        ((if (nullEvery > 0) None else Some(13L)), vec(8, 0))).toDF("cid", "cv")
+        .withColumn("cnrm", nrm("cv"))
+      val centArr = cents.agg(sort_array(collect_list(struct(col("cid"), col("cv"), col("cnrm")))))
+      val ref = cosFold(base.crossJoin(broadcast(centArr.toDF("cents"))))
+      val fast = base.select(col("vec_id"),
+        ArgAssign.argmaxCosineCid(col("qv"), col("nrm"), centArr.scalar()))
+      val refM = collectIds(ref)
+      assert(collectIds(fast) == refM, s"argmax_cos_cid, model nulls every $nullEvery")
+      assertMixed(refM, "argmax_cos_cid")
+    }
+
+    // PQ: m-tagged codebooks (ties, zero codewords); rows of every m,
+    // an m no codebook has, a null m
+    val subs = spark.sparkContext.parallelize(Seq.tabulate(300)(i =>
+      (i.toLong, if (i % 41 == 0) None else Some(i % 4),
+        if (i % 53 == 0) None else Some(vec(4, if (i % 5 == 0) 6 else 0)))), 4)
+      .toDF("vec_id", "m", "sv").withColumn("snrm", when(col("sv").isNotNull, nrm("sv")))
+    for (nullEvery <- Seq(0, 6)) {
+      val dup = vec(4, nullEvery)
+      val cbs = ((for (m <- 0 until 3; c <- 0 until 6)
+        yield (Option(m), Option((c + 100).toLong), if (c == 4 || c == 5) dup else vec(4, nullEvery))) ++
+        (if (nullEvery > 0) Seq((None, Some(999L), vec(4, 0)), (Some(1), None, Seq.fill(4)(Option(-9L))))
+         else Seq((Some(2), Some(1L), Seq.fill(4)(Option(0L))))))
+        .toDF("m", "cid", "cv").withColumn("cnrm", nrm("cv"))
+      val cbArr = cbs.agg(sort_array(collect_list(
+        struct(col("m"), col("cid"), col("cv"), col("cnrm")))))
+      val ref = l2Fold(subs.crossJoin(broadcast(cbArr.toDF("cbs"))))
+      val fast = subs.select(col("vec_id"),
+        ArgAssign.argminL2Cid(col("sv"), col("snrm"), col("m"), cbArr.scalar()))
+      val refM = collectIds(ref)
+      assert(collectIds(fast) == refM, s"argmin_l2_cid, model nulls every $nullEvery")
+      assertMixed(refM, "argmin_l2_cid")
+    }
+  }
+
+  test("ArgAssign: a mistyped model struct fails ANALYSIS with the field " +
+      "named, never a runtime ClassCastException") {
+    import graft.functions.ArgAssign
+    import org.apache.spark.sql.AnalysisException
+    val rows = Seq((1L, Seq(1L, 2L), 5L, 0)).toDF("id", "v", "n", "m")
+    val model = Seq((7L, Seq(1L, 2L), 5L, 0)).toDF("cid", "cv", "cnrm", "m")
+    def cents(fields: String*) = model.agg(collect_list(struct(fields.map(col): _*)))
+    def failsOn(field: String)(build: => Any): Unit = {
+      val e = intercept[AnalysisException](build)
+      assert(e.getMessage.contains(s"`$field`"), e.getMessage)
+    }
+    val asString = model.withColumn("cid", col("cid").cast("string"))
+      .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm"))))
+    failsOn("cid")(rows.select(ArgAssign.argmaxCosineCid(col("v"), col("n"), asString.scalar())))
+    val intCv = model.withColumn("cv", col("cv").cast("array<int>"))
+      .agg(collect_list(struct(col("m"), col("cid"), col("cv"), col("cnrm"))))
+    failsOn("cv")(rows.select(
+      ArgAssign.argminL2Cid(col("v"), col("n"), col("m"), intCv.scalar())))
+    failsOn("cnrm")(rows.select(
+      ArgAssign.argmaxCosineCid(col("v"), col("n"), cents("cid", "cv").scalar())))
+    failsOn("m")(rows.select(
+      ArgAssign.argminL2Cid(col("v"), col("n"), col("m"), cents("cid", "cv", "cnrm").scalar())))
+    // the well-typed model still resolves and runs
+    assert(rows.select(ArgAssign.argminL2Cid(col("v"), col("n"), col("m"),
+      cents("m", "cid", "cv", "cnrm").scalar())).head().getLong(0) == 7L)
   }
 }

@@ -935,4 +935,50 @@ class IngestSpec extends AnyFunSuite {
     assert(rows(pushed) == rows(offDf),
       "pushdown changed values — the rewrite must be value-invisible")
   }
+
+  test("inParallel: the first failure cancels a running sibling's jobs, " +
+      "its later jobs too, and is rethrown once it has stopped; no closures " +
+      "is a no-op") {
+    Materialize.inParallel(spark)() // must not throw
+    val sc = spark.sparkContext
+    val siblingErrors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var siblingJobs = Seq.empty[Int]
+    // a job that runs until it is cancelled (or 120 s pass)
+    def longJob(): Unit = sc.parallelize(1 to 2, 2).foreach { _ =>
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Materialize.inParallel(spark)(
+        // two long jobs in a row: the second starts after the first is
+        // cancelled, like the next step of a multi-job write
+        () => try {
+          try longJob() catch { case t: Throwable => siblingErrors.add(t) }
+          longJob()
+        } catch { case t: Throwable => siblingErrors.add(t) }
+        finally siblingDone.set(true),
+        () => {
+          while (siblingJobs.isEmpty) {
+            siblingJobs = sc.statusTracker.getActiveJobIds().toSeq
+            Thread.sleep(20)
+          }
+          throw new IllegalStateException("boom")
+        })
+    }
+    assert(e.getMessage == "boom")
+    // by the time the failure surfaces the sibling has stopped: both of
+    // its jobs ended cancelled (FAILED), long before their 120 s deadline
+    assert(siblingDone.get())
+    assert(siblingErrors.size == 2, siblingErrors)
+    // the wait on a job is interrupted, or the job is cancelled under it
+    siblingErrors.forEach(t => assert(t.isInstanceOf[InterruptedException] ||
+      String.valueOf(t.getMessage).contains("cancelled"), t))
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(siblingJobs.nonEmpty && siblingJobs.forall(id => sc.statusTracker.getJobInfo(id)
+      .map(_.status()).contains(org.apache.spark.JobExecutionStatus.FAILED)))
+    assert((System.nanoTime() - t0) / 1e9 < 60)
+  }
 }

@@ -194,9 +194,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_ann_ivf: centroid set and probes broadcast; corpus never sort-merges") {
     val plan = finalPlan(VectorOps.annIvf(spark, TestSpark.Sf0001))
-    // assignment joins the 1-row centroid array, search joins the probe
-    // set — both must broadcast; a SortMergeJoin would mean the corpus
-    // shuffled for a join that should be map-side
+    // assignment reads the centroid array as a scalar subquery, the
+    // query probe crossJoins the centroids and search joins the probe
+    // set — both joins must broadcast; a SortMergeJoin would mean the
+    // corpus shuffled for a join that should be map-side
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), s"corpus shuffled for a join:\n$plan")
   }
@@ -219,6 +220,17 @@ class PlanSpec extends AnyFunSuite {
           s"training lineage is unrolling into consumers again:\n${plan.take(4000)}")
       assert(plan.contains("ExistingRDD"),
         s"$name no longer reads a checkpointed model:\n${plan.take(4000)}")
+    }
+  }
+
+  test("q_ann_pq, q_semdedup: the model arrives as a scalar subquery — " +
+      "no nested-loop join copies it into every corpus row") {
+    for ((name, df) <- Seq(
+        "q_ann_pq" -> VectorOps.annPq(spark, TestSpark.Sf0001),
+        "q_semdedup" -> VectorOps.semDedup(spark, TestSpark.Sf0001))) {
+      val plan = finalPlan(df)
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name:\n${plan.take(4000)}")
+      assert(plan.contains("Subquery"), s"$name:\n${plan.take(4000)}")
     }
   }
 
@@ -389,6 +401,25 @@ class PlanSpec extends AnyFunSuite {
     assert("Exchange hashpartitioning\\(doc_id".r.findFirstIn(plan).isDefined &&
       "Exchange hashpartitioning\\(wh".r.findFirstIn(plan).isDefined,
       s"unexpected exchange keys:\n$plan")
+    // the one-split training documents are spread by ONE round-robin exchange, and
+    // the windows are hashed by the compiled kernel, not a lambda
+    val spread = "REPARTITION_BY_NUM".r.findAllIn(plan).size
+    assert(spread == 1, s"expected 1 round-robin spread, got $spread:\n$plan")
+    assert(!plan.contains("lambdafunction"), s"interpreted window lambda:\n$plan")
+  }
+
+  test("q_decontam: a documents scan with a split per core is not spread again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_decontam_splits").toString
+    graft.sources.Tables.documents(spark, TestSpark.Sf0001).repartition(16)
+      .write.parquet(s"$dir/documents.parquet")
+    val splits = graft.sources.Tables.documents(spark, dir).rdd.getNumPartitions
+    assert(splits >= spark.sparkContext.defaultParallelism, s"only $splits splits")
+    val many = DedupOps.decontaminate(spark, dir)
+    val plan = finalSection(finalPlan(many))
+    assert(!plan.contains("REPARTITION_BY_NUM"), s"split-per-core scan shuffled:\n$plan")
+    // same answer as the spread plan over the one-split corpus
+    assert(many.collect().toSet ==
+      DedupOps.decontaminate(spark, TestSpark.Sf0001).collect().toSet)
   }
 
   test("q_ewma: the sequential fold costs exactly one key shuffle") {
