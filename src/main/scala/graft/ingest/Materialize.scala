@@ -103,7 +103,8 @@ object Materialize {
     * call leaves no sibling running. The wait is bounded by
     * [[CancelWaitS]]; driver-side work that ignores interrupts past
     * that bound may still be running when the exception surfaces.
-    * No closures: nothing runs. */
+    * No closures: nothing runs. Appends to one manifest table qualify
+    * too: their commits serialize themselves ([[landSlices]]). */
   private[graft] def inParallel(spark: SparkSession)(fs: (() => Unit)*): Unit = {
     if (fs.isEmpty) return
     val sc = spark.sparkContext
@@ -133,6 +134,26 @@ object Materialize {
     * siblings after a failure. */
   private val CancelPollMs = 50L
   private val CancelWaitS = 60L
+
+  /** The documents' (doc_id, lang, n_chars), rows with a null in any
+    * of them dropped: the source the snap demos land and query. */
+  private def cleanDocs(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.documents(spark, dir)
+      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
+        col("n_chars").isNotNull)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+
+  /** Append each slice as its own one-file (`coalesce(1)`) epoch of the
+    * ManifestSink table at `log`, all at once through [[inParallel]]:
+    * each append is a one-task job, so run one after another they leave
+    * all but one core idle. The link(2) epoch claim serializes the
+    * racing commits, so epoch ids follow commit order, not slice order
+    * — only for callers that never name an epoch id. */
+  private[graft] def landSlices(spark: SparkSession, log: String,
+      slices: Seq[DataFrame]): Unit =
+    inParallel(spark)(slices.map(slice => () =>
+      slice.coalesce(1).write.format("graft.sources.ManifestSink")
+        .option("path", log).mode("append").save()): _*)
 
   /** FIFA teams source columns (from the reference's cast list,
     * `etl_kaggle_to_big_query.py:91-107`) → target types. */
@@ -961,10 +982,7 @@ object Materialize {
     // epochs — this query's contract is one run's snapshot, so start
     // from an empty log
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(out))
-    graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    cleanDocs(spark, dir)
       .write.format("graft.sources.ManifestSink")
       .option("path", out).mode("append").save()
     val files = graft.sources.ManifestSink.committedFiles(out)
@@ -974,9 +992,10 @@ object Materialize {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
   }
 
-  /** DATA SKIPPING end-to-end (`q_snap_skipping`): four batch appends
-    * land the complete events as four epochs of a manifest table, each
-    * epoch tagged with its residue (`epoch_tag = event_id % 4`, a
+  /** DATA SKIPPING end-to-end (`q_snap_skipping`): the complete events
+    * land as four slices, concurrently ([[landSlices]]; epoch ids follow
+    * commit order), one epoch each of a manifest table, each slice
+    * tagged with its residue (`epoch_tag = event_id % 4`, a
     * constant per epoch — so the per-file `#stats` min/max the writers
     * record make `WHERE epoch_tag = 2` resolvable to exactly that
     * epoch's files). The filtered catalog read then PLANS only the
@@ -995,13 +1014,9 @@ object Materialize {
         col("user_id").isNotNull && col("value").isNotNull &&
         col("event_type").isNotNull)
       .select(col("event_id"), col("user_id"), col("event_type"))
-    (0 until 4).foreach { k =>
+    landSlices(spark, log, (0 until 4).map(k =>
       complete.filter(col("event_id") % 4 === k)
-        .withColumn("epoch_tag", lit(k.toLong))
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+        .withColumn("epoch_tag", lit(k.toLong))))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.evskip.schema",
@@ -1013,8 +1028,9 @@ object Materialize {
         |GROUP BY event_type""".stripMargin)
   }
 
-  /** STRING-stats data skipping (`q_snap_skip_str`, round 13): five
-    * batch appends land the documents as one epoch PER LANGUAGE, so each
+  /** STRING-stats data skipping (`q_snap_skip_str`): the documents land
+    * as one epoch PER LANGUAGE, the five slices concurrently
+    * ([[landSlices]]; epoch ids follow commit order), so each
     * committed file's `#stats` carry a single-value string envelope
     * (truncated-ASCII bounds, [[graft.sources.StrColStat]]) and
     * `WHERE lang = 'de'` resolves to exactly one file at scan build —
@@ -1026,16 +1042,9 @@ object Materialize {
       s"graft_snap_str_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docskip").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docskip.schema",
@@ -1063,10 +1072,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_arr_src")
     spark.sql(
       """CREATE TABLE graft.snap.docarr (doc_id BIGINT,
@@ -1116,10 +1122,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_map_src")
     spark.sql(
       """CREATE TABLE graft.snap.docmap (doc_id BIGINT,
@@ -1174,10 +1177,7 @@ object Materialize {
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
         |TBLPROPERTIES ('bloom.columns'='doc_id', 'bloom.bits'='16384')
         |""".stripMargin)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     (0 until 4).foreach { k =>
       complete.filter(col("doc_id") % 4 === k)
         .coalesce(1)
@@ -1188,8 +1188,9 @@ object Materialize {
         |WHERE doc_id IN (17, 23)""".stripMargin)
   }
 
-  /** TIMESTAMP-stats data skipping (`q_snap_skip_time`, round 13): the
-    * events land as four epochs sliced by contiguous January weeks, so
+  /** TIMESTAMP-stats data skipping (`q_snap_skip_time`): the events
+    * land as four epochs sliced by contiguous January weeks, the slices
+    * concurrently ([[landSlices]]; epoch ids follow commit order), so
     * each file's `#stats` carry a disjoint ts envelope (UTC micros) and
     * `WHERE ts >= TIMESTAMP '2024-01-22'` prunes the three earlier
     * weeks at scan build — the time-windowed read that dominates an
@@ -1205,14 +1206,11 @@ object Materialize {
       .filter(col("event_id").isNotNull && col("ts").isNotNull &&
         col("event_type").isNotNull)
       .select(col("event_id"), col("ts"), col("event_type"))
-    (0 until 4).foreach { k =>
+    landSlices(spark, log, (0 until 4).map { k =>
       val lo = 1 + 7 * k
       val hi = if (k == 3) 31 else 7 * k + 7
       complete.filter(dayofmonth(col("ts")).between(lo, hi))
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    })
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.evtime.schema",
@@ -1262,8 +1260,9 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** ROW-LEVEL DELETE from pure SQL (`q_snap_delete`, round 13): the
-    * documents land as one epoch per language, then
+  /** ROW-LEVEL DELETE from pure SQL (`q_snap_delete`): the documents
+    * land as one epoch per language, the five slices concurrently
+    * ([[landSlices]]; epoch ids follow commit order), then
     * `DELETE FROM graft.snap.docdel WHERE lang = 'es' AND doc_id < 300`
     * runs the copy-on-write path — the string+long `#stats` envelopes
     * admit ONLY the 'es' file (SnapshotSpec pins filesRewritten = 1 of
@@ -1275,16 +1274,9 @@ object Materialize {
       s"graft_snap_del_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docdel").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docdel.schema",
@@ -1298,9 +1290,11 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** MERGE-ON-READ DELETE (`q_snap_dv_delete`, round 15): the same
-    * delete as `q_snap_delete` under `deleteMode=mor` — instead of
-    * rewriting the touched file, the delete writes the matching ROW
+  /** MERGE-ON-READ DELETE (`q_snap_dv_delete`): the same per-language
+    * slices, landed concurrently ([[landSlices]]; epoch ids follow
+    * commit order), and the same delete as `q_snap_delete` under
+    * `deleteMode=mor` — instead of rewriting the touched file, the
+    * delete writes the matching ROW
     * POSITIONS to a small position-delete file (`#dv` epoch,
     * [[graft.sources.DvOps]]) and the read applies them. The oracle is
     * IDENTICAL to `q_snap_delete`'s: the storage strategy must be
@@ -1314,16 +1308,9 @@ object Materialize {
       s"graft_snap_dv_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docdv").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docdv.schema",
@@ -1338,8 +1325,9 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** Row-level UPDATE from pure SQL (`q_snap_update`, round 14): the
-    * documents land as one epoch per language, then
+  /** Row-level UPDATE from pure SQL (`q_snap_update`): the documents
+    * land as one epoch per language, the five slices concurrently
+    * ([[landSlices]]; epoch ids follow commit order), then
     * `UPDATE graft.snap.docupd SET n_chars = … WHERE lang = 'de'` runs
     * the group-based copy-on-write path
     * ([[graft.sources.SnapRowLevelOperation]]): Spark's runtime group
@@ -1353,16 +1341,9 @@ object Materialize {
       s"graft_snap_upd_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docupd").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docupd.schema",
@@ -1382,7 +1363,8 @@ object Materialize {
     * table stops scaling; the reference's own monthly job is the full
     * REBUILD (`q_snap_overwrite`'s shape), so MERGE is an additional
     * capability, not a replication target. The documents land as one
-    * epoch per language; the source view carries
+    * epoch per language, the five slices concurrently ([[landSlices]];
+    * epoch ids follow commit order); the source view carries
     * an UPDATE slice (every 'es' doc under 300 gets doubled n_chars)
     * and an INSERT slice (three brand-new doc_ids); then
     *
@@ -1401,16 +1383,9 @@ object Materialize {
       s"graft_snap_mrg_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docmerge").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docmerge.schema",
@@ -1434,9 +1409,10 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** MERGE-ON-READ UPDATE (`q_snap_dv_update`, round 16): the same
-    * update as `q_snap_update` under `deleteMode=mor` — Spark's
-    * `SupportsDelta` position-delta plan ([[graft.sources
+  /** MERGE-ON-READ UPDATE (`q_snap_dv_update`): the same per-language
+    * slices, landed concurrently ([[landSlices]]; epoch ids follow
+    * commit order), and the same update as `q_snap_update` under
+    * `deleteMode=mor` — Spark's `SupportsDelta` position-delta plan ([[graft.sources
     * .SnapDeltaOperation]]) marks the replaced row POSITIONS in small
     * dv files and appends the replacement rows, in ONE atomic epoch;
     * zero data files move. The oracle is IDENTICAL to
@@ -1450,16 +1426,9 @@ object Materialize {
       s"graft_snap_dvu_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docdvu").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docdvu.schema",
@@ -1474,9 +1443,11 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** MERGE-ON-READ MERGE (`q_snap_dv_merge`, round 16): the same
-    * upsert as `q_snap_merge` under `deleteMode=mor` — matched rows
-    * become dv positions + appended replacements, inserts append, ONE
+  /** MERGE-ON-READ MERGE (`q_snap_dv_merge`): the same per-language
+    * slices, landed concurrently ([[landSlices]]; epoch ids follow
+    * commit order), and the same upsert as `q_snap_merge` under
+    * `deleteMode=mor` — matched rows become dv positions + appended
+    * replacements, inserts append, ONE
     * atomic epoch, zero data files moved. Identical oracle to
     * `q_snap_merge` (value-invisible storage strategy). This is the
     * scaled form of the reference's monthly refresh (reference
@@ -1487,16 +1458,9 @@ object Materialize {
       s"graft_snap_dvm_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docdvm").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docdvm.schema",
@@ -1535,11 +1499,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("graft_rename_src")
+    cleanDocs(spark, dir).createOrReplaceTempView("graft_rename_src")
     spark.sql(
       """CREATE TABLE graft.snap.docstage AS
         |SELECT doc_id, lang, n_chars FROM graft_rename_src
@@ -1569,10 +1529,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docckpt
         |(doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -1605,9 +1562,10 @@ object Materialize {
     } finally spark.conf.unset("spark.graft.plan.distributedThreshold")
   }
 
-  /** RENAME COLUMN via column mapping (`q_snap_colmap`, round 16):
-    * per-language epochs land under the original names, `ALTER TABLE …
-    * RENAME COLUMN` appends a pure-metadata `#colmap` epoch (physical
+  /** RENAME COLUMN via column mapping (`q_snap_colmap`): per-language
+    * epochs land under the original names, the five slices
+    * concurrently ([[landSlices]]; epoch ids follow commit order),
+    * `ALTER TABLE … RENAME COLUMN` appends a pure-metadata `#colmap` epoch (physical
     * names stay in every file/`#stats` key — ZERO bytes rewritten, the
     * Delta column-mapping shape), a post-rename INSERT and UPDATE
     * speak the new names, and the aggregate filters on a renamed
@@ -1619,16 +1577,9 @@ object Materialize {
       s"graft_snap_cmq_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "doccm").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.doccm.schema",
@@ -1664,10 +1615,7 @@ object Materialize {
       s"graft_snap_ow_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docover").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     // seed: the full corpus as the "last month's" snapshot
     complete.coalesce(2)
       .write.format("graft.sources.ManifestSink")
@@ -1704,11 +1652,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("graft_ctas_src")
+    cleanDocs(spark, dir).createOrReplaceTempView("graft_ctas_src")
     spark.sql(
       """CREATE TABLE graft.snap.docctas AS
         |SELECT doc_id, lang, n_chars FROM graft_ctas_src
@@ -1737,11 +1681,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("graft_cor_src")
+    cleanDocs(spark, dir).createOrReplaceTempView("graft_cor_src")
     // month 1: the full corpus
     spark.sql(
       """CREATE OR REPLACE TABLE graft.snap.doccor AS
@@ -1776,11 +1716,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .createOrReplaceTempView("graft_ddl_src")
+    cleanDocs(spark, dir).createOrReplaceTempView("graft_ddl_src")
     spark.sql("CREATE TABLE graft.snap.docddl (doc_id BIGINT, lang STRING)")
     spark.sql(
       """INSERT INTO graft.snap.docddl
@@ -1804,7 +1740,9 @@ object Materialize {
     * plane and served as a LocalScan (never a distributed read): the
     * Iceberg `db.t.files` shape, and what makes the lake OPERABLE
     * (what will vacuum reclaim? did compaction help?). Landing one
-    * epoch per language makes the file count and per-file row counts
+    * epoch per language — the five slices concurrently
+    * ([[landSlices]]; epoch ids follow commit order, which no column of
+    * the read depends on) — makes the file count and per-file row counts
     * oracle-derivable from the source. `.history` is pinned across
     * append/rewrite/compaction in SnapshotSpec. */
   def snapFiles(spark: SparkSession, dir: String): DataFrame = {
@@ -1812,16 +1750,9 @@ object Materialize {
       s"graft_snap_files_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docfiles").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docfiles.schema",
@@ -1852,10 +1783,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_part_src")
     spark.sql(
       """CREATE TABLE graft.snap.docpart
@@ -1895,10 +1823,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docndv
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -1960,10 +1885,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wov_src")
     spark.sql(
       """CREATE TABLE graft.snap.docwov
@@ -2027,10 +1949,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docevo
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -2067,10 +1986,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docro
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)""".stripMargin)
@@ -2103,10 +2019,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docwide
         |  (doc_id BIGINT, lang STRING, n_chars INT)""".stripMargin)
@@ -2139,10 +2052,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.doctag
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)""".stripMargin)
@@ -2172,10 +2082,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docparts
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -2201,10 +2108,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.doctst
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)""".stripMargin)
@@ -2242,10 +2146,7 @@ object Materialize {
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.dochist.deleteMode", "mor")
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_hist_src")
     spark.sql(
       """CREATE TABLE graft.snap.dochist
@@ -2261,8 +2162,9 @@ object Materialize {
         |FROM graft.snap.dochist.history""".stripMargin)
   }
 
-  /** Small-file COMPACTION from pure SQL (`q_snap_compact`, round 13):
-    * the per-language epochs land five small files, then
+  /** Small-file COMPACTION from pure SQL (`q_snap_compact`): the
+    * per-language slices land concurrently ([[landSlices]]; epoch ids
+    * follow commit order) as five small files, then
     * `CALL graft.sys.compact_data('docpack', 5000)` bin-packs them into
     * `ceil(rows/5000)` combined files behind one atomic adds+removes
     * epoch ([[graft.sources.CompactProcedure]]). The query returns the
@@ -2274,16 +2176,9 @@ object Materialize {
       s"graft_snap_pack_${java.lang.Integer.toHexString(dir.hashCode)}")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     val log = new java.io.File(root, "docpack").toString
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
-      complete.filter(col("lang") === l)
-        .coalesce(1)
-        .write.format("graft.sources.ManifestSink")
-        .option("path", log).mode("append").save()
-    }
+    val complete = cleanDocs(spark, dir)
+    landSlices(spark, log,
+      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     spark.conf.set("spark.sql.catalog.graft.snap.docpack.schema",
@@ -2717,10 +2612,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql(s"CREATE TABLE graft.snap.$tname " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
     complete.filter(col("lang").isin("de", "en")).coalesce(1)
@@ -2780,10 +2672,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql("CREATE TABLE graft.snap.docmerge " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT) " +
       "TBLPROPERTIES ('delete.mode'='mor')")
@@ -2825,10 +2714,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     spark.sql("CREATE TABLE graft.snap.doccowp " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT)")          // epoch 0
     complete.filter(col("lang").isin("de", "es")).coalesce(1)
@@ -2937,10 +2823,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_ne_src")
     spark.sql(
       """CREATE TABLE graft.snap.docne (doc_id BIGINT,
@@ -2982,10 +2865,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wap_src")
     spark.sql(
       """CREATE TABLE graft.snap.docwap
@@ -3035,10 +2915,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wapmor_src")
     spark.sql(
       """CREATE TABLE graft.snap.docwapmor
@@ -3109,10 +2986,7 @@ object Materialize {
     // look at the WRONG root, conclude "missing", and re-CREATE into
     // the right one (TableAlreadyExists). Pin the active session here.
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wstr_src")
     spark.sql(
       """CREATE TABLE graft.snap.docwstr
@@ -3169,10 +3043,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_exp_src")
     spark.sql(
       """CREATE TABLE graft.snap.docexp
@@ -3217,10 +3088,7 @@ object Materialize {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
     graft.sources.GraftCatalog.register(spark, dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    val complete = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
-        col("n_chars").isNotNull)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_cdft_src")
     spark.sql(
       """CREATE TABLE graft.snap.doccdft

@@ -105,15 +105,24 @@ object CcStructure {
     }
   }
 
+  /** Read every table once so a measured run sees warm schemas: the
+    * first `Tables` read of a table in a JVM starts one schema-inference
+    * job, later reads none, so without this the counts would depend on
+    * what ran before. */
+  def warmSchemas(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    graft.sources.Tables.names.foreach(graft.sources.Tables.load(spark, dir, _))
+
   /** Run `dedupClusters` under a scoped counter (plus one collect of
     * the result — the caller's consumption is part of the run's shape)
     * and return the counts. */
   def measure(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int, Int) =
+      dir: String): (Int, Int, Int, Int) = {
+    warmSchemas(spark, dir)
     measureRun(spark, "cc") {
       val n = graft.ops.DedupOps.dedupClusters(spark, dir).collect().length
       require(n > 0, "empty CC result")
     }
+  }
 }
 
 /** Dev probe: print the structural counts twice per scale to establish
@@ -149,6 +158,7 @@ object HeavyStructProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq(TestSpark.Sf0001, "/root/testdata/sf0.01")
     for (dir <- dirs; (name, run) <- Heavies; i <- 1 to 2) {
+      CcStructure.warmSchemas(spark, dir)
       val t0 = System.nanoTime()
       val counts = CcStructure.measureRun(spark, name)(require(run(spark, dir) > 0))
       println(f"HEAVY-STRUCT $name $dir run$i: $counts " +

@@ -639,11 +639,16 @@ class DedupSpec extends AnyFunSuite {
     // then the minhashLsh base materializeOnce (signature + token-set
     // hashing folded into ONE scan+tokenize pass, consumed by the band
     // stage and both verify-join sides) costs the count's query-stage
-    // jobs and nets the duplicated md5 passes away.
+    // jobs and nets the duplicated md5 passes away. Re-baselined when
+    // `Tables` reads began passing a cached schema (CcStructureProbe,
+    // two identical runs per SF, schemas warmed): the run's two table
+    // reads no longer start a schema-inference job each, so -2 jobs,
+    // stages and tasks; shuffles are unchanged.
+    val corpora = new java.io.File(TestSpark.Sf0001).getParent
     val expected = Map(
-      TestSpark.Sf0001 -> ((25, 36, 19, 141)),
-      "/root/testdata/sf0.01" -> ((26, 48, 30, 223)),
-      "/root/testdata/sf0.1" -> ((29, 51, 34, 229)))
+      TestSpark.Sf0001 -> ((23, 34, 19, 139)),
+      s"$corpora/sf0.01" -> ((24, 46, 30, 221)),
+      s"$corpora/sf0.1" -> ((27, 49, 34, 227)))
     for ((dir, want) <- expected.toSeq.sortBy(_._1)) {
       val got = CcStructure.measure(spark, dir)
       assert(got == want,

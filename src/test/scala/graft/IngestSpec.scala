@@ -981,4 +981,36 @@ class IngestSpec extends AnyFunSuite {
       .map(_.status()).contains(org.apache.spark.JobExecutionStatus.FAILED)))
     assert((System.nanoTime() - t0) / 1e9 < 60)
   }
+
+  test("Tables: a warm read over unchanged files starts no Spark job, an " +
+      "overwritten table file is re-read with its new schema, and sessions " +
+      "with different parquet inference confs each get their own schema") {
+    // jobs started by `body`, counted by a listener scoped to its job group
+    def jobsOf(body: => Unit): Int = CcStructure.measureRun(spark, "tables")(body)._1
+    val dir = Files.createTempDirectory("graft_tables_schema").toString
+    val docs = s"$dir/documents.parquet"
+    import spark.implicits._
+    Seq((1L, "a")).toDF("doc_id", "lang").write.parquet(docs)
+    // the first read infers the schema (the listener sees that job), the
+    // second reuses it
+    assert(jobsOf(graft.sources.Tables.documents(spark, dir)) >= 1)
+    assert(jobsOf(graft.sources.Tables.documents(spark, dir)) == 0)
+    Seq((2L, "b", 7L)).toDF("doc_id", "lang", "n_chars")
+      .write.mode("overwrite").parquet(docs)
+    val evolved = graft.sources.Tables.documents(spark, dir)
+    assert(evolved.columns.toSeq == Seq("doc_id", "lang", "n_chars"))
+    assert(evolved.collect().map(_.getLong(2)).toSeq == Seq(7L))
+    graft.util.Fs.deleteRecursively(Paths.get(dir))
+    // o_orderdate is a naive parquet timestamp: NTZ unless the session
+    // turns NTZ inference off
+    val ntz = spark.newSession()
+    val ltz = spark.newSession()
+    ltz.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    def orderDate(s: org.apache.spark.sql.SparkSession) =
+      graft.sources.Tables.orders(s, TestSpark.Sf0001).schema("o_orderdate").dataType
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    assert(orderDate(ntz) == TimestampNTZType)
+    assert(orderDate(ltz) == TimestampType)
+    assert(orderDate(ntz) == TimestampNTZType)
+  }
 }

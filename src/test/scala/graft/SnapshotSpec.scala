@@ -551,6 +551,26 @@ class SnapshotSpec extends AnyFunSuite {
       s"q_snap_skipping did not skip files: $planned of $listed planned")
     assert(listed == 4 && planned == 1,
       s"four residue epochs, one matching: expected (4,1), got ($listed,$planned)")
+    // the slices land concurrently: whatever the commit order, each of
+    // the log's data epochs holds exactly one file whose #stats
+    // envelope is a single slice value
+    def sliceEpochs(log: String, n: Int): Seq[graft.sources.FileStat] = {
+      val stats = graft.sources.ManifestSink.fileStats(log)
+      (0 until n).map { v =>
+        val adds = graft.sources.ManifestSink.committedFilesBetween(log, v - 1, v)
+        assert(adds.size == 1, s"epoch $v of $log adds ${adds.size} files")
+        stats(Paths.get(adds.head).getFileName.toString)
+      }
+    }
+    val skipLog = graft.ingest.Materialize.processScratchDir("graft_snap_skip_" +
+      Integer.toHexString(TestSpark.Sf0001.hashCode)) + "/evskip"
+    assert(graft.sources.ManifestSink.newestVersion(skipLog) == 3)
+    val tags = sliceEpochs(skipLog, 4).map { st =>
+      val (lo, hi) = st.cols("epoch_tag")
+      assert(lo == hi, s"an epoch mixes residues: $lo..$hi")
+      lo
+    }
+    assert(tags.toSet == Set(0L, 1L, 2L, 3L), tags)
 
     // ——— q_snap_skip_str (round 13): per-language epochs, string
     // #stats resolve lang='de' to exactly one of the five files
@@ -576,6 +596,23 @@ class SnapshotSpec extends AnyFunSuite {
     assert(dTotal == 5 && dRewritten == 1,
       s"five language epochs, one admitting the delete: expected " +
         s"(5,1), got ($dTotal,$dRewritten)")
+
+    // ——— q_snap_update: five concurrently landed language epochs (read
+    // from the log's adds, so the rewritten 'de' file still counts),
+    // then ONE update epoch that rewrites only the 'de' file
+    val qu = graft.SparkEntry.queries("q_snap_update")(spark, TestSpark.Sf0001)
+    assert(qu.collect().nonEmpty)
+    val updLog = graft.ingest.Materialize.processScratchDir("graft_snap_upd_" +
+      Integer.toHexString(TestSpark.Sf0001.hashCode)) + "/docupd"
+    assert(graft.sources.ManifestSink.newestVersion(updLog) == 5)
+    val langs = sliceEpochs(updLog, 5).map { st =>
+      val (lo, hi) = st.strCols("lang")
+      assert(hi.contains(lo), s"an epoch mixes languages: $lo..$hi")
+      lo
+    }
+    assert(langs.toSet == Set("de", "en", "es", "fr", "zh"), langs)
+    assert(graft.sources.SnapTable.lastRewriteOf("docupd") == ((5, 1)),
+      graft.sources.SnapTable.lastRewriteOf("docupd"))
   }
 
   test("string #stats truncation (round 13): >32-char values record a " +

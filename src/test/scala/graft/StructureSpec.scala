@@ -36,11 +36,16 @@ class StructureSpec extends AnyFunSuite {
   // hash passes into ONE materialized base (one scan+tokenize instead
   // of two, -1 job/stage/shuffle vs the intermediate shape); bfs and
   // pagerank are untouched.
+  // Re-baselined when `Tables` reads began passing a cached schema
+  // (HeavyStructProbe, two identical runs per SF, schemas warmed): each
+  // table read no longer starts a one-task schema-inference job, so
+  // every heavy lost one job, stage and task per read (minhash 1,
+  // the others 2); shuffles are unchanged.
   private val pins = Seq(
-    ("minhash", (11, 11, 5, 29), (11, 11, 5, 29)),
-    ("simhash", (12, 12, 5, 27), (12, 12, 5, 27)),
-    ("bfs", (29, 29, 12, 38), (35, 35, 15, 49)),
-    ("pagerank", (23, 23, 9, 28), (23, 23, 9, 28)))
+    ("minhash", (10, 10, 5, 28), (10, 10, 5, 28)),
+    ("simhash", (10, 10, 5, 25), (10, 10, 5, 25)),
+    ("bfs", (27, 27, 12, 36), (33, 33, 15, 47)),
+    ("pagerank", (21, 21, 9, 26), (21, 21, 9, 26)))
 
   test("heavy-query STRUCTURAL COST PINS: jobs/stages/shuffles/tasks " +
     "are exact at sf0.001 and sf0.01 for minhash LSH, scale-aware " +
@@ -53,6 +58,7 @@ class StructureSpec extends AnyFunSuite {
     for ((name, want001, want01) <- pins;
          (dir, want) <- Seq(TestSpark.Sf0001 -> want001,
            "/root/testdata/sf0.01" -> want01)) {
+      CcStructure.warmSchemas(spark, dir)
       val got = CcStructure.measureRun(spark, name)(
         require(runs(name)(spark, dir) > 0, s"$name empty at $dir"))
       assert(got == want,
