@@ -8,19 +8,7 @@ object Bench {
     // median a real observation (even N reports the upper-middle run)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // full extension suite (functions, optimizer rule, AsOf strategy, ASOF JOIN parser)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference fidelity: BigQuery-era non-ANSI casts (null on garbage), SURVEY §7.4
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // clear orphan CTAS dirs any previous JVM left behind (the in-memory
     // catalog dies with its JVM; warehouse files survive a clean exit too)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one named query from SparkEntry and print its plan.
   * Usage: runMain graft.Scratch <queryName> [sfDir] [explainMode]
   */
@@ -10,15 +8,7 @@ object Scratch {
     val name = args.headOption.getOrElse("q_team_view")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2) args(2) else "formatted"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference fidelity: BigQuery-era non-ANSI casts (null on garbage), SURVEY §7.4
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, dir)
     df.explain(mode)

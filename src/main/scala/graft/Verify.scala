@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,19 +17,7 @@ object Verify {
     // never does. Requires spark-submit with the packaged jar so
     // executors can load graft classes.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // full extension suite (functions, optimizer rule, AsOf strategy, ASOF JOIN parser)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference fidelity: BigQuery-era non-ANSI casts (null on garbage), SURVEY §7.4
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.builder(master, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // clear orphan CTAS dirs any previous JVM left behind (the in-memory
     // catalog dies with its JVM; warehouse files survive a clean exit too)

@@ -38,6 +38,36 @@ object Materialize {
     f.toString
   }
 
+  /** [[processScratchDir]] scoped to one sf directory: `<prefix>_<tag>`,
+    * where the tag is the hex hash of `dir`, so two scales never share
+    * an output directory. */
+  private[graft] def processScratchDir(prefix: String, dir: String): String =
+    processScratchDir(s"${prefix}_${dirTag(dir)}")
+
+  /** Hex hash of an sf directory: the suffix of every dir-scoped scratch
+    * path and CTAS table name. */
+  private def dirTag(dir: String): String = java.lang.Integer.toHexString(dir.hashCode)
+
+  /** A fresh, empty `snap` namespace root for one demo over `dir`: the
+    * previous run's tables are deleted, then the catalog is registered
+    * on `spark` with this root and each (table → DDL) read schema in
+    * `schemas`. Registration sets confs only, so it may precede the
+    * demo's first write. */
+  private[graft] def snapFixture(spark: SparkSession, prefix: String, dir: String,
+      schemas: (String, String)*): String = {
+    val root = processScratchDir(prefix, dir)
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    graft.sources.GraftCatalog.register(spark, dir, Some(root), schemas.toMap)
+    root
+  }
+
+  /** The corpus languages, in the order the per-language demos land them. */
+  private val Langs = Seq("de", "en", "es", "fr", "zh")
+
+  /** Read schema of the (doc_id, lang, n_chars) tables the demos land
+    * from [[cleanDocs]]. */
+  private val DocsDdl = "doc_id LONG, lang STRING, n_chars LONG"
+
   /** Materialize an intermediate DataFrame ONCE per invocation — the
     * shared-subtree fix for self-joins whose two sides would otherwise
     * recompute the same expensive upstream concurrently (both sides'
@@ -274,8 +304,7 @@ object Materialize {
     // per-process component: two JVMs on the same sfDir (Bench ∥ Verify)
     // must not race overwrite-vs-read on one directory, and distinct dirs
     // must not collide via hashCode alone; deleted at JVM exit
-    val out = processScratchDir(
-      s"graft_part_orders_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_part_orders", dir)
     writePartitioned(graft.sources.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority")),
@@ -306,8 +335,7 @@ object Materialize {
     * tables (a physical-layout + pruning variant must be value-
     * invisible). */
   def dppJoin(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_dpp_cust_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_dpp_cust", dir)
     writePartitioned(graft.sources.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey")),
       out, "c_nationkey")
@@ -330,8 +358,7 @@ object Materialize {
     * predicate pushdown + column pruning carry the same scan economics
     * as parquet's). */
   def orcRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_orc_li_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_orc_li", dir)
     graft.sources.Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linestatus"), col("l_quantity"),
         col("l_extendedprice"))
@@ -363,8 +390,7 @@ object Materialize {
     * doesn't resolve — the class-name form is the documented DSv1
     * fallback and uses the identical code path. */
   def avroRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_avro_ord_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_avro_ord", dir)
     graft.sources.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
@@ -387,8 +413,7 @@ object Materialize {
     * avro, compact to columnar before analytics. Oracle: plain SQL
     * over the ORIGINAL table. */
   def xmlRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_xml_nat_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_xml_nat", dir)
     graft.sources.Tables.nation(spark, dir)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .write.mode("overwrite").format("xml")
@@ -429,8 +454,7 @@ object Materialize {
     spark.conf.set("spark.sql.variant.writeShredding.enabled", "true")
     spark.conf.set("spark.sql.variant.inferShreddingSchema", "true")
     spark.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
-    val out = processScratchDir(
-      s"graft_var_ev_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_var_ev", dir)
     graft.sources.Tables.events(spark, dir)
       .filter(col("props").isNotNull)
       .select(col("event_type"), parse_json(col("props")).as("v"))
@@ -486,8 +510,7 @@ object Materialize {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sum_cents"),
         max(col("c")).as("max_cents"))
-    val mv = processScratchDir(
-      s"graft_mv_evagg_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val mv = processScratchDir("graft_mv_evagg", dir)
     partials(halved.filter(col("ts_us") <= col("split_us")))
       .write.mode("overwrite").parquet(mv)
     mergeAggPartials(spark.read.parquet(mv),
@@ -505,9 +528,8 @@ object Materialize {
     * table; IngestSpec proves the file count drops 64 → ≤ 8 and the
     * per-file envelopes are pairwise disjoint. */
   def compactRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val hex = java.lang.Integer.toHexString(dir.hashCode)
-    val scatter = processScratchDir(s"graft_scatter_ev_$hex")
-    val compact = processScratchDir(s"graft_compact_ev_$hex")
+    val scatter = processScratchDir("graft_scatter_ev", dir)
+    val compact = processScratchDir("graft_compact_ev", dir)
     graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .repartition(64)
@@ -534,8 +556,7 @@ object Materialize {
     * reconstructs the same view from the original table with a CASE on
     * the generation split. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_schemaevo_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_schemaevo", dir)
     val orders = graft.sources.Tables.orders(spark, dir)
       .filter(col("o_orderkey").isNotNull)
     // the two generation writes target disjoint dirs — concurrent (§2.6)
@@ -566,8 +587,7 @@ object Materialize {
     * dropped dirs are gone and SURVIVING files are byte-identical
     * (nothing was rewritten). */
   def retentionDelete(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_retention_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_retention", dir)
     val evs = graft.sources.Tables.events(spark, dir)
     val dayed = evs.withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     // cutoff day from the same (min+max) div 2 midpoint discipline as
@@ -644,8 +664,7 @@ object Materialize {
     * layout). At 100 TB this is the difference between scanning the
     * whole table and the O(box) corner of it. */
   def zorderBox(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_zorder_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val out = processScratchDir("graft_zorder", dir)
     val base = graft.sources.Tables.orders(spark, dir)
       .filter(col("o_custkey").isNotNull && col("o_totalprice").isNotNull)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -716,10 +735,8 @@ object Materialize {
 
   /** The sfDir-scoped CTAS table names [[bucketedJoin]] writes (scoped
     * so different scales never read each other's buckets). */
-  def bucketTableNames(dir: String): (String, String) = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
-    (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
-  }
+  def bucketTableNames(dir: String): (String, String) =
+    (s"graft_bkt_orders_${dirTag(dir)}", s"graft_bkt_customer_${dirTag(dir)}")
 
   /** Harness-side reset for [[bucketedJoin]]'s CTAS tables: drops any
     * current-catalog entries and clears ORPHAN managed-table directories
@@ -779,7 +796,7 @@ object Materialize {
   /** The sfDir-scoped CTAS table names [[cboJoin]] writes (scoped so
     * different scales never read each other's stats). */
   def cboTableNames(dir: String): (String, String, String) = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
+    val tag = dirTag(dir)
     (s"graft_cbo_li_$tag", s"graft_cbo_ord_$tag", s"graft_cbo_cust_$tag")
   }
 
@@ -975,9 +992,8 @@ object Materialize {
     * part files in the directory stay invisible, which is the property
     * IngestSpec pins directly. */
   def dsv2SinkRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = processScratchDir(
-      s"graft_manifest_${java.lang.Integer.toHexString(dir.hashCode)}")
-    // batch manifest commits are VERSIONED APPENDS (round 11): a re-run
+    val out = processScratchDir("graft_manifest", dir)
+    // batch manifest commits are VERSIONED APPENDS: a re-run
     // in the same JVM (bench reps) would otherwise union both runs'
     // epochs — this query's contract is one run's snapshot, so start
     // from an empty log
@@ -1005,9 +1021,8 @@ object Materialize {
     * table. The oracle reproduces the slice as the residue filter.
     * SnapshotSpec pins the planned-file counts directly. */
   def snapSkippingRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_skip_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_skip", dir,
+      "evskip" -> "event_id LONG, user_id LONG, event_type STRING, epoch_tag LONG")
     val log = new java.io.File(root, "evskip").toString
     val complete = graft.sources.Tables.events(spark, dir)
       .filter(col("event_id").isNotNull && col("ts").isNotNull &&
@@ -1017,10 +1032,6 @@ object Materialize {
     landSlices(spark, log, (0 until 4).map(k =>
       complete.filter(col("event_id") % 4 === k)
         .withColumn("epoch_tag", lit(k.toLong))))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.evskip.schema",
-      "event_id LONG, user_id LONG, event_type STRING, epoch_tag LONG")
     spark.sql(
       """SELECT event_type, count(*) AS n,
         |  count(DISTINCT user_id) AS n_users, sum(event_id) AS id_sum
@@ -1038,17 +1049,10 @@ object Materialize {
     * (Delta keeps the same truncated string bounds). SnapshotSpec pins
     * the planned-file count (1 of 5). */
   def snapSkipString(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_str_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_str", dir, "docskip" -> DocsDdl)
     val log = new java.io.File(root, "docskip").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docskip.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.sql(
       """SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars,
         |  min(doc_id) AS min_doc
@@ -1056,7 +1060,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** ARRAY-ELEMENT EVOLUTION (`q_snap_array_evolve`, round 18): an
+  /** ARRAY-ELEMENT EVOLUTION (`q_snap_array_evolve`): an
     * `array<struct<…>>` column — the training-data schema shape
     * (token spans, annotations) — evolves by pure metadata: element
     * field RENAME + DROP via dotted `#colmap` keys
@@ -1067,11 +1071,7 @@ object Materialize {
     * oracle reconstructs the exploded rows relationally from
     * `documents` (no array machinery on the DuckDB side). */
   def snapArrayEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_arr_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_arr", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_arr_src")
     spark.sql(
@@ -1108,7 +1108,7 @@ object Materialize {
         |GROUP BY s.token""".stripMargin)
   }
 
-  /** MAP-VALUE EVOLUTION (`q_snap_map_evolve`, round 18): a
+  /** MAP-VALUE EVOLUTION (`q_snap_map_evolve`): a
     * `map<string, struct<…>>` column — per-key annotations, the other
     * ubiquitous training-data shape — evolves by pure metadata: value
     * field RENAME + DROP via dotted `#colmap` keys
@@ -1117,11 +1117,7 @@ object Materialize {
     * reconstructs the exploded (key, value) rows relationally from
     * `documents`. */
   def snapMapEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_map_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_map", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_map_src")
     spark.sql(
@@ -1156,7 +1152,7 @@ object Materialize {
         |GROUP BY k""".stripMargin)
   }
 
-  /** BLOOM-filter data skipping (`q_snap_bloom_skip`, round 18): four
+  /** BLOOM-filter data skipping (`q_snap_bloom_skip`): four
     * appends sliced by `doc_id % 4` give every committed file a
     * near-full-range min/max envelope — the worst case for stats-only
     * pruning, and exactly the point-read shape the reference clusters
@@ -1167,11 +1163,7 @@ object Materialize {
     * at scan build. SnapshotSpec pins strict-subset planning, zero
     * false negatives, compaction carry and both-planners parity. */
   def snapBloomSkip(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_bloom_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_bloom", dir)
     spark.sql(
       """CREATE TABLE graft.snap.bloomskip
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -1198,9 +1190,8 @@ object Materialize {
     * exactly this, `etl_kaggle_to_big_query.py:89`). SnapshotSpec pins
     * the planned-file count (1 of 4). */
   def snapSkipTime(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_time_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_time", dir,
+      "evtime" -> "event_id LONG, ts TIMESTAMP, event_type STRING")
     val log = new java.io.File(root, "evtime").toString
     val complete = graft.sources.Tables.events(spark, dir)
       .filter(col("event_id").isNotNull && col("ts").isNotNull &&
@@ -1211,10 +1202,6 @@ object Materialize {
       val hi = if (k == 3) 31 else 7 * k + 7
       complete.filter(dayofmonth(col("ts")).between(lo, hi))
     })
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.evtime.schema",
-      "event_id LONG, ts TIMESTAMP, event_type STRING")
     spark.sql(
       """SELECT event_type, count(*) AS n, sum(event_id) AS id_sum,
         |  min(ts) AS first_ts
@@ -1223,8 +1210,8 @@ object Materialize {
         |GROUP BY event_type""".stripMargin)
   }
 
-  /** ADDITIVE SCHEMA EVOLUTION on snap reads (`q_snap_evolution`,
-    * round 13): the even-doc_id half of documents lands under a 2-column
+  /** ADDITIVE SCHEMA EVOLUTION on snap reads (`q_snap_evolution`):
+    * the even-doc_id half of documents lands under a 2-column
     * schema, the odd half under the 3-column evolution (`n_chars`
     * appended); the widened declared DDL then serves the WHOLE union —
     * pre-evolution files null-fill the new column (the parquet by-name
@@ -1232,9 +1219,7 @@ object Materialize {
     * post-evolution rows. A narrow DDL over the same log refuses
     * (SnapshotSpec pins that half of the contract). */
   def snapEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ev_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_ev", dir, "docev" -> DocsDdl)
     val log = new java.io.File(root, "docev").toString
     val complete = graft.sources.Tables.documents(spark, dir)
       .filter(col("doc_id").isNotNull && col("lang").isNotNull &&
@@ -1249,10 +1234,6 @@ object Materialize {
       .coalesce(1)
       .write.format("graft.sources.ManifestSink")
       .option("path", log).mode("append").save()
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docev.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
     spark.sql(
       """SELECT lang, count(*) AS n_docs, count(n_chars) AS n_evolved,
         |  sum(n_chars) AS sum_chars
@@ -1270,17 +1251,10 @@ object Materialize {
     * the aggregate over the post-delete snapshot oracles against the
     * complement filter. The Delta DELETE shape on the manifest lake. */
   def snapDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_del_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_del", dir, "docdel" -> DocsDdl)
     val log = new java.io.File(root, "docdel").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docdel.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.sql(
       "DELETE FROM graft.snap.docdel WHERE lang = 'es' AND doc_id < 300")
     spark.sql(
@@ -1304,17 +1278,10 @@ object Materialize {
     * are untouched, the dv file is O(deleted rows) small, and
     * compaction resolves it. */
   def snapDvDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_dv_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_dv", dir, "docdv" -> DocsDdl)
     val log = new java.io.File(root, "docdv").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docdv.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.conf.set("spark.sql.catalog.graft.snap.docdv.deleteMode", "mor")
     spark.sql(
       "DELETE FROM graft.snap.docdv WHERE lang = 'es' AND doc_id < 300")
@@ -1337,17 +1304,10 @@ object Materialize {
     * land as ONE atomic epoch. The aggregate over the post-update
     * snapshot oracles against the CASE-mapped source. */
   def snapUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_upd_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_upd", dir, "docupd" -> DocsDdl)
     val log = new java.io.File(root, "docupd").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docupd.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.sql(
       "UPDATE graft.snap.docupd SET n_chars = n_chars + 1000 WHERE lang = 'de'")
     spark.sql(
@@ -1357,7 +1317,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** MERGE INTO from pure SQL (`q_snap_merge`, round 14) — the upsert
+  /** MERGE INTO from pure SQL (`q_snap_merge`) — the upsert
     * refresh shape a real deployment of the reference's monthly cadence
     * (reference `README.md:112`) would adopt once rebuilding the whole
     * table stops scaling; the reference's own monthly job is the full
@@ -1379,17 +1339,10 @@ object Materialize {
     * rewrites. The post-merge aggregate oracles against the
     * CASE-mapped + UNION'd source. */
   def snapMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_mrg_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_mrg", dir, "docmerge" -> DocsDdl)
     val log = new java.io.File(root, "docmerge").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docmerge.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     val updates = complete
       .filter(col("lang") === "es" && col("doc_id") < 300)
       .select(col("doc_id"), col("lang"), (col("n_chars") * 2).as("n_chars"))
@@ -1422,17 +1375,10 @@ object Materialize {
     * (SnapshotSpec pins a 1-row update at one tiny dv + a 1-row
     * replacement file). */
   def snapDvUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_dvu_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_dvu", dir, "docdvu" -> DocsDdl)
     val log = new java.io.File(root, "docdvu").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docdvu.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.conf.set("spark.sql.catalog.graft.snap.docdvu.deleteMode", "mor")
     spark.sql(
       "UPDATE graft.snap.docdvu SET n_chars = n_chars + 1000 WHERE lang = 'de'")
@@ -1454,17 +1400,10 @@ object Materialize {
     * `README.md:112`) a 100 TB deployment actually runs: a CDC
     * trickle-upsert whose write cost is O(changed rows). */
   def snapDvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_dvm_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_dvm", dir, "docdvm" -> DocsDdl)
     val log = new java.io.File(root, "docdvm").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docdvm.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.conf.set("spark.sql.catalog.graft.snap.docdvm.deleteMode", "mor")
     val updates = complete
       .filter(col("lang") === "es" && col("doc_id") < 300)
@@ -1494,11 +1433,7 @@ object Materialize {
     * the PROMOTED name oracles against the staging select — the
     * rename must be value-invisible. */
   def snapRename(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_rn_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_rn", dir)
     cleanDocs(spark, dir).createOrReplaceTempView("graft_rename_src")
     spark.sql(
       """CREATE TABLE graft.snap.docstage AS
@@ -1512,7 +1447,7 @@ object Materialize {
   }
 
   /** DISTRIBUTED PLANNING over the compaction checkpoint
-    * (`q_snap_checkpoint`, round 16): per-language epochs at
+    * (`q_snap_checkpoint`): per-language epochs at
     * `compact.interval = 2` force a compaction — which writes the
     * parquet planning checkpoint — then the read runs with
     * `spark.graft.plan.distributedThreshold = 0`, so the scan plans
@@ -1524,18 +1459,14 @@ object Materialize {
     * proves the planning job's closures serialize across real
     * executor JVMs. */
   def snapCheckpoint(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ck_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_ck", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docckpt
         |(doc_id BIGINT, lang STRING, n_chars BIGINT)
         |TBLPROPERTIES ('compact.interval'='2')""".stripMargin)
     val log = new java.io.File(root, "docckpt").toString
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
+    Langs.foreach { l =>
       complete.filter(col("lang") === l)
         .coalesce(1)
         .write.format("graft.sources.ManifestSink")
@@ -1573,17 +1504,10 @@ object Materialize {
     * stats. The oracle reproduces the same arithmetic over the
     * original column names. */
   def snapColmap(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cmq_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_cmq", dir, "doccm" -> DocsDdl)
     val log = new java.io.File(root, "doccm").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.doccm.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.sql("ALTER TABLE graft.snap.doccm RENAME COLUMN doc_id TO id")
     spark.sql("ALTER TABLE graft.snap.doccm RENAME COLUMN n_chars TO chars")
     // post-rename DML speaks the NEW names
@@ -1600,7 +1524,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** INSERT OVERWRITE on the lake (`q_snap_overwrite`, round 14): the
+  /** INSERT OVERWRITE on the lake (`q_snap_overwrite`): the
     * full-snapshot REPLACE face (`SupportsTruncate` on the manifest
     * write builder) — new task files + `#remove`s of every committed
     * file flip in ONE atomic epoch, so readers see the old table or
@@ -1611,19 +1535,13 @@ object Materialize {
     * The query overwrites a seeded table with a filtered+mapped slice
     * of documents and aggregates the result. */
   def snapOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ow_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_ow", dir, "docover" -> DocsDdl)
     val log = new java.io.File(root, "docover").toString
     val complete = cleanDocs(spark, dir)
     // seed: the full corpus as the "last month's" snapshot
     complete.coalesce(2)
       .write.format("graft.sources.ManifestSink")
       .option("path", log).mode("append").save()
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docover.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
     complete.createOrReplaceTempView("graft_overwrite_src")
     spark.sql(
       """INSERT OVERWRITE graft.snap.docover
@@ -1635,7 +1553,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** CTAS through the catalog face (`q_snap_ctas`, round 15): `CREATE
+  /** CTAS through the catalog face (`q_snap_ctas`): `CREATE
     * TABLE graft.snap.docctas AS SELECT …` is the reference's signature
     * materialization (reference `etl_kaggle_to_big_query.py:88-110`,
     * `CREATE OR REPLACE TABLE … AS SELECT` with casts and a filter) on
@@ -1647,11 +1565,7 @@ object Materialize {
     * aggregate over the created table oracles against the same
     * filtered select on the source. */
   def snapCtas(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ctas_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_ctas", dir)
     cleanDocs(spark, dir).createOrReplaceTempView("graft_ctas_src")
     spark.sql(
       """CREATE TABLE graft.snap.docctas AS
@@ -1664,7 +1578,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** `CREATE OR REPLACE TABLE … AS SELECT` (`q_snap_cor`, round 15) —
+  /** `CREATE OR REPLACE TABLE … AS SELECT` (`q_snap_cor`) —
     * the reference's EXACT materialization statement (reference
     * `etl_kaggle_to_big_query.py:88` is literally `CREATE OR REPLACE
     * TABLE … AS SELECT <casts> WHERE <filter>`, re-run monthly as a
@@ -1676,11 +1590,7 @@ object Materialize {
     * single-epoch atomic variant is `INSERT OVERWRITE`,
     * `q_snap_overwrite`). The oracle reproduces the second select. */
   def snapCor(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cor_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_cor", dir)
     cleanDocs(spark, dir).createOrReplaceTempView("graft_cor_src")
     // month 1: the full corpus
     spark.sql(
@@ -1699,7 +1609,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** The full DDL lifecycle from pure SQL (`q_snap_ddl`, round 15):
+  /** The full DDL lifecycle from pure SQL (`q_snap_ddl`):
     * `CREATE TABLE` with an explicit schema (epoch 0 = the `#schema`
     * record), `INSERT INTO` under it, `ALTER TABLE … ADD COLUMN` (a
     * pure-metadata epoch recording the widened DDL — no data
@@ -1711,11 +1621,7 @@ object Materialize {
     * SnapshotSpec pins the refusals (duplicate CREATE, non-additive
     * ALTER, DROP cleanup, CREATE racing a first append). */
   def snapDdl(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ddl_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_ddl", dir)
     cleanDocs(spark, dir).createOrReplaceTempView("graft_ddl_src")
     spark.sql("CREATE TABLE graft.snap.docddl (doc_id BIGINT, lang STRING)")
     spark.sql(
@@ -1733,7 +1639,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** METADATA TABLES (`q_snap_files`, round 15): the epoch log as a
+  /** METADATA TABLES (`q_snap_files`): the epoch log as a
     * queryable relation — `graft.snap.docfiles.files` serves one row
     * per committed data file of the current snapshot (name, `#stats`
     * row count, on-disk bytes), derived from the O(fragments) metadata
@@ -1746,17 +1652,10 @@ object Materialize {
     * oracle-derivable from the source. `.history` is pinned across
     * append/rewrite/compaction in SnapshotSpec. */
   def snapFiles(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_files_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_files", dir, "docfiles" -> DocsDdl)
     val log = new java.io.File(root, "docfiles").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docfiles.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     spark.sql(
       """SELECT count(*) AS n_files, sum(rows) AS n_rows,
         |  min(rows) AS min_rows, max(rows) AS max_rows,
@@ -1778,11 +1677,7 @@ object Materialize {
     * manifest lake. SnapshotSpec pins planned-file counts, days/bucket
     * transforms, dynamic overwrite and the refusals. */
   def snapPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_part_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_part", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_part_src")
     spark.sql(
@@ -1805,7 +1700,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** PER-FILE NDV RECORDS (`q_snap_ndv`, round 19, the Iceberg-Puffin
+  /** PER-FILE NDV RECORDS (`q_snap_ndv`, the Iceberg-Puffin
     * sketch shape via the DataSketches HLL Spark bundles): a table
     * with `ndv.columns='doc_id,lang'` writes one HLL per configured
     * column per file as rows stream; the `.stats` face serves the
@@ -1818,11 +1713,7 @@ object Materialize {
     * and ~1.6% RSE above, so a 5% gate is deterministic at every SF
     * this harness runs. */
   def snapNdv(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ndv_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_ndv", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docndv
@@ -1869,8 +1760,8 @@ object Materialize {
           .as("est_ok"))
   }
 
-  /** STAGED OVERWRITE on a WAP branch (`q_snap_branch_overwrite`,
-    * round 19): the classic audit-then-publish partition BACKFILL.
+  /** STAGED OVERWRITE on a WAP branch (`q_snap_branch_overwrite`):
+    * the classic audit-then-publish partition BACKFILL.
     * Main loads de+es fanned by lang; a branch stages `INSERT
     * OVERWRITE PARTITION (lang='es')` with corrected rows (+1000
     * chars) — the staged epoch's `#remove`s derive from (and fence
@@ -1880,11 +1771,7 @@ object Materialize {
     * under the base fence. The oracle recomputes the published state
     * relationally. */
   def snapBranchOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_wov_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_wov", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wov_src")
     spark.sql(
@@ -1932,8 +1819,8 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** PARTITION-SPEC EVOLUTION under an oracle (`q_snap_spec_evolve`,
-    * round 16): an identity(lang)-partitioned table takes half the
+  /** PARTITION-SPEC EVOLUTION under an oracle (`q_snap_spec_evolve`):
+    * an identity(lang)-partitioned table takes half the
     * corpus fanned out by language, `CALL graft.sys.set_partition_spec`
     * evolves the layout to `bucket(8, doc_id)` in ONE metadata epoch
     * (zero bytes rewritten — [[graft.sources.SetPartitionSpecProcedure]]),
@@ -1944,11 +1831,7 @@ object Materialize {
     * the aggregate is value-invisible to the evolution, which is
     * exactly what the DuckDB oracle checks. */
   def snapSpecEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_sevo_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_sevo", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docevo
@@ -1971,7 +1854,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** ROLLBACK under an oracle (`q_snap_rollback`, round 16): a good
+  /** ROLLBACK under an oracle (`q_snap_rollback`): a good
     * load, a bad load, a bad COW delete — then
     * `CALL graft.sys.rollback` restores the good snapshot as one
     * metadata-only epoch ([[graft.sources.RollbackProcedure]]): the
@@ -1981,11 +1864,7 @@ object Materialize {
     * corpus — the operational undo a lake needs after a bad pipeline
     * run, value-checked end to end. */
   def snapRollback(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_rb_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_rb", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docro
@@ -2005,7 +1884,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** TYPE WIDENING under an oracle (`q_snap_widen`, round 16): an
+  /** TYPE WIDENING under an oracle (`q_snap_widen`): an
     * INT-column era lands half the corpus, `ALTER TABLE … ALTER COLUMN
     * n_chars TYPE BIGINT` widens in one metadata epoch (zero bytes
     * rewritten — the safe-promotion set), and the BIGINT era lands the
@@ -2014,11 +1893,7 @@ object Materialize {
     * promotion; the oracle reproduces the arithmetic from the source
     * table, so a mis-promoted read cannot hash-match. */
   def snapWiden(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_wide_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_wide", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docwide
@@ -2039,7 +1914,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** SNAPSHOT TAGS under an oracle (`q_snap_tag`, round 16): the good
+  /** SNAPSHOT TAGS under an oracle (`q_snap_tag`): the good
     * load is tagged (`CALL graft.sys.create_tag` — one metadata epoch,
     * the Iceberg tag shape), a bad load and a bad delete land after,
     * and the read goes `VERSION AS OF 'blessed'` BY NAME — no epoch
@@ -2047,11 +1922,7 @@ object Materialize {
     * half: the deployment pattern where jobs pin a blessed snapshot
     * while the pipeline keeps writing. */
   def snapTag(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_tag_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_tag", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.doctag
@@ -2070,18 +1941,14 @@ object Materialize {
   }
 
   /** The `.partitions` metadata table under an oracle
-    * (`q_snap_partitions`, round 16): an identity(lang)-partitioned
+    * (`q_snap_partitions`): an identity(lang)-partitioned
     * load pre-repartitioned by the key lands exactly ONE file per
     * language, and the metadata table answers the layout question —
     * decoded partition value, spec id, file and row counts per
     * partition — from the log alone (no data scan). The oracle
     * recomputes every column from the source corpus. */
   def snapPartitions(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_parts_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_parts", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.docparts
@@ -2094,7 +1961,7 @@ object Materialize {
         |FROM graft.snap.docparts.partitions""".stripMargin)
   }
 
-  /** TIMESTAMP AS OF under an oracle (`q_snap_ts_travel`, round 16):
+  /** TIMESTAMP AS OF under an oracle (`q_snap_ts_travel`):
     * the good load and a bad load land as two epochs whose commit
     * times the query PINS explicitly (epoch mtimes are the clock the
     * resolver reads — pinning them makes the oracle deterministic),
@@ -2103,11 +1970,7 @@ object Materialize {
     * ([[graft.sources.ManifestSink.versionAtTimestamp]]), so the
     * aggregate equals the oracle over the good half. */
   def snapTsTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_tst_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_tst", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql(
       """CREATE TABLE graft.snap.doctst
@@ -2116,9 +1979,9 @@ object Materialize {
       .writeTo("graft.snap.doctst").append()
     complete.filter(col("doc_id") % 2 === 1).coalesce(1)
       .writeTo("graft.snap.doctst").append() // the bad load
-    // pin each epoch's PERSISTED commit time (round 17: `#ts` headers
-    // are the clock; the helper stamps mtime too for the pre-r17
-    // fallback) so wall-clock travel is deterministically oracle-able
+    // pin each epoch's PERSISTED commit time (`#ts` headers are the
+    // clock; the helper stamps mtime too for logs without them) so
+    // wall-clock travel is deterministically oracle-able
     val log = java.nio.file.Paths.get(root, "doctst").toString
     Seq(0L -> 1000000000L, 1L -> 2000000000L, 2L -> 3000000000L).foreach {
       case (id, us) =>
@@ -2131,8 +1994,8 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** The `.history` metadata table under an oracle (`q_snap_history`,
-    * round 15): a deterministic DDL+DML lifecycle — CREATE (metadata
+  /** The `.history` metadata table under an oracle (`q_snap_history`):
+    * a deterministic DDL+DML lifecycle — CREATE (metadata
     * epoch 0), five single-file appends, one merge-on-read delete (a
     * `#dv` epoch: kind `delete`, zero files moved) — read back as
     * (version, kind, n_added, n_removed) rows. Timestamps are
@@ -2140,18 +2003,14 @@ object Materialize {
     * so the oracle is a VALUES literal. The operational story a lake
     * needs answerable by SQL: what happened to this table, in order. */
   def snapHistory(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_hist_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_hist", dir)
     spark.conf.set("spark.sql.catalog.graft.snap.dochist.deleteMode", "mor")
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_hist_src")
     spark.sql(
       """CREATE TABLE graft.snap.dochist
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)""".stripMargin)
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
+    Langs.foreach { l =>
       complete.filter(col("lang") === l).coalesce(1)
         .writeTo("graft.snap.dochist").append()
     }
@@ -2172,17 +2031,10 @@ object Materialize {
     * oracle derives from the source counts — and re-verifies inside
     * that the compacted table still holds every row. */
   def snapCompact(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_pack_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = snapFixture(spark, "graft_snap_pack", dir, "docpack" -> DocsDdl)
     val log = new java.io.File(root, "docpack").toString
     val complete = cleanDocs(spark, dir)
-    landSlices(spark, log,
-      Seq("de", "en", "es", "fr", "zh").map(l => complete.filter(col("lang") === l)))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.docpack.schema",
-      "doc_id LONG, lang STRING, n_chars LONG")
+    landSlices(spark, log, Langs.map(l => complete.filter(col("lang") === l)))
     val expected = complete.count()
     val res = spark.sql("CALL graft.sys.compact_data('docpack', 5000)")
     val after = spark.sql("SELECT count(*) FROM graft.snap.docpack")
@@ -2204,9 +2056,8 @@ object Materialize {
     * committed data. */
   def vacuumSql(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val root = processScratchDir(
-      s"graft_vacuum_sql_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(Paths.get(root))
+    val root = snapFixture(spark, "graft_vacuum_sql", dir,
+      "vt" -> "k LONG, name STRING")
     val log = new java.io.File(root, "vt").toString
     val rows = spark.range(0, 100).selectExpr("id AS k", "repeat('x', 8) AS name")
     rows.coalesce(1).write.format("graft.sources.ManifestSink")
@@ -2219,11 +2070,7 @@ object Materialize {
       Files.write(p, "9,z\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(0))
     }
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
-    spark.conf.set("spark.sql.catalog.graft.snap.vt.schema", "k LONG, name STRING")
-    // age-gate pre-call (advisor r12: the doc promised it; now it runs):
-    // a retention window far in the future reclaims NOTHING — even the
+    // age-gate pre-call: a retention window far in the future reclaims NOTHING — even the
     // back-dated orphans are younger than a ~30-year cutoff — proving
     // the gate itself, not just the happy path
     val young = spark.sql("CALL graft.sys.vacuum('vt', 999999999999999)")
@@ -2599,7 +2446,7 @@ object Materialize {
   }
 
   /** One deterministic table LIFECYCLE shared by the CDC-feed queries
-    * (`q_snap_cdf`, `q_snap_cdf_incr`, round 17): CREATE (0), two
+    * (`q_snap_cdf`, `q_snap_cdf_incr`): CREATE (0), two
     * appends (1: de+en, 2: es), a merge-on-read DELETE (3: es,
     * doc_id%3=0 — a dv-only epoch), a merge-on-read UPDATE (4: de,
     * doc_id%5=0, +1000 chars — dv pre + appended post), a
@@ -2609,9 +2456,6 @@ object Materialize {
     * which is what makes the change feed DuckDB-oracle-able. */
   private def cdcLifecycle(spark: SparkSession, dir: String,
       root: String, tname: String, includeCow: Boolean = true): String = {
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
     val complete = cleanDocs(spark, dir)
     spark.sql(s"CREATE TABLE graft.snap.$tname " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT)")
@@ -2634,7 +2478,7 @@ object Materialize {
     new java.io.File(root, tname).toString
   }
 
-  /** CDC CHANGE FEED (`q_snap_cdf`, round 17): the row-level changes
+  /** CDC CHANGE FEED (`q_snap_cdf`): the row-level changes
     * of the whole retained lifecycle window, aggregated per
     * (_commit_version, _change_type, lang) — inserts from appends,
     * exact deleted rows from the dv-only epoch, pre+post images from
@@ -2643,8 +2487,7 @@ object Materialize {
     * change). The DuckDB oracle reconstructs every epoch's change set
     * relationally from `documents`. */
   def snapCdf(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cdf_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val root = snapFixture(spark, "graft_snap_cdf", dir)
     val log = cdcLifecycle(spark, dir, root, "doccdf")
     graft.sources.ChangeFeed.tableChanges(spark, log, 0, Some(6L))
       .createOrReplaceTempView("graft_cdf_feed")
@@ -2655,23 +2498,19 @@ object Materialize {
         |GROUP BY 1, 2, 3""".stripMargin)
   }
 
-  /** CDC MERGE PAIRING (`q_snap_cdf_merge`, round 18): one MERGE with
+  /** CDC MERGE PAIRING (`q_snap_cdf_merge`): one MERGE with
     * all three clauses — matched de docs update (+5000 chars) or
     * delete (every 4th), unmatched fr docs insert — and the feed
     * serves each clause under its OWN label: the `#cdc pre/post` role
     * tags the delta writer records (update halves arrive WHOLE,
     * `representUpdateAsDeleteAndInsert = false`) are what
     * distinguishes a matched update's pre/postimages from the merge's
-    * pure deletes and inserts; pre-r18 role-less epochs keep the
+    * pure deletes and inserts; epochs without role tags keep the
     * documented net delete+insert fallback (SnapshotSpec pins it).
     * The oracle reconstructs every clause's change set relationally
     * from `documents`. */
   def snapCdfMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cdfm_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_cdfm", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql("CREATE TABLE graft.snap.docmerge " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT) " +
@@ -2696,7 +2535,7 @@ object Materialize {
         |GROUP BY 1, 2""".stripMargin)
   }
 
-  /** CDC COW PAIRING (`q_snap_cdf_cow_pair`, round 19, ROW TRACKING):
+  /** CDC COW PAIRING (`q_snap_cdf_cow_pair`, ROW TRACKING):
     * the same three-clause MERGE as `q_snap_cdf_merge` — but COPY-ON-
     * WRITE, where the log records no per-row pairing at all — followed
     * by a ROLLBACK. Every add carries a `#rowid` base and the rewrite
@@ -2709,11 +2548,7 @@ object Materialize {
     * per-row paired REVERT instead of net delete+insert. The oracle
     * reconstructs both epochs' change sets relationally. */
   def snapCdfCowPair(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cowp_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_cowp", dir)
     val complete = cleanDocs(spark, dir)
     spark.sql("CREATE TABLE graft.snap.doccowp " +
       "(doc_id BIGINT, lang STRING, n_chars BIGINT)")          // epoch 0
@@ -2748,7 +2583,7 @@ object Materialize {
   }
 
   /** INCREMENTAL MATERIALIZATION from the change feed
-    * (`q_snap_cdf_incr`, round 17): a downstream per-lang aggregate
+    * (`q_snap_cdf_incr`): a downstream per-lang aggregate
     * maintained by SIGNED REPLAY of the change rows (+1 for
     * insert/update_postimage, -1 for delete/update_preimage) — the
     * consumer never re-reads the table, the point of CDC at 100 TB.
@@ -2757,8 +2592,7 @@ object Materialize {
     * feed is verified to carry EXACTLY the information a batch
     * recompute would. */
   def snapCdfIncr(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cdfi_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val root = snapFixture(spark, "graft_snap_cdfi", dir)
     val log = cdcLifecycle(spark, dir, root, "doccdfi")
     graft.sources.ChangeFeed.tableChanges(spark, log, 0, Some(6L))
       .createOrReplaceTempView("graft_cdfi_feed")
@@ -2772,7 +2606,7 @@ object Materialize {
         |HAVING sum(sign) > 0""".stripMargin)
   }
 
-  /** STREAMING CDF (`q_snap_cdf_stream`, round 17): `readStream` on
+  /** STREAMING CDF (`q_snap_cdf_stream`): `readStream` on
     * the `.changes` face TAILS the feed — one micro-batch per epoch
     * (`maxEpochsPerTrigger=1`, trigger-count pinned in StreamingSpec),
     * labeled change rows landing in a parquet relay. The lifecycle is
@@ -2783,12 +2617,10 @@ object Materialize {
     * Oracle: the same relational reconstruction as `q_snap_cdf`
     * minus the COW epoch. */
   def snapCdfStream(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cdfs_${java.lang.Integer.toHexString(dir.hashCode)}")
-    val log = cdcLifecycle(spark, dir, root, "doccdfs", includeCow = false)
+    val root = snapFixture(spark, "graft_snap_cdfs", dir)
+    cdcLifecycle(spark, dir, root, "doccdfs", includeCow = false)
     val s = graft.streaming.StreamOps.streamSession(spark)
-    graft.sources.GraftCatalog.register(s, dir)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    graft.sources.GraftCatalog.register(s, dir, Some(root))
     val outDir = new java.io.File(root, "cdf_out").toString
     val q = s.readStream
       .option("maxEpochsPerTrigger", "1")
@@ -2799,8 +2631,6 @@ object Materialize {
       .queryName("graft_snap_cdf_sink")
       .start()
     try q.processAllAvailable() finally q.stop()
-    // `log` is read by the stream above; keep the val referenced
-    require(log.nonEmpty)
     spark.read.parquet(outDir).createOrReplaceTempView("graft_cdfs_feed")
     spark.sql(
       """SELECT _commit_version AS version, _change_type AS change_type,
@@ -2809,7 +2639,7 @@ object Materialize {
         |GROUP BY 1, 2, 3""".stripMargin)
   }
 
-  /** NESTED-FIELD EVOLUTION (`q_snap_nested_evolve`, round 17):
+  /** NESTED-FIELD EVOLUTION (`q_snap_nested_evolve`):
     * rename + drop via dotted `#colmap` entries and inner widening +
     * inner add via one `#schema` epoch, all zero-bytes-rewritten —
     * then a post-evolution append under the NEW names and wide type,
@@ -2818,11 +2648,7 @@ object Materialize {
     * and promote the narrow inner int; the dropped field is gone from
     * the face. The oracle reconstructs both eras from `documents`. */
   def snapNestedEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_ne_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_ne", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_ne_src")
     spark.sql(
@@ -2852,7 +2678,7 @@ object Materialize {
         |GROUP BY meta.language""".stripMargin)
   }
 
-  /** WRITE-AUDIT-PUBLISH (`q_snap_branch`, round 17): stage loads on
+  /** WRITE-AUDIT-PUBLISH (`q_snap_branch`): stage loads on
     * branches, audit via `VERSION AS OF '<branch>'`, publish the
     * validated one with `fast_forward`, drop the failed one — main
     * serves exactly the published rows, NEVER the unvalidated ones.
@@ -2860,11 +2686,7 @@ object Materialize {
     * way a 100 TB lake must run it: staged data is real committed
     * files, invisible until audited, published as one atomic epoch. */
   def snapBranch(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_wap_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_wap", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wap_src")
     spark.sql(
@@ -2899,8 +2721,8 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** STAGED ROW-LEVEL WRITES on a WAP branch (`q_snap_branch_mor`,
-    * round 18): main loads de+es, then a branch stages a merge-on-read
+  /** STAGED ROW-LEVEL WRITES on a WAP branch (`q_snap_branch_mor`):
+    * main loads de+es, then a branch stages a merge-on-read
     * DELETE of the even-id es docs (dv epochs on MAIN files), an fr
     * append, and an UPDATE of those fr rows (a dv on the branch's OWN
     * staged file). The audit face serves the post-change state while
@@ -2910,11 +2732,7 @@ object Materialize {
     * pre-update fr rows cancel (same-epoch self-dv). The oracle
     * recomputes the final state relationally from `documents`. */
   def snapBranchMor(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_wapmor_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_wapmor", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_wapmor_src")
     spark.sql(
@@ -2965,8 +2783,8 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** STREAMING WRITE-AUDIT-PUBLISH (`q_snap_branch_stream`,
-    * round 18): a STREAM stages its micro-batch epochs on a WAP
+  /** STREAMING WRITE-AUDIT-PUBLISH (`q_snap_branch_stream`):
+    * a STREAM stages its micro-batch epochs on a WAP
     * branch — `#forbranch` next to the `#txn` replay records,
     * invisible to main until `fast_forward` publishes the adds AND
     * carries the per-writer watermarks (a post-publish replayed
@@ -2974,11 +2792,7 @@ object Materialize {
     * pin staging invisibility; the oracle is main's final state:
     * the de batch load plus the es rows the stream staged. */
   def snapBranchStream(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_wstr_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_wstr", dir)
     // DataStreamWriter.toTable probes TableCatalog.tableExists on the
     // CALLING thread without withActive(df.sparkSession) — the catalog
     // resolves snap.dir from the thread-local active session, so a
@@ -3029,7 +2843,7 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** EXPIRE SNAPSHOTS (`q_snap_expire`, round 17): five per-lang
+  /** EXPIRE SNAPSHOTS (`q_snap_expire`): five per-lang
     * loads, a tag at version 3, then count-based expiry — the sweep
     * CLAMPS at the tag (tagged snapshots survive expiry by contract),
     * travel below the new horizon refuses, and the CURRENT table is
@@ -3038,18 +2852,14 @@ object Materialize {
     * surviving tag read, and the below-horizon refusal — a regression
     * fails the query, not just a spec. */
   def snapExpire(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_exp_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    snapFixture(spark, "graft_snap_exp", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_exp_src")
     spark.sql(
       """CREATE TABLE graft.snap.docexp
         |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
         |TBLPROPERTIES ('compact.interval'='100')""".stripMargin)
-    Seq("de", "en", "es", "fr", "zh").foreach { l =>
+    Langs.foreach { l =>
       spark.sql("INSERT INTO graft.snap.docexp " +
         s"SELECT * FROM graft_exp_src WHERE lang = '$l'")
     }                                                   // epochs 1..5
@@ -3076,18 +2886,14 @@ object Materialize {
         |GROUP BY lang""".stripMargin)
   }
 
-  /** CDC `_commit_timestamp` (`q_snap_cdf_ts`, round 17): the change
+  /** CDC `_commit_timestamp` (`q_snap_cdf_ts`): the change
     * rows carry the epoch's PERSISTED `#ts` commit clock — pinned
     * here via [[graft.sources.ManifestSink.stampCommitTime]] so the
     * wall-clock column is deterministically oracle-able (the same
     * discipline as `q_snap_ts_travel`). Served through the `.changes`
     * SQL face, so the pseudo-column reader path is what's verified. */
   def snapCdfTs(spark: SparkSession, dir: String): DataFrame = {
-    val root = processScratchDir(
-      s"graft_snap_cdft_${java.lang.Integer.toHexString(dir.hashCode)}")
-    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(root))
-    graft.sources.GraftCatalog.register(spark, dir)
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root)
+    val root = snapFixture(spark, "graft_snap_cdft", dir)
     val complete = cleanDocs(spark, dir)
     complete.createOrReplaceTempView("graft_cdft_src")
     spark.sql(

@@ -59,8 +59,7 @@ object GraphOps {
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
       .filter(size(col("ps")) >= 2)
-    val edgesOut = graft.ingest.Materialize.processScratchDir(
-      s"graft_copurchase_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val edgesOut = graft.ingest.Materialize.processScratchDir("graft_copurchase", dir)
     baskets
       .select(posexplode(col("ps")).as(Seq("i", "a")), col("ps"))
       .select(col("a"), explode(expr("slice(ps, i + 2, size(ps))")).as("b"))
@@ -146,14 +145,12 @@ object GraphOps {
     // is shared between iterations, so there is nothing for stage
     // reuse to win or lose. The sortWithinPartitions keeps the scratch
     // bytes deterministic (the r11 contract).
-    val degOut = graft.ingest.Materialize.processScratchDir(
-      s"graft_pagerank_deg_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val degOut = graft.ingest.Materialize.processScratchDir("graft_pagerank_deg", dir)
     sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .sortWithinPartitions("src")
       .write.mode("overwrite").parquet(degOut)
     val deg = spark.read.parquet(degOut)
-    val adjOut = graft.ingest.Materialize.processScratchDir(
-      s"graft_pagerank_adj_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val adjOut = graft.ingest.Materialize.processScratchDir("graft_pagerank_adj", dir)
     sym.join(deg, "src")
       .sortWithinPartitions("src", "dst")
       .write.mode("overwrite").parquet(adjOut)

@@ -501,8 +501,7 @@ object TextOps {
     * rows, never the vocabulary. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cntOut = graft.ingest.Materialize.processScratchDir(
-      s"graft_vocab_${java.lang.Integer.toHexString(dir.hashCode)}")
+    val cntOut = graft.ingest.Materialize.processScratchDir("graft_vocab", dir)
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(explode(toks).as("word"))

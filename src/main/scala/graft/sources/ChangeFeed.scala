@@ -441,13 +441,12 @@ object ChangeFeed {
   }
 
   /** [[tableChanges]] by CATALOG table name — `tname` under the
-    * session's `spark.sql.catalog.graft.snap.dir`. */
+    * session's registered snap root ([[GraftCatalog.snapDir]]). */
   def tableChangesByName(spark: SparkSession, tname: String, since: Long,
       until: Option[Long] = None): DataFrame = {
     GraftCatalog.requireValidTableName(tname)
-    val root = spark.conf.getOption("spark.sql.catalog.graft.snap.dir")
-      .getOrElse(throw new IllegalStateException(
-        "spark.sql.catalog.graft.snap.dir is not set"))
+    val root = GraftCatalog.snapDir(spark).getOrElse(
+      throw new IllegalStateException("no graft snap root is registered"))
     tableChanges(spark, new java.io.File(root, tname).toString, since, until)
   }
 }

@@ -1033,8 +1033,8 @@ object StreamOps {
     } finally batch.unpersist()
   }
 
-  /** EQUALITY-DELETE keyed upsert sink (round 19,
-    * `q_stream_eq_upsert` — the Iceberg-v2 equality-delete / Flink
+  /** EQUALITY-DELETE keyed upsert sink
+    * (`q_stream_eq_upsert` — the Iceberg-v2 equality-delete / Flink
     * CDC-sink shape): [[runningUserTotals]] runs in Update mode
     * straight INTO the manifest sink with `upsertKeys=user_id` — each
     * micro-batch commits `#eqdel` (delete-by-key of every earlier
@@ -1086,10 +1086,8 @@ object StreamOps {
     // every later streaming query's catalog resolution
     val cat = parent.newSession()
     cat.conf.set("spark.sql.shuffle.partitions", "2")
-    graft.sources.GraftCatalog.register(cat, dir)
-    cat.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    cat.conf.set("spark.sql.catalog.graft.snap.totals.schema",
-      "user_id LONG, n_events LONG, total_cents LONG")
+    graft.sources.GraftCatalog.register(cat, dir, Some(root.toString),
+      Map("totals" -> "user_id LONG, n_events LONG, total_cents LONG"))
     def state() = cat.sql(
       "SELECT user_id, n_events, total_cents FROM graft.snap.totals")
     // 1-row distributed fingerprint, MATERIALIZED before the
@@ -1512,10 +1510,8 @@ object StreamOps {
       feed.close()
       graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
     }
-    graft.sources.GraftCatalog.register(parent, dir)
-    parent.conf.set("spark.sql.catalog.graft.snap.dir", snapRoot.toString)
-    parent.conf.set("spark.sql.catalog.graft.snap.ev.schema",
-      "event_id LONG, user_id LONG, event_type STRING")
+    graft.sources.GraftCatalog.register(parent, dir, Some(snapRoot.toString),
+      Map("ev" -> "event_id LONG, user_id LONG, event_type STRING"))
     snapRoot
   }
 

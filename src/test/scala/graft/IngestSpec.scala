@@ -172,8 +172,7 @@ class IngestSpec extends AnyFunSuite {
     // and the pruning must have HAPPENED, not just been planned: the
     // scan's partitions-read metric stays below the partition count on
     // disk (region 1 holds 5 of the 25 nations)
-    val hex = java.lang.Integer.toHexString(TestSpark.Sf0001.hashCode)
-    val dppDir = Materialize.processScratchDir(s"graft_dpp_cust_$hex")
+    val dppDir = Materialize.processScratchDir("graft_dpp_cust", TestSpark.Sf0001)
     val onDisk = new java.io.File(dppDir).listFiles()
       .count(_.getName.startsWith("c_nationkey="))
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
@@ -196,11 +195,10 @@ class IngestSpec extends AnyFunSuite {
   test("compaction: scattered files collapse to ≤8 sorted files with disjoint ts envelopes") {
     import org.apache.spark.sql.functions._
     Materialize.compactRoundTrip(spark, TestSpark.Sf0001).collect() // drive the writes
-    val hex = java.lang.Integer.toHexString(TestSpark.Sf0001.hashCode)
     def parts(d: String): Int =
       new java.io.File(d).listFiles().count(_.getName.startsWith("part-"))
-    val nScatter = parts(Materialize.processScratchDir(s"graft_scatter_ev_$hex"))
-    val compactDir = Materialize.processScratchDir(s"graft_compact_ev_$hex")
+    val nScatter = parts(Materialize.processScratchDir("graft_scatter_ev", TestSpark.Sf0001))
+    val compactDir = Materialize.processScratchDir("graft_compact_ev", TestSpark.Sf0001)
     val nCompact = parts(compactDir)
     assert(nCompact <= 8 && nCompact < nScatter,
       s"no compaction: scatter=$nScatter compact=$nCompact")
@@ -221,8 +219,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("schema evolution: old generation lacks the column; merged read null-fills it") {
     Materialize.schemaEvolution(spark, TestSpark.Sf0001).collect() // drive the writes
-    val hex = java.lang.Integer.toHexString(TestSpark.Sf0001.hashCode)
-    val root = Materialize.processScratchDir(s"graft_schemaevo_$hex")
+    val root = Materialize.processScratchDir("graft_schemaevo", TestSpark.Sf0001)
     // generation 1 alone has no priority column at all
     assert(!spark.read.parquet(s"$root/gen1").columns.contains("o_orderpriority"))
     // the merged read surfaces it, null for every old-generation row
@@ -896,8 +893,7 @@ class IngestSpec extends AnyFunSuite {
     // recompute the exact output path (same process → same pid suffix)
     // instead of scanning tmpdir by mtime, which a concurrent/stale run
     // from another pid could win — advisor r10
-    val out = graft.ingest.Materialize.processScratchDir(
-      s"graft_var_ev_${java.lang.Integer.toHexString(TestSpark.Sf0001.hashCode)}")
+    val out = graft.ingest.Materialize.processScratchDir("graft_var_ev", TestSpark.Sf0001)
     // 1) the files are SHREDDED: the parquet schema of the variant group
     // carries a typed_value subcolumn next to metadata/value (that typed
     // subcolumn — with its min/max stats — is what the scan serves

@@ -145,9 +145,8 @@ object LakeLadder {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.GraftCatalog.register(spark, "/root/testdata/sf0.001")
-    spark.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    spark.conf.set("spark.sql.catalog.graft.snap.big.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(spark, TestSpark.Sf0001, Some(root.toString),
+      Map("big" -> "k LONG, name STRING"))
     val t4 = System.nanoTime()
     val n = spark.sql("SELECT count(*) FROM graft.snap.big").collect().head.getLong(0)
     val fullReadWall = nowS(t4)

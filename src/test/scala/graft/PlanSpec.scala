@@ -57,8 +57,7 @@ class PlanSpec extends AnyFunSuite {
     "sort-merges the same join") {
     val root = java.nio.file.Files.createTempDirectory("graft_ndvplan")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     // the ESTIMATE must drive the plan (AQE would replan from runtime
     // sizes and hide the manifest statistics under test)
     s.conf.set("spark.sql.adaptive.enabled", "false")

@@ -142,10 +142,8 @@ class SnapshotSpec extends AnyFunSuite {
     // (round-10 verdict: one catalog-wide conf was a single-table
     // limit).
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", snapDir.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.ev.schema",
-      "event_id LONG, user_id LONG, event_type STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(snapDir.toString),
+      Map("ev" -> "event_id LONG, user_id LONG, event_type STRING"))
     val viaSql = s.sql(
       "SELECT event_id FROM graft.snap.ev VERSION AS OF 3")
       .collect().map(_.getLong(0)).toSet
@@ -370,9 +368,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", snapDir.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.kv.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(snapDir.toString),
+      Map("kv" -> "k LONG, name STRING"))
     def prune(): (Int, Int) = graft.sources.SnapTable.lastPruneOf("kv")
     // unfiltered: all four files plan
     assert(s.sql("SELECT k FROM graft.snap.kv").count() == 12)
@@ -519,9 +516,8 @@ class SnapshotSpec extends AnyFunSuite {
     val fresh = Paths.get(log, "data", "orphan-fresh.csv")
     Files.write(fresh, "9,z\n".getBytes(StandardCharsets.UTF_8))
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.vt.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("vt" -> "k LONG, name STRING"))
     // age gate through SQL: a fresh unreferenced file may be mid-commit
     assert(s.sql("CALL graft.sys.vacuum('vt', 86400000)").count() == 0,
       "SQL vacuum reclaimed a fresh file (could be mid-commit)")
@@ -562,8 +558,8 @@ class SnapshotSpec extends AnyFunSuite {
         stats(Paths.get(adds.head).getFileName.toString)
       }
     }
-    val skipLog = graft.ingest.Materialize.processScratchDir("graft_snap_skip_" +
-      Integer.toHexString(TestSpark.Sf0001.hashCode)) + "/evskip"
+    val skipLog = graft.ingest.Materialize.processScratchDir(
+      "graft_snap_skip", TestSpark.Sf0001) + "/evskip"
     assert(graft.sources.ManifestSink.newestVersion(skipLog) == 3)
     val tags = sliceEpochs(skipLog, 4).map { st =>
       val (lo, hi) = st.cols("epoch_tag")
@@ -602,8 +598,8 @@ class SnapshotSpec extends AnyFunSuite {
     // then ONE update epoch that rewrites only the 'de' file
     val qu = graft.SparkEntry.queries("q_snap_update")(spark, TestSpark.Sf0001)
     assert(qu.collect().nonEmpty)
-    val updLog = graft.ingest.Materialize.processScratchDir("graft_snap_upd_" +
-      Integer.toHexString(TestSpark.Sf0001.hashCode)) + "/docupd"
+    val updLog = graft.ingest.Materialize.processScratchDir(
+      "graft_snap_upd", TestSpark.Sf0001) + "/docupd"
     assert(graft.sources.ManifestSink.newestVersion(updLog) == 5)
     val langs = sliceEpochs(updLog, 5).map { st =>
       val (lo, hi) = st.strCols("lang")
@@ -633,9 +629,8 @@ class SnapshotSpec extends AnyFunSuite {
     assert(st.strCols("name")._2.contains("z" * 31 + "{"), // 'z'+1 bump
       st.strCols)
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.tt.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("tt" -> "k LONG, name STRING"))
     assert(s.sql(s"SELECT k FROM graft.snap.tt WHERE name = '$longA'")
       .collect().map(_.getLong(0)).toSeq == Seq(1L),
       "truncated min pruned the row holding the true minimum")
@@ -670,9 +665,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.st.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("st" -> "k LONG, name STRING"))
     val q = s.readStream.option("maxEpochsPerTrigger", 2)
       .table("graft.snap.st")
       .groupBy().agg(count(lit(1)).as("n"), sum(col("k")).as("ks"))
@@ -724,9 +718,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.dt.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("dt" -> "k LONG, name STRING"))
     // partial delete inside ONE file: only epoch 1's k-envelope admits
     s.sql("DELETE FROM graft.snap.dt WHERE k = 101")
     assert(graft.sources.SnapTable.lastDeleteOf("dt") == ((4, 1)),
@@ -786,9 +779,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.ct.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("ct" -> "k LONG, name STRING"))
     def content(): Set[(Long, String)] =
       s.sql("SELECT k, name FROM graft.snap.ct").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -940,9 +932,8 @@ class SnapshotSpec extends AnyFunSuite {
       .write.format("graft.sources.ManifestSink")
       .option("path", log).mode("append").save()
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.cf.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("cf" -> "k LONG, name STRING"))
     import org.apache.spark.sql.functions.col
     def fname(p: String) = Paths.get(p).getFileName.toString
     // DELETE A plans against the current snapshot...
@@ -1036,9 +1027,8 @@ class SnapshotSpec extends AnyFunSuite {
     }
     // final content = seed removed, exactly ONE winner row present
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.rc.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("rc" -> "k LONG, name STRING"))
     val ks = s.sql("SELECT k FROM graft.snap.rc").collect().map(_.getLong(0))
     assert(ks.length == 1 && ks.head >= 1000L,
       s"snapshot after the race must hold exactly the winner's row: ${ks.toSeq}")
@@ -1058,8 +1048,7 @@ class SnapshotSpec extends AnyFunSuite {
       .write.format("graft.sources.ManifestSink")
       .option("path", log).mode("append").save()
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     // narrow conf: drops the recorded 'extra' column
     s.conf.set("spark.sql.catalog.graft.snap.gd.schema", "k LONG, name STRING")
     val delRefused = intercept[Exception](
@@ -1098,9 +1087,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.cl.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("cl" -> "k LONG, name STRING"))
     def plannedFor(pred: String): (Int, Int) = {
       s.sql(s"SELECT count(*) FROM graft.snap.cl WHERE $pred").collect()
       graft.sources.SnapTable.lastPruneOf("cl")
@@ -1139,9 +1127,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.rl.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("rl" -> "k LONG, name STRING"))
     // UPDATE one row inside ONE file: the runtime group filter must
     // narrow the rewrite to that file alone
     s.sql("UPDATE graft.snap.rl SET name = concat(name, '!') WHERE k = 101")
@@ -1212,9 +1199,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.mx.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("mx" -> "k LONG, name STRING"))
     s.createDataFrame(Seq((1L, "x"), (999L, "ins")))
       .toDF("k", "name").createOrReplaceTempView("mx_src")
     s.sql("""MERGE INTO graft.snap.mx t USING mx_src s ON t.k = s.k
@@ -1244,9 +1230,8 @@ class SnapshotSpec extends AnyFunSuite {
         .option("path", log).mode("append").save()
     }
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.ow.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("ow" -> "k LONG, name STRING"))
     def fname(p: String) = Paths.get(p).getFileName.toString
     val preFiles = graft.sources.ManifestSink.committedFiles(log).map(fname)
     s.sql("INSERT OVERWRITE graft.snap.ow VALUES (7, 'new'), (8, 'newer')")
@@ -1298,9 +1283,8 @@ class SnapshotSpec extends AnyFunSuite {
     Files.createDirectories(root.resolve("stw"))
     val ckpt = Files.createTempDirectory("graft_snap_stw_ck").toString
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.stw.schema", "k LONG, name STRING")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("stw" -> "k LONG, name STRING"))
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
     // toTable resolves its catalog through the THREAD-ACTIVE session's
@@ -1359,10 +1343,8 @@ class SnapshotSpec extends AnyFunSuite {
       .write.format("graft.sources.ManifestSink")
       .option("path", log).mode("append").save()
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
-    s.conf.set("spark.sql.catalog.graft.snap.nl.schema",
-      "k LONG, name STRING, v LONG")
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString),
+      Map("nl" -> "k LONG, name STRING, v LONG"))
     def run(pred: String): (Seq[Long], (Int, Int)) = {
       val ks = s.sql(s"SELECT k FROM graft.snap.nl WHERE $pred ORDER BY k")
         .collect().map(_.getLong(0)).toSeq
@@ -1388,8 +1370,7 @@ class SnapshotSpec extends AnyFunSuite {
     "null-filling; non-additive ALTERs refuse; DROP removes log+data") {
     val root = Files.createTempDirectory("graft_snap_ddl")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
 
     // CREATE + INSERT + read back, schema resolved from the log only
     s.sql("CREATE TABLE graft.snap.t1 (k BIGINT, name STRING)")
@@ -1473,8 +1454,7 @@ class SnapshotSpec extends AnyFunSuite {
     "refuses non-partition predicates, and a COW rewrite keeps #part") {
     val root = Files.createTempDirectory("graft_snap_part")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     import org.apache.spark.sql.functions.col
 
     // days(ts) + bucket(4, k): one insert, fan-out by tuple
@@ -1565,8 +1545,7 @@ class SnapshotSpec extends AnyFunSuite {
     "compaction resolves them") {
     val root = Files.createTempDirectory("graft_snap_dv")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.conf.set("spark.sql.catalog.graft.snap.mv.deleteMode", "mor")
     val log = root.resolve("mv").toString
     // two epochs of 100 rows each
@@ -1669,8 +1648,7 @@ class SnapshotSpec extends AnyFunSuite {
     "canonical events-lake shape end to end") {
     val root = Files.createTempDirectory("graft_snap_streampart")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     // toTable resolves its catalog through the THREAD-ACTIVE session
     // (see the round-14 streaming test) — pin and restore
     val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
@@ -1735,8 +1713,7 @@ class SnapshotSpec extends AnyFunSuite {
     "nothing resurrects, the final row set is exact") {
     val root = Files.createTempDirectory("graft_snap_dvrace")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("""CREATE TABLE graft.snap.rc (k BIGINT, v BIGINT)
             |TBLPROPERTIES ('delete.mode'='mor')""".stripMargin)
     locally { import s.implicits._
@@ -1788,8 +1765,7 @@ class SnapshotSpec extends AnyFunSuite {
     "token-safe keys round-trip; the conf still overrides the log") {
     val root = Files.createTempDirectory("graft_snap_props")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("""CREATE TABLE graft.snap.pt (k BIGINT, name STRING)
             |TBLPROPERTIES ('delete.mode'='mor', 'team'='graft-lake',
             |  'compact.interval'='50')""".stripMargin)
@@ -1844,8 +1820,7 @@ class SnapshotSpec extends AnyFunSuite {
     "content — the fileKey guard, never a stale cache hit") {
     val root = Files.createTempDirectory("graft_snap_cache")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.fc (k BIGINT)")
     s.sql("INSERT INTO graft.snap.fc VALUES (1), (2), (3)")
     def q(): Long =
@@ -1881,8 +1856,7 @@ class SnapshotSpec extends AnyFunSuite {
     "into one checkpoint row at the horizon") {
     val root = Files.createTempDirectory("graft_snap_meta")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.mt (k BIGINT, lang STRING)") // epoch 0
     s.sql("INSERT INTO graft.snap.mt VALUES (1, 'de'), (2, 'de')") // 1
     s.sql("INSERT INTO graft.snap.mt VALUES (10, 'es'), (11, 'es'), (12, 'es')") // 2
@@ -1933,8 +1907,7 @@ class SnapshotSpec extends AnyFunSuite {
     "_pos rides every face, and compaction resolves the dv") {
     val root = Files.createTempDirectory("graft_snap_dvu")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.conf.set("spark.sql.catalog.graft.snap.mu.deleteMode", "mor")
     val log = root.resolve("mu").toString
     locally { import s.implicits._
@@ -2009,8 +1982,7 @@ class SnapshotSpec extends AnyFunSuite {
     "#part tuples") {
     val root = Files.createTempDirectory("graft_snap_dvm")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.conf.set("spark.sql.catalog.graft.snap.mm.deleteMode", "mor")
     val log = root.resolve("mm").toString
     locally { import s.implicits._
@@ -2097,8 +2069,7 @@ class SnapshotSpec extends AnyFunSuite {
     "compaction that removed its target aborts cleanly") {
     val root = Files.createTempDirectory("graft_snap_dvrace")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.conf.set("spark.sql.catalog.graft.snap.rr.deleteMode", "mor")
     val log = root.resolve("rr").toString
     locally { import s.implicits._
@@ -2183,8 +2154,7 @@ class SnapshotSpec extends AnyFunSuite {
     "heavily-dv'd table back to the delegate path") {
     val root = Files.createTempDirectory("graft_snap_dvfan")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.conf.set("spark.sql.catalog.graft.snap.fan.deleteMode", "mor")
     val log = root.resolve("fan").toString
     locally { import s.implicits._
@@ -2256,8 +2226,7 @@ class SnapshotSpec extends AnyFunSuite {
     "and folded into the checkpoint; old checkpoints are swept") {
     val root = Files.createTempDirectory("graft_snap_ckpt")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("ckp").toString
     s.sql("""CREATE TABLE graft.snap.ckp (k BIGINT, lang STRING)
             |PARTITIONED BY (lang)
@@ -2341,8 +2310,7 @@ class SnapshotSpec extends AnyFunSuite {
     "refusal at claim time, never a split log") {
     val root = Files.createTempDirectory("graft_snap_rename")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.rn1 (k BIGINT, name STRING)")
     s.sql("INSERT INTO graft.snap.rn1 VALUES (1, 'a'), (2, 'b')")
 
@@ -2407,8 +2375,7 @@ class SnapshotSpec extends AnyFunSuite {
     "collisions refuse") {
     val root = Files.createTempDirectory("graft_snap_colmap")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("cm").toString
     s.sql("""CREATE TABLE graft.snap.cm (k BIGINT, lang STRING, n BIGINT)
             |PARTITIONED BY (lang)""".stripMargin)
@@ -2545,8 +2512,7 @@ class SnapshotSpec extends AnyFunSuite {
     "columns, and racing evolutions serialize on distinct ids") {
     val root = Files.createTempDirectory("graft_spec_evolve")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     import org.apache.spark.sql.functions.col
 
     // era 0: identity(lang) — two files (de, es), each spanning 2 days
@@ -2693,8 +2659,7 @@ class SnapshotSpec extends AnyFunSuite {
       pool.submit(new java.util.concurrent.Callable[Long] {
         override def call(): Long = {
           val s2 = spark.newSession()
-          graft.sources.GraftCatalog.register(s2, TestSpark.Sf0001)
-          s2.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+          graft.sources.GraftCatalog.register(s2, TestSpark.Sf0001, Some(root.toString))
           s2.sql(s"CALL graft.sys.set_partition_spec('rc', '$sp')")
             .head().getLong(0)
         }
@@ -2730,8 +2695,7 @@ class SnapshotSpec extends AnyFunSuite {
     "the dynamic-overwrite refusal's advertised resolution converges") {
     val root = Files.createTempDirectory("graft_spec_unpart")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("up").toString
 
     s.sql("CREATE TABLE graft.snap.up (k BIGINT, lang STRING)")
@@ -2767,8 +2731,7 @@ class SnapshotSpec extends AnyFunSuite {
     "survivors refuse naming compaction, reclaimed targets refuse") {
     val root = Files.createTempDirectory("graft_snap_rollback")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("rb").toString
 
     s.sql("""CREATE TABLE graft.snap.rb (k BIGINT, v STRING)
@@ -2851,8 +2814,7 @@ class SnapshotSpec extends AnyFunSuite {
     "eras; narrowing and non-widening changes refuse") {
     val root = Files.createTempDirectory("graft_snap_widen")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     import org.apache.spark.sql.functions.col
     val log = root.resolve("tw").toString
 
@@ -2954,8 +2916,7 @@ class SnapshotSpec extends AnyFunSuite {
     "numeric names / dangling versions / unknown tags refuse") {
     val root = Files.createTempDirectory("graft_snap_tags")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("tg").toString
 
     s.sql("""CREATE TABLE graft.snap.tg (k BIGINT, v STRING)
@@ -3045,8 +3006,7 @@ class SnapshotSpec extends AnyFunSuite {
     "the first commit) refuse with the boundary spelled out") {
     val root = Files.createTempDirectory("graft_snap_ts")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("tt")
 
     s.sql("CREATE TABLE graft.snap.tt (k BIGINT, v STRING)")
@@ -3110,8 +3070,7 @@ class SnapshotSpec extends AnyFunSuite {
     "horizon refuse") {
     val root = Files.createTempDirectory("graft_snap_cdf")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("cdc").toString
 
     s.sql("CREATE TABLE graft.snap.cdc (k BIGINT, lang STRING, v BIGINT)")
@@ -3199,8 +3158,7 @@ class SnapshotSpec extends AnyFunSuite {
     "sink's own reader agrees, and array/map/deep/narrowing refuse") {
     val root = Files.createTempDirectory("graft_nested_evolve")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("""CREATE TABLE graft.snap.ne (doc_id BIGINT,
             |  meta STRUCT<lang: STRING, score: INT, junk: STRING>)
             |""".stripMargin)
@@ -3325,8 +3283,7 @@ class SnapshotSpec extends AnyFunSuite {
     "a branch abandons its files to vacuum") {
     val root = Files.createTempDirectory("graft_wap")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("wap").toString
     s.sql("CREATE TABLE graft.snap.wap (k BIGINT, v STRING)")
     s.sql("INSERT INTO graft.snap.wap VALUES (1, 'a')")        // epoch 1
@@ -3433,8 +3390,7 @@ class SnapshotSpec extends AnyFunSuite {
     "next sweep proceeds past the old base") {
     val root = Files.createTempDirectory("graft_basecap")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("bc").toString
     s.sql("""CREATE TABLE graft.snap.bc (k BIGINT, v STRING)
             |TBLPROPERTIES ('compact.interval'='4')""".stripMargin)
@@ -3470,8 +3426,7 @@ class SnapshotSpec extends AnyFunSuite {
     "the branch drops") {
     val root = Files.createTempDirectory("graft_tagbranch")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.tb (k BIGINT)")
     s.sql("INSERT INTO graft.snap.tb VALUES (1)")
     s.sql("CALL graft.sys.create_branch('tb', 'ref')").collect()
@@ -3496,8 +3451,7 @@ class SnapshotSpec extends AnyFunSuite {
     "instead of silently omitting its changes") {
     val root = Files.createTempDirectory("graft_cdfgap")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.gap (k BIGINT)")
     (1 to 3).foreach(i =>
       s.sql(s"INSERT INTO graft.snap.gap VALUES ($i)")) // epochs 1-3
@@ -3526,8 +3480,7 @@ class SnapshotSpec extends AnyFunSuite {
     "branch's dv files vacuum out") {
     val root = Files.createTempDirectory("graft_wapmor")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("bm").toString
     s.sql("""CREATE TABLE graft.snap.bm (k BIGINT, v STRING)
             |TBLPROPERTIES ('delete.mode'='mor')""".stripMargin)
@@ -3630,8 +3583,7 @@ class SnapshotSpec extends AnyFunSuite {
     "narrow element promotes), map columns and map evolution refuse") {
     val root = Files.createTempDirectory("graft_arr_evolve")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("""CREATE TABLE graft.snap.ae (doc_id BIGINT,
             |  spans ARRAY<STRUCT<tok: STRING, score: INT, junk: STRING>>,
             |  weights ARRAY<INT>)""".stripMargin)
@@ -3758,8 +3710,7 @@ class SnapshotSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_swap")
     val ckpt = Files.createTempDirectory("graft_swap_ck").toString
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("sw").toString
     s.sql("CREATE TABLE graft.snap.sw (k BIGINT, name STRING)")
     s.sql("INSERT INTO graft.snap.sw VALUES (1, 'm')")           // epoch 1
@@ -3847,8 +3798,7 @@ class SnapshotSpec extends AnyFunSuite {
     "stay exact; rowgroup.bytes is validated") {
     val root = Files.createTempDirectory("graft_rgskip")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     // tiny row groups: 10k rows land in MANY groups (64 KiB floor)
     s.sql("""CREATE TABLE graft.snap.rg (k BIGINT, v STRING)
             |TBLPROPERTIES ('rowgroup.bytes'='65536',
@@ -3917,8 +3867,7 @@ class SnapshotSpec extends AnyFunSuite {
     "refuse)") {
     val root = Files.createTempDirectory("graft_map_evolve")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("""CREATE TABLE graft.snap.me (doc_id BIGINT,
             |  attrs MAP<STRING, STRUCT<score: INT, junk: STRING>>,
             |  counts MAP<STRING, INT>)""".stripMargin)
@@ -4020,8 +3969,7 @@ class SnapshotSpec extends AnyFunSuite {
     "epoch shape) falls back to the documented net delete+insert") {
     val root = Files.createTempDirectory("graft_cdcmerge")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("cm").toString
     s.sql("""CREATE TABLE graft.snap.cm (k BIGINT, v STRING)
             |TBLPROPERTIES ('delete.mode'='mor')""".stripMargin)
@@ -4081,8 +4029,7 @@ class SnapshotSpec extends AnyFunSuite {
     "dropped branch's staged overwrite never touches main") {
     val root = Files.createTempDirectory("graft_wapow")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("wov").toString
     s.sql("""CREATE TABLE graft.snap.wov (k BIGINT, lang STRING)
             |PARTITIONED BY (lang)""".stripMargin)
@@ -4155,8 +4102,7 @@ class SnapshotSpec extends AnyFunSuite {
     "as exact deletes + inserts") {
     val root = Files.createTempDirectory("graft_eqdel")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("eq").toString
     s.sql("""CREATE TABLE graft.snap.eq (k BIGINT, v STRING)
             |TBLPROPERTIES ('compact.interval'='4')""".stripMargin)
@@ -4253,8 +4199,7 @@ class SnapshotSpec extends AnyFunSuite {
     "to the documented multiset-diff net effect") {
     val root = Files.createTempDirectory("graft_rowtrack")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("rt").toString
     s.sql("CREATE TABLE graft.snap.rt (k BIGINT, v STRING)")   // epoch 0
     locally { import s.implicits._
@@ -4352,8 +4297,7 @@ class SnapshotSpec extends AnyFunSuite {
     "unregistering lets the next sweep retire freely") {
     val root = Files.createTempDirectory("graft_feedres")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("fr").toString
     s.sql("""CREATE TABLE graft.snap.fr (k BIGINT)
             |TBLPROPERTIES ('compact.interval'='4')""".stripMargin)
@@ -4404,8 +4348,7 @@ class SnapshotSpec extends AnyFunSuite {
     "bloom-prunes") {
     val root = Files.createTempDirectory("graft_bloom")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     // bits at the floor: records stay tiny, fpp still ~0 at 3 values
     s.sql("""CREATE TABLE graft.snap.bl (k BIGINT, v STRING)
             |TBLPROPERTIES ('bloom.columns'='k,v', 'bloom.bits'='1024',
@@ -4493,8 +4436,7 @@ class SnapshotSpec extends AnyFunSuite {
     "bytes, and the loose history stays bounded under commits") {
     val root = Files.createTempDirectory("graft_expire")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     val log = root.resolve("ex").toString
     // interval 100: nothing sweeps on its own — expiry is the actor
     s.sql("""CREATE TABLE graft.snap.ex (k BIGINT, v STRING)
@@ -4569,5 +4511,29 @@ class SnapshotSpec extends AnyFunSuite {
     assert(s.sql("SELECT count(*) FROM graft.snap.ex").head().getLong(0)
       == 4L)
     graft.util.Fs.deleteRecursively(root)
+  }
+
+  test("snapFixture: one scratch root per (prefix, sf dir), emptied and " +
+    "registered as the session's snap root on every call") {
+    import graft.ingest.Materialize.snapFixture
+    val s = spark.newSession()
+    val root = snapFixture(s, "graft_snap_fixture", TestSpark.Sf0001)
+    assert(Paths.get(root).getFileName.toString == "graft_snap_fixture_" +
+      Integer.toHexString(TestSpark.Sf0001.hashCode) + "_" +
+      ProcessHandle.current().pid())
+    val stale = Paths.get(root, "old", "data", "stale.csv")
+    Files.createDirectories(stale.getParent)
+    Files.write(stale, "1,x\n".getBytes(StandardCharsets.UTF_8))
+    assert(snapFixture(s, "graft_snap_fixture", TestSpark.Sf0001,
+      "t" -> "k LONG") == root, "the same (prefix, dir) must give the same root")
+    assert(!Files.exists(stale) && !Files.exists(Paths.get(root)),
+      "the previous run's tables must be gone")
+    assert(graft.sources.GraftCatalog.snapDir(s).contains(root))
+    assert(s.conf.get("spark.sql.catalog.graft.snap.dir") == root)
+    assert(s.conf.get("spark.sql.catalog.graft.snap.t.schema") == "k LONG")
+    assert(s.conf.get("spark.sql.catalog.graft.dir") == TestSpark.Sf0001)
+    val other = snapFixture(s, "graft_snap_fixture", TestSpark.Sf0001 + "_other")
+    assert(other != root, "two sf dirs must give two roots")
+    assert(s.conf.get("spark.sql.catalog.graft.snap.dir") == other)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Conf-registered listener (zero-arg ctor) so every child session
@@ -30,14 +29,7 @@ object StreamCostProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_stream_ssjoin")
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder("local[32]", "32")
       .config("spark.sql.streaming.streamingQueryListeners",
         "graft.ProbeListener")
       .getOrCreate()

@@ -789,8 +789,7 @@ class StreamingSpec extends AnyFunSuite {
     "with one trigger per epoch") {
     val root = java.nio.file.Files.createTempDirectory("graft_tail_change")
     val s = spark.newSession()
-    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
-    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
     s.sql("CREATE TABLE graft.snap.st (k BIGINT, v STRING)")   // epoch 0
     def append(rows: (Long, String)*): Unit = locally {
       import s.implicits._

@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for every suite. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference fidelity: BigQuery-era non-ANSI casts (null on garbage), SURVEY §7.4
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.builder("local[4]", "4").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
