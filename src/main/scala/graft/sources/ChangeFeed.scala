@@ -439,16 +439,6 @@ object ChangeFeed {
         .add(CommitVersionCol, "long", nullable = false)
         .add(CommitTsCol, "timestamp", nullable = false))
   }
-
-  /** [[tableChanges]] by CATALOG table name — `tname` under the
-    * session's registered snap root ([[GraftCatalog.snapDir]]). */
-  def tableChangesByName(spark: SparkSession, tname: String, since: Long,
-      until: Option[Long] = None): DataFrame = {
-    GraftCatalog.requireValidTableName(tname)
-    val root = GraftCatalog.snapDir(spark).getOrElse(
-      throw new IllegalStateException("no graft snap root is registered"))
-    tableChanges(spark, new java.io.File(root, tname).toString, since, until)
-  }
 }
 
 /** `graft.snap.t.changes` (round 17) — the CDC feed as a CATALOG

@@ -470,21 +470,15 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"graft.snap.$name: ndv.columns entry '$c' must name a " +
             "long-family or string column of the table")
       }
-      case (k, v) => require(ManifestSink.propSafe(k) &&
-          v.split(",", -1).forall(s => s.nonEmpty && ManifestSink.propSafe(s)),
+      case (k, v) => require(ManifestLog.propSafe(k) &&
+          v.split(",", -1).forall(s => s.nonEmpty && ManifestLog.propSafe(s)),
         s"graft.snap.$name: table property '$k'='$v' must be token-safe")
     }
-    val content = (s"#schema ${schema.toDDL}" +:
-      (if (spec.isEmpty) Seq.empty
-       else Seq(s"#spec ${PartField.render(spec)}"))) ++
-      props.map { case (k, v) => ManifestSink.propLine(k, v) }
-    val tmp = java.nio.file.Files.createTempFile(dir, ".epoch", ".tmp")
-    java.nio.file.Files.write(tmp, content.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try java.nio.file.Files.createLink(
-      dir.resolve(ManifestSink.epochName(0)), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => exists() }
-    finally java.nio.file.Files.deleteIfExists(tmp)
+    val seed = Seq(ManifestLog.Schema(schema.toDDL)) ++
+      (if (spec.isEmpty) None
+       else Some(ManifestLog.Spec(None, PartField.render(spec)))) ++
+      props.map { case (k, v) => ManifestLog.Prop(k, v) }
+    if (!ManifestSink.linkFirstEpoch(dir, seed)) exists()
     new SnapTable(name, tdir.toString, schema, None)
   }
 
@@ -668,7 +662,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         val (pt, pi, st) = resolveNested(rn.fieldNames(), "RENAME COLUMN")
         val to = rn.newName()
         require(to != ManifestSink.DroppedColumn &&
-            ManifestSink.propSafe(to) && !to.contains("."),
+            ManifestLog.propSafe(to) && !to.contains("."),
           s"graft.snap.${ident.name()}: '$to' is not a legal field name")
         val taken = st.fields.map(_.name).toSeq ++
           st.fields.map(f => renames.getOrElse(s"$pt.${f.name}", f.name))
@@ -707,7 +701,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         require(conflicts.isEmpty,
           s"graft.snap.${ident.name()}: column '$to' already exists " +
             "(as a logical or physical name)")
-        require(ManifestSink.propSafe(to),
+        require(ManifestLog.propSafe(to),
           s"graft.snap.${ident.name()}: renamed column '$to' must be " +
             "token-safe ([A-Za-z0-9._/=-])")
         renames =
@@ -774,9 +768,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             v.toLongOption.exists(_ >= 0L),
             s"graft.snap.${ident.name()}: bloom.resident.bytes must be " +
               s"a long >= 0, got '$v'")
-          case (k, v) => require(ManifestSink.propSafe(k) &&
+          case (k, v) => require(ManifestLog.propSafe(k) &&
               v.split(",", -1).forall(s =>
-                s.nonEmpty && ManifestSink.propSafe(s)),
+                s.nonEmpty && ManifestLog.propSafe(s)),
             s"graft.snap.${ident.name()}: table property '$k'='$v' must " +
               "be token-safe")
         }
@@ -1775,7 +1769,7 @@ private[sources] object SnapMetaTable {
           spec.zip(t.toks).map {
             case (IdentityPart(c), "n") => s"$c=null"
             case (IdentityPart(c), tok) if tok.startsWith("s") =>
-              s"$c=${ManifestSink.unhex(tok.tail).getOrElse(tok)}"
+              s"$c=${ManifestLog.unhex(tok.tail).getOrElse(tok)}"
             case (IdentityPart(c), tok) => s"$c=$tok"
             case (DaysPart(c), "n") => s"${c}_day=null"
             case (DaysPart(c), tok) => s"${c}_day=" + tok.toLongOption
@@ -1927,7 +1921,7 @@ private[sources] object SnapStats {
     nullsOf(st, col) match {
       case Some(n) => n == st.rows
       case None => st.exhaustiveNulls && st.nulls.nonEmpty &&
-        ManifestSink.statSafeName(col)
+        ManifestLog.statSafeName(col)
     }
 
   /** May ANY row of a file with stats `st` satisfy `f`? Conservative:

@@ -14,6 +14,8 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.ManifestLog._
+
 /** A DataSource V2 SINK with a manifest-based two-phase commit — the
   * atomic-visibility primitive every lake table format is built on,
   * spelled out as connector code:
@@ -29,10 +31,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     written content, so the claim and the publish are one operation.
   *     BOTH faces (batch `mode("append")` and streaming micro-batches)
   *     claim ids this way, so mixed batch+streaming writers serialize
-  *     onto distinct epochs instead of colliding (round 12 — the round-11
-  *     scheme let a batch append claim the id a restarted stream's engine
-  *     epoch would reuse, and the stream's commit was then mis-read as a
-  *     replay and its rows deleted);
+  *     onto distinct epochs instead of colliding (a batch append must
+  *     never claim the id a restarted stream's engine epoch would reuse,
+  *     or the stream's commit is mis-read as a replay and its rows
+  *     deleted);
   *  3. abort deletes the orphaned task files — a failed job leaves no
   *     visible trace because visibility IS the manifest log.
   *
@@ -40,54 +42,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * newest compact file plus the loose epochs after it — O(epochs/
   * compactInterval) small metadata reads, the `_spark_metadata`
   * compaction pattern). There is deliberately NO derived top-level
-  * listing rewritten per commit: round 11 re-wrote the full union on
-  * EVERY commit, O(total files) metadata bytes per epoch and cumulatively
-  * quadratic over a long-lived table (judge r11 #3); readers now pay the
-  * same O(fragments) they always paid, and a commit writes only its own
-  * delta.
+  * listing rewritten per commit — that would be O(total files) metadata
+  * bytes per epoch and cumulatively quadratic over a long-lived table;
+  * readers pay O(fragments), and a commit writes only its own delta.
   *
-  * EPOCH MANIFEST FORMAT (round 12): data lines are committed file
-  * names; lines starting with `#` are metadata records, carried through
-  * compaction:
-  *
-  *  - `#txn <writerId> <engineEpoch>` — a streaming writer's idempotence
-  *    record (the Delta `txnAppId`/`txnVersion` analog). The writerId is
-  *    the streaming query's STABLE id (from `LogicalWriteInfo.queryId`,
-  *    persisted in the checkpoint metadata, unchanged across restarts),
-  *    and replay detection is "engineEpoch <= this writer's committed
-  *    watermark" — per-writer, so a batch append interleaved between
-  *    streaming runs can never make the stream's next commit look like
-  *    a replay. Compaction aggregates the max per writer.
-  *  - `#schema <ddl>` — the schema this epoch was written under, so a
-  *    reader can verify its declared schema against what the log
-  *    actually carries ([[SnapTable]] refuses on mismatch) instead of
-  *    trusting a catalog conf blindly. Compaction keeps the distinct set.
-  *  - `#stats <file> <rows>[ <col>:<min>:<max>(;…)]` — per-file row
-  *    count and min/max per column, written by the task that produced
-  *    the file: the long family (long/int/timestamp-micros/date-days)
-  *    as plain integers, strings (round 13) as hex-encoded
-  *    truncated bounds per [[StrColStat]] (`s<hex>`; `-` = unbounded
-  *    max after truncation), recorded only for all-ASCII files so one
-  *    ordering serves both the JVM and UTF8String comparisons. This is
-  *    the Delta/Iceberg data-skipping contract: a filtered snap read
-  *    prunes files whose stats exclude the predicate BEFORE the scan
-  *    plans them — at 100 TB (where events lakes filter on time and
-  *    partition-like string columns) the difference between a pruned
-  *    scan and a full pass. Compaction keeps the stats of every file
-  *    still in the union.
+  * The log's record kinds and their grammar are [[ManifestLog]]'s.
   *
   * Task files are named by taskId plus a RUN-unique token on both
   * faces, so a speculative/retried attempt — or a second application
   * appending to the same table — writes a DIFFERENT file and the loser
   * is aborted and deleted. The path must be storage shared by driver
-  * and executors. The DATA PLANE is parquet (round 13;
-  * [[ManifestWriters]]) — columnar, compressed, self-describing — so
-  * committed files read back through Spark's vectorized parquet scan
-  * with column pruning and row-group stats, the reference's own
-  * materialization shape. IngestSpec drives write→read round
-  * trips, manifest-miss invisibility, abort cleanup and the 4-thread
-  * concurrent-append race; SnapshotSpec drives time travel, incremental
-  * windows, mixed batch+streaming interleavings and VACUUM. */
+  * and executors. The DATA PLANE is parquet ([[ManifestWriters]]) —
+  * columnar, compressed, self-describing — so committed files read
+  * back through Spark's vectorized parquet scan with column pruning and
+  * row-group stats, the reference's own materialization shape.
+  * IngestSpec drives write→read round trips, manifest-miss
+  * invisibility, abort cleanup and the 4-thread concurrent-append race;
+  * SnapshotSpec drives time travel, incremental windows, mixed
+  * batch+streaming interleavings and VACUUM. */
 class ManifestSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -122,13 +94,13 @@ class ManifestSink extends TableProvider {
         .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Seq.empty),
       // path-based face: streaming writer options arrive as TABLE
-      // properties (round 19, keyed upsert)
+      // properties (keyed upsert)
       upsertKeysOpt = Option(opts.get("upsertKeys")).toSeq
         .flatMap(_.split(",").toSeq).map(_.trim).filter(_.nonEmpty))
   }
 }
 
-/** An OPTIMISTIC-CONCURRENCY conflict (round 14): a copy-on-write
+/** An OPTIMISTIC-CONCURRENCY conflict: a copy-on-write
   * commit (row-level DELETE/UPDATE/MERGE, `compact_data`) tried to
   * `#remove` files that a commit landing first already removed — two
   * COW operations raced over shared files, and letting both publish
@@ -182,7 +154,7 @@ object ManifestSink {
   }
 
   /** [[ManifestWriters.typeTok]], the type token a field travels the
-    * writer/reader plumbing as (round 17: structs ride as JSON). */
+    * writer/reader plumbing as (structs ride as JSON). */
   private[sources] def typeTokOf(
       dt: org.apache.spark.sql.types.DataType): String =
     ManifestWriters.typeTok(dt)
@@ -198,27 +170,29 @@ object ManifestSink {
   private def idOf(p: Path): Long =
     p.getFileName.toString.dropWhile(!_.isDigit).toLong
 
-  /** FRAGMENT PARSE CACHE (round 15): epoch/compact manifests are
-    * IMMUTABLE once linked (the claim publishes fully written content;
-    * nothing ever appends), so their parsed lines are cached keyed by
-    * (absolute path, fileKey, size, mtime) — fileKey is the
-    * device+inode pair, so a table directory deleted and recreated at
-    * the same path (same epoch names, different content) can never
-    * serve stale lines. One scan build walks the fragments ~6 times
-    * (union, stats, partitions, dvs, spec, schema verification) and a
-    * workload re-plans the same table every query — without the cache
-    * the driver's metadata cost is 6×O(fragment bytes) per PLANNING
-    * CYCLE; with it, one parse per fragment per lifetime. Bounded by
-    * entry count (clear-all past the cap — fragments re-read cheaply);
-    * memory is O(one snapshot's listing), the same class as the
-    * planning keep-set. */
+  /** FRAGMENT RECORD CACHE: epoch/compact manifests are IMMUTABLE once
+    * linked (the claim publishes fully written content; nothing ever
+    * appends), so their decoded records are cached keyed by (absolute
+    * path, fileKey, size, mtime) — fileKey is the device+inode pair, so
+    * a table directory deleted and recreated at the same path (same
+    * epoch names, different content) can never serve stale records. A
+    * workload re-plans the same table every query, so without the cache
+    * the driver would re-read every fragment per planning cycle; with
+    * it, one decode per fragment per lifetime. Bounded by entry count
+    * (clear-all past the cap — fragments re-read cheaply); memory is
+    * O(one snapshot's listing), the same class as the planning keep-set.
+    * Files with a null fileKey (filesystems without stable inode
+    * identity) are never cached: size+mtime alone cannot tell a
+    * recreated same-size fragment apart. */
   private val FragmentCacheCap = 256
   private val fragmentCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Object, Long, java.nio.file.attribute.FileTime, Seq[String])]()
+    String, (Object, Long, java.nio.file.attribute.FileTime, Seq[LogRecord])]()
   /** Parses performed (cache misses) — observability for the spec. */
   private[graft] val fragmentParses = new java.util.concurrent.atomic.AtomicLong
 
-  private def readLines(p: Path): Seq[String] = {
+  /** The decoded records of one fragment, in line order; lines that do
+    * not decode (unknown or malformed `#` records) are skipped. */
+  private def records(p: Path): Seq[LogRecord] = {
     val attrs = Files.readAttributes(p,
       classOf[java.nio.file.attribute.BasicFileAttributes])
     val key = p.toAbsolutePath.toString
@@ -227,68 +201,75 @@ object ManifestSink {
         cached._2 == attrs.size && cached._3 == attrs.lastModifiedTime)
       cached._4
     else {
-      val lines = Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8)
-        .asScala.toSeq.filter(_.nonEmpty)
+      val recs = Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8)
+        .asScala.toSeq.flatMap(ManifestLog.decode)
       fragmentParses.incrementAndGet()
-      // a null fileKey (filesystems without stable inode identity)
-      // would make delete-recreate detection null==null — size+mtime
-      // alone cannot tell a recreated same-size fragment within mtime
-      // granularity apart, so such files are simply never cached
-      // (advisor r15); re-reading is the pre-r15 cost, correctness keeps
       if (attrs.fileKey != null) {
         if (fragmentCache.size >= FragmentCacheCap) fragmentCache.clear()
         fragmentCache.put(key,
-          (attrs.fileKey, attrs.size, attrs.lastModifiedTime, lines))
+          (attrs.fileKey, attrs.size, attrs.lastModifiedTime, recs))
       }
-      lines
+      recs
     }
   }
 
-  /** Committed file NAMES in a fragment (header records skipped). */
+  /** Committed file NAMES in a fragment. */
   private def readData(p: Path): Seq[String] =
-    readLines(p).filterNot(_.startsWith("#"))
-
-  private def readHeaders(p: Path): Seq[String] =
-    readLines(p).filter(_.startsWith("#"))
+    records(p).collect { case Data(n) => n }
 
   /** DERIVED SNAPSHOT STATE, memoized per table on a fragment-set
-    * fingerprint (round 16): every scan build needs the committed
-    * union, the stats/partition/dv maps and the properties, and before
-    * this cache each derivation re-walked every cached line —
-    * O(files) driver CPU per PLANNING CYCLE even with the r15 line
-    * cache, six times over. One walk now builds every map at once and
-    * the result is reused until the fragment set changes; the
-    * fingerprint is the same (path, fileKey, size, mtime) identity the
-    * line cache trusts, so a commit, sweep, or delete-recreate
-    * invalidates it exactly when it invalidates the lines. A fragment
-    * with a null fileKey is never fingerprintable — such tables simply
-    * rebuild per call (the pre-r16 cost, correctness keeps).
-    * Per-plan driver CPU is now O(fragments) stat calls + map reuse —
-    * the "O(tail), not O(files)" planning contract. */
+    * fingerprint: every scan build needs the committed union, the
+    * stats/partition/dv maps and the properties; one [[Replay]] builds
+    * them all at once and the result is reused until the fragment set
+    * changes. The fingerprint is the same (path, fileKey, size, mtime)
+    * identity the record cache trusts, so a commit, sweep, or
+    * delete-recreate invalidates it exactly when it invalidates the
+    * records. A fragment with a null fileKey is never fingerprintable —
+    * such tables simply rebuild per call. Per-plan driver CPU is
+    * O(fragments) stat calls + map reuse — the "O(tail), not O(files)"
+    * planning contract. */
   private case class PlanState(
       files: Seq[String], // committed file NAMES, union order
       stats: Map[String, FileStat],
       parts: Map[String, PartTuple],
       dvs: Map[String, Seq[(String, Long)]],
-      props: Map[String, String],
-      schemas: Seq[String],
-      specs: Seq[String],
-      colmap: Map[String, String],
-      tags: Map[String, Long],
-      branches: Map[String, Long],
-      /** file → base row id (round 19): collected WITHOUT remove-drops
-        * — bases are immutable and names never reused, and a CDC
-        * window's removed files need their bases after the remove.
-        * Records die only at compaction, below every readable window. */
+      meta: TableMeta,
+      /** file → base row id: collected WITHOUT remove-drops — bases are
+        * immutable and names never reused, and a CDC window's removed
+        * files need their bases after the remove. Records die only at
+        * compaction, below every readable window. */
       rowids: Map[String, Long])
+
+  /** The table-level records of a replay. */
+  private case class TableMeta(props: Map[String, String],
+      schemas: Seq[String], specs: Seq[Spec], colmap: Map[String, String],
+      tags: Map[String, Long], branches: Map[String, Long])
+  private object TableMeta {
+    def of(r: Replay): TableMeta = TableMeta(r.props.toMap, r.schemas.toSeq,
+      r.specs.toSeq, r.colmap.fold(Map.empty[String, String])(_.entries.toMap),
+      r.tags.toMap, r.branches.toMap)
+  }
+
+  /** A replay's skipping index: conflicting duplicate `#stats`/`#part`
+    * records lose their entry (an unpruned file is a slow read, a
+    * mispruned file is a wrong answer), and a file's `#bloom` payloads
+    * attach AFTER the conflict check (blooms never take part in record
+    * equality). */
+  private def skippingIndex(r: Replay,
+      blooms: scala.collection.Map[String, Map[String, String]])
+      : (Map[String, FileStat], Map[String, PartTuple]) =
+    (r.stats.iterator.filterNot(e => r.statConflicts(e._1)).map { case (n, st) =>
+      n -> blooms.get(n).fold(st)(b => st.copy(blooms = b)) }.toMap,
+      r.parts.iterator.filterNot(e => r.partConflicts(e._1)).toMap)
+
   private val PlanCacheCap = 64
   private val planCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Seq[(String, Object, Long, java.nio.file.attribute.FileTime)],
       PlanState)]()
 
-  /** Default cap on driver-RESIDENT bloom payload bytes per table
-    * (round 19): ~1500 default-size (44 KiB b64) filters. Overridable
-    * via the `bloom.resident.bytes` table property. */
+  /** Default cap on driver-RESIDENT bloom payload bytes per table:
+    * ~1500 default-size (44 KiB b64) filters. Overridable via the
+    * `bloom.resident.bytes` table property. */
   private[graft] val DefaultResidentBloomBytes: Long = 64L << 20
 
   /** Total base64 bloom payload bytes the table's cached plan state
@@ -317,73 +298,26 @@ object ManifestSink {
       Option(planCache.get(key)).collect { case (k, st) if k == f => st }
     }.getOrElse {
       planDerivations.incrementAndGet()
-      val union = scala.collection.mutable.LinkedHashSet[String]()
-      val stats = scala.collection.mutable.ArrayBuffer[(String, FileStat)]()
-      val parts = scala.collection.mutable.ArrayBuffer[(String, PartTuple)]()
-      val dvs = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
-      val props = scala.collection.mutable.LinkedHashMap[String, String]()
-      val schemas = scala.collection.mutable.LinkedHashSet[String]()
-      val specs = scala.collection.mutable.LinkedHashSet[String]()
-      val tags = scala.collection.mutable.LinkedHashMap[String, Long]()
-      val branches = scala.collection.mutable.LinkedHashMap[String, Long]()
-      val blooms = scala.collection.mutable.LinkedHashMap[String, Map[String, String]]()
-      val rowids = scala.collection.mutable.LinkedHashMap[String, Long]()
-      var colmap = Map.empty[String, String]
-      // BRANCH-STAGED epochs (round 17) are invisible to the main
-      // snapshot: their whole content is skipped until published
-      frags.filter(branchOf(_).isEmpty).foreach { p =>
-        readLines(p).foreach { l =>
-          if (!l.startsWith("#")) union.add(l)
-          else if (l.startsWith("#remove ")) {
-            val n = l.stripPrefix("#remove ")
-            union.remove(n); dvs.remove(n)
-          }
-          else if (l.startsWith("#stats ")) parseStats(l).foreach(stats += _)
-          else if (l.startsWith("#bloom ")) parseBloom(l).foreach {
-            case (f, m) => blooms(f) = m }
-          else if (l.startsWith("#part ")) parsePart(l).foreach(parts += _)
-          else if (l.startsWith("#dv ")) parseDv(l).foreach {
-            case (data, dv, n) =>
-              dvs(data) = dvs.getOrElse(data, Seq.empty) :+ ((dv, n))
-          }
-          else if (l.startsWith("#prop ")) l.stripPrefix("#prop ")
-            .split(" ", 2) match {
-              case Array(k, v) => props(k) = v
-              case _ =>
-            }
-          else if (l.startsWith("#schema ")) schemas.add(l.stripPrefix("#schema "))
-          else if (l.startsWith("#spec ")) specs.add(l.stripPrefix("#spec "))
-          else if (l.startsWith("#colmap ")) colmap = parseColmap(l)
-          else if (l.startsWith("#tag ")) parseTag(l).foreach {
-            case (n, Some(v)) => tags(n) = v
-            case (n, None) => tags.remove(n)
-          }
-          else if (l.startsWith("#branch ")) parseBranch(l).foreach {
-            case (n, Some(v)) => branches(n) = v
-            case (n, None) => branches.remove(n)
-          }
-          else if (l.startsWith("#rowid ")) parseRowId(l).foreach {
-            case (f, b) => rowids(f) = b }
-        }
-      }
-      // BLOOM RESIDENCY CAP (round 19, the r18 watch item): the cached
-      // planState would otherwise hold every file's base64 payload —
-      // at the default 2^18 bits (~44 KiB b64) × 10⁵–10⁶ files, GBs of
-      // driver heap for a table that still plans via the driver walk.
-      // `bloom.resident.bytes` (table property; default 64 MiB) bounds
-      // it: the NEWEST files' payloads stay resident up to the cap —
-      // the hot probe set of an append-mostly lake — and older files
-      // fall back to min/max-only pruning (blooms are false-positives-
-      // only, so eviction costs pruning, never correctness). The
-      // distributed checkpoint planner is unaffected: it probes each
-      // file's record from the checkpoint's own bloom column in tasks,
-      // never through this resident map.
-      val bloomCap = props.get("bloom.resident.bytes")
+      // BRANCH-STAGED epochs are invisible to the main snapshot: their
+      // whole content is skipped until published
+      val r = replay(frags.filter(branchOf(_).isEmpty).map(records))
+      // BLOOM RESIDENCY CAP: the cached planState would otherwise hold
+      // every file's base64 payload — at the default 2^18 bits (~44 KiB
+      // b64) × 10⁵–10⁶ files, GBs of driver heap for a table that still
+      // plans via the driver walk. `bloom.resident.bytes` (table
+      // property; default 64 MiB) bounds it: the NEWEST files' payloads
+      // stay resident up to the cap — the hot probe set of an
+      // append-mostly lake — and older files fall back to min/max-only
+      // pruning (blooms are false-positives-only, so eviction costs
+      // pruning, never correctness). The distributed checkpoint planner
+      // is unaffected: it probes each file's record from the
+      // checkpoint's own bloom column in tasks.
+      val bloomCap = r.props.get("bloom.resident.bytes")
         .flatMap(_.toLongOption).getOrElse(DefaultResidentBloomBytes)
       val residentBlooms: scala.collection.Map[String, Map[String, String]] = {
         val keep = scala.collection.mutable.HashMap[String, Map[String, String]]()
         var budget = bloomCap
-        val it = blooms.toSeq.reverseIterator // newest fragment order last
+        val it = r.blooms.toSeq.reverseIterator // newest fragment order last
         var full = false
         while (it.hasNext && !full) {
           val (f, m) = it.next()
@@ -393,19 +327,9 @@ object ManifestSink {
         }
         keep
       }
-      // conflicting duplicate stats/part records lose their entry (the
-      // unpruned-is-slow, mispruned-is-wrong rule — unchanged); a
-      // file's `#bloom` payloads attach AFTER the conflict check
-      // (blooms never participate in record equality)
-      val statMap = stats.groupBy(_._1).collect {
-        case (n, recs) if recs.map(_._2).distinct.size == 1 =>
-          n -> residentBlooms.get(n).fold(recs.head._2)(b =>
-            recs.head._2.copy(blooms = b)) }
-      val partMap = parts.groupBy(_._1).collect {
-        case (n, recs) if recs.map(_._2).distinct.size == 1 => n -> recs.head._2 }
-      val st = PlanState(union.toSeq, statMap.toMap, partMap.toMap,
-        dvs.toMap, props.toMap, schemas.toSeq, specs.toSeq, colmap,
-        tags.toMap, branches.toMap, rowids.toMap)
+      val (statMap, partMap) = skippingIndex(r, residentBlooms)
+      val st = PlanState(r.files.toSeq, statMap, partMap, r.dvs.toMap,
+        TableMeta.of(r), r.rowids.toMap)
       fp.foreach { f =>
         if (planCache.size >= PlanCacheCap) planCache.clear()
         planCache.put(key, (f, st))
@@ -422,7 +346,7 @@ object ManifestSink {
     fragmentUnion(Paths.get(path)).map(f => Paths.get(path, "data", f).toString)
 
   /** Directory listing by prefix; a missing table directory is simply an
-    * empty log (advisor r11: it used to escape as a raw
+    * empty log (it used to escape as a raw
     * NoSuchFileException after 8 futile vanish-retries). */
   private def listPrefixed(dir: Path, prefix: String): Seq[Path] = {
     if (!Files.isDirectory(dir)) return Seq.empty
@@ -439,7 +363,7 @@ object ManifestSink {
 
   /** The compaction horizon as a VERSION (-1 if never swept) — the
     * default exclusive lower bound of a `.changes` read: epochs at or
-    * below it are unrecoverable per-epoch (round 17). */
+    * below it are unrecoverable per-epoch. */
   private[graft] def compactionHorizon(path: String): Long =
     latestCompact(Paths.get(path)).map(_._1).getOrElse(-1L)
 
@@ -470,15 +394,6 @@ object ManifestSink {
         retryVanish(attempts - 1)(f)
     }
 
-  /** `#remove <name>` records of one fragment — a row-level DELETE's
-    * copy-on-write epoch (round 13) lists the files it REPLACES here,
-    * next to the survivor files it adds, so the swap is one atomic
-    * commit. Compact files never carry removes (compaction resolves
-    * them into the union). */
-  private def readRemoves(p: Path): Seq[String] =
-    readHeaders(p).collect {
-      case l if l.startsWith("#remove ") => l.stripPrefix("#remove ") }
-
   /** Union of the fragment contents (committed file names), applying
     * each epoch's adds and `#remove`s IN EPOCH ORDER (a remove always
     * targets a file added strictly earlier; removing an absent name is
@@ -500,117 +415,47 @@ object ManifestSink {
     * files). This is what keeps the per-commit replay check flat as the
     * table ages (LakeLadder measures it at 1,000 epochs). */
   private[sources] def txnWatermark(dir: Path, writerId: String): Long = retryVanish() {
-    manifestFragments(dir)
-      .flatMap(readTxnLines)
-      .collect { case TxnLine(w, e) if w == writerId => e }
+    manifestFragments(dir).flatMap { p =>
+      val in = Files.newBufferedReader(p, java.nio.charset.StandardCharsets.UTF_8)
+      try leadingTxns(in.lines.iterator.asScala) finally in.close()
+    }.collect { case Txn(w, e) if w == writerId => e }
       .maxOption.getOrElse(-1L)
   }
 
-  private def readTxnLines(p: Path): Seq[String] = {
-    val in = Files.newBufferedReader(p, java.nio.charset.StandardCharsets.UTF_8)
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      var line = in.readLine()
-      while (line != null && line.startsWith("#txn")) {
-        buf += line; line = in.readLine()
-      }
-      buf.toSeq
-    } finally in.close()
-  }
-
-  private object TxnLine {
-    def unapply(line: String): Option[(String, Long)] =
-      line.split(" ", 3) match {
-        case Array("#txn", w, e) => e.toLongOption.map((w, _))
-        case _ => None
-      }
-  }
-
-  /** `#cow <token>` markers of one fragment — the run-unique identity a
-    * remove-carrying (copy-on-write) epoch publishes so a claim that
-    * raced a compaction sweep can tell "my commit was absorbed" from
-    * "my claim was stale" even when the epoch added no survivor files
-    * (a delete-everything epoch has no data lines and no `#txn` to
-    * recognize it by). Compaction carries these forward ONE round (from
-    * the loose epochs it absorbs, never from the prior compact), which
-    * bounds the metadata while covering the claim-to-recheck window.
-    * The bound is TWO SWEEPS (advisor r14): a zero-survivor COW
-    * committer whose claim loop somehow spans two full compaction
-    * sweeps would fail the absorbed check on a commit that actually
-    * published and surface a spurious (retryable) conflict — acceptably
-    * narrow because the claim-to-recheck window is a few metadata
-    * reads, while a sweep needs `compactInterval` further epochs to
-    * land; a retried delete-of-already-deleted rows is also a no-op. */
-  private def readCowTokens(p: Path): Seq[String] =
-    readHeaders(p).collect {
-      case l if l.startsWith("#cow ") => l.stripPrefix("#cow ") }
-
   /** Every file name ANY live fragment lists as an add — the
-    * REFERENCED set, removes deliberately NOT applied (round 14): a
-    * `#remove`d file stays referenced while its remove epoch is still
-    * loose, because every retained pre-delete version (`VERSION AS OF`)
-    * still serves it. Once compaction resolves the remove into the
-    * union, the name disappears from every fragment — and time travel
-    * below the horizon is refused anyway — so the file becomes
-    * reclaimable exactly when no servable version can reach it.
-    * Position-delete files (`#dv` records, round 15) are referenced on
-    * the same terms — they live in the data plane and vacuum must not
-    * reclaim one a servable version still applies. */
+    * REFERENCED set, removes deliberately NOT applied: a `#remove`d
+    * file stays referenced while its remove epoch is still loose,
+    * because every retained pre-delete version (`VERSION AS OF`) still
+    * serves it. Once compaction resolves the remove into the union, the
+    * name disappears from every fragment — and time travel below the
+    * horizon is refused anyway — so the file becomes reclaimable
+    * exactly when no servable version can reach it. Position-delete
+    * (`#dv`) files and equality-delete KEY files (`#eqdel`) are
+    * referenced on the same terms: they live in the data plane while
+    * their epochs are loose. */
   private[sources] def referencedFiles(dir: Path): Set[String] = retryVanish() {
-    manifestFragments(dir).flatMap(p =>
-      readData(p) ++ readDvRecords(p).map(_._2) ++
-        // equality-delete KEY files (round 19): referenced while their
-        // `#eqdel` epochs are loose — dropped records' files age out
-        // once the sweep absorbs the epochs that mention them
-        readHeaders(p).flatMap(parseEqDel).map(_._1)).toSet
+    manifestFragments(dir).flatMap(p => records(p).collect {
+      case Data(n) => n
+      case Dv(_, dv, _) => dv
+      case EqDel(f, _, _) => f
+    }).toSet
   }
 
-  /** `#dv <dataFile> <dvFile> <nDeleted>` records of one fragment —
-    * a MERGE-ON-READ delete epoch (round 15, the Delta deletion-vector
-    * / Iceberg position-delete shape): instead of rewriting a file to
-    * drop a few rows, the delete writes the ROW POSITIONS to a small
-    * dv file and readers skip them. O(deleted rows) written per
-    * delete, not O(file) — at 100 TB trickle-delete workloads, the
-    * difference between merge-on-read and copy-on-write write
-    * amplification. */
-  private[sources] def readDvRecords(p: Path): Seq[(String, String, Long)] =
-    readHeaders(p).flatMap(parseDv)
-
-  /** `#forbranch <name>` (round 17, WRITE-AUDIT-PUBLISH): the header a
-    * BRANCH-STAGED epoch carries — invisible to every main-table face
-    * (union, time travel, incremental windows, the change feed, the
-    * checkpoint) until `CALL graft.sys.fast_forward` republishes its
-    * content as one ordinary epoch. Branch epochs stay LOOSE (the
-    * sweep's horizon stops below the oldest live one), so their adds
-    * remain vacuum-referenced and the publish can re-list them by
-    * name; a DROPPED branch's epochs absorb into the next sweep as
-    * nothing — the staged files age out through vacuum. */
+  /** The branch a BRANCH-STAGED (`#forbranch`) epoch is staged on —
+    * invisible to every main-table face (union, time travel,
+    * incremental windows, the change feed, the checkpoint) until
+    * `CALL graft.sys.fast_forward` republishes its content as one
+    * ordinary epoch. Branch epochs stay LOOSE (the sweep's horizon
+    * stops below the oldest live one), so their adds remain
+    * vacuum-referenced and the publish can re-list them by name; a
+    * DROPPED branch's epochs absorb into the next sweep as nothing —
+    * the staged files age out through vacuum. */
   private[sources] def branchOf(p: Path): Option[String] =
-    readHeaders(p).collectFirst {
-      case l if l.startsWith("#forbranch ") =>
-        l.stripPrefix("#forbranch ").trim }
-
-  /** `#branch <name> <baseVersion>` / `#branch <name> -` — the branch
-    * REFS (last record per name wins), carried through sweeps like
-    * tags. `baseVersion` is the main version the branch forked from:
-    * fast_forward refuses if main's DATA state moved past it. */
-  private def parseBranch(line: String): Option[(String, Option[Long])] =
-    line.stripPrefix("#branch ").split(" ", 2) match {
-      case Array(n, "-") if n.nonEmpty => Some(n -> None)
-      case Array(n, v) if n.nonEmpty && v.toLongOption.isDefined =>
-        Some(n -> v.toLongOption)
-      case _ => None
-    }
-
-  private[sources] def branchLine(name: String, base: Option[Long]): String = {
-    require(propSafe(name) && name.toLongOption.isEmpty,
-      s"branch name '$name' must be token-safe and not a bare integer")
-    s"#branch $name ${base.map(_.toString).getOrElse("-")}"
-  }
+    records(p).collectFirst { case ForBranch(b) => b }
 
   /** Live branch refs: name → base version. */
   def tableBranches(path: String): Map[String, Long] =
-    planState(Paths.get(path)).branches
+    planState(Paths.get(path)).meta.branches
 
   private[sources] def commitBranchEpoch(path: String, name: String,
       create: Boolean): Long = {
@@ -623,13 +468,13 @@ object ManifestSink {
         require(!tableTags(path).contains(name),
           s"'$name' names a TAG on $path — branches and tags share " +
             "the VERSION AS OF namespace")
-        Seq(branchLine(name, Some(newestVersion0(dir))))
+        Seq(Branch(name, Some(newestVersion0(dir))))
       } else {
         require(branches.contains(name),
           s"no branch '$name' on $path to drop " +
             s"(branches: ${branches.keys.toSeq.sorted.mkString(", ") match {
               case "" => "none"; case b => b }})")
-        Seq(branchLine(name, None))
+        Seq(Branch(name, None))
       }
     })
   }
@@ -646,7 +491,7 @@ object ManifestSink {
       .mapValues(es => (es.size.toLong, es.map(_._2).sum.toLong)).toMap
   }
 
-  /** PUBLISH a branch (round 17, the Iceberg `fast_forward` shape):
+  /** PUBLISH a branch (the Iceberg `fast_forward` shape):
     * re-list every staged epoch's adds (with their `#stats`/`#part`
     * records, verbatim) as ONE ordinary append epoch and drop the
     * branch ref in the same atomic claim — main sees the audited rows
@@ -679,9 +524,10 @@ object ManifestSink {
       val tail = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
         .filter(_._1 > base).sortBy(_._1)
       val moved = tail.filter { e =>
-        branchOf(e._2).isEmpty &&
-          (readData(e._2).nonEmpty || readRemoves(e._2).nonEmpty ||
-            readDvRecords(e._2).nonEmpty)
+        branchOf(e._2).isEmpty && records(e._2).exists {
+          case _: Data | _: Remove | _: Dv => true
+          case _ => false
+        }
       }
       if (moved.nonEmpty) throw new IllegalStateException(
         s"fast_forward('$name') on $path: main data epoch(s) " +
@@ -690,22 +536,25 @@ object ManifestSink {
           "against the current snapshot (nothing was published)")
       val mine = tail.filter(e => branchOf(e._2).contains(name))
       nEpochs = mine.size
-      // RESOLVE staged epochs in order (round 19, staged OVERWRITE):
+      // RESOLVE staged epochs in order (staged OVERWRITE):
       // a staged remove of a MAIN file publishes as a `#remove`; a
       // staged remove of an EARLIER STAGED add cancels it (the add
       // never reaches main — its rows were audited away). Staged dv
       // records on a later-removed file die with it.
       val addAcc = scala.collection.mutable.LinkedHashSet[String]()
       val removesOfMain = scala.collection.mutable.LinkedHashSet[String]()
-      val dvAcc = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+      val dvAcc = scala.collection.mutable.ArrayBuffer[Dv]()
       mine.foreach { e =>
-        readRemoves(e._2).foreach { r =>
-          if (addAcc.contains(r)) addAcc.remove(r)
-          else removesOfMain.add(r)
-          dvAcc.filterInPlace(_._1 != r)
+        val rs = records(e._2)
+        rs.foreach {
+          case Remove(r) =>
+            if (addAcc.contains(r)) addAcc.remove(r)
+            else removesOfMain.add(r)
+            dvAcc.filterInPlace(_.data != r)
+          case _ =>
         }
-        readDvRecords(e._2).foreach(dvAcc += _)
-        readData(e._2).foreach(addAcc.add)
+        rs.foreach { case d: Dv => dvAcc += d; case _ => }
+        rs.foreach { case Data(n) => addAcc.add(n); case _ => }
       }
       val adds = addAcc.toSeq
       nFiles = adds.size
@@ -715,14 +564,14 @@ object ManifestSink {
       // refuse loudly; the audit face showed both, so re-stage them as
       // separate branches.
       if (removesOfMain.nonEmpty &&
-          dvAcc.exists(d => !addAcc.contains(d._1)))
+          dvAcc.exists(d => !addAcc.contains(d.data)))
         throw new UnsupportedOperationException(
           s"fast_forward('$name') on $path: the branch stages both an " +
             "overwrite's #remove of main files and row-level #dv " +
             "records on surviving main files — one epoch cannot serve " +
             "both exactly to the change feed; stage and publish these " +
             "operations on separate branches (nothing was published)")
-      // `#cdc` role tags (round 18) carry per staged epoch — EXCEPT
+      // `#cdc` role tags carry per staged epoch — EXCEPT
       // when that epoch's update pre-images target the branch's OWN
       // staged adds: those rows were never visible to main, so the
       // update halves collapse to the documented net-effect labels
@@ -731,33 +580,30 @@ object ManifestSink {
       // UPDATE touching main rows AND staged rows) drops its tags
       // whole rather than mislabel either side.
       val branchAdds = adds.toSet
+      // records of a staged-then-overwritten add die with it: only
+      // PUBLISHED files' records replay. `#cdc` tags name adds (post) OR
+      // dv files (pre) — a pre-tag survives with its dv record.
+      val surviveDvNames = dvAcc.map(_.dv).toSet
       val carried = mine.flatMap { e =>
-        val hs = readHeaders(e._2)
-        val selfUpdating = hs.flatMap(parseCdc).exists { case (f, r) =>
-          r == "pre" && readDvRecords(e._2)
-            .exists(d => d._2 == f && branchAdds.contains(d._1))
+        val rs = records(e._2)
+        val selfUpdating = rs.exists {
+          case Cdc(f, "pre") => rs.exists {
+            case Dv(d, v, _) => v == f && branchAdds.contains(d)
+            case _ => false
+          }
+          case _ => false
         }
-        hs.filter(l =>
-          l.startsWith("#stats ") || l.startsWith("#part ") ||
-            l.startsWith("#bloom ") || l.startsWith("#ndv ") ||
-            (l.startsWith("#cdc ") && !selfUpdating))
-      }.filter { l =>
-        // records of a staged-then-overwritten add die with it
-        // (round 19): only PUBLISHED files' records replay. `#cdc`
-        // tags name adds (post) OR dv files (pre) — a pre-tag
-        // survives with its dv record.
-        val surviveDvNames = dvAcc.map(_._2).toSet
-        l.split(" ", 3) match {
-          case Array(_, f, _*) if l.startsWith("#stats ") ||
-              l.startsWith("#part ") || l.startsWith("#bloom ") ||
-              l.startsWith("#ndv ") =>
-            branchAdds.contains(f)
-          case Array(_, f, _*) if l.startsWith("#cdc ") =>
-            branchAdds.contains(f) || surviveDvNames.contains(f)
-          case _ => true
+        rs.filter {
+          case s: Stats => branchAdds.contains(s.file)
+          case Part(f, _) => branchAdds.contains(f)
+          case Bloom(f, _) => branchAdds.contains(f)
+          case Ndv(f, _) => branchAdds.contains(f)
+          case Cdc(f, _) => !selfUpdating &&
+            (branchAdds.contains(f) || surviveDvNames.contains(f))
+          case _ => false
         }
       }
-      // STAGED ROW-LEVEL writes (round 18): the branch's `#dv` records
+      // STAGED ROW-LEVEL writes: the branch's `#dv` records
       // replay verbatim in epoch order. Safe by the fences above: no
       // main data/dv epoch landed past the base and the horizon never
       // crossed it, so every main-file target is live with exactly the
@@ -765,26 +611,25 @@ object ManifestSink {
       // adds flip visibility WITH their files in this one claim. A
       // dv-carrying publish classifies `merge` (net delete+insert at
       // the publish version — the change feed's exact contract for it).
-      val dvLines = dvAcc.toSeq.map { case (d, v, n) => dvLine(d, v, n) }
       lastPublishedRemoves = removesOfMain.toSeq
-      // STAGED STREAMING epochs (round 18) carry per-writer `#txn`
+      // STAGED STREAMING epochs carry per-writer `#txn`
       // replay records; the publish re-declares the MAX watermark per
       // writer (leading the content — the records-lead contract), so a
       // post-publish restart's replayed engine epochs still detect
       // even after the sweep absorbs the dropped branch epochs.
-      val txnLines = mine.flatMap(e => readHeaders(e._2))
-        .collect { case TxnLine(w, e) => (w, e) }
+      val txns = mine.flatMap(e => records(e._2))
+        .collect { case Txn(w, e) => (w, e) }
         .groupMapReduce(_._1)(_._2)(math.max)
-        .toSeq.sortBy(_._1).map { case (w, e) => s"#txn $w $e" }
+        .toSeq.sortBy(_._1).map { case (w, e) => Txn(w, e) }
       val ddl = widestRecordedSchema(path).getOrElse(
         throw new IllegalStateException(
           s"manifest table $path records no #schema"))
-      // the #cow token rides UNCONDITIONALLY (round 18): with carried
+      // the #cow token rides UNCONDITIONALLY: with carried
       // #txn lines, the claim's absorbed-check txn arm could in
       // principle match the still-loose STAGED epoch's watermark — the
       // sweep cap below live staged epochs makes that race unreachable,
       // and the op-unique token keeps detection exact regardless
-      // classification (round 19): a remove-carrying publish is the
+      // classification: a remove-carrying publish is the
       // staged overwrite's full replacement of exactly those files —
       // the feed serves every pre row a delete, every published row an
       // insert (self-dv'd positions excluded), which IS the net truth
@@ -792,12 +637,12 @@ object ManifestSink {
       // `append`.
       val op =
         if (removesOfMain.nonEmpty) "overwrite"
-        else if (dvLines.nonEmpty) "merge"
+        else if (dvAcc.nonEmpty) "merge"
         else "append"
-      txnLines ++ Seq(s"#schema $ddl", opLine(op), s"#cow $pubToken") ++
-        carried ++ Seq(branchLine(name, None)) ++
-        removesOfMain.toSeq.sorted.map(n => s"#remove $n") ++
-        dvLines ++ adds
+      txns ++ Seq(Schema(ddl), Op(op), Cow(pubToken)) ++
+        carried ++ Seq(Branch(name, None)) ++
+        removesOfMain.toSeq.sorted.map(Remove(_)) ++
+        dvAcc ++ adds.map(Data(_))
     })
     // remove-time mtime stamp (the main overwrite path's vacuum-grace
     // contract) for files the publish replaced
@@ -812,67 +657,58 @@ object ManifestSink {
     (id, nEpochs, nFiles)
   }
 
+  /** The records of a branch's staged epochs, in epoch order. */
+  private def stagedOn(dir: Path, name: String): Seq[Seq[LogRecord]] =
+    looseEpochs(dir, latestCompact(dir).map(_._1).getOrElse(-1L))
+      .filter(e => branchOf(e._2).contains(name)).sortBy(_._1)
+      .map(e => records(e._2))
+
   /** The files a BRANCH read serves: the main union FOLDED with the
     * branch's staged epochs in order — adds join, staged `#remove`s
-    * (round 19, staged OVERWRITE) leave. Absolute paths. */
+    * (a staged OVERWRITE) leave. Absolute paths. */
   def branchFiles(path: String, name: String): Seq[String] = retryVanish() {
     val dir = Paths.get(path)
     require(tableBranches(path).contains(name),
       s"no branch '$name' on $path")
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
     val acc = scala.collection.mutable.LinkedHashSet[String]()
     fragmentUnion(dir).foreach(acc.add)
-    looseEpochs(dir, horizon)
-      .filter(e => branchOf(e._2).contains(name))
-      .sortBy(_._1).map(_._2).foreach { p =>
-        readRemoves(p).foreach(acc.remove)
-        readData(p).foreach(acc.add)
-      }
+    stagedOn(dir, name).foreach(_.foreach {
+      case Remove(n) => acc.remove(n)
+      case Data(n) => acc.add(n)
+      case _ =>
+    })
     acc.toSeq.map(f => Paths.get(path, "data", f).toString)
   }
 
-  /** The partition tuples a BRANCH-staged overwrite decides on
-    * (round 19): main's recorded tuples plus the staged epochs' own
-    * `#part` records — a staged add is overwritable by a later staged
-    * dynamic/filtered overwrite exactly like a main file. */
+  /** The partition tuples a BRANCH-staged overwrite decides on: main's
+    * recorded tuples plus the staged epochs' own `#part` records — a
+    * staged add is overwritable by a later staged dynamic/filtered
+    * overwrite exactly like a main file. */
   private[sources] def branchFilePartitions(path: String, name: String)
       : Map[String, PartTuple] = retryVanish() {
-    val dir = Paths.get(path)
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-    val acc = scala.collection.mutable.LinkedHashMap[String, PartTuple]()
-    filePartitions(path).foreach { case (f, t) => acc(f) = t }
-    looseEpochs(dir, horizon)
-      .filter(e => branchOf(e._2).contains(name)).sortBy(_._1)
-      .flatMap(e => readHeaders(e._2).flatMap(parsePart))
-      .foreach { case (f, t) => acc(f) = t }
-    acc.toMap
+    filePartitions(path) ++ stagedOn(Paths.get(path), name).flatten
+      .collect { case Part(f, t) => f -> t }
   }
 
-  /** The dv state a BRANCH read applies (round 18, staged row-level
-    * writes): main's live vectors plus the branch's staged `#dv`
-    * records in epoch order — a staged MOR DELETE/UPDATE is visible on
-    * the audit face and invisible to main, exactly like a staged
-    * append. */
+  /** The dv state a BRANCH read applies (staged row-level writes):
+    * main's live vectors plus the branch's staged `#dv` records in
+    * epoch order — a staged MOR DELETE/UPDATE is visible on the audit
+    * face and invisible to main, exactly like a staged append. A staged
+    * overwrite's removes clear the victims' dv state — their rows are
+    * gone from the branch face whole. */
   def branchDeleteVectors(path: String, name: String)
       : Map[String, Seq[(String, Long)]] = retryVanish() {
-    val dir = Paths.get(path)
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
     val acc = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
     deleteVectors(path).foreach { case (d, l) => acc(d) = l }
-    looseEpochs(dir, horizon)
-      .filter(e => branchOf(e._2).contains(name)).sortBy(_._1)
-      .foreach { e =>
-        // a staged overwrite's removes clear the victims' dv state
-        // (round 19) — their rows are gone from the branch face whole
-        readRemoves(e._2).foreach(acc.remove)
-        readDvRecords(e._2).foreach { case (d, v, n) =>
-          acc(d) = acc.getOrElse(d, Seq.empty) :+ ((v, n))
-        }
-      }
+    stagedOn(Paths.get(path), name).foreach(_.foreach {
+      case Remove(n) => acc.remove(n)
+      case Dv(d, v, n) => acc(d) = acc.getOrElse(d, Seq.empty) :+ ((v, n))
+      case _ =>
+    })
     acc.toMap
   }
 
-  /** EQUALITY DELETES (round 19, the Iceberg-v2 equality-delete /
+  /** EQUALITY DELETES (the Iceberg-v2 equality-delete /
     * Flink-CDC-sink shape): `#eqdel <file> <col1[,col2…]> <n>` names a
     * small parquet KEY file — rows matching any of its key tuples are
     * deleted from every data file committed in an EARLIER epoch (the
@@ -890,22 +726,6 @@ object ManifestSink {
     * files — resurrecting deleted keys). */
   private[graft] case class EqDelete(epoch: Long, file: String,
       cols: Seq[String], rows: Long)
-
-  private[sources] def eqDelLine(file: String, cols: Seq[String],
-      n: Long): String = {
-    require(cols.nonEmpty && cols.forall(statSafeName),
-      s"equality-delete key columns must be stat-safe names: $cols")
-    s"#eqdel $file ${cols.mkString(",")} $n"
-  }
-
-  private[sources] def parseEqDel(l: String)
-      : Option[(String, Seq[String], Long)] =
-    if (!l.startsWith("#eqdel ")) None
-    else l.stripPrefix("#eqdel ").split(" ") match {
-      case Array(f, cols, n) =>
-        n.toLongOption.map((f, cols.split(",").toSeq, _))
-      case _ => None
-    }
 
   /** LIVE equality deletes: records in loose (non-branch) epochs minus
     * the `#eqdrop`-consumed set, with their epoch ids — O(tail). Live
@@ -928,18 +748,17 @@ object ManifestSink {
     looseEpochs(dir, horizon).filter(_._1 <= version)
       .filter(e => branchOf(e._2).isEmpty).sortBy(_._1).foreach {
         case (id, p) =>
-          readHeaders(p).foreach { l =>
-            parseEqDel(l).foreach { case (f, cols, n) =>
-              recs += EqDelete(id, f, cols, n) }
-            if (l.startsWith("#eqdrop "))
-              dropped += l.stripPrefix("#eqdrop ").trim
+          records(p).foreach {
+            case EqDel(f, cols, n) => recs += EqDelete(id, f, cols, n)
+            case EqDrop(f) => dropped += f
+            case _ =>
           }
       }
     recs.toSeq.filterNot(e => dropped.contains(e.file))
   }
 
   /** Drop every live equality-delete record in ONE metadata epoch
-    * (round 19) — the no-applicable-files resolution arm of
+    * — the no-applicable-files resolution arm of
     * `compact_data` (every row the records could delete is already
     * gone or rewritten): releases the sweep clamp and the COW/MOR
     * refusals without moving a byte. Re-derived per claim attempt;
@@ -948,8 +767,7 @@ object ManifestSink {
       compactInterval: Int): Unit = {
     val dir = Paths.get(path)
     claimEpoch(dir, () =>
-      opLine("metadata") +: equalityDeletes(path).map(e =>
-        s"#eqdrop ${e.file}"))
+      Op("metadata") +: equalityDeletes(path).map(e => EqDrop(e.file)))
     maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
       compactInterval)
   }
@@ -974,9 +792,9 @@ object ManifestSink {
       acc.toMap
     }
 
-  /** MERGED per-column NDV of the LIVE snapshot (round 19,
-    * [[NdvSketch]]): the live files' HLL sketches unioned (HLL union
-    * is lossless) — physical column → (files sketched, estimate).
+  /** MERGED per-column NDV of the LIVE snapshot ([[NdvSketch]]): the
+    * live files' HLL sketches unioned (HLL union is lossless) —
+    * physical column → (files sketched, estimate).
     * Cached per newest version; a rebuild heapifies each payload
     * TRANSIENTLY (never retained — the bloom-residency lesson applied
     * from day one) at O(live sketched files) CPU. */
@@ -994,7 +812,7 @@ object ManifestSink {
       val unions = scala.collection.mutable.LinkedHashMap[String,
         (Long, org.apache.datasketches.hll.Union)]()
       manifestFragments(dir).filter(branchOf(_).isEmpty).foreach { p =>
-        readHeaders(p).flatMap(parseNdv).foreach { case (f, m) =>
+        records(p).foreach { case Ndv(f, m) =>
           if (live.contains(f)) m.foreach { case (c, b64) =>
             if (seen.add((c, f)))
               NdvSketch.fromB64(b64).foreach { sk =>
@@ -1004,6 +822,7 @@ object ManifestSink {
                 unions(c) = (n + 1, u)
               }
           }
+          case _ =>
         }
       }
       val res = unions.map { case (c, (n, u)) =>
@@ -1014,42 +833,7 @@ object ManifestSink {
     }
   }
 
-  /** `#op <kind>` (round 17, the CDC classification header): what the
-    * committing OPERATION was — `append`, `overwrite`, `delete`,
-    * `update`, `merge`, `compact`, `rollback` — so the change feed can
-    * label an epoch's row effects without guessing. Structure alone
-    * cannot tell a compaction from a COW delete (both are
-    * adds+removes); the one-word header is what lets the feed skip a
-    * pure rewrite WITHOUT reading a byte of it. Pre-r17 epochs carry
-    * none and classify structurally (remove-carrying epochs fall back
-    * to the safe diff form). */
-  private[sources] def opLine(op: String): String = {
-    require(propSafe(op), s"epoch op '$op' must be token-safe")
-    s"#op $op"
-  }
-
-  private[sources] def epochOp(p: Path): Option[String] =
-    readHeaders(p).collectFirst {
-      case l if l.startsWith("#op ") => l.stripPrefix("#op ").trim }
-
-  private def parseDv(l: String): Option[(String, String, Long)] =
-    if (!l.startsWith("#dv ")) None
-    else l.stripPrefix("#dv ").split(" ") match {
-      case Array(data, dv, n) => n.toLongOption.map((data, dv, _))
-      case _ => None
-    }
-
-  private[sources] def dvLine(dataFile: String, dvFile: String, n: Long): String =
-    s"#dv $dataFile $dvFile $n"
-
-  /** `#cdc <file> <pre|post>` (round 18): marks a dv file as UPDATE
-    * pre-image positions or an add file as UPDATE postimages, so the
-    * change feed labels a MERGE's matched rows update_pre/postimage
-    * instead of the net delete+insert fallback. Pure CDC annotation —
-    * every data-plane reader ignores it, and it only ever matters on
-    * LOOSE epochs (the feed refuses below the horizon), so compaction
-    * need not carry it. */
-  /** ROW TRACKING (round 19, the Delta row-tracking / Iceberg-v3
+  /** ROW TRACKING (the Delta row-tracking / Iceberg-v3
     * row-lineage shape): every data-carrying commit assigns each added
     * file a fresh BASE ROW ID — `#rowid <file> <base>` — from a
     * monotone per-table watermark (`#rowidhwm <next>`), reserving
@@ -1067,16 +851,6 @@ object ManifestSink {
     * as one line. */
   private[sources] val RowIdColumnName = "_graft_rowid"
 
-  private[sources] def rowIdLine(file: String, base: Long): String =
-    s"#rowid $file $base"
-
-  private[sources] def parseRowId(l: String): Option[(String, Long)] =
-    if (!l.startsWith("#rowid ")) None
-    else l.stripPrefix("#rowid ").split(" ") match {
-      case Array(f, b) => b.toLongOption.map((f, _))
-      case _ => None
-    }
-
   /** The table's row-id HIGH WATERMARK: the max `#rowidhwm` across ALL
     * fragments — including branch-staged epochs, whose reserved ids
     * must never be reissued even though their rows are not yet (or
@@ -1084,10 +858,8 @@ object ManifestSink {
   private[sources] def rowIdWatermark(dir: Path): Long = retryVanish() {
     // manifestFragments includes branch-staged loose epochs — exactly
     // right here: staged reservations must hold even before publish
-    manifestFragments(dir).flatMap(p => readLines(p).collect {
-      case l if l.startsWith("#rowidhwm ") =>
-        l.stripPrefix("#rowidhwm ").trim.toLongOption
-    }.flatten).maxOption.getOrElse(0L)
+    manifestFragments(dir).flatMap(p => records(p).collect {
+      case RowIdHwm(n) => n }).maxOption.getOrElse(0L)
   }
 
   /** Every live file's base row id (immutable once assigned; records
@@ -1095,19 +867,6 @@ object ManifestSink {
     * at or below every CDC-readable window by construction). */
   def rowIdBases(path: String): Map[String, Long] =
     planState(Paths.get(path)).rowids
-
-  private[sources] def cdcLine(file: String, role: String): String = {
-    require(role == "pre" || role == "post",
-      s"cdc role must be pre|post, got '$role'")
-    s"#cdc $file $role"
-  }
-
-  private def parseCdc(l: String): Option[(String, String)] =
-    if (!l.startsWith("#cdc ")) None
-    else l.stripPrefix("#cdc ").split(" ") match {
-      case Array(f, r) if r == "pre" || r == "post" => Some((f, r))
-      case _ => None
-    }
 
   /** The LIVE delete vectors per data file: `#dv` records accumulated
     * in fragment order, cleared when the data file itself is
@@ -1140,17 +899,10 @@ object ManifestSink {
           // it refused there we never get here (callers resolve files
           // first), so resolving from the loose prefix is consistent
           loose.filter(_._1 <= version).sortBy(_._1).map(_._2)
-      val acc = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
-      fragments.filter(branchOf(_).isEmpty).foreach { p =>
-        readDvRecords(p).foreach { case (data, dv, n) =>
-          acc(data) = acc.getOrElse(data, Seq.empty) :+ ((dv, n))
-        }
-        readRemoves(p).foreach(acc.remove)
-      }
-      acc.toMap
+      replay(fragments.filter(branchOf(_).isEmpty).map(records)).dvs.toMap
     }
 
-  /** COLUMN MAPPING (round 16, the Delta column-mapping shape for
+  /** COLUMN MAPPING (the Delta column-mapping shape for
     * RENAME COLUMN without rewriting a byte): the `#colmap
     * <physical>=<logical>[;…]` record maps the PHYSICAL column names —
     * which stay fixed forever in data files, `#stats` keys, `#schema`
@@ -1162,41 +914,24 @@ object ManifestSink {
     * translation lives at the session boundary (filters logical→
     * physical on the way in, schemas physical→logical on the way out,
     * writers always write physical). */
-  /** A `#colmap` value of `-` marks the physical column DROPPED
-    * (round 16): the logical schema omits it, reads never request it,
-    * new files simply lack it — zero bytes rewritten — and because the
+  /** A `#colmap` value of `-` marks the physical column DROPPED: the
+    * logical schema omits it, reads never request it, new files simply
+    * lack it — zero bytes rewritten — and because the
     * physical name stays in the `#schema` records forever, ADD COLUMN
     * can never rebind the old bytes (re-adding the LOGICAL name is
     * safe: it gets a fresh physical name). */
   val DroppedColumn = "-"
 
-  private def parseColmap(l: String): Map[String, String] =
-    l.stripPrefix("#colmap ").split(";").toSeq.flatMap { e =>
-      e.split("=", 2) match {
-        case Array(p, lg) if p.nonEmpty && lg.nonEmpty => Some(p -> lg)
-        case _ => None
-      }
-    }.toMap
-
-  private[sources] def colmapLine(m: Map[String, String]): String = {
-    m.foreach { case (p, lg) => require(propSafe(p) && propSafe(lg),
-      s"column names in a rename must be token-safe: '$p'='$lg'") }
-    s"#colmap ${m.toSeq.sortBy(_._1).map { case (p, lg) => s"$p=$lg" }
-      .mkString(";")}"
-  }
-
   /** The live physical→logical column mapping (empty = identity). */
-  def columnMapping(path: String): Map[String, String] = {
-    val dir = Paths.get(path)
-    metaState(dir).map(_._4).getOrElse(planState(dir).colmap)
-  }
+  def columnMapping(path: String): Map[String, String] =
+    tableMeta(Paths.get(path)).colmap
 
   /** Append a pure-metadata epoch carrying the full `#colmap` record —
     * the ALTER TABLE RENAME COLUMN commit. */
   private[sources] def commitColmapEpoch(path: String,
       mapping: Map[String, String]): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => Seq(colmapLine(mapping)))
+      () => Seq(Colmap(mapping.toSeq.sortBy(_._1))))
 
   /** Rename v1 filter column references through `m` (case-insensitive
     * keys) — how a LOGICAL predicate becomes the PHYSICAL one every
@@ -1227,57 +962,30 @@ object ManifestSink {
     }
   }
 
-  /** Non-per-file records — (schemas, props, specs) — via the
-    * checkpoint META sidecar plus the loose tail's headers, when a
-    * sidecar matching the current horizon exists (round 16): O(tail)
-    * reads, the O(files) compact text never parsed. None → the caller
-    * falls back to the memoized [[planState]] (identical values, just
-    * derived the expensive way). With no compact at all, the loose log
-    * IS the tail and planState is already O(tail). */
-  private def metaState(dir: Path)
-      : Option[(Seq[String], Map[String, String], Seq[String],
-        Map[String, String], Map[String, Long])] =
+  /** The table-level records via the checkpoint META sidecar plus the
+    * loose tail, when a sidecar matching the current horizon exists:
+    * O(tail) reads, the O(files) compact text never parsed. Otherwise
+    * the memoized [[planState]]'s (identical values, derived the
+    * expensive way); with no compact at all, the loose log IS the tail
+    * and planState is already O(tail). */
+  private def tableMeta(dir: Path): TableMeta =
     latestCompact(dir).flatMap { case (h, _) =>
       val mp = dir.resolve(checkpointMetaName(h))
       if (!Files.isRegularFile(mp)) None
       else retryVanish() {
-        val schemas = scala.collection.mutable.LinkedHashSet[String]()
-        val props = scala.collection.mutable.LinkedHashMap[String, String]()
-        val specs = scala.collection.mutable.LinkedHashSet[String]()
-        val tags = scala.collection.mutable.LinkedHashMap[String, Long]()
-        var colmap = Map.empty[String, String]
-        val lines = readLines(mp) ++
-          looseEpochs(dir, h).sortBy(_._1)
-            .filter(e => branchOf(e._2).isEmpty)
-            .flatMap(e => readHeaders(e._2))
-        lines.foreach { l =>
-          if (l.startsWith("#schema ")) schemas.add(l.stripPrefix("#schema "))
-          else if (l.startsWith("#spec ")) specs.add(l.stripPrefix("#spec "))
-          else if (l.startsWith("#colmap ")) colmap = parseColmap(l)
-          else if (l.startsWith("#tag ")) parseTag(l).foreach {
-            case (n, Some(v)) => tags(n) = v
-            case (n, None) => tags.remove(n)
-          }
-          else if (l.startsWith("#prop ")) l.stripPrefix("#prop ")
-            .split(" ", 2) match {
-              case Array(k, v) => props(k) = v
-              case _ =>
-            }
-        }
-        Some((schemas.toSeq, props.toMap, specs.toSeq, colmap, tags.toMap))
+        Some(TableMeta.of(replay(records(mp) +: looseEpochs(dir, h)
+          .sortBy(_._1).map(_._2).filter(branchOf(_).isEmpty).map(records))))
       }
-    }
+    }.getOrElse(planState(dir).meta)
 
   /** The distinct schema DDLs the live fragments record — what the log
     * says it was written under. Order is fragment order (oldest compact
     * record first). */
-  def recordedSchemas(path: String): Seq[String] = {
-    val dir = Paths.get(path)
-    metaState(dir).map(_._1).getOrElse(planState(dir).schemas)
-  }
+  def recordedSchemas(path: String): Seq[String] =
+    tableMeta(Paths.get(path)).schemas
 
   /** May a column recorded as `from` be SERVED as `to` without
-    * reinterpreting committed bytes (round 16, type widening — the
+    * reinterpreting committed bytes (type widening — the
     * Iceberg safe-promotion set restricted to what both of Spark's
     * parquet readers and this sink's own group reader promote
     * exactly)? Integrals widen up to long; float widens to double.
@@ -1291,15 +999,15 @@ object ManifestSink {
       case (ShortType, IntegerType | LongType) => true
       case (IntegerType, LongType) => true
       case (FloatType, DoubleType) => true
-      // NESTED evolution (round 17): a struct widens to one that
+      // NESTED evolution: a struct widens to one that
       // CONTAINS it — inner fields widened and/or appended; removed
       // inner fields never widen (that would drop data)
       case (f: StructType, t: StructType) => f != t && containsSchema(t, f)
-      // ARRAY element evolution (round 18): an array widens when its
+      // ARRAY element evolution: an array widens when its
       // element type does (primitive widening or struct containment)
       case (f: ArrayType, t: ArrayType) =>
         f != t && widens(f.elementType, t.elementType)
-      // MAP value evolution (round 18): keys are identity (key
+      // MAP value evolution: keys are identity (key
       // reinterpretation would re-bucket committed lookups), values
       // widen like array elements
       case (f: MapType, t: MapType) =>
@@ -1309,11 +1017,11 @@ object ManifestSink {
     }
   }
 
-  /** NESTED column mapping (round 17): `#colmap` keys may be DOTTED
+  /** NESTED column mapping: `#colmap` keys may be DOTTED
     * physical paths (`s.a=b` renames struct field, `s.a=-` drops it) —
     * the same zero-bytes-rewritten contract as top-level, applied
-    * recursively. Round 18 extends the recursion through ARRAY
-    * elements: an `array<struct<…>>` column's inner fields key as
+    * recursively, and through ARRAY elements: an
+    * `array<struct<…>>` column's inner fields key as
     * `col.element.field` (the Spark field-path convention). These two
     * are the single translation pair every face uses: physical schema
     * → logical (serving) and a logical-named schema → physical
@@ -1408,7 +1116,7 @@ object ManifestSink {
         (df.dataType == rf.dataType || widens(rf.dataType, df.dataType))))
 
   /** The recorded `#schema` DDL that CONTAINS every other recorded one
-    * — the log's self-describing declared schema (round 15): under
+    * — the log's self-describing declared schema: under
     * additive evolution the newest record is the widest and wins; a
     * log whose records have no single containing schema (mixed
     * subset-schema writers through the path face) resolves to None and
@@ -1431,7 +1139,7 @@ object ManifestSink {
   def partitionSpec(path: String): Seq[PartField] =
     partitionSpecs(path).current
 
-  /** The table's full partition-spec HISTORY (round 16, spec
+  /** The table's full partition-spec HISTORY (spec
     * evolution): every `#spec` record the log carries, parsed into a
     * [[SpecBook]]. Record grammar is `#spec [<id>=]t1;t2` with t ∈
     * `identity:<col>` | `days:<col>` | `bucket:<n>:<col>`; the CREATE
@@ -1441,8 +1149,7 @@ object ManifestSink {
     * files carry that id and pruning must not guess their layout. */
   def partitionSpecs(path: String): SpecBook = retryVanish() {
     val dir = Paths.get(path)
-    val recs = metaState(dir).map(_._3).getOrElse(planState(dir).specs)
-    val parsed = recs.map(parseSpecRecord)
+    val parsed = tableMeta(dir).specs.map(r => (r.specId, r.body))
     val dup = parsed.groupBy(_._1)
       .collect { case (id, rs) if rs.map(_._2).distinct.size > 1 => id }
     if (dup.nonEmpty) throw new IllegalStateException(
@@ -1454,17 +1161,8 @@ object ManifestSink {
              else s.split(";").toSeq.map(PartField.parse)) }.toMap)
   }
 
-  /** `#spec` record → (spec id, rendered tokens). The id-less legacy
-    * form is spec 0. */
-  private def parseSpecRecord(rec: String): (Int, String) = {
-    val eq = rec.indexOf('=')
-    if (eq > 0 && rec.substring(0, eq).forall(_.isDigit))
-      (rec.substring(0, eq).toInt, rec.substring(eq + 1))
-    else (0, rec)
-  }
-
   /** Append a pure-metadata epoch evolving the partition spec — the
-    * `CALL graft.sys.set_partition_spec` commit (round 16). The next
+    * `CALL graft.sys.set_partition_spec` commit. The next
     * spec id is derived INSIDE the claim's content generator, so two
     * racing evolutions serialize (the loser's retry sees the winner's
     * record and takes the following id) and one id can never bind two
@@ -1480,15 +1178,15 @@ object ManifestSink {
     val epoch = claimEpoch(dir, () => {
       val id = partitionSpecs(path).currentId + 1
       claimedSpecId.set(id)
-      Seq(s"#spec $id=$body")
+      Seq(Spec(Some(id), body))
     })
     (epoch, claimedSpecId.get)
   }
 
   /** Encoded partition-value tuples per committed file name, from the
-    * `#part <file> [<specId>@]<tok1,tok2>` records (round 15; the
-    * spec-id prefix is round 16's spec EVOLUTION — absent means spec 0,
-    * so pre-evolution logs parse unchanged). Files without a record
+    * `#part <file> [<specId>@]<tok1,tok2>` records (the spec-id
+    * prefix is spec EVOLUTION — absent means spec 0, so pre-evolution
+    * logs parse unchanged). Files without a record
     * (pre-partitioning files, COW rewrites from older builds) simply
     * have no tuple: pruning treats them as unprunable and
     * partition-scoped overwrite refuses to touch them. Compaction
@@ -1496,24 +1194,25 @@ object ManifestSink {
   def filePartitions(path: String): Map[String, PartTuple] =
     planState(Paths.get(path)).parts
 
-  private def parsePart(line: String): Option[(String, PartTuple)] = {
-    if (!line.startsWith("#part ")) return None
-    line.stripPrefix("#part ").split(" ", 2) match {
-      case Array(f, rest) if rest.nonEmpty =>
-        val at = rest.indexOf('@')
-        val (id, toks) =
-          if (at > 0 && rest.substring(0, at).forall(_.isDigit))
-            (rest.substring(0, at).toInt, rest.substring(at + 1))
-          else (0, rest)
-        if (toks.isEmpty) None
-        else Some(f -> PartTuple(id, toks.split(",", -1).toSeq))
-      case _ => None
-    }
-  }
+  /** The `#forbranch` header of an epoch staged on `forBranch`,
+    * validated against the live refs per claim attempt — writing to a
+    * dropped branch refuses. */
+  private[sources] def stagedHeader(path: String,
+      forBranch: Option[String]): Seq[ForBranch] =
+    forBranch.map { b =>
+      require(tableBranches(path).contains(b),
+        s"no branch '$b' on $path — create it with " +
+          "CALL graft.sys.create_branch first")
+      ForBranch(b)
+    }.toSeq
 
-  private[sources] def partLine(file: String, t: PartTuple): String =
-    if (t.specId == 0) s"#part $file ${t.toks.mkString(",")}"
-    else s"#part $file ${t.specId}@${t.toks.mkString(",")}"
+  /** The per-file records of freshly written files: `#stats`, `#bloom`,
+    * `#ndv`, then `#part` tuples under spec `specId`. */
+  private[sources] def fileRecords(files: Seq[CommittedFile],
+      specId: Int): Seq[LogRecord] =
+    files.map(statsOf) ++ files.flatMap(bloomOf) ++ files.flatMap(ndvOf) ++
+      files.collect { case f if f.part.nonEmpty =>
+        Part(f.name, PartTuple(specId, f.part)) }
 
   /** Publish a MERGE-ON-READ delete epoch: `#dv` records only — no
     * data lines, no removes. O(records) metadata and O(deleted rows)
@@ -1526,28 +1225,21 @@ object ManifestSink {
   private[graft] def commitDvEpoch(path: String, schemaDdl: String,
       records: Seq[(String, String, Long)], compactInterval: Int,
       observedDvs: Option[Map[String, Set[String]]] = None,
-      /** Stage on a WAP branch (round 18) — see [[commitDeltaEpoch]]. */
+      /** Stage on a WAP branch — see [[commitDeltaEpoch]]. */
       forBranch: Option[String] = None): Long = {
     val dir = Files.createDirectories(Paths.get(path))
     val token = java.util.UUID.randomUUID.toString
-    def content(): Seq[String] = {
-      val branchHdr = forBranch.map { b =>
-        require(tableBranches(path).contains(b),
-          s"no branch '$b' on $path — create it with " +
-            "CALL graft.sys.create_branch first")
-        s"#forbranch $b"
-      }.toSeq
-      Seq(s"#schema $schemaDdl", opLine("delete"), s"#cow $token") ++
-        branchHdr ++
-        records.sortBy(_._1).map { case (data, dv, n) => dvLine(data, dv, n) }
-    }
+    def content(): Seq[LogRecord] =
+      Seq(Schema(schemaDdl), Op("delete"), Cow(token)) ++
+        stagedHeader(path, forBranch) ++
+        records.sortBy(_._1).map { case (d, v, n) => Dv(d, v, n) }
     val id = claimEpoch(dir, content _, observedDvs = observedDvs)
     maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
       compactInterval)
     id
   }
 
-  /** Publish a MERGE-ON-READ row-level UPDATE/MERGE epoch (round 16):
+  /** Publish a MERGE-ON-READ row-level UPDATE/MERGE epoch:
     * `#dv` records for the replaced/deleted row positions PLUS the
     * appended replacement/inserted data files, flipped in ONE atomic
     * claim — the Iceberg-v2 position-delta commit shape. Write cost is
@@ -1563,34 +1255,24 @@ object ManifestSink {
       compactInterval: Int,
       observedDvs: Map[String, Set[String]], specId: Int = 0,
       op: String = "update",
-      /** Write-audit-publish (round 18): stage this MOR epoch on a
+      /** Write-audit-publish: stage this MOR epoch on a
         * branch — `#forbranch` next to its `#dv` records, invisible to
         * every main face until `fast_forward` replays it. */
       forBranch: Option[String] = None,
-      /** CDC role tags (round 18): (file → pre|post) — the UPDATE
+      /** CDC role tags: (file → pre|post) — the UPDATE
         * halves of a MERGE, so the feed serves update_pre/postimage
         * for them instead of the net delete+insert fallback. Pure
-        * annotation: readers ignore it, pre-r18 epochs lack it. */
+        * annotation: readers ignore it, older epochs may lack it. */
       cdcRoles: Seq[(String, String)] = Seq.empty): Long = {
     val dir = Files.createDirectories(Paths.get(path))
     val token = java.util.UUID.randomUUID.toString
     val sortedAdds = adds.sortBy(_.name)
-    val parts = sortedAdds.collect {
-      case f if f.part.nonEmpty => partLine(f.name, PartTuple(specId, f.part)) }
-    def content(): Seq[String] = {
-      val branchHdr = forBranch.map { b =>
-        require(tableBranches(path).contains(b),
-          s"no branch '$b' on $path — create it with " +
-            "CALL graft.sys.create_branch first")
-        s"#forbranch $b"
-      }.toSeq
-      Seq(s"#schema $schemaDdl", opLine(op), s"#cow $token") ++ branchHdr ++
-        sortedAdds.map(statsLine) ++ sortedAdds.flatMap(bloomLine) ++
-        sortedAdds.flatMap(ndvLine) ++ parts ++
-        cdcRoles.sortBy(_._1).map { case (f, r) => cdcLine(f, r) } ++
-        dvRecords.sortBy(_._1).map { case (d, v, n) => dvLine(d, v, n) } ++
-        sortedAdds.map(_.name)
-    }
+    def content(): Seq[LogRecord] =
+      Seq(Schema(schemaDdl), Op(op), Cow(token)) ++
+        stagedHeader(path, forBranch) ++ fileRecords(sortedAdds, specId) ++
+        cdcRoles.sortBy(_._1).map { case (f, r) => Cdc(f, r) } ++
+        dvRecords.sortBy(_._1).map { case (d, v, n) => Dv(d, v, n) } ++
+        sortedAdds.map(f => Data(f.name))
     val id = claimEpoch(dir, content _, observedDvs = Some(observedDvs))
     maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
       compactInterval)
@@ -1619,7 +1301,7 @@ object ManifestSink {
   private[graft] def rollbackTo(path: String, version: Long,
       schemaDdl: String, compactInterval: Int): (Int, Int) = {
     val dir = Files.createDirectories(Paths.get(path))
-    // EQUALITY DELETES (round 19): a rollback across (or under) live
+    // EQUALITY DELETES: a rollback across (or under) live
     // `#eqdel` records re-adds files whose re-add epoch postdates the
     // deletes — old rows would escape them; resolve first.
     if (equalityDeletes(path).nonEmpty)
@@ -1640,7 +1322,7 @@ object ManifestSink {
       val dvsC = deleteVectors(path)
       val removes = current.filterNot(targetSet.contains)
       val readds = target.filterNot(curSet.contains)
-      // SET compare (advisor r16): a compaction sweep or fragment-
+      // SET compare: a compaction sweep or fragment-
       // order difference between the as-of walk and the current plan
       // state may reorder a file's dv records — identical dv SETS are
       // not divergence
@@ -1664,25 +1346,23 @@ object ManifestSink {
           "physical retention boundary")
       nAdd = readds.size
       nRem = removes.size
-      val dvLines = readds.sorted.flatMap(n =>
-        dvsV.getOrElse(n, Seq.empty).map { case (dv, cnt) =>
-          dvLine(n, dv, cnt) })
-      // ROW TRACKING (round 19): re-adds RE-DECLARE their original
+      val dvs = readds.sorted.flatMap(n =>
+        dvsV.getOrElse(n, Seq.empty).map { case (dv, cnt) => Dv(n, dv, cnt) })
+      // ROW TRACKING: re-adds RE-DECLARE their original
       // bases (identity is the file's for life), and when every file
       // on both sides carries tracked ids the epoch marks itself
       // pairable — the feed then serves the rollback as per-row
       // update_pre/postimage + insert/delete instead of net effect.
-      // Any pre-r19 file in the flip keeps the diff fallback.
+      // Any file without a row-id base keeps the diff fallback.
       val bases = rowIdBases(path)
-      val rowidLines = readds.sorted.flatMap(n =>
-        bases.get(n).map(b => rowIdLine(n, b)))
+      val rowids = readds.sorted.flatMap(n => bases.get(n).map(RowId(n, _)))
       val pairHdr =
         if (removes.nonEmpty && (removes ++ readds).forall(bases.contains))
-          Seq("#cdcpair")
+          Seq(CdcPair)
         else Seq.empty
-      Seq(s"#schema $schemaDdl", opLine("rollback"), s"#cow $token") ++
-        pairHdr ++ removes.sorted.map(n => s"#remove $n") ++ dvLines ++
-        rowidLines ++ readds.sorted
+      Seq(Schema(schemaDdl), Op("rollback"), Cow(token)) ++ pairHdr ++
+        removes.sorted.map(Remove(_)) ++ dvs ++ rowids ++
+        readds.sorted.map(Data(_))
     })
     maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
       compactInterval)
@@ -1705,43 +1385,24 @@ object ManifestSink {
       f -> dvs
     }.toMap
 
-  /** TABLE PROPERTIES from `#prop <key> <value>` records (round 15):
+  /** TABLE PROPERTIES from `#prop <key> <value>` records:
     * last record per key wins in fragment order, so `ALTER TABLE SET
     * TBLPROPERTIES` is an appended record, not a rewrite. Known keys:
     * `delete.mode` (cow|mor — the DELETE strategy, overridable by the
     * session conf) and `compact.interval` (the log's compaction
     * cadence). Unknown keys round-trip for the user. Keys and values
     * must be token-safe (`[A-Za-z0-9._/=-]`, no spaces). */
-  def tableProperties(path: String): Map[String, String] = {
-    val dir = Paths.get(path)
-    metaState(dir).map(_._2).getOrElse(planState(dir).props)
-  }
+  def tableProperties(path: String): Map[String, String] =
+    tableMeta(Paths.get(path)).props
 
-  /** SNAPSHOT TAGS (round 16, the Iceberg tag shape): `#tag <name>
+  /** SNAPSHOT TAGS (the Iceberg tag shape): `#tag <name>
     * <version>` names an epoch id so `VERSION AS OF 'name'` reads it;
     * `#tag <name> -` is the drop tombstone. Last record per name wins
     * in fragment order. Tags are POINTERS, not retention pins: a tag
     * whose version falls below the compaction horizon refuses at read
     * with the standard retention message. */
-  def tableTags(path: String): Map[String, Long] = {
-    val dir = Paths.get(path)
-    metaState(dir).map(_._5).getOrElse(planState(dir).tags)
-  }
-
-  private def parseTag(line: String): Option[(String, Option[Long])] =
-    line.stripPrefix("#tag ").split(" ", 2) match {
-      case Array(n, "-") if n.nonEmpty => Some(n -> None)
-      case Array(n, v) if n.nonEmpty && v.toLongOption.isDefined =>
-        Some(n -> v.toLongOption)
-      case _ => None
-    }
-
-  private[sources] def tagLine(name: String, v: Option[Long]): String = {
-    require(propSafe(name) && name.toLongOption.isEmpty,
-      s"tag name '$name' must be token-safe and not a bare integer " +
-        "(integers are epoch ids)")
-    s"#tag $name ${v.map(_.toString).getOrElse("-")}"
-  }
+  def tableTags(path: String): Map[String, Long] =
+    tableMeta(Paths.get(path)).tags
 
   /** Append a pure-metadata epoch creating or dropping a tag. The
     * target version is validated against the log INSIDE the claim's
@@ -1755,7 +1416,7 @@ object ManifestSink {
         require(v >= 0 && v <= newest,
           s"tag '$name' on $path: version $v does not exist " +
             s"(newest committed epoch: $newest)")
-        // symmetric with commitBranchEpoch's tag check (advisor r17):
+        // symmetric with commitBranchEpoch's tag check:
         // a tag shadowed by a live branch would silently change what
         // `VERSION AS OF '<name>'` means once the branch drops
         require(!tableBranches(path).contains(name),
@@ -1766,22 +1427,8 @@ object ManifestSink {
         s"no tag '$name' on $path to drop " +
           s"(tags: ${tableTags(path).keys.toSeq.sorted.mkString(", ") match {
             case "" => "none"; case t => t }})")
-      Seq(tagLine(name, version))
+      Seq(Tag(name, version))
     })
-  }
-
-  private[sources] def propSafe(s: String): Boolean =
-    s.nonEmpty && s.forall(c => c.isLetterOrDigit || "._/=-".contains(c))
-
-  private[sources] def propLine(k: String, v: String): String = {
-    // values may be COMMA-JOINED token-safe segments (round 18:
-    // `bloom.columns` is a column list) — commas never collide with
-    // the line grammar; keys stay strictly token-safe
-    require(propSafe(k) &&
-        v.split(",", -1).forall(s => s.nonEmpty && propSafe(s)),
-      s"table property '$k'='$v' must be token-safe ([A-Za-z0-9._/=-] " +
-        "segments, comma-joined)")
-    s"#prop $k $v"
   }
 
   /** Append a pure-metadata epoch carrying property records — the
@@ -1789,9 +1436,9 @@ object ManifestSink {
   private[sources] def commitPropsEpoch(path: String,
       props: Seq[(String, String)]): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => props.map { case (k, v) => propLine(k, v) })
+      () => props.map { case (k, v) => Prop(k, v) })
 
-  /** CDC RETENTION RESERVATIONS (round 18): `feed.reserve.<consumer>`
+  /** CDC RETENTION RESERVATIONS: `feed.reserve.<consumer>`
     * properties, committed by `CALL graft.sys.register_feed` — each
     * names a change-feed consumer and the MINIMUM epoch window that
     * must stay loose for it: every sweep (routine compaction AND
@@ -1808,19 +1455,19 @@ object ManifestSink {
     }
 
   /** Append a pure-metadata DDL epoch carrying `#schema <ddl>` — the
-    * ALTER TABLE ADD COLUMN record (round 15): additive evolution is
+    * ALTER TABLE ADD COLUMN record: additive evolution is
     * exactly what the read path already honors for mixed-schema files,
     * so declaring it is one log record, no data rewritten. */
   private[sources] def commitSchemaEpoch(path: String, ddl: String): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => Seq(s"#schema $ddl"))
+      () => Seq(Schema(ddl)))
 
   /** Enforce the additive-evolution CONTAINMENT contract before
     * trusting a declared (catalog-conf) schema: every field the log's
     * `#schema` records carry must appear in `declared` with its
     * recorded type (case-insensitive name; appending NEW nullable
     * columns is the one supported evolution). One shared check for
-    * every face (advisor r13): the scan refuses to SERVE under a stale
+    * every face: the scan refuses to SERVE under a stale
     * narrow conf, and the copy-on-write rewriters — row-level DELETE,
     * `compact_data`, MERGE — refuse to REWRITE under one, because a
     * rewrite that read through a narrow conf would silently drop an
@@ -1841,128 +1488,16 @@ object ManifestSink {
     }
   }
 
-  /** Per-file statistics recorded at write time: row count plus min/max
-    * per long column — the data-skipping index. Keyed by file NAME
-    * (unique for a table's lifetime); files without a record simply
-    * cannot be pruned. */
-  /** Per-file statistics recorded at write time (see [[PlanState]]):
-    * duplicates across a crash window carry identical content; a
-    * CONFLICTING duplicate (two writers claiming one name — a naming
-    * bug the run tokens are designed out of) must never feed the
-    * skipping index, so its name simply loses its stats: an unpruned
-    * file is a slow read, a mispruned file is a wrong answer. */
+  /** Per-file statistics recorded at write time — the data-skipping
+    * index, keyed by file NAME (unique for a table's lifetime); files
+    * without a record simply cannot be pruned. Duplicates across a
+    * crash window carry identical content; a CONFLICTING duplicate (two
+    * writers claiming one name — a naming bug the run tokens are
+    * designed out of) must never feed the skipping index, so its name
+    * simply loses its stats: an unpruned file is a slow read, a
+    * mispruned file is a wrong answer. */
   def fileStats(path: String): Map[String, FileStat] =
     planState(Paths.get(path)).stats
-
-  private[sources] def hexOf(s: String): String =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map(b => f"${b & 0xff}%02x").mkString
-  private[sources] def unhex(h: String): Option[String] =
-    if (h.length % 2 != 0 || !h.forall(c => c.isDigit || (c >= 'a' && c <= 'f')))
-      None
-    else Some(new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-      java.nio.charset.StandardCharsets.UTF_8))
-
-  private def parseStats(line: String): Option[(String, FileStat)] = {
-    if (!line.startsWith("#stats ")) return None
-    val parts = line.stripPrefix("#stats ").split(" ", 3)
-    if (parts.length < 2) return None
-    for (rows <- parts(1).toLongOption) yield {
-      val tokens =
-        if (parts.length < 3 || parts(2).isEmpty) Seq.empty[Array[String]]
-        else parts(2).split(";").toSeq.map(_.split(":", -1))
-      val cols = tokens.flatMap {
-        case Array(name, mn, mx) =>
-          for (a <- mn.toLongOption; b <- mx.toLongOption) yield name -> (a, b)
-        case _ => None
-      }.toMap
-      // string stats: `name:s<hexmin>:s<hexmax>` with `-` for an
-      // unbounded max (the truncated-upper-bound case)
-      val strCols = tokens.flatMap {
-        case Array(name, mn, mx) if mn.startsWith("s") =>
-          for {
-            a <- unhex(mn.tail)
-            b <- if (mx == "-") Some(None)
-                 else if (mx.startsWith("s")) unhex(mx.tail).map(Some(_))
-                 else None
-          } yield name -> (a, b)
-        case _ => None
-      }.toMap
-      // null counts: 2-part `name:n<count>` tokens (round 14)
-      val nulls = tokens.flatMap {
-        case Array(name, nv) if nv.startsWith("n") =>
-          nv.tail.toLongOption.map(name -> _)
-        case _ => None
-      }.toMap
-      parts(0) -> FileStat(rows, cols, strCols, nulls)
-    }
-  }
-
-  /** May `c` carry stats tokens? (The token grammar reserves the
-    * separators.) Shared with the read side: the all-null inference
-    * from an ABSENT record is only sound for names the writer could
-    * have recorded. */
-  private[sources] def statSafeName(c: String): Boolean =
-    !c.exists(ch => ch == ' ' || ch == ':' || ch == ';')
-
-  private[sources] def statsLine(m: CommittedFile): String = {
-    val longs = m.stats.filter(s => statSafeName(s.col))
-      .map(s => s"${s.col}:${s.min}:${s.max}")
-    val strs = m.strStats.filter(s => statSafeName(s.col))
-      .map(s => s"${s.col}:s${hexOf(s.min)}:" +
-        s.max.map("s" + hexOf(_)).getOrElse("-"))
-    // null counts as 2-part `col:n<count>` tokens — disjoint from the
-    // 3-part bounds grammar, so pre-r14 logs (no such tokens) and new
-    // ones parse under one rule set
-    val ns = m.nullStats.filter(s => statSafeName(s.col))
-      .map(s => s"${s.col}:n${s.nulls}")
-    val cols = (longs ++ strs ++ ns).mkString(";")
-    s"#stats ${m.name} ${m.rows}" + (if (cols.isEmpty) "" else s" $cols")
-  }
-
-  /** The file's `#bloom` record (round 18, [[BloomSkip]]): `#bloom
-    * <file> <col>:<b64>[;…]` — same token grammar as `#stats` (base64
-    * never collides with the separators), absent when the write
-    * recorded no filters. */
-  private[sources] def bloomLine(m: CommittedFile): Option[String] = {
-    val toks = m.blooms.filter(b => statSafeName(b._1))
-      .map { case (c, b64) => s"$c:$b64" }
-    if (toks.isEmpty) None else Some(s"#bloom ${m.name} ${toks.mkString(";")}")
-  }
-
-  /** The file's `#ndv` record (round 19, [[NdvSketch]]): `#ndv
-    * <file> <col>:<b64>[;…]` — same token grammar as `#bloom`. */
-  private[sources] def ndvLine(m: CommittedFile): Option[String] = {
-    val toks = m.ndvs.filter(b => statSafeName(b._1))
-      .map { case (c, b64) => s"$c:$b64" }
-    if (toks.isEmpty) None else Some(s"#ndv ${m.name} ${toks.mkString(";")}")
-  }
-
-  private[sources] def parseNdv(line: String)
-      : Option[(String, Map[String, String])] =
-    if (!line.startsWith("#ndv ")) None
-    else line.stripPrefix("#ndv ").split(" ", 2) match {
-      case Array(f, toks) =>
-        Some(f -> toks.split(";").toSeq.flatMap(_.split(":", 2) match {
-          case Array(c, b) => Seq(c -> b)
-          case _ => Seq.empty
-        }).toMap)
-      case _ => None
-    }
-
-  private[sources] def parseBloom(line: String)
-      : Option[(String, Map[String, String])] = {
-    if (!line.startsWith("#bloom ")) return None
-    line.stripPrefix("#bloom ").split(" ", 2) match {
-      case Array(f, rest) if f.nonEmpty && rest.nonEmpty =>
-        val cols = rest.split(";").toSeq.flatMap(_.split(":", 2) match {
-          case Array(c, b64) if c.nonEmpty && b64.nonEmpty => Some(c -> b64)
-          case _ => None
-        })
-        if (cols.isEmpty) None else Some(f -> cols.toMap)
-      case _ => None
-    }
-  }
 
   /** CLAIM the next epoch id on the log and publish `content` under it —
     * the one write path both faces share. `Files.createLink` is
@@ -1973,7 +1508,7 @@ object ManifestSink {
     * the filesystem analog of a conditional put.
     *
     * After the link lands, the claim is re-verified ABOVE the compaction
-    * horizon (advisor r11): a committer holding a stale next-id N could
+    * horizon: a committer holding a stale next-id N could
     * otherwise link epoch-N after another committer's N was absorbed and
     * swept — the re-claimed epoch would sit at-or-below the horizon,
     * listed by no fragment, silently unpublished. Detection is sound
@@ -1982,7 +1517,7 @@ object ManifestSink {
     * could succeed (sweep strictly follows the compact move), so
     * re-reading the horizon after the link always sees it.
     *
-    * The trip has a second, BENIGN cause (advisor r12): our OWN freshly
+    * The trip has a second, BENIGN cause: our OWN freshly
     * linked epoch-N was legitimately first at N and a racing committer's
     * compaction absorbed it between the link and the re-check — horizon
     * >= N, but the commit IS published (inside the compact). Retrying
@@ -1996,7 +1531,7 @@ object ManifestSink {
     * claim's epoch sits below the horizon where no compaction ever reads
     * it, and its run-unique file names exist in no other manifest.
     *
-    * COMMIT-TIME CONFLICT DETECTION (round 14, the Delta/Iceberg
+    * COMMIT-TIME CONFLICT DETECTION (the Delta/Iceberg
     * optimistic-concurrency shape): a remove-carrying epoch (row-level
     * DELETE/UPDATE/MERGE, compaction) verifies — between reading the
     * next id and attempting the link — that every file it `#remove`s is
@@ -2011,7 +1546,7 @@ object ManifestSink {
     * concurrent deletes over one file could both publish survivors and
     * resurrect each other's deleted rows.
     *
-    * `contentGen` is re-evaluated on EVERY claim attempt (advisor r14):
+    * `contentGen` is re-evaluated on EVERY claim attempt:
     * a full-snapshot overwrite computes its `#remove` set from the
     * union it is about to replace, and a racing append landing between
     * two attempts must be absorbed into the refreshed remove set — with
@@ -2023,7 +1558,7 @@ object ManifestSink {
     * applies to exactly the pre-state it commits against. Static
     * callers pass a constant thunk and pay nothing.
     *
-    * DV conflict fencing (round 15): a `#dv`-carrying epoch verifies
+    * DV conflict fencing: a `#dv`-carrying epoch verifies
     * its target data files are still live (a COW/compaction that
     * removed one first would orphan the positions — and the delete's
     * rows live on in the rewrite's survivors, a lost update). In the
@@ -2036,7 +1571,7 @@ object ManifestSink {
     * (full/partition overwrite: replacement data is independent of the
     * old rows, so disposing a racing dv IS the serializable outcome).
     *
-    * DV-vs-DV fencing (round 16, advisor r15): two concurrent
+    * DV-vs-DV fencing: two concurrent
     * merge-on-read operations over one data file both compute their
     * positions against a dv state that lacks the other's records —
     * reads would stay value-correct (the reader's position set dedupes)
@@ -2048,70 +1583,66 @@ object ManifestSink {
     * set and aborts with a retryable [[ManifestConflictException]]
     * otherwise — the loser recomputes against the winner's records
     * (which its anti-join then excludes) and retries. */
-  private[sources] def claimEpoch(dir: Path, contentGen: () => Seq[String],
+  private[sources] def claimEpoch(dir: Path, contentGen: () => Seq[LogRecord],
       consumedDvs: Option[Map[String, Set[String]]] = None,
       observedDvs: Option[Map[String, Set[String]]] = None): Long = {
     var claimed = -1L
     while (claimed < 0) {
       checkRenamed(dir)
-      // COMMIT-TIME header (advisor r16): `#ts <micros>` is stamped at
-      // claim time so TIMESTAMP AS OF reads a PERSISTED clock instead
-      // of fragment mtimes, which any mtime-disturbing copy (cp/rsync
-      // without -a, backup restore, some object-store mounts) silently
-      // shifts. It rides AFTER the leading `#txn` records — their
-      // records-lead contract is what keeps the replay check O(writers)
-      // bytes — and before everything else; every reader ignores
-      // unknown `#` prefixes, and pre-r17 logs fall back to mtime.
-      val (txnLead, restContent) = contentGen().span(_.startsWith("#txn "))
+      // COMMIT-TIME header: `#ts <micros>` is stamped at claim time so
+      // TIMESTAMP AS OF reads a PERSISTED clock instead of fragment
+      // mtimes, which any mtime-disturbing copy (cp/rsync without -a,
+      // backup restore, some object-store mounts) silently shifts. It
+      // rides AFTER the leading `#txn` records — their records-lead
+      // contract is what keeps the replay check O(writers) bytes — and
+      // before everything else; logs without it fall back to mtime.
+      val generated = contentGen()
+      generated.foreach(check)
+      val (txnLead, restContent) = generated.span(_.isInstanceOf[Txn])
       val content0 = txnLead ++
-        (s"#ts ${System.currentTimeMillis() * 1000L}" +: restContent)
-      // ROW-ID ASSIGNMENT (round 19): every data line with an
+        (Ts(System.currentTimeMillis() * 1000L) +: restContent)
+      // ROW-ID ASSIGNMENT: every data line with an
       // in-content `#stats` record (i.e. a freshly written file) and no
       // caller-declared `#rowid` gets a base from the table watermark,
       // reserving its row count. Re-adds (rollback — no in-content
       // stats) keep their original bases; BRANCH-STAGED epochs skip
       // (invisible rows need no identity yet — the publish re-lists and
       // assigns). `hwmRead` is fence-verified before the link below.
-      val staging = content0.exists(_.startsWith("#forbranch "))
+      val stagingBranch = content0.collectFirst { case ForBranch(b) => b }
+      val dataNames = content0.collect { case Data(n) => n }
       val assignable =
-        if (staging) Seq.empty
+        if (stagingBranch.isDefined) Seq.empty
         else {
-          val statRows = content0.flatMap(parseStats).toMap
-          val declared = content0.flatMap(parseRowId).map(_._1).toSet
-          content0.filterNot(_.startsWith("#"))
-            .filter(n => statRows.contains(n) && !declared.contains(n))
-            .map(n => (n, statRows(n).rows))
+          val statRows = content0.collect { case s: Stats => s.file -> s.rows }.toMap
+          val declared = content0.collect { case RowId(f, _) => f }.toSet
+          dataNames.filter(n => statRows.contains(n) && !declared.contains(n))
+            .map(n => (n, statRows(n)))
         }
       val hwmRead = if (assignable.isEmpty) -1L else rowIdWatermark(dir)
       val content =
         if (assignable.isEmpty) content0
         else {
           var next = hwmRead
-          val lines = assignable.map { case (n, rows) =>
-            val b = next; next += rows; rowIdLine(n, b) }
-          content0 ++ lines :+ s"#rowidhwm $next"
+          val ids = assignable.map { case (n, rows) =>
+            val b = next; next += rows; RowId(n, b) }
+          content0 ++ ids :+ RowIdHwm(next)
         }
-      val bytes = content.mkString("\n")
+      val bytes = content.map(encode).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val dataNames = content.filterNot(_.startsWith("#"))
-      val txn = content.collectFirst { case TxnLine(w, e) => (w, e) }
-      val removes = content.collect {
-        case l if l.startsWith("#remove ") => l.stripPrefix("#remove ") }
-      val cowToken = content.collectFirst {
-        case l if l.startsWith("#cow ") => l.stripPrefix("#cow ") }
+      val txn = content.collectFirst { case t: Txn => t }
+      val removes = content.collect { case Remove(n) => n }
+      val cowToken = content.collectFirst { case Cow(t) => t }
       def absorbedByCompact: Boolean =
         (dataNames.nonEmpty && {
           val union = fragmentUnion(dir).toSet
           dataNames.forall(union.contains)
-        }) || txn.exists { case (w, e) => txnWatermark(dir, w) >= e } ||
+        }) || txn.exists(t => txnWatermark(dir, t.writer) >= t.epoch) ||
           cowToken.exists(t =>
-            manifestFragments(dir).flatMap(readCowTokens).contains(t))
+            manifestFragments(dir).exists(records(_).contains(Cow(t))))
       val tmp = Files.createTempFile(dir, ".epoch", ".tmp")
       Files.write(tmp, bytes)
-      val dvTargets = content.collect {
-        case l if l.startsWith("#dv ") =>
-          l.stripPrefix("#dv ").split(" ")(0) }
-      // SPEC-ID fence (round 16): a spec-evolution claim computed its
+      val dvTargets = content.collect { case Dv(d, _, _) => d }
+      // SPEC-ID fence: a spec-evolution claim computed its
       // id when the content was GENERATED; a commit landing between
       // generation and this attempt's epoch-id read does not collide
       // on the link (the id moved past it), so the claimed spec id
@@ -2119,14 +1650,7 @@ object ManifestSink {
       // never bind two layouts. Any state change after this check and
       // before the link necessarily claims THIS epoch id first, so
       // the link collision re-runs the check.
-      val claimedSpecIds = content.collect {
-        case l if l.startsWith("#spec ") =>
-          val rec = l.stripPrefix("#spec ")
-          val eq = rec.indexOf('=')
-          if (eq > 0 && rec.substring(0, eq).forall(_.isDigit))
-            Some(rec.substring(0, eq).toInt)
-          else None
-      }.flatten
+      val claimedSpecIds = content.collect { case Spec(Some(id), _) => id }
       try {
         val next = nextEpochId(dir)
         if (claimedSpecIds.nonEmpty && claimedSpecIds.exists(
@@ -2134,7 +1658,7 @@ object ManifestSink {
           // stale id: fall through to the next loop pass, which
           // regenerates the content against the fresh log
         } else if (hwmRead >= 0 && rowIdWatermark(dir) != hwmRead) {
-          // ROW-ID fence (round 19, the spec-id fence reasoning): a
+          // ROW-ID fence (the spec-id fence reasoning): a
           // commit that landed between our watermark read and this
           // attempt may have reserved the same id range. Any state
           // change after THIS check and before the link necessarily
@@ -2142,14 +1666,11 @@ object ManifestSink {
           // the check — one id range can never be issued twice.
         } else {
         if (removes.nonEmpty || dvTargets.nonEmpty) {
-          // a BRANCH-STAGED dv epoch (round 18) fences against the
+          // a BRANCH-STAGED dv epoch fences against the
           // BRANCH's visible state: its targets may be staged adds
           // (invisible to main) and its observed dv set includes
           // earlier staged records — main-state fencing would refuse
           // valid staged writes and miss same-branch races
-          val stagingBranch = content.collectFirst {
-            case l if l.startsWith("#forbranch ") =>
-              l.stripPrefix("#forbranch ").trim }
           val live = stagingBranch match {
             case Some(b) => branchFiles(dir.toString, b)
               .map(p => Paths.get(p).getFileName.toString).toSet
@@ -2163,7 +1684,7 @@ object ManifestSink {
           // a dv record may target a file THIS epoch re-adds (rollback
           // restoring a historical dv state): inherently consistent —
           // the add and the record flip visibility together. The
-          // exemption is DV-ONLY (advisor r16): a same-epoch
+          // exemption is DV-ONLY: a same-epoch
           // remove+re-add of one name is exactly the ambiguous
           // construct rollbackTo refuses to emit, so removes stay on
           // the strict live-set check
@@ -2200,7 +1721,7 @@ object ManifestSink {
               throw new ManifestConflictException(raced.sorted, dir.toString)
           }
         }
-        // EQUALITY-DELETE fence (round 19): a remove- or dv-carrying
+        // EQUALITY-DELETE fence: a remove- or dv-carrying
         // commit under LIVE equality deletes would move or replace
         // rows into files EXEMPT from them (add-epoch past the
         // delete) — resurrecting deleted keys. Only a commit that
@@ -2208,11 +1729,8 @@ object ManifestSink {
         // set — compact_data) may proceed; everything else aborts
         // retryably, and the race window between an operation's pin
         // and its claim closes here.
-        if (removes.nonEmpty || dvTargets.nonEmpty ||
-            content.exists(_.startsWith("#eqdrop "))) {
-          val eqDrops = content.collect {
-            case l if l.startsWith("#eqdrop ") =>
-              l.stripPrefix("#eqdrop ").trim }.toSet
+        val eqDrops = content.collect { case EqDrop(f) => f }.toSet
+        if (removes.nonEmpty || dvTargets.nonEmpty || eqDrops.nonEmpty) {
           val unresolved = equalityDeletes(dir.toString).map(_.file)
             .filterNot(eqDrops.contains)
           if (unresolved.nonEmpty)
@@ -2238,6 +1756,18 @@ object ManifestSink {
     claimed
   }
 
+  /** Publish a table's CREATE epoch (epoch 0) carrying `seed`; false
+    * when an epoch 0 already exists. */
+  private[sources] def linkFirstEpoch(dir: Path, seed: Seq[LogRecord]): Boolean = {
+    seed.foreach(check)
+    val tmp = Files.createTempFile(dir, ".epoch", ".tmp")
+    Files.write(tmp, seed.map(encode).mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try { Files.createLink(dir.resolve(epochName(0)), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
+
   /** TIME TRAVEL: the table's committed file list AS OF epoch
     * `version` — the union of epoch manifests with id <= version. The
     * epoch manifests ARE the snapshot log (each one is an atomic
@@ -2261,15 +1791,9 @@ object ManifestSink {
       throw new IllegalArgumentException(
         s"manifest table $path has no version $version " +
           s"(newest committed epoch: ${if (newest < 0) "none" else newest})")
-    def applyInOrder(fragments: Seq[Path]): Seq[String] = {
-      val acc = scala.collection.mutable.LinkedHashSet[String]()
-      // branch-staged epochs are invisible to main time travel too
-      fragments.filter(branchOf(_).isEmpty).foreach { p =>
-        readData(p).foreach(acc.add)
-        readRemoves(p).foreach(acc.remove)
-      }
-      acc.toSeq
-    }
+    // branch-staged epochs are invisible to main time travel too
+    def applyInOrder(fragments: Seq[Path]): Seq[String] =
+      replay(fragments.filter(branchOf(_).isEmpty).map(records)).files.toSeq
     val names =
       if (version >= horizon)
         applyInOrder(compact.map(_._2).toSeq ++
@@ -2284,7 +1808,7 @@ object ManifestSink {
         // epoch manifest, so a missing non-empty epoch shrinks the
         // union) and any prefix of it is an exact snapshot — including
         // tables whose first epoch is > 0 (a checkpointed query
-        // restarted into a fresh dir; advisor r10). Each fragment is
+        // restarted into a fresh dir). Each fragment is
         // read ONCE. Once the sweep lands, the union shrinks below the
         // compact set and the version is refused: log retention bounds
         // time travel (the Delta/Iceberg contract), surfaced instead of
@@ -2296,7 +1820,8 @@ object ManifestSink {
         // compact content while missing an add epoch whose file the
         // remove later covered (the prefix would silently lack it) —
         // so a remove anywhere below the horizon refuses instead
-        val removesBelow = looseBelow.exists(e => readRemoves(e._2).nonEmpty)
+        val removesBelow = looseBelow.exists(e =>
+          records(e._2).exists(_.isInstanceOf[Remove]))
         if (!removesBelow &&
             applyInOrder(looseBelow.map(_._2)).toSet == compactContent)
           applyInOrder(loose.filter(_._1 <= version).sortBy(_._1).map(_._2))
@@ -2320,7 +1845,7 @@ object ManifestSink {
     * `#stats` of every file still in the union. */
   private[sources] def maybeCompact(dir: Path, priorHorizon: Long,
       compactInterval: Int,
-      /** EXPIRY mode (round 17): absorb only epochs <= `through` and
+      /** EXPIRY mode: absorb only epochs <= `through` and
         * ignore the interval — `expire_snapshots` forces a bounded
         * sweep; the live-branch cap still applies on top. */
       through: Long = Long.MaxValue,
@@ -2329,28 +1854,28 @@ object ManifestSink {
     // fragment mid-read here; re-running from a fresh listing is always
     // consistent (and usually a no-op — the racer compacted for us)
     val looseAll = looseEpochs(dir, priorHorizon)
-    // LIVE branch refs CAP the sweep (round 17): a staged epoch must
+    // LIVE branch refs CAP the sweep: a staged epoch must
     // stay loose — the publish re-lists its adds by name, and vacuum
     // keeps the staged files referenced — so the horizon stops below
-    // the oldest live-branch epoch. The branch BASE caps too (advisor
-    // r17): fastForward refuses once the horizon passes the base, so
+    // the oldest live-branch epoch. The branch BASE caps too:
+    // fastForward refuses once the horizon passes the base, so
     // a routine sweep absorbing past a freshly-created branch's base
     // (no staged epochs yet) would make it permanently unpublishable —
     // the base clamp here mirrors [[expireSnapshots]]'s. DROPPED
     // branches' epochs absorb as NOTHING (published content was
     // re-listed by the publish epoch; abandoned content ages into
     // vacuum).
-    val liveBranches = planState(dir).branches
+    val liveBranches = planState(dir).meta.branches
     val stagedCap = looseAll
       .filter(e => branchOf(e._2).exists(liveBranches.keySet.contains))
       .map(_._1 - 1).minOption.getOrElse(Long.MaxValue)
     val baseCap = liveBranches.values.minOption.getOrElse(Long.MaxValue)
-    // REGISTERED FEED consumers clamp every sweep (round 18): the last
+    // REGISTERED FEED consumers clamp every sweep: the last
     // `window` epochs stay loose so a consumer lagging at most that
     // many epochs never hits the below-horizon CDC refusal
     val feedCap = registeredFeeds(dir.toString).values.minOption
       .map(w => newestVersion0(dir) - w).getOrElse(Long.MaxValue)
-    // LIVE equality deletes clamp too (round 19): their per-epoch
+    // LIVE equality deletes clamp too: their per-epoch
     // applicability (add-epoch < delete-epoch) is derivable only
     // while the loose tail holds them; compact_data's `#eqdrop`
     // resolution is what releases the sweep
@@ -2362,160 +1887,72 @@ object ManifestSink {
     if (loose.isEmpty || (!force && loose.size < compactInterval)) return
     val prior = latestCompact(dir)
     val absorbed = loose.sortBy(_._1).map(_._2)
-    val fragments = prior.map(_._2).toSeq ++
-      absorbed.filter(branchOf(_).isEmpty)
-    // resolve adds and `#remove`s in epoch order: the compact carries
-    // the RESOLVED union (and no remove records — a removed file below
-    // the horizon is simply gone from the log, which is also what lets
-    // VACUUM reclaim its bytes once aged)
-    val names = {
-      val acc = scala.collection.mutable.LinkedHashSet[String]()
-      fragments.foreach { p =>
-        readData(p).foreach(acc.add)
-        readRemoves(p).foreach(acc.remove)
-      }
-      acc.toSeq
-    }
-    val headers = fragments.flatMap(readHeaders)
-    val txns = headers.collect { case TxnLine(w, e) => (w, e) }
-      .groupMapReduce(_._1)(_._2)(math.max)
-      .toSeq.sortBy(_._1).map { case (w, e) => s"#txn $w $e" }
-    val schemas = headers.filter(_.startsWith("#schema ")).distinct
-    // the partition spec (one record, immutable) and the partition
-    // tuples of files still in the union ride through sweeps exactly
-    // like #stats — pruning and partition-scoped overwrite must keep
-    // working on a fully compacted log
-    val specs = headers.filter(_.startsWith("#spec ")).distinct
-    // table properties: LAST record per key wins (fragment order), so
-    // the compact carries exactly the effective property set
-    val props = {
-      val acc = scala.collection.mutable.LinkedHashMap[String, String]()
-      headers.foreach { l =>
-        if (l.startsWith("#prop ")) l.stripPrefix("#prop ").split(" ", 2) match {
-          case Array(k, v) => acc(k) = v
-          case _ =>
-        }
-      }
-      acc.toSeq.map { case (k, v) => s"#prop $k $v" }
-    }
-    // column mapping: LAST record wins (fragment order), carried whole
-    val colmaps = headers.filter(_.startsWith("#colmap ")).takeRight(1)
-    // tags: LAST record per name wins; tombstoned names die here
-    val tagLines = {
-      val acc = scala.collection.mutable.LinkedHashMap[String, Long]()
-      headers.foreach { l =>
-        if (l.startsWith("#tag ")) parseTag(l).foreach {
-          case (n, Some(v)) => acc(n) = v
-          case (n, None) => acc.remove(n)
-        }
-      }
-      acc.toSeq.map { case (n, v) => s"#tag $n $v" }
-    }
-    // branch refs: LAST record per name wins, tombstoned names die
-    val branchLines = {
-      val acc = scala.collection.mutable.LinkedHashMap[String, Long]()
-      headers.foreach { l =>
-        if (l.startsWith("#branch ")) parseBranch(l).foreach {
-          case (n, Some(v)) => acc(n) = v
-          case (n, None) => acc.remove(n)
-        }
-      }
-      acc.toSeq.map { case (n, v) => s"#branch $n $v" }
-    }
+    // one replay of the prior compact and the absorbed main epochs: the
+    // compact carries the RESOLVED union (and no remove records — a
+    // removed file below the horizon is simply gone from the log, which
+    // is also what lets VACUUM reclaim its bytes once aged), the max
+    // `#txn` per writer, the distinct `#schema`/`#spec` records, the
+    // last `#prop` per key, `#colmap`, `#tag` and `#branch`, and the
+    // per-file records and live dvs of files still in the union
+    val r = replay((prior.map(_._2).toSeq ++
+      absorbed.filter(branchOf(_).isEmpty)).map(records))
+    // refuse to fold CONFLICTING stats for one name into the compact:
+    // first-seen-wins would freeze stats that may describe different
+    // bytes than the file holds, and skipping would silently go wrong —
+    // run-unique file names make this unreachable, so a conflict here is
+    // a naming bug that must surface, not be absorbed
+    if (r.statConflicts.nonEmpty) throw new IllegalStateException(
+      s"conflicting #stats records for file(s) ${r.statConflicts.mkString(", ")} " +
+        "in the manifest log — two writers claimed one data-file name; " +
+        "refusing to compact a skipping index that could prune live rows")
+    def live[V](m: scala.collection.Map[String, V]): Seq[(String, V)] =
+      m.toSeq.filter(e => r.files.contains(e._1))
+    val meta: Seq[LogRecord] =
+      r.txns.toSeq.sortBy(_._1).map { case (w, e) => Txn(w, e) } ++
+        r.schemas.toSeq.map(Schema(_)) ++ r.specs ++
+        r.props.toSeq.map { case (k, v) => Prop(k, v) } ++ r.colmap ++
+        r.tags.toSeq.map { case (n, v) => Tag(n, Some(v)) } ++
+        r.branches.toSeq.map { case (n, v) => Branch(n, Some(v)) }
     // `#cow` tokens carry forward ONE round — from the loose epochs this
     // sweep absorbs, never from the prior compact — so a COW committer
     // whose epoch was absorbed mid-claim can still recognize its own
     // publish (claimEpoch's absorbed check), while the token set stays
-    // bounded instead of growing with every COW op the table ever ran
-    val cows = loose.sortBy(_._1).map(_._2).flatMap(readCowTokens)
-      .distinct.map(t => s"#cow $t")
-    val nameSet = names.toSet
-    val statRecords = headers.flatMap(parseStats)
-    // refuse to fold CONFLICTING stats for one name into the compact:
-    // first-seen-wins would freeze stats that may describe different
-    // bytes than the file holds, and skipping would silently go wrong
-    // (advisor r12) — run-unique file names make this unreachable, so a
-    // conflict here is a naming bug that must surface, not be absorbed
-    val conflicted = statRecords.groupBy(_._1)
-      .collect { case (n, recs) if recs.map(_._2).distinct.size > 1 => n }
-    if (conflicted.nonEmpty) throw new IllegalStateException(
-      s"conflicting #stats records for file(s) ${conflicted.mkString(", ")} " +
-        "in the manifest log — two writers claimed one data-file name; " +
-        "refusing to compact a skipping index that could prune live rows")
-    val stats = statRecords.distinctBy(_._1)
-      .collect { case (f, st) if nameSet.contains(f) =>
-        statsLine(CommittedFile(f, st.rows,
-          st.cols.toSeq.sortBy(_._1).map { case (c, (a, b)) => ColStat(c, a, b) },
-          st.strCols.toSeq.sortBy(_._1)
-            .map { case (c, (mn, mx)) => StrColStat(c, mn, mx) },
-          st.nulls.toSeq.sortBy(_._1).map { case (c, n) => NullStat(c, n) })) }
-    // `#bloom` records ride like `#stats` (round 18): kept for files
-    // still in the union. A genuine same-name conflict already trips
-    // the stats refusal above, so first-seen here is safe.
-    val bloomLines = headers.flatMap(parseBloom).distinctBy(_._1)
-      .collect { case (f, m) if nameSet.contains(f) =>
-        s"#bloom $f ${m.toSeq.sortBy(_._1)
-          .map { case (c, b) => s"$c:$b" }.mkString(";")}" }
-    // `#ndv` records ride like `#stats`/`#bloom` (round 19)
-    val ndvLines = headers.flatMap(parseNdv).distinctBy(_._1)
-      .collect { case (f, m) if nameSet.contains(f) =>
-        s"#ndv $f ${m.toSeq.sortBy(_._1)
-          .map { case (c, b) => s"$c:$b" }.mkString(";")}" }
-    val parts = headers.flatMap(parsePart).distinctBy(_._1)
-      .collect { case (f, toks) if nameSet.contains(f) => partLine(f, toks) }
-    // `#rowid` records ride like `#stats`: kept for files still in the
-    // union (a removed file's identity is gone with its rows — exactly
-    // at the horizon below which no CDC window reads). The WATERMARK
-    // rides as one max line so reserved id ranges are never reissued.
-    val rowidLines = headers.flatMap(parseRowId).distinctBy(_._1)
-      .collect { case (f, b) if nameSet.contains(f) => rowIdLine(f, b) }
-    val rowIdHwmLine = headers.collect {
-      case l if l.startsWith("#rowidhwm ") =>
-        l.stripPrefix("#rowidhwm ").trim.toLongOption
-    }.flatten.maxOption.map(h => s"#rowidhwm $h").toSeq
-    // live delete vectors (dv state resolved in fragment order —
-    // records on files the union dropped die here, which is also what
-    // releases their dv files to vacuum)
-    val dvs = {
-      val acc = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
-      fragments.foreach { p =>
-        readDvRecords(p).foreach { case (data, dv, n) =>
-          acc(data) = acc.getOrElse(data, Seq.empty) :+ ((dv, n))
-        }
-        readRemoves(p).foreach(acc.remove)
-      }
-      acc.toSeq.filter(e => nameSet.contains(e._1)).flatMap {
-        case (data, list) => list.map { case (dv, n) => dvLine(data, dv, n) }
-      }
-    }
+    // bounded instead of growing with every COW op the table ever ran.
+    // The bound is TWO SWEEPS: a zero-survivor COW committer whose claim
+    // loop spans two full sweeps would see a spurious (retryable)
+    // conflict — narrow, since a sweep needs `compactInterval` epochs.
+    val cows = absorbed.flatMap(records).collect { case c: Cow => c }.distinct
+    val stats = live(r.stats).map { case (f, st) => sortedStats(f, st) }
+    val blooms = live(r.blooms).map { case (f, m) => Bloom(f, m.toSeq.sortBy(_._1)) }
+    val ndvs = live(r.ndvs).map { case (f, m) => Ndv(f, m.toSeq.sortBy(_._1)) }
+    val parts = live(r.parts).map { case (f, t) => Part(f, t) }
+    // the WATERMARK rides as one max line so reserved id ranges are
+    // never reissued
+    val rowids = live(r.rowids).map { case (f, b) => RowId(f, b) } ++
+      r.rowIdHwm.map(RowIdHwm(_))
+    val dvs = live(r.dvs).flatMap { case (d, l) => l.map { case (v, n) => Dv(d, v, n) } }
+    val names = r.files.toSeq
     val upTo = loose.map(_._1).max
     // unique temp per attempt (concurrent committers can both trigger
     // this compaction); the compact-<upTo> content is deterministic —
     // the union through upTo — so when a racer already landed it, the
     // loser's work is simply done
-    val bytes = (txns ++ schemas ++ specs ++ props ++ colmaps ++
-      tagLines ++ branchLines ++ cows ++ stats ++ bloomLines ++
-      ndvLines ++ parts ++
-      rowidLines ++ rowIdHwmLine ++ dvs ++ names)
-      .mkString("\n")
+    val bytes = (meta ++ cows ++ stats ++ blooms ++ ndvs ++ parts ++ rowids ++
+      dvs ++ names.map(Data(_))).map(encode).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val ctmp = Files.createTempFile(dir, s".${compactName(upTo)}", ".tmp")
     Files.write(ctmp, bytes)
     try {
       Files.createLink(dir.resolve(compactName(upTo)), ctmp)
       metadataBytes.addAndGet(bytes.length.toLong)
-      // PLANNING CHECKPOINT (round 16): next to the compact, write the
-      // same resolved state as (a) a PARQUET table of per-file rows —
-      // what the distributed scan planner reads instead of a driver
-      // walk — and (b) a tiny `.meta` sidecar with the non-per-file
-      // records (#txn/#schema/#spec/#prop), so table resolution stays
-      // O(tail) without touching the O(files) compact text. Both are
-      // strict ACCELERATIONS: a missing/failed checkpoint (crash here,
-      // or the pre-r16 log) falls back to the text walk.
-      try writeCheckpoint(dir, upTo, names,
-        txns ++ schemas ++ specs ++ props ++ colmaps ++ tagLines ++
-          branchLines,
-        stats, parts, dvs, bloomLines)
+      // PLANNING CHECKPOINT: next to the compact, write the same
+      // resolved state as (a) a PARQUET table of per-file rows — what
+      // the distributed scan planner reads instead of a driver walk —
+      // and (b) a tiny `.meta` sidecar with the table-level records, so
+      // table resolution stays O(tail) without touching the O(files)
+      // compact text. Both are strict ACCELERATIONS: a missing/failed
+      // checkpoint (crash here) falls back to the text walk.
+      try writeCheckpoint(dir, upTo, names, meta, stats, parts, dvs, blooms)
       catch { case _: Exception => } // optimization only, never fails a commit
     }
     catch { case _: java.nio.file.FileAlreadyExistsException => }
@@ -2545,28 +1982,28 @@ object ManifestSink {
   private def checkpointMetaName(id: Long): String =
     f"checkpoint-$id%020d.meta"
 
-  /** Columns of the planning checkpoint: the file name plus its raw
+  /** Columns of the planning checkpoint: the file name plus its encoded
     * `#stats` / `#part` / `#dv` / `#bloom` record LINES (null when
-    * absent) — the executors re-parse with the exact parser the text
-    * path uses, so there is no second grammar to disagree with it.
-    * Pre-r18 checkpoints lack the `bloom` column: the by-name parquet
-    * read serves null there, which is exactly "no filter recorded". */
+    * absent; a file's dv lines joined by `\n`) — the executors decode
+    * them with [[ManifestLog.decode]], the codec the text path uses, so
+    * there is no second grammar to disagree with it. Checkpoints
+    * without the `bloom` column read null there through the by-name
+    * parquet read, which is exactly "no filter recorded". */
   private val CheckpointFields = Array("file", "stats", "part", "dvs", "bloom")
   private val CheckpointTypes =
     Array("string", "string", "string", "string", "string")
 
   private def writeCheckpoint(dir: Path, upTo: Long, names: Seq[String],
-      metaLines: Seq[String], statLines: Seq[String], partLines: Seq[String],
-      dvLines: Seq[String], bloomLines: Seq[String] = Seq.empty): Unit = {
-    def keyOf(line: String): String = line.split(" ")(1)
-    val statBy = statLines.map(l => keyOf(l) -> l).toMap
-    val partBy = partLines.map(l => keyOf(l) -> l).toMap
-    val dvBy = dvLines.groupBy(keyOf).view.mapValues(_.mkString("\n")).toMap
-    val bloomBy = bloomLines.map(l => keyOf(l) -> l).toMap
+      meta: Seq[LogRecord], stats: Seq[Stats], parts: Seq[Part],
+      dvs: Seq[Dv], blooms: Seq[Bloom]): Unit = {
+    val statBy = stats.map(r => r.file -> encode(r)).toMap
+    val partBy = parts.map(r => r.file -> encode(r)).toMap
+    val dvBy = dvs.groupBy(_.data).view.mapValues(_.map(encode).mkString("\n")).toMap
+    val bloomBy = blooms.map(r => r.file -> encode(r)).toMap
     // meta sidecar first (tiny), then the parquet rows; both by
     // atomic link so readers only ever see complete artifacts
     val mtmp = Files.createTempFile(dir, ".checkpoint-meta", ".tmp")
-    Files.write(mtmp, metaLines.mkString("\n")
+    Files.write(mtmp, meta.map(encode).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     try Files.createLink(dir.resolve(checkpointMetaName(upTo)), mtmp)
     catch { case _: java.nio.file.FileAlreadyExistsException => }
@@ -2591,7 +2028,7 @@ object ManifestSink {
   }
 
   /** The planning checkpoint matching the CURRENT compaction horizon —
-    * (horizon, parquetPath, rowCount). None when absent (pre-r16 log,
+    * (horizon, parquetPath, rowCount). None when absent (no checkpoint yet,
     * crashed checkpoint write) or stale (newer compact landed without
     * one): strictly a fallback decision, never a correctness one. */
   private[graft] def planningCheckpoint(dir: Path)
@@ -2607,11 +2044,11 @@ object ManifestSink {
       } catch { case _: Exception => None }
     }
 
-  /** DISTRIBUTED PLANNING (round 16, the Iceberg distributed-manifest
+  /** DISTRIBUTED PLANNING (the Iceberg distributed-manifest
     * shape): prune the CHECKPOINTED portion of the snapshot with a
-    * Spark job over the parquet checkpoint — executors re-parse each
-    * row's `#stats`/`#part` lines with the exact parsers the text path
-    * uses and apply the SAME `mayMatch` predicate model, so the two
+    * Spark job over the parquet checkpoint — executors decode each
+    * row's `#stats`/`#part` lines with the codec the text path uses
+    * and apply the SAME `mayMatch` predicate model, so the two
     * planners cannot disagree — while the loose tail (adds, removes,
     * dvs landed since the horizon) is applied driver-side in epoch
     * order, O(tail). Driver cost: O(tail) text + O(kept) collected
@@ -2625,38 +2062,12 @@ object ManifestSink {
       filters: Seq[org.apache.spark.sql.sources.Filter], book: SpecBook)
       : (Seq[String], Map[String, Seq[String]], Int) = retryVanish() {
     val dir = Paths.get(path)
-    // —— the tail, applied in epoch order
-    val tailAdds = scala.collection.mutable.LinkedHashSet[String]()
-    val tailStatPairs = scala.collection.mutable.ArrayBuffer[(String, FileStat)]()
-    val tailPartPairs = scala.collection.mutable.ArrayBuffer[(String, PartTuple)]()
-    val tailDvs = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
-    val tailBlooms = scala.collection.mutable.LinkedHashMap[String, Map[String, String]]()
-    val removedCkpt = scala.collection.mutable.HashSet[String]()
-    looseEpochs(dir, horizon).sortBy(_._1).map(_._2)
-      .filter(branchOf(_).isEmpty).foreach { p =>
-      readLines(p).foreach { l =>
-        if (!l.startsWith("#")) tailAdds.add(l)
-        else if (l.startsWith("#remove ")) {
-          val n = l.stripPrefix("#remove ")
-          tailDvs.remove(n)
-          if (!tailAdds.remove(n)) removedCkpt.add(n)
-        }
-        else if (l.startsWith("#stats ")) parseStats(l).foreach(tailStatPairs += _)
-        else if (l.startsWith("#bloom ")) parseBloom(l).foreach {
-          case (f, m) => tailBlooms(f) = m }
-        else if (l.startsWith("#part ")) parsePart(l).foreach(tailPartPairs += _)
-        else if (l.startsWith("#dv ")) parseDv(l).foreach { case (d, v, n) =>
-          tailDvs(d) = tailDvs.getOrElse(d, Seq.empty) :+ ((v, n))
-        }
-      }
-    }
-    // same conflicting-duplicate drop rule as the full derivation
-    val tailStats = tailStatPairs.groupBy(_._1).collect {
-      case (n, recs) if recs.map(_._2).distinct.size == 1 =>
-        n -> tailBlooms.get(n).fold(recs.head._2)(b =>
-          recs.head._2.copy(blooms = b)) }
-    val tailParts = tailPartPairs.groupBy(_._1).collect {
-      case (n, recs) if recs.map(_._2).distinct.size == 1 => n -> recs.head._2 }
+    // —— the tail, applied in epoch order; its removes of checkpointed
+    // files are the replay's `removedElsewhere`
+    val tail = replay(looseEpochs(dir, horizon).sortBy(_._1).map(_._2)
+      .filter(branchOf(_).isEmpty).map(records))
+    val (tailStats, tailParts) = skippingIndex(tail, tail.blooms)
+    val removedCkpt = tail.removedElsewhere
     // —— the checkpointed portion: one job, collect (kept name, dv lines)
     val removedB = spark.sparkContext.broadcast(removedCkpt.toSet)
     val filtersB = filters
@@ -2667,24 +2078,25 @@ object ManifestSink {
     val enc2 = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     val keptCkpt = spark.read
       .schema("file STRING, stats STRING, part STRING, dvs STRING, " +
-        "bloom STRING") // pre-r18 checkpoints: by-name null = no filter
+        "bloom STRING") // checkpoints without bloom: by-name null = no filter
       .parquet(parquet.toString)
       .as(enc5)
       .mapPartitions { it =>
         it.flatMap { case (f, statLine, partLine, dvLines, bloomLine) =>
           if (removedB.value.contains(f)) None
           else {
-            val partOk = Option(partLine).flatMap(parsePart)
-              .map(_._2) match {
-                case Some(t) => filtersB.forall(specB.mayMatch(t, _))
-                case None => true
-              }
-            val statsOk = Option(statLine).flatMap(parseStats) match {
-              case Some((_, st0)) =>
-                val st = Option(bloomLine).flatMap(parseBloom)
-                  .fold(st0)(b => st0.copy(blooms = b._2))
+            val partOk = Option(partLine).flatMap(decode) match {
+              case Some(Part(_, t)) => filtersB.forall(specB.mayMatch(t, _))
+              case _ => true
+            }
+            val statsOk = Option(statLine).flatMap(decode) match {
+              case Some(s: Stats) =>
+                val st = Option(bloomLine).flatMap(decode) match {
+                  case Some(Bloom(_, b)) => s.stat.copy(blooms = b.toMap)
+                  case _ => s.stat
+                }
                 st.rows > 0 && filtersB.forall(SnapStats.mayMatch(st, _))
-              case None => true
+              case _ => true
             }
             if (partOk && statsOk) Some((f, Option(dvLines).getOrElse("")))
             else None
@@ -2693,7 +2105,7 @@ object ManifestSink {
       }(enc2)
       .collect()
     // —— tail adds pruned driver-side with the same rule
-    val keptTail = tailAdds.toSeq.filter { n =>
+    val keptTail = tail.files.toSeq.filter { n =>
       val partOk = tailParts.get(n).forall(t =>
         filters.forall(book.mayMatch(t, _)))
       partOk && (tailStats.get(n) match {
@@ -2707,16 +2119,16 @@ object ManifestSink {
       names.map(n => Paths.get(path, "data", n).toString)
     val dvByName = scala.collection.mutable.HashMap[String, Seq[String]]()
     keptCkpt.foreach { case (f, dvLines) =>
-      val own = dvLines.split("\n").toSeq.flatMap(parseDv).map(_._2)
-      val tail = tailDvs.getOrElse(f, Seq.empty).map(_._1)
-      val all = own ++ tail
+      val own = dvLines.split("\n").toSeq.flatMap(decode)
+        .collect { case Dv(_, v, _) => v }
+      val all = own ++ tail.dvs.getOrElse(f, Seq.empty).map(_._1)
       if (all.nonEmpty) dvByName(f) = dvPaths(all)
     }
     keptTail.foreach { n =>
-      val tail = tailDvs.getOrElse(n, Seq.empty).map(_._1)
-      if (tail.nonEmpty) dvByName(n) = dvPaths(tail)
+      val dvs = tail.dvs.getOrElse(n, Seq.empty).map(_._1)
+      if (dvs.nonEmpty) dvByName(n) = dvPaths(dvs)
     }
-    val listed = (ckptRows - removedCkpt.size + tailAdds.size).toInt
+    val listed = (ckptRows - removedCkpt.size + tail.files.size).toInt
     val kept = (keptCkpt.map(_._1).toSeq ++ keptTail)
       .map(n => Paths.get(path, "data", n).toString)
     (kept, dvByName.toMap, listed)
@@ -2760,11 +2172,11 @@ object ManifestSink {
       consumedDvs: Option[Map[String, Set[String]]] = None,
       specId: Int = 0, op: String = "append",
       forBranch: Option[String] = None,
-      /** Round 19: this rewrite MATERIALIZED every carried row's id —
+      /** This rewrite MATERIALIZED every carried row's id —
         * the epoch may serve paired CDC labels ([[EpochDelta.paired]]).
         * Recorded only when the epoch actually removes files. */
       cdcPair: Boolean = false,
-      /** Round 19: equality-delete key files this rewrite resolved —
+      /** Equality-delete key files this rewrite resolved —
         * published as `#eqdrop` records (fence-verified to cover the
         * live set). */
       eqDrops: Seq[String] = Seq.empty): Unit = {
@@ -2780,35 +2192,22 @@ object ManifestSink {
     // one token per OPERATION (stable across claim attempts — the
     // absorbed check recognizes the op's own publish by it)
     val cowToken = java.util.UUID.randomUUID.toString
-    // the remove set is re-generated per claim attempt (advisor r14):
+    // the remove set is re-generated per claim attempt:
     // a truncate/overwrite derives it from the union it replaces, and a
     // retry after a lost race must absorb the racer's files
     var lastRemoves: Seq[String] = Seq.empty
-    def content(): Seq[String] = {
+    def content(): Seq[LogRecord] = {
       lastRemoves = removeFilesGen()
-      val cow = if (lastRemoves.isEmpty) Seq.empty else Seq(s"#cow $cowToken")
-      val parts = files.collect {
-        case f if f.part.nonEmpty => partLine(f.name, PartTuple(specId, f.part)) }
       // a plain append whose remove set came back empty stays an
       // append no matter what op the face declared (e.g. an
       // overwrite-by-filter matching no files replaces nothing)
       val effOp = if (lastRemoves.isEmpty && op != "append") "append" else op
-      // a BRANCH-STAGED epoch (round 17): validated against the live
-      // refs per claim attempt — writing to a dropped branch refuses
-      val branchHdr = forBranch.map { b =>
-        require(tableBranches(path).contains(b),
-          s"no branch '$b' on $path — create it with " +
-            "CALL graft.sys.create_branch first")
-        s"#forbranch $b"
-      }.toSeq
-      val pairHdr =
-        if (cdcPair && lastRemoves.nonEmpty) Seq("#cdcpair") else Seq.empty
-      Seq(s"#schema $schemaDdl", opLine(effOp)) ++ branchHdr ++ pairHdr ++
-        (cow ++
-        files.map(statsLine) ++ files.flatMap(bloomLine) ++
-        files.flatMap(ndvLine) ++ parts ++
-        eqDrops.sorted.map(n => s"#eqdrop $n") ++
-        lastRemoves.sorted.map(n => s"#remove $n") ++ files.map(_.name))
+      val pairHdr = if (cdcPair && lastRemoves.nonEmpty) Seq(CdcPair) else Seq.empty
+      val cow = if (lastRemoves.isEmpty) Seq.empty else Seq(Cow(cowToken))
+      Seq(Schema(schemaDdl), Op(effOp)) ++ stagedHeader(path, forBranch) ++
+        pairHdr ++ cow ++ fileRecords(files, specId) ++
+        eqDrops.sorted.map(EqDrop(_)) ++ lastRemoves.sorted.map(Remove(_)) ++
+        files.map(f => Data(f.name))
     }
     claimEpoch(dir, content _, consumedDvs)
     val now = java.nio.file.attribute.FileTime.fromMillis(
@@ -2822,7 +2221,7 @@ object ManifestSink {
   }
 
   /** `ignoreDeletes`/`ignoreChanges` reader options → the tail's
-    * non-append policy (round 17, the Delta names): `ignoreChanges`
+    * non-append policy (the Delta names): `ignoreChanges`
     * subsumes `ignoreDeletes`. */
   private[sources] def onChangeOf(options: CaseInsensitiveStringMap): String =
     if (options.getBoolean("ignoreChanges", false)) "ignoreChanges"
@@ -2842,8 +2241,8 @@ object ManifestSink {
     * flips them visible), while crash orphans (a driver that died
     * before abort(), a replaced speculative attempt) only ever age.
     * The keep set is [[referencedFiles]] — every add ANY live fragment
-    * lists, `#remove`s deliberately NOT applied (round 14, advisor
-    * r13): a row-level DELETE's victim is still served by every
+    * lists, `#remove`s deliberately NOT applied: a row-level DELETE's
+    * victim is still served by every
     * retained pre-delete `VERSION AS OF`, so it stays unreclaimable
     * until compaction resolves the remove into the union — at which
     * point time travel below the horizon is refused anyway, so nothing
@@ -2856,7 +2255,7 @@ object ManifestSink {
     * timestamp). Returns the deleted names. Also operable from pure
     * SQL: `CALL graft.sys.vacuum(table, older_than_ms)`
     * ([[VacuumProcedure]]). */
-  /** EXPIRE SNAPSHOTS (round 17, the Iceberg `expire_snapshots`
+  /** EXPIRE SNAPSHOTS (the Iceberg `expire_snapshots`
     * shape): retire history by COUNT (`keep_last` versions stay
     * travel-servable) or AGE (epochs committed at or before the
     * cutoff retire, measured by the persisted `#ts` commit clock) by
@@ -2891,7 +2290,7 @@ object ManifestSink {
       tags.toSeq.map { case (n, v) => (v, s"tag:$n") } ++
         branches.toSeq.map { case (n, v) => (v, s"branch:$n") } ++
         registeredFeeds(path).toSeq.map { case (c, w) =>
-          (newest - w, s"feed:$c") } // round 18: reserved CDC windows
+          (newest - w, s"feed:$c") } // reserved CDC windows
     val binding = caps.filter(_._1 < requested).minByOption(_._1)
     val effective = binding.map(_._1).getOrElse(requested)
     val protectedBy = binding.map(_._2).getOrElse("none")
@@ -2905,7 +2304,7 @@ object ManifestSink {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
     val dir = Paths.get(path)
     val cutoff = System.currentTimeMillis() - olderThanMs
-    // metadata-dir temp litter first (advisor r12): a committer that
+    // metadata-dir temp litter first: a committer that
     // crashes between createTempFile and its finally-cleanup leaks
     // .epoch*.tmp / .compact-*.tmp in the table root, which no data-dir
     // sweep would ever reach. Age-gating protects a LIVE committer's
@@ -2980,7 +2379,7 @@ object ManifestSink {
     // an absent epoch id is fine only if it NEVER EXISTED: above the
     // horizon (id <= horizon means it committed and was absorbed) and
     // below the first loose epoch (ids start wherever a restarted
-    // query's first batch lands — advisor r10 — and commit contiguously
+    // query's first batch lands — and commit contiguously
     // from there, so an absent id at-or-after firstLoose is a swept gap)
     val firstLoose = loose.map(_._1).minOption.getOrElse(Long.MaxValue)
     val missing = ((since + 1) to asOf)
@@ -3000,8 +2399,10 @@ object ManifestSink {
     // A merge-on-read `#dv` epoch is equally not an append (it
     // retro-deletes rows from files delivered in EARLIER windows).
     val removing = window.filter(e => branchOf(e._2).isEmpty &&
-      (readRemoves(e._2).nonEmpty || readDvRecords(e._2).nonEmpty ||
-        readHeaders(e._2).exists(_.startsWith("#eqdel ")))).map(_._1)
+      records(e._2).exists {
+        case _: Remove | _: Dv | _: EqDel => true
+        case _ => false
+      }).map(_._1)
     if (removing.nonEmpty)
       throw new IllegalStateException(
         s"incremental read ($since, $asOf] crosses row-level " +
@@ -3014,7 +2415,7 @@ object ManifestSink {
   }
 
   /** One row per LIVE log fragment, for the `graft.snap.t.history`
-    * metadata table (round 15): (version, kind, nAdded, nRemoved,
+    * metadata table: (version, kind, nAdded, nRemoved,
     * mtimeMillis). Loose epochs classify by their records — `append`
     * (data adds only), `rewrite` (carries `#remove`s: COW delete/
     * update/merge, compaction, overwrite), `metadata` (schema-only:
@@ -3022,7 +2423,7 @@ object ManifestSink {
     * `checkpoint` row at the horizon carrying the resolved union size.
     * History below the horizon is deliberately collapsed into that row:
     * the log retains exactly what time travel can still serve. */
-  /** TIMESTAMP AS OF resolution (round 16): the newest epoch whose
+  /** TIMESTAMP AS OF resolution: the newest epoch whose
     * commit time (fragment mtime, this host's clock) is <= `micros`.
     * Resolution covers only the UN-SWEPT tail: a compaction sweep
     * rewrites absorbed epochs into one compact file whose mtime is the
@@ -3034,27 +2435,27 @@ object ManifestSink {
     * on one host, so mtimes are non-decreasing in id up to filesystem
     * granularity; the max qualifying id wins. */
   /** The COMMIT TIME of a fragment in micros: the persisted `#ts`
-    * header when present (round 17, advisor r16 — survives
-    * mtime-disturbing copies), the fragment mtime for pre-r17 logs. */
+    * header when present (it survives mtime-disturbing copies), the
+    * fragment mtime for logs without one. */
   private[sources] def commitTimeMicros(p: Path): Long =
-    readHeaders(p).collectFirst {
-      case l if l.startsWith("#ts ") => l.stripPrefix("#ts ").trim
-    }.flatMap(_.toLongOption)
+    records(p).collectFirst { case Ts(m) => m }
       .getOrElse(Files.getLastModifiedTime(p).toMillis * 1000L)
 
-  /** Rewrite epoch `version`'s `#ts` header (and mtime, the pre-r17
-    * fallback) to a PINNED instant — the deterministic-clock hook the
+  /** Rewrite epoch `version`'s `#ts` header (and mtime, the fallback
+    * of logs without one) to a PINNED instant — the deterministic-clock hook the
     * wall-clock-travel oracles need (an epoch's commit time is
     * otherwise this host's clock). Atomic replace; the fragment cache
     * keys on (fileKey, size, mtime), all of which the replace moves. */
   private[graft] def stampCommitTime(path: String, version: Long,
       micros: Long): Unit = {
     val p = Paths.get(path).resolve(epochName(version))
-    val lines = readLines(p)
+    val lines = Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8)
+      .asScala.toSeq.filter(_.nonEmpty)
+    def isTs(l: String) = decode(l).exists(_.isInstanceOf[Ts])
+    val ts = encode(Ts(micros))
     val stamped =
-      if (lines.exists(_.startsWith("#ts ")))
-        lines.map(l => if (l.startsWith("#ts ")) s"#ts $micros" else l)
-      else s"#ts $micros" +: lines
+      if (lines.exists(isTs)) lines.map(l => if (isTs(l)) ts else l)
+      else ts +: lines
     val tmp = Files.createTempFile(p.getParent, ".stamp", ".tmp")
     Files.write(tmp, stamped.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -3094,8 +2495,8 @@ object ManifestSink {
     }
   }
 
-  /** Per-epoch CHANGE DELTAS of the window `(since, asOf]` (round 17,
-    * the CDC read): each live epoch's adds, `#remove`s and `#dv`
+  /** Per-epoch CHANGE DELTAS of the window `(since, asOf]` (the CDC
+    * read): each live epoch's adds, `#remove`s and `#dv`
     * records plus its `#op` classification — the raw material
     * [[ChangeFeed]] turns into labeled change rows. Same retention
     * contract as [[committedFilesBetween]]: a window reaching at or
@@ -3103,25 +2504,25 @@ object ManifestSink {
     * unrecoverable from the compact union), as does a gap in the
     * loose tail that ever existed. Unlike the incremental APPEND read,
     * remove/dv-carrying epochs are the POINT here — classification,
-    * not refusal. Pre-r17 epochs without `#op` classify structurally:
+    * not refusal. Epochs without `#op` classify structurally:
     * remove-carrying → `rewrite` (served in the safe diff form),
     * dv-carrying → `delete`, adds-only → `append`, else `metadata`. */
   private[graft] case class EpochDelta(id: Long, op: String,
       adds: Seq[String], removes: Seq[String],
       dvs: Seq[(String, String, Long)],
-      /** The epoch's persisted commit time (round 17: `#ts`, mtime
+      /** The epoch's persisted commit time (`#ts`, mtime
         * fallback) — the `_commit_timestamp` CDC column. */
       tsMicros: Long = -1L,
-      /** `#cdc` role tags (round 18): dv file → "pre" / add file →
-        * "post" for the UPDATE halves of a MERGE; empty on pre-r18
-        * epochs → the net delete+insert fallback. */
+      /** `#cdc` role tags: dv file → "pre" / add file →
+        * "post" for the UPDATE halves of a MERGE; empty on epochs
+        * without `#cdc` → the net delete+insert fallback. */
       cdcRoles: Map[String, String] = Map.empty,
-      /** `#cdcpair` (round 19): the committer materialized every
+      /** `#cdcpair`: the committer materialized every
         * carried row's id, so the feed may serve this COW epoch as
         * per-row PAIRED changes (id join) instead of a multiset diff.
-        * False on pre-r19 epochs → the documented diff fallback. */
+        * False on epochs without it → the documented diff fallback. */
       paired: Boolean = false,
-      /** `#eqdel` records (round 19): (key file, key cols, rows) — a
+      /** `#eqdel` records: (key file, key cols, rows) — a
         * keyed upsert epoch's delete-by-key half. */
       eqdels: Seq[(String, Seq[String], Long)] = Seq.empty)
 
@@ -3146,7 +2547,7 @@ object ManifestSink {
     val window = loose.filter(e => e._1 > since && e._1 <= asOf).sortBy(_._1)
     val missing = ((since + 1) to asOf).filterNot(window.map(_._1).toSet)
     if (missing.nonEmpty) {
-      // NO silent excuse for gaps (advisor r17): a missing id usually
+      // NO silent excuse for gaps: a missing id usually
       // means a concurrent sweep deleted the manifest after our listing
       // but before its compact file was observed — re-read the horizon;
       // if it advanced, re-derive from a fresh listing (which then
@@ -3168,24 +2569,25 @@ object ManifestSink {
         // change until it is audited and published)
         EpochDelta(id, "metadata", Seq.empty, Seq.empty, Seq.empty)
       else {
-        val removes = readRemoves(p)
-        val dvs = readDvRecords(p)
-        val adds = readData(p)
-        val op = epochOp(p).getOrElse {
+        val rs = records(p)
+        val removes = rs.collect { case Remove(n) => n }
+        val dvs = rs.collect { case Dv(d, v, n) => (d, v, n) }
+        val adds = rs.collect { case Data(n) => n }
+        val op = rs.collectFirst { case Op(k) => k }.getOrElse {
           if (removes.nonEmpty) "rewrite"
           else if (dvs.nonEmpty) "delete"
           else if (adds.nonEmpty) "append"
           else "metadata"
         }
         EpochDelta(id, op, adds, removes, dvs, commitTimeMicros(p),
-          readHeaders(p).flatMap(parseCdc).toMap,
-          paired = readHeaders(p).exists(_.startsWith("#cdcpair")),
-          eqdels = readHeaders(p).flatMap(parseEqDel))
+          rs.collect { case Cdc(f, r) => f -> r }.toMap,
+          paired = rs.contains(CdcPair),
+          eqdels = rs.collect { case EqDel(f, c, n) => (f, c, n) })
       }
     }
   }
 
-  /** The window `(since, asOf]` as CHANGE PARTITIONS (round 17) — the
+  /** The window `(since, asOf]` as CHANGE PARTITIONS — the
     * per-file read specs both the `.changes` batch face and the
     * streaming faces plan from, so batch CDF, streaming CDF and the
     * rate-limited tail agree on semantics by construction:
@@ -3234,7 +2636,7 @@ object ManifestSink {
         case _ if d.eqdels.nonEmpty =>
           // a keyed-upsert epoch's delete half is a key anti-join —
           // not a per-file read; ChangeFeed.tableChanges serves it
-          // exactly (round 19)
+          // exactly
           if (onChange == "ignoreChanges") adds(d, "insert")
           else refuse(d)
         case "append" => adds(d, "insert")
@@ -3246,7 +2648,7 @@ object ManifestSink {
           val (preLabel, postLabel) =
             if (op == "update") ("update_preimage", "update_postimage")
             else ("delete", "insert")
-          // dvs targeting THE EPOCH'S OWN adds (round 18: a published
+          // dvs targeting THE EPOCH'S OWN adds (a published
           // branch's staged update of its own staged append) mark rows
           // that were never visible — no pre-image partition, and the
           // add reads with those positions as a SKIP set. `#cdc` role
@@ -3290,10 +2692,11 @@ object ManifestSink {
       }
       val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
       val looseRows = looseEpochs(dir, horizon).map { case (id, p) =>
-        val adds = readData(p).size.toLong
-        val removes = readRemoves(p).size.toLong
-        val dvs = readDvRecords(p).size.toLong
-        val eqdels = readHeaders(p).count(_.startsWith("#eqdel "))
+        val rs = records(p)
+        val adds = rs.count(_.isInstanceOf[Data]).toLong
+        val removes = rs.count(_.isInstanceOf[Remove]).toLong
+        val dvs = rs.count(_.isInstanceOf[Dv])
+        val eqdels = rs.count(_.isInstanceOf[EqDel])
         val kind =
           if (branchOf(p).isDefined) "branch" // staged, not yet visible
           else if (removes > 0) "rewrite"
@@ -3316,7 +2719,7 @@ object ManifestSink {
         if (branchOf(p).isDefined) (id, 0, Some(0L)) // staged: invisible
         else {
           val data = readData(p)
-          val stats = readHeaders(p).flatMap(parseStats).toMap
+          val stats = records(p).collect { case s: Stats => s.file -> s.stat }.toMap
           val rows =
             if (data.forall(stats.contains))
               Some(data.map(stats(_).rows).sum)
@@ -3331,7 +2734,7 @@ object ManifestSink {
   * the long family's (min, max) — longs, ints, timestamps as UTC
   * micros, dates as epoch days — and `strCols` the string columns'
   * (min, optional max), truncated per [[StrColStat]]'s contract.
-  * `nulls` (round 14) is the per-column NULL count, recorded for EVERY
+  * `nulls` is the per-column NULL count, recorded for EVERY
   * stats-safe-named column the writer's schema carried — which is what
   * lets the skipping index prune `IS NULL` (nulls = 0), `IS NOT NULL`
   * (nulls = rows), and — because the record is exhaustive over the
@@ -3345,14 +2748,14 @@ case class FileStat(rows: Long, cols: Map[String, (Long, Long)],
     strCols: Map[String, (String, Option[String])] = Map.empty,
     nulls: Map[String, Long] = Map.empty,
     /** Is `nulls` EXHAUSTIVE over the file's written schema? True for
-      * writer-recorded stats (the r14 contract: every stats-safe-named
+      * writer-recorded stats (the writer contract: every stats-safe-named
       * column gets a record, so an absent record proves the column
       * postdates the file). False for SYNTHETIC envelopes (partition
-      * tuples, round 15), whose null accounting covers only the spec's
+      * tuples), whose null accounting covers only the spec's
       * columns — the absent-record inference would mis-prune every
       * non-partition column. */
     exhaustiveNulls: Boolean = true,
-    /** Per-column base64 bloom payloads (round 18, [[BloomSkip]]) —
+    /** Per-column base64 bloom payloads ([[BloomSkip]]) —
       * attached from the file's `#bloom` record AFTER stat parsing
       * (never part of record equality), consulted by equality/IN
       * pruning once the min/max envelope passes. Empty = no filter
@@ -3364,40 +2767,40 @@ case class ManifestTable(path: String, writeSchema: StructType,
     removeFiles: Seq[String] = Seq.empty,
     spec: Seq[PartField] = Seq.empty,
     consumedDvs: Option[Map[String, Set[String]]] = None,
-    /** The id of `spec` in the table's [[SpecBook]] (round 16): new
+    /** The id of `spec` in the table's [[SpecBook]]: new
       * files' `#part` records carry it, so after a spec evolution each
       * file remains prunable under the layout it was WRITTEN under. */
     specId: Int = 0,
-    /** logical(lowercased)→physical column renames (round 16): the
+    /** logical(lowercased)→physical column renames: the
       * catalog face passes the table's column mapping so writes land
       * under the PHYSICAL names and overwrite predicates evaluate
       * against the physical `#spec`/tuples. Empty = identity (every
       * path-based use). */
     renameCols: Map[String, String] = Map.empty,
-    /** The `graft.op` write option (round 17): what OPERATION this
+    /** The `graft.op` write option: what OPERATION this
       * write face is part of — the epoch's `#op` CDC header. The COW
       * faces pass `delete`/`update`/`merge`/`compact`; absent means
       * the write's own shape decides (overwrite forms → `overwrite`,
       * a bare removeFiles rewrite → `rewrite`, else `append`). */
     declaredOp: Option[String] = None,
-    /** The FULL physical→logical mapping (round 17, lowercased dotted
+    /** The FULL physical→logical mapping (lowercased dotted
       * keys) — when present, write-schema translation recurses into
       * struct fields; `renameCols` stays the flat top-level map the
       * overwrite-predicate translation uses. */
     colmapAll: Map[String, String] = Map.empty,
-    /** Write-audit-publish (round 17): stage this write's epochs on a
+    /** Write-audit-publish: stage this write's epochs on a
       * BRANCH (the `spark.graft.wap.branch` session conf) — invisible
       * to every main face until `CALL graft.sys.fast_forward`
-      * publishes them. APPENDS, (round 18, via the catalog's MOR
-      * faces) `#dv` deltas and (round 19) OVERWRITE forms stage; COW
+      * publishes them. APPENDS, (via the catalog's MOR
+      * faces) `#dv` deltas and OVERWRITE forms stage; COW
       * rewrites refuse under a branch. */
     forBranch: Option[String] = None,
-    /** Equality-delete key files this rewrite RESOLVED (round 19,
+    /** Equality-delete key files this rewrite RESOLVED (the
       * `eqDrops` option): the commit publishes `#eqdrop` records and
       * the claim fence verifies they cover the live set. */
     eqDrops: Seq[String] = Seq.empty,
     /** KEYED-UPSERT key columns from the path face's table options
-      * (round 19) — the catalog face passes them per-write through
+      * — the catalog face passes them per-write through
       * `LogicalWriteInfo.options` instead. */
     upsertKeysOpt: Seq[String] = Seq.empty)
     extends Table with SupportsWrite
@@ -3422,7 +2825,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC).asJava
 
-  /** TABLE-AS-A-STREAM (round 11): `spark.readStream` on the SAME
+  /** TABLE-AS-A-STREAM: `spark.readStream` on the SAME
     * format/path TAILS the epoch log — offsets are epoch ids, each
     * micro-batch is [[ManifestSink.committedFilesBetween]] of its
     * offset window, so replay-from-checkpoint is exactly the committed
@@ -3450,7 +2853,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
     }
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // KEYED UPSERT option (round 19, equality deletes): `upsertKeys`
+    // KEYED UPSERT option (equality deletes): `upsertKeys`
     // names LOGICAL key columns; the streaming face then commits
     // delete-by-key + appends per micro-batch. The builder variant
     // carries `SupportsStreamingUpdateAsAppend` ONLY in this mode —
@@ -3489,10 +2892,10 @@ case class ManifestTable(path: String, writeSchema: StructType,
       private var truncating = false
       private var overwriteWhere: Option[Seq[org.apache.spark.sql.sources.Filter]] = None
       private var dynamic = false
-      /** `INSERT OVERWRITE` / `mode("overwrite")` (round 14): a full-
+      /** `INSERT OVERWRITE` / `mode("overwrite")`: a full-
         * snapshot REPLACE — the new task files plus `#remove`s of every
         * committed file, flipped in ONE atomic epoch. The remove set is
-        * computed at COMMIT time, per claim attempt (advisor r14): a
+        * computed at COMMIT time, per claim attempt: a
         * concurrent append landing before the overwrite's claim is
         * absorbed into the refreshed remove set, so readers see the old
         * table or the new one, never replacement rows plus a racer's
@@ -3501,7 +2904,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
         * aborts this commit if a racing rewrite removed one of the
         * files first. */
       override def truncate(): WriteBuilder = { truncating = true; this }
-      /** FILTERED overwrite (round 15, the Delta `replaceWhere` /
+      /** FILTERED overwrite (the Delta `replaceWhere` /
         * `INSERT OVERWRITE … PARTITION (k=v)` shape): allowed exactly
         * when the predicate is decidable PER FILE from identity
         * partition tuples — `canOverwrite` refuses anything else at
@@ -3535,7 +2938,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
         else overwriteWhere = Some(filters.toSeq)
         this
       }
-      /** DYNAMIC partition overwrite (round 15): replace exactly the
+      /** DYNAMIC partition overwrite: replace exactly the
         * partitions the new data lands in — the remove set is derived
         * from the written tuples at commit time. */
       override def overwriteDynamicPartitions(): WriteBuilder = {
@@ -3559,7 +2962,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
             else if (removeFiles.nonEmpty) "rewrite"
             else "append"
           }
-          // APPENDS and (round 19) OVERWRITE forms stage on a branch:
+          // APPENDS and OVERWRITE forms stage on a branch:
           // a staged overwrite's remove set derives from the BRANCH's
           // visible state per claim attempt, fences against it, and
           // fast_forward replays removes+adds as ONE epoch under the
@@ -3592,7 +2995,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
             "graft manifest sink: streaming truncate (complete/update " +
               "output) is not supported — the log is an append-of-epochs; " +
               "use append output mode")
-          // round 18: streaming APPENDS stage on a branch like batch
+          // streaming APPENDS stage on a branch like batch
           // appends — #forbranch epochs with their #txn replay records,
           // published by fast_forward (which carries the watermarks)
           ManifestStreamingWrite(path, physicalize(info.schema()),
@@ -3624,7 +3027,7 @@ object ManifestTable {
 /** One task's contribution: the data file it wrote (name only — the
   * driver owns the directory), its row count, and per-column bounds
   * (the data-skipping stats the epoch manifest records): `stats` for
-  * the long family, `strStats` for string columns. `part` (round 15)
+  * the long family, `strStats` for string columns. `part`
   * is the file's encoded partition tuple under the table's `#spec`,
   * empty for unpartitioned tables. */
 case class CommittedFile(name: String, rows: Long,
@@ -3632,20 +3035,20 @@ case class CommittedFile(name: String, rows: Long,
     strStats: Seq[StrColStat] = Seq.empty,
     nullStats: Seq[NullStat] = Seq.empty,
     part: Seq[String] = Seq.empty,
-    /** (physical col, base64 bloom payload) pairs (round 18) — the
+    /** (physical col, base64 bloom payload) pairs — the
       * file's `#bloom` record, present only for `bloom.columns`
       * tables ([[BloomSkip]]). */
     blooms: Seq[(String, String)] = Seq.empty,
-    /** (physical col, base64 HLL payload) pairs (round 19) — the
+    /** (physical col, base64 HLL payload) pairs — the
       * file's `#ndv` record, present only for `ndv.columns` tables
       * ([[NdvSketch]]). */
     ndvs: Seq[(String, String)] = Seq.empty) extends WriterCommitMessage
 
 /** A partition-fan-out task's contribution: one [[CommittedFile]] per
-  * partition tuple the task's rows landed in (round 15). */
+  * partition tuple the task's rows landed in. */
 case class CommittedFileSet(files: Seq[CommittedFile]) extends WriterCommitMessage
 
-/** A keyed-upsert task's commit (round 19, equality deletes): the
+/** A keyed-upsert task's commit (equality deletes): the
   * ordinary data message plus the task's key file — (name, rows),
   * absent when the task saw no rows. */
 case class EqUpsertCommit(data: WriterCommitMessage,
@@ -3727,7 +3130,7 @@ case class ManifestBatchWrite(path: String, schema: StructType,
     * partition tuple on which the predicate decides EXACTLY — a file
     * without one (pre-partitioning writer) refuses rather than being
     * silently kept or blindly replaced. */
-  /** The write's VISIBLE state (round 19): a branch-staged overwrite
+  /** The write's VISIBLE state: a branch-staged overwrite
     * sees — and removes from — the branch's files and tuples, exactly
     * as its reads do. */
   private def liveFiles: Seq[String] = forBranch match {
@@ -3842,23 +3245,23 @@ case class ManifestBatchWrite(path: String, schema: StructType,
   * the first commit won, and the replay attempt's files are deleted so
   * it leaves no trace. Detection is PER-WRITER (the Delta
   * txnAppId/txnVersion shape), so a batch append landing between two
-  * runs of the stream — which claims a log epoch id the round-11 scheme
-  * would have confused with the stream's next engine epoch — can never
-  * make live streaming data look like a replay (the r11 verdict's
-  * confirmed silent-data-loss defect; SnapshotSpec runs that exact
-  * interleaving plus a concurrent stream-vs-batch race).
+  * runs of the stream — which claims a log epoch id a shared
+  * epoch-id watermark would confuse with the stream's next engine
+  * epoch — can never make live streaming data look like a replay
+  * (SnapshotSpec runs that exact interleaving plus a concurrent
+  * stream-vs-batch race).
   * StreamingSpec restarts a checkpointed query with the engine commit
   * marker removed and pins that the replayed epoch changes nothing. */
 case class ManifestStreamingWrite(path: String, schema: StructType,
     compactInterval: Int, writerId: String, runToken: String,
     spec: Seq[PartField] = Seq.empty, specId: Int = 0,
-    /** Write-audit-publish (round 18): stage this stream's epochs on
+    /** Write-audit-publish: stage this stream's epochs on
       * a BRANCH — `#forbranch` next to the `#txn` replay records,
       * invisible to main until `fast_forward` replays the adds AND
       * carries the per-writer `#txn` watermarks (so a post-publish
       * restart's replayed engine epochs still detect). */
     forBranch: Option[String] = None,
-    /** KEYED UPSERT mode (round 19, equality deletes): PHYSICAL key
+    /** KEYED UPSERT mode (equality deletes): PHYSICAL key
       * columns — each micro-batch commits `#eqdel` (delete-by-key of
       * every earlier epoch's rows) + its appends in ONE epoch,
       * WITHOUT reading the target. The Update-output rows of a
@@ -3879,7 +3282,7 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
       // replayed engine epoch: the first commit already published this
       // epoch's files under a claimed log id; discard the replay's
       // output (idempotence). NEVER delete a name ANY fragment
-      // references (round 18: referencedFiles, not the main union —
+      // references (referencedFiles, not the main union —
       // a BRANCH-STAGED epoch's adds are invisible to the union but
       // just as committed): run-unique tokens make a collision
       // impossible among this sink's own files, and the guard keeps a
@@ -3901,26 +3304,12 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
           "(upsertKeys) cannot stage on a branch — its delete-by-key " +
           "half retro-applies against a moving main; publish first or " +
           "stream to main")
-    val parts = files.collect {
-      case f if f.part.nonEmpty =>
-        ManifestSink.partLine(f.name, PartTuple(specId, f.part)) }
-    def content(): Seq[String] = {
-      val branchHdr = forBranch.map { b =>
-        require(ManifestSink.tableBranches(path).contains(b),
-          s"no branch '$b' on $path — create it with " +
-            "CALL graft.sys.create_branch first")
-        s"#forbranch $b"
-      }.toSeq
-      val eqLines = eqFiles.map { case (n, rows) =>
-        ManifestSink.eqDelLine(n, upsertKeys, rows) }
-      Seq(s"#txn $writerId $epochId",
-        s"#schema ${schema.toDDL}",
-        ManifestSink.opLine(
-          if (eqFiles.nonEmpty) "upsert" else "append")) ++
-        branchHdr ++ eqLines ++ files.map(ManifestSink.statsLine) ++
-        files.flatMap(ManifestSink.bloomLine) ++
-        files.flatMap(ManifestSink.ndvLine) ++ parts ++ files.map(_.name)
-    }
+    def content(): Seq[LogRecord] =
+      Seq(Txn(writerId, epochId), Schema(schema.toDDL),
+        Op(if (eqFiles.nonEmpty) "upsert" else "append")) ++
+        ManifestSink.stagedHeader(path, forBranch) ++
+        eqFiles.map { case (n, rows) => EqDel(n, upsertKeys, rows) } ++
+        ManifestSink.fileRecords(files, specId) ++ files.map(f => Data(f.name))
     ManifestSink.claimEpoch(dir, content _)
     ManifestSink.maybeCompact(dir,
       ManifestSink.latestCompact(dir).map(_._1).getOrElse(-1L), compactInterval)
@@ -3933,7 +3322,7 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
     * leave the manifest pointing at nothing. */
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dir = Paths.get(path)
-    // referencedFiles, not the main union (round 18): a BRANCH-STAGED
+    // referencedFiles, not the main union: a BRANCH-STAGED
     // epoch's adds are committed but union-invisible
     val published =
       if (Files.exists(dir)) ManifestSink.referencedFiles(dir)
@@ -3952,8 +3341,8 @@ case class ManifestStreamingWriterFactory(path: String, fieldNames: Array[String
     bloomCols: Seq[String] = Seq.empty,
     bloomBits: Int = BloomSkip.DefaultBits,
     rowGroupBytes: Int = 0,
-    /** PHYSICAL key columns of a keyed-upsert stream (round 19,
-      * equality deletes): each task ALSO writes its rows' key tuples
+    /** PHYSICAL key columns of a keyed-upsert stream (equality
+      * deletes): each task ALSO writes its rows' key tuples
       * to a small `eq-…` parquet file — the delete-by-key half the
       * commit publishes as an `#eqdel` record, without ever reading
       * the target. Empty = ordinary append. */
@@ -4033,7 +3422,7 @@ case class ManifestWriterFactory(path: String, fieldNames: Array[String],
     ndvCols: Seq[String] = Seq.empty) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     // taskId distinguishes attempts WITHIN the application; the run
-    // token (advisor r12) distinguishes APPLICATIONS — taskIds restart
+    // token distinguishes APPLICATIONS — taskIds restart
     // at 0 in a new SparkContext, so without it a second app appending
     // to the same table could reuse a committed file's name, truncate
     // its content, and leave the name's first-seen `#stats` describing
@@ -4054,9 +3443,9 @@ case class ManifestWriterFactory(path: String, fieldNames: Array[String],
 
 /** One task-file writer, shared by the batch and streaming factories —
   * the factories differ only in how they NAME the file. The data plane
-  * is PARQUET (round 13; rounds ≤12 landed row-CSV, which at 100 TB
-  * forfeits compression, within-file column pruning and page-level
-  * stats — the reference's own materialization target is columnar,
+  * is PARQUET (row text at 100 TB would forfeit compression,
+  * within-file column pruning and page-level stats — the reference's
+  * own materialization target is columnar,
   * `etl_kaggle_to_big_query.py:88-110`). Files are written through the
   * public parquet-java Group API against a [[LocalOutputFile]] (no
   * Hadoop FileSystem, so no `.crc` siblings), snappy-compressed, with
@@ -4130,7 +3519,7 @@ private[graft] object ManifestWriters {
         s"columns, got $other")
   }
 
-  /** A STRUCT column as an optional parquet GROUP (round 17) —
+  /** A STRUCT column as an optional parquet GROUP —
     * nested structs and arrays recurse; anything else inside refuses
     * loudly. */
   private def groupField(n: String,
@@ -4141,7 +3530,7 @@ private[graft] object ManifestWriters {
     g.named(n)
   }
 
-  /** An ARRAY column as the STANDARD 3-level parquet LIST (round 18):
+  /** An ARRAY column as the STANDARD 3-level parquet LIST:
     * `optional group <n> (LIST) { repeated group list { optional
     * <element> element } }` — what every parquet reader (including
     * Spark's vectorized delegate) decodes natively; element types
@@ -4156,7 +3545,7 @@ private[graft] object ManifestWriters {
         .named("list"))
       .named(n)
 
-  /** A MAP column as the STANDARD parquet MAP (round 18): `optional
+  /** A MAP column as the STANDARD parquet MAP: `optional
     * group <n> (MAP) { repeated group key_value { required <key> key;
     * optional <value> value } }` — keys are primitives (required,
     * Spark's map-key contract), values recurse like array elements. */
@@ -4244,7 +3633,7 @@ private[graft] object ManifestWriters {
     r => fns.map(_(r))
   }
 
-  /** A PARTITION-FAN-OUT task writer (round 15): routes each row to a
+  /** A PARTITION-FAN-OUT task writer: routes each row to a
     * per-partition-tuple delegate file, so one task emits one file per
     * distinct tuple it sees and the commit records each file's `#part`.
     * Memory is one open parquet writer per distinct tuple per task —
@@ -4292,7 +3681,7 @@ private[graft] object ManifestWriters {
       rowGroupBytes, ndvCols)
 
   /** The same writer against an explicit directory — the planning
-    * CHECKPOINT (round 16) writes parquet into the table ROOT (it is
+    * CHECKPOINT writes parquet into the table ROOT (it is
     * metadata, not data: vacuum must never see it as a data-plane
     * orphan). */
   /** Write one struct VALUE into a parquet group — field order is
@@ -4326,7 +3715,7 @@ private[graft] object ManifestWriters {
     }
   }
 
-  /** Write one array VALUE into a parquet LIST group (round 18): one
+  /** Write one array VALUE into a parquet LIST group: one
     * `list` entry per element, a null element as an entry whose
     * `element` field stays unset — the standard 3-level encoding. */
   private def fillList(g: org.apache.parquet.example.data.Group,
@@ -4368,7 +3757,7 @@ private[graft] object ManifestWriters {
     }
   }
 
-  /** Write one map VALUE into a parquet MAP group (round 18): one
+  /** Write one map VALUE into a parquet MAP group: one
     * `key_value` entry per pair — keys required (Spark's map-key
     * contract), a null value as an entry whose `value` stays unset. */
   private def fillMap(g: org.apache.parquet.example.data.Group,
@@ -4388,12 +3777,12 @@ private[graft] object ManifestWriters {
   def createAt(dir: Path, fieldNames: Array[String], fieldTypes: Array[String],
       fileName: String, bloomCols: Seq[String] = Seq.empty,
       bloomBits: Int = BloomSkip.DefaultBits,
-      /** > 0: explicit parquet row-group size (round 18,
-        * `rowgroup.bytes`) — smaller groups buy position-skipping
+      /** > 0: explicit parquet row-group size (the
+        * `rowgroup.bytes` property) — smaller groups buy position-skipping
         * granularity for the KEEP-mode reads. 0 = parquet default. */
       rowGroupBytes: Int = 0,
-      /** PHYSICAL columns carrying a per-file `#ndv` HLL (round 19,
-        * [[NdvSketch]]) — long-family/string only, mirroring blooms. */
+      /** PHYSICAL columns carrying a per-file `#ndv` HLL
+        * ([[NdvSketch]]) — long-family/string only, mirroring blooms. */
       ndvCols: Seq[String] = Seq.empty): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val name = fileName
@@ -4434,7 +3823,7 @@ private[graft] object ManifestWriters {
         }
       }
 
-      // per-column null counts (round 14): recorded for EVERY
+      // per-column null counts: recorded for EVERY
       // stats-safe-named column, including 0 — exhaustiveness over the
       // written schema is what makes an ABSENT record in a
       // null-accounting file prove the column postdates the file
@@ -4444,7 +3833,7 @@ private[graft] object ManifestWriters {
       // prune), top-level null counts still recorded.
       private val compositeTypes: Array[org.apache.spark.sql.types.DataType] =
         fieldTypes.map(t => compositeOf(t).orNull)
-      // BLOOM filters (round 18, [[BloomSkip]]): one per configured
+      // BLOOM filters ([[BloomSkip]]): one per configured
       // long-family/string column — values insert at the SAME
       // normalized scale the stats plane records (micros/days longs,
       // UTF-8 string bytes), so read-side probes can never disagree.
@@ -4458,7 +3847,7 @@ private[graft] object ManifestWriters {
         }.toArray
       @inline private def bloomLong(i: Int, v: Long): Unit =
         if (bloomOf(i) != null) bloomOf(i).putLong(v)
-      // NDV sketches (round 19, [[NdvSketch]]): one HLL per configured
+      // NDV sketches ([[NdvSketch]]): one HLL per configured
       // long-family/string column, updated at the SAME normalized
       // scale as stats/blooms
       private val ndvOf: Array[org.apache.datasketches.hll.HllSketch] =
@@ -4520,7 +3909,7 @@ private[graft] object ManifestWriters {
       }
       override def commit(): WriterCommitMessage = {
         out.close()
-        // the hidden row-id column (round 19) stays OFF the stats
+        // the hidden row-id column stays OFF the stats
         // plane: it is identity plumbing, never predicated on, and a
         // record for it would pollute the null-accounting
         // exhaustiveness contract over the DECLARED schema
@@ -4579,10 +3968,10 @@ case class EpochOffset(id: Long)
 }
 
 /** One committed data file of the batch's epoch window. `dvFiles`
-  * (round 15) are the live position-delete files the reader must
+  * are the live position-delete files the reader must
   * apply — absolute paths, empty for files without deletes.
   *
-  * CHANGE-FEED fields (round 17): `keepPositions` flips the dv set
+  * CHANGE-FEED fields: `keepPositions` flips the dv set
   * from a SKIP set to a KEEP set — the reader emits ONLY the rows at
   * those positions (a merge-on-read epoch's pre-images ARE the rows
   * its new dv files point at). `changeType`/`commitVersion` are
@@ -4594,12 +3983,12 @@ case class ManifestFilePartition(file: String,
     changeType: String = null,
     commitVersion: Long = -1L,
     commitTsMicros: Long = -1L,
-    /** The file's `#rowid` base (round 19, row tracking) — what the
+    /** The file's `#rowid` base (row tracking) — what the
       * `_row_id` pseudo-column adds to the row ordinal when the file
       * carries no materialized `_graft_rowid` value. -1 = untracked
-      * (pre-r19 file): `_row_id` serves null. */
+      * (file written without row tracking): `_row_id` serves null. */
     rowIdBase: Long = -1L,
-    /** APPLICABLE equality-delete key files (round 19): (absolute
+    /** APPLICABLE equality-delete key files: (absolute
       * path, PHYSICAL key column names) — rows of THIS file matching
       * any key tuple are skipped (the file was committed before the
       * delete; exempt files never list it here). */
@@ -4616,7 +4005,7 @@ case class ManifestFilePartition(file: String,
   * every time (epoch manifests are immutable once published).
   *
   * Admission honors BOTH the table's `maxEpochsPerTrigger` option and
-  * any engine-provided [[ReadLimit]] (advisor r11: the limit argument
+  * any engine-provided [[ReadLimit]] (the limit argument
   * used to be ignored): maxRows/maxFiles limits admit whole epochs until
   * the budget is crossed, sized from the `#stats` row counts and file
   * lists the epoch manifests already carry — at least one epoch always
@@ -4627,10 +4016,10 @@ case class ManifestFilePartition(file: String,
 class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
     fieldTypes: Array[String], maxEpochs: Int,
     /** `refuse` (default) | `ignoreDeletes` | `ignoreChanges` — what a
-      * non-append epoch in the tail does (round 17; the Delta option
-      * names and semantics). */
+      * non-append epoch in the tail does (the Delta option names and
+      * semantics). */
     onChange: String = "refuse",
-    /** CDF mode (round 17): emit labeled change rows (the `.changes`
+    /** CDF mode: emit labeled change rows (the `.changes`
       * streaming face) instead of plain appended rows. */
     cdf: Boolean = false,
     /** First epoch NOT served (exclusive lower bound) — the `.changes`
@@ -4721,7 +4110,7 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
   * micros and dates epoch days in both parquet and `InternalRow`, so
   * the long/int payloads pass through unconverted.
   *
-  * COLUMN PRUNING (round 14): the reader asks parquet for ONLY the
+  * COLUMN PRUNING: the reader asks parquet for ONLY the
   * requested data columns that exist in the file (a projection built
   * from the footer schema via `parquet.read.schema`) — without it,
   * every pruned scan would still decode the full row, and the
@@ -4737,7 +4126,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mp = partition.asInstanceOf[ManifestFilePartition]
     val file = mp.file
-    // POSITION DELETES (round 15): load the partition's dv files into
+    // POSITION DELETES: load the partition's dv files into
     // a hash set of row ordinals — O(deleted-in-file) executor memory,
     // read once per partition. The reader skips those ordinals, so a
     // merge-on-read delete is value-invisible to every face built on
@@ -4770,11 +4159,11 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         fr.getFooter.getBlocks.asScala.toSeq)
       finally fr.close()
     }
-    // change-feed KEEP mode (round 17): the dv positions are the rows
+    // change-feed KEEP mode: the dv positions are the rows
     // to EMIT, not to skip
     def skipPos(p: Long): Boolean =
       if (mp.keepPositions) !deleted.contains(p) else deleted.contains(p)
-    // EQUALITY DELETES (round 19): the partition's applicable key
+    // EQUALITY DELETES: the partition's applicable key
     // files load into per-colset anti-sets (cached per immutable file
     // — O(deleted keys) executor memory, the Iceberg eq-delete
     // caveat; compaction is the resolution). Rows whose normalized
@@ -4793,7 +4182,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         n.equalsIgnoreCase("_change_type") ||
         n.equalsIgnoreCase("_commit_version") ||
         n.equalsIgnoreCase("_commit_timestamp"))
-    // `_row_id` (round 19): a requested row id decodes the file's
+    // `_row_id`: a requested row id decodes the file's
     // MATERIALIZED `_graft_rowid` column when one exists (a COW
     // rewrite/compaction carried these rows), else computes base+pos
     val wantRowId = fieldNames.exists(_.equalsIgnoreCase("_row_id"))
@@ -4849,7 +4238,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         override def close(): Unit = ()
       }
     }
-    // KEEP-mode ROW-GROUP SKIPPING (round 18): a change-feed pre-image
+    // KEEP-mode ROW-GROUP SKIPPING: a change-feed pre-image
     // read targets a handful of positions in a possibly-wide file —
     // decoding every row group for that is O(file), not O(changed
     // rows). With a KEEP set, only the groups whose row ranges hold
@@ -4909,7 +4298,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         org.apache.parquet.example.data.Group] = _
       private var cur: org.apache.parquet.example.data.Group = _
       // requested-to-file column index, resolved CASE-INSENSITIVELY
-      // against the file's embedded schema (advisor r13: the rest of
+      // against the file's embedded schema (the rest of
       // the stack — schema verification, stats lookup — is
       // case-insensitive, and a declared schema differing only in case
       // must serve values, not silently null-fill); exact-case match
@@ -4947,7 +4336,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         }
       }
       // eq-delete key indices resolved against the file's schema,
-      // cached per group-type instance (round 19)
+      // cached per group-type instance
       private var eqResolvedFor: org.apache.parquet.schema.GroupType = _
       private var eqIdx: Array[Array[Int]] = _
       private def eqDeleted(g: org.apache.parquet.example.data.Group): Boolean = {
@@ -5008,11 +4397,11 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           fieldTypes.indices.map[Any] { i =>
             if (fieldNames(i).equalsIgnoreCase("_row_id")) {
-              // row tracking (round 19): materialized id wins (a
+              // row tracking: materialized id wins (a
               // carried row keeps its identity across the move); a
               // null/absent materialized value is a FRESH row — its id
               // is the file's base + ordinal; an untracked file serves
-              // null (pre-r19: no identity to invent)
+              // null (no identity to invent)
               if (fidx(i) >= 0 && cur.getFieldRepetitionCount(fidx(i)) > 0)
                 cur.getLong(fidx(i), 0)
               else if (mp.rowIdBase >= 0) mp.rowIdBase + pos
@@ -5099,7 +4488,7 @@ object ManifestReadFactory {
   private[graft] val rowsDecoded = new java.util.concurrent.atomic.AtomicLong
 
   /** One field of a parquet group NORMALIZED for equality-delete key
-    * comparison (round 19): the long family as Long, strings as
+    * comparison: the long family as Long, strings as
     * String — the same scale on the data and key sides (both written
     * by this sink's writer), so a tuple match can never disagree on
     * encoding. Unsupported types answer null = never matches. */
@@ -5202,7 +4591,7 @@ object ManifestReadFactory {
       })
   }
 
-  /** One parquet LIST group as Catalyst [[ArrayData]] (round 18): one
+  /** One parquet LIST group as Catalyst [[ArrayData]]: one
     * element per repeated `list` entry, an entry with its `element`
     * unset decoding to a null element. Element evolution rides the
     * same by-name/promoting recursion as struct fields. */

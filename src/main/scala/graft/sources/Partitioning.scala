@@ -48,7 +48,7 @@ sealed trait PartField {
 final case class IdentityPart(col: String) extends PartField {
   override def render: String = s"identity:$col"
   override def tokenOfLong(v: Long): String = v.toString
-  override def tokenOfString(v: String): String = s"s${ManifestSink.hexOf(v)}"
+  override def tokenOfString(v: String): String = s"s${ManifestLog.hexOf(v)}"
 }
 
 final case class DaysPart(col: String) extends PartField {
@@ -144,7 +144,7 @@ object PartField {
     spec.zip(toks).foreach {
       case (IdentityPart(c), "n") => nulls(c) = 1L
       case (IdentityPart(c), t) if t.startsWith("s") =>
-        ManifestSink.unhex(t.tail).foreach { v =>
+        ManifestLog.unhex(t.tail).foreach { v =>
           nulls(c) = 0L
           if (v.forall(_ < '\u0080')) strCols(c) = (v, Some(v))
         }
@@ -211,7 +211,7 @@ object PartField {
     val idVals: Map[String, Option[Any]] = spec.zip(toks).collect {
       case (IdentityPart(c), "n") => c.toLowerCase -> None
       case (IdentityPart(c), t) if t.startsWith("s") =>
-        c.toLowerCase -> (ManifestSink.unhex(t.tail): Option[Any])
+        c.toLowerCase -> (ManifestLog.unhex(t.tail): Option[Any])
       case (IdentityPart(c), t) =>
         c.toLowerCase -> (t.toLongOption: Option[Any])
     }.toMap
