@@ -297,18 +297,6 @@ object DedupOps {
     * Deterministic regardless of execution order (min is commutative),
     * so DuckDB's recursive-CTE closure reproduces it exactly. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val tEntry = System.nanoTime()
-    // stage-level profile of the CC pipeline (dev-only, like CC_DEBUG)
-    if (sys.env.contains("GRAFT_CC_STAGES"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val d = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          println(f"CC-STAGE ${si.stageId}%4d ${d / 1000.0}%6.2fs " +
-            f"tasks=${si.numTasks}%3d ${si.name.takeWhile(_ != '\n').take(70)}")
-        }
-      })
     // CC state is a one-row-per-doc label table and the post-contraction
     // graph is a sliver: the loop's latency is per-stage scheduling, not
     // data. A child session pins CC-sized shuffle width without mutating
@@ -336,11 +324,7 @@ object DedupOps {
           .filter(col("text").isNotNull)
           .select(col("doc_id")),
         pairs)
-    finally {
-      pairs.unpersist()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC inner-total: ${(System.nanoTime() - tEntry) / 1e9}%.2fs")
-    }
+    finally pairs.unpersist()
   }
 
   /** The CC engine behind [[dedupClusters]] and [[dedupSurvivors]]:
@@ -371,20 +355,12 @@ object DedupOps {
     val edges = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .persist()
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC $tag: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     val sess = nodes.sparkSession
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqeWas = sess.conf.get(aqeKey, "true")
     val partsKey = "spark.sql.shuffle.partitions"
     val partsWas = sess.conf.get(partsKey)
-    var labels = timed("labels-ckpt")(
-      ckpt(nodes.select(col("doc_id"), col("doc_id").as("label"))))
+    var labels = ckpt(nodes.select(col("doc_id"), col("doc_id").as("label")))
     // per-cycle lineage truncation: [[ckptLazy]] lets the cycle's
     // convergence count do the materializing — one job per cycle
     // instead of checkpoint-job + count-job
@@ -461,11 +437,11 @@ object DedupOps {
           // convergence count (both step branches read the same
           // materialized RDD within that one job) instead of paying a
           // separate eager-checkpoint job wait
-          val contracted = timed("contraction")(ckptLazy(edges
+          val contracted = ckptLazy(edges
             .join(la, "doc_a").join(lb, "doc_b")
             .filter(col("la") =!= col("lb"))
             .select(col("la").as("doc_a"), col("lb").as("doc_b"))
-            .distinct()))
+            .distinct())
           liveEdges = contracted
           // post-contraction the per-step tables are slivers where AQE
           // inverts: each exchange becomes its own query-stage JOB
@@ -500,8 +476,7 @@ object DedupOps {
           if (rounds == 0) start else step(start, Nil)
         val last = step(pre.withColumn("prev", col("label")), Seq("prev"),
           identity = rounds == 0)
-        val jumped = timed(s"ckpt-$rounds")(cycleCkpt(last))
-        val t0 = System.nanoTime()
+        val jumped = cycleCkpt(last)
         // cycle 0 is never the fixpoint on a non-empty edge set (its one
         // step against the raw graph always relabels something, and an
         // EMPTY graph costs one cheap confirming cycle) — skip its count
@@ -511,8 +486,6 @@ object DedupOps {
         changed =
           if (rounds == 0) Long.MaxValue
           else jumped.filter(col("label") =!= col("prev")).count()
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"CC cycle $rounds: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
         // superseded checkpoints lose their last reference here; the
         // ContextCleaner reclaims their blocks asynchronously
         labels = jumped.select(col("doc_id"), col("label"))

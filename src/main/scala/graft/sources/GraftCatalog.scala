@@ -318,17 +318,37 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   /** The `ProcedureCatalog` face: operational commands under the `sys`
     * namespace, invoked as `CALL graft.sys.vacuum(table, older_than_ms)`
-    * — storage reclamation for `snap` manifest tables from pure SQL
-    * ([[VacuumProcedure]]), the Delta-VACUUM shape. */
+    * — storage reclamation and log maintenance for `snap` manifest
+    * tables from pure SQL ([[VacuumProcedure]], the Delta-VACUUM shape,
+    * and its siblings). ONE table names every procedure and builds it
+    * from its own name (the snap dir and schema are resolved at CALL
+    * time), so what is listed is exactly what loads. */
+  private val procedures = scala.collection.immutable.ListMap[String,
+      String => org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure](
+    "vacuum" -> (p => new VacuumProcedure(() => snapDirOrFail(p))),
+    "compact_data" -> (p =>
+      new CompactProcedure(() => snapDirOrFail(p), snapSchemaOf(p))),
+    "set_partition_spec" -> (p =>
+      new SetPartitionSpecProcedure(() => snapDirOrFail(p), snapSchemaOf(p))),
+    "rollback" -> (p =>
+      new RollbackProcedure(() => snapDirOrFail(p), snapSchemaOf(p))),
+    "create_tag" -> (p => new TagProcedure(() => snapDirOrFail(p), create = true)),
+    "drop_tag" -> (p => new TagProcedure(() => snapDirOrFail(p), create = false)),
+    "create_branch" -> (p =>
+      new BranchProcedure(() => snapDirOrFail(p), create = true)),
+    "drop_branch" -> (p =>
+      new BranchProcedure(() => snapDirOrFail(p), create = false)),
+    "fast_forward" -> (p => new FastForwardProcedure(() => snapDirOrFail(p))),
+    "expire_snapshots" -> (p =>
+      new ExpireSnapshotsProcedure(() => snapDirOrFail(p))),
+    "register_feed" -> (p =>
+      new FeedProcedure(() => snapDirOrFail(p), register = true)),
+    "unregister_feed" -> (p =>
+      new FeedProcedure(() => snapDirOrFail(p), register = false)))
+
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     namespace.toSeq match {
-      case Seq(SysNs) => Array(
-        Identifier.of(namespace, "vacuum"),
-        Identifier.of(namespace, "compact_data"),
-        Identifier.of(namespace, "set_partition_spec"),
-        Identifier.of(namespace, "rollback"),
-        Identifier.of(namespace, "create_tag"),
-        Identifier.of(namespace, "drop_tag"))
+      case Seq(SysNs) => procedures.keys.map(Identifier.of(namespace, _)).toArray
       case Seq(SfNs) | Seq(GenNs) | Seq(MutNs) | Seq(SnapNs) | Seq(FnNs) =>
         Array.empty
       case _ => throw new NoSuchNamespaceException(namespace)
@@ -359,42 +379,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
     ident.namespace().toSeq match {
-      case Seq(SysNs) if ident.name() == "vacuum" =>
-        new VacuumProcedure(() => snapDirOrFail("vacuum"))
-      case Seq(SysNs) if ident.name() == "compact_data" =>
-        new CompactProcedure(() => snapDirOrFail("compact_data"),
-          snapSchemaOf("compact_data"))
-      case Seq(SysNs) if ident.name() == "set_partition_spec" =>
-        new SetPartitionSpecProcedure(
-          () => snapDirOrFail("set_partition_spec"),
-          snapSchemaOf("set_partition_spec"))
-      case Seq(SysNs) if ident.name() == "rollback" =>
-        new RollbackProcedure(() => snapDirOrFail("rollback"),
-          snapSchemaOf("rollback"))
-      case Seq(SysNs) if ident.name() == "create_tag" =>
-        new TagProcedure(() => snapDirOrFail("create_tag"), create = true)
-      case Seq(SysNs) if ident.name() == "drop_tag" =>
-        new TagProcedure(() => snapDirOrFail("drop_tag"), create = false)
-      case Seq(SysNs) if ident.name() == "create_branch" =>
-        new BranchProcedure(() => snapDirOrFail("create_branch"),
-          create = true)
-      case Seq(SysNs) if ident.name() == "drop_branch" =>
-        new BranchProcedure(() => snapDirOrFail("drop_branch"),
-          create = false)
-      case Seq(SysNs) if ident.name() == "fast_forward" =>
-        new FastForwardProcedure(() => snapDirOrFail("fast_forward"))
-      case Seq(SysNs) if ident.name() == "expire_snapshots" =>
-        new ExpireSnapshotsProcedure(
-          () => snapDirOrFail("expire_snapshots"))
-      case Seq(SysNs) if ident.name() == "register_feed" =>
-        new FeedProcedure(() => snapDirOrFail("register_feed"),
-          register = true)
-      case Seq(SysNs) if ident.name() == "unregister_feed" =>
-        new FeedProcedure(() => snapDirOrFail("unregister_feed"),
-          register = false)
+      case Seq(SysNs) if procedures.contains(ident.name()) =>
+        procedures(ident.name())(ident.name())
       case _ => throw new UnsupportedOperationException(
-        s"$catalogName has no procedure $ident " +
-          s"(available: $SysNs.vacuum, $SysNs.compact_data)")
+        s"$catalogName has no procedure $ident (available: " +
+          procedures.keys.map(n => s"$SysNs.$n").mkString(", ") + ")")
     }
 
   /** `CREATE TABLE graft.snap.t (…)` / `CREATE TABLE … AS SELECT`
@@ -474,7 +463,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           v.split(",", -1).forall(s => s.nonEmpty && ManifestLog.propSafe(s)),
         s"graft.snap.$name: table property '$k'='$v' must be token-safe")
     }
-    val seed = Seq(ManifestLog.Schema(schema.toDDL)) ++
+    // the CREATE epoch carries its commit time like every claimed epoch,
+    // so version 0's TIMESTAMP AS OF / .history clock is not its mtime
+    val seed = Seq(ManifestLog.Ts(System.currentTimeMillis() * 1000L),
+      ManifestLog.Schema(schema.toDDL)) ++
       (if (spec.isEmpty) None
        else Some(ManifestLog.Spec(None, PartField.render(spec)))) ++
       props.map { case (k, v) => ManifestLog.Prop(k, v) }

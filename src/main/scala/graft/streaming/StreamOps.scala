@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming forms of the event-time operators (SURVEY.md
@@ -13,17 +14,18 @@ import org.apache.spark.sql.types.StructType
   * [[graft.ops.EventOps]] are the same plan fragments without watermark.
   *
   * The `*Streamed` entry points run the transforms BY THE STREAMING
-  * ENGINE end-to-end against a FILE SOURCE: micro-batches land as
-  * parquet files in a watched temp directory (the production shape — a
-  * landing zone fed by some upstream writer) and
-  * `readStream.parquet(...)` with `maxFilesPerTrigger=1` executes each
-  * file as one incremental trigger. No event data ever moves through
-  * the driver — batch boundaries are time-split filters planned on the
-  * source table, and the far-future sentinel rows that flush the
+  * ENGINE end-to-end against a FILE SOURCE, all through one driver,
+  * [[feedRun]]: micro-batches land as parquet files in a watched
+  * directory (the production shape — a landing zone fed by some
+  * upstream writer), `readStream.parquet(...)` with
+  * `maxFilesPerTrigger=1` executes each file as one incremental
+  * trigger, and the driver owns the run root, the landing order, the
+  * drain per round and the stop. A query only says which session,
+  * which staged batches and which sink. No event data ever moves
+  * through the driver — batch boundaries are time-split filters planned
+  * on the source table, and the far-future sentinel rows that flush the
   * append-mode watermark are 1-row AGGREGATES of the same table, so the
-  * whole feed path is distributed writes. (The round-2 harness fed a
-  * MemoryStream via a whole-table `collect()` — a driver bottleneck
-  * this replaces.)
+  * whole feed path is distributed writes.
   */
 object StreamOps {
 
@@ -177,31 +179,19 @@ object StreamOps {
   }
 
   // ---------------------------------------------------------------------
-  // File-source harness
+  // File-feed driver
   // ---------------------------------------------------------------------
 
-  /** Lands micro-batches for the file source: each land() writes the
-    * batch plan as ONE parquet part file (a distributed write, narrowed
-    * to a single task only to pin one-file-per-trigger boundaries) and
-    * atomically moves it into the watched directory. Zero rows cross the
-    * driver. */
+  /** One watched landing directory. [[landStaged]] byte-copies a
+    * [[StreamOps.staged]] part file into the local stage dir, then
+    * atomically moves it into `watch`, so the file source only ever
+    * sees whole batches. Zero rows cross the driver. */
   private final class FileFeed(root: Path) {
     val watch: Path = Files.createDirectories(root.resolve("watch"))
     private val stage = Files.createDirectories(root.resolve("stage"))
     private var n = 0
-    def land(df: DataFrame): Unit = {
-      n += 1
-      val out = stage.resolve(s"b$n")
-      df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-      // an empty batch writes no part file — and needs no trigger
-      StreamOps.partFile(out).foreach(p =>
-        Files.move(p, watch.resolve(f"b$n%03d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE))
-    }
-    /** Land a [[StreamOps.staged]] batch: byte-copy the staged part into
-      * the local stage dir, then the same atomic-move visibility as
-      * [[land]]. A `None` (empty staged batch) lands nothing — and needs
-      * no trigger — exactly like land() of an empty frame. */
+    /** A `None` (empty staged batch) lands nothing — and needs no
+      * trigger. */
     def landStaged(part: Option[Path]): Unit = {
       n += 1
       part.foreach { p =>
@@ -234,35 +224,38 @@ object StreamOps {
     * size 4 partitions cut the streaming bench ~14% vs 8, and 2 trims a
     * further ~6%, with identical results (a real deployment sizes this
     * to key cardinality before first start). An isolated child session
-    * pins the stream-side value
-    * without mutating the caller's conf (same SparkContext, so the
-    * result stays usable). The child is memoized PER PARENT: fourteen
-    * streaming queries each paid a fresh session-state build (catalog,
-    * conf clone, codegen caches) for an identical session — sharing one
-    * warmed child trims that fixed cost while queries stay isolated
-    * where it matters (own checkpoints, own sink names, own feeds).
+    * pins the stream-side value without mutating the caller's conf (same
+    * SparkContext, so the result stays usable). Children are memoized
+    * PER (PARENT, CONF SET): each streaming query would otherwise pay a
+    * fresh session-state build (catalog, conf clone, codegen caches) for
+    * an identical session — sharing one warmed child trims that fixed
+    * cost while queries stay isolated where it matters (own checkpoints,
+    * own sink names, own feeds).
     *
-    * CONTRACT: the returned session is SHARED — callers must NOT set
-    * conf on it (a mutation would silently leak into every other
-    * streaming query for the process lifetime). A query family that
-    * needs different conf uses its own memoized child under the same
-    * contract ([[rocksSession]] for transformWithState) or a fresh
-    * `parent.newSession()` (the CC loop's width). The map also retains
-    * parent→child pairs (and memory-sink temp views registered on the
-    * child) for the process lifetime by design: parents here are
-    * long-lived driver sessions (Verify/Bench/tests), one child each. */
-  private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private[graft] def streamSession(parent: SparkSession): SparkSession =
-    streamSessions.computeIfAbsent(parent, p => {
-      val spark = p.newSession()
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
+    * CONTRACT: a returned session is SHARED — callers must NOT set conf
+    * on it (a mutation would silently leak into every other streaming
+    * query for the process lifetime). A query family that needs
+    * different conf gets its own child here, or a fresh
+    * `parent.newSession()` (the CC loop's width). The map retains its
+    * children (and the memory-sink temp views registered on them) for
+    * the process lifetime by design: parents here are long-lived driver
+    * sessions (Verify/Bench/tests). */
+  private val children = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, Seq[(String, String)]), SparkSession]()
+  private def child(parent: SparkSession, confs: (String, String)*): SparkSession =
+    children.computeIfAbsent((parent, confs), _ => {
+      val spark = parent.newSession()
+      (("spark.sql.shuffle.partitions" -> "2") +: confs).foreach {
+        case (k, v) => spark.conf.set(k, v)
+      }
       spark
     })
 
-  /** The no-watermark-flush sibling of [[streamSession]] (same memoized-
-    * child convention, same no-conf-mutation CONTRACT):
-    * `noDataMicroBatches.enabled=false` skips the engine's extra
+  /** The default streaming child: the 2-partition stream width only. */
+  private[graft] def streamSession(parent: SparkSession): SparkSession =
+    child(parent)
+
+  /** `noDataMicroBatches.enabled=false` skips the engine's extra
     * zero-row trigger after a watermark advance. That trigger exists so
     * stateful operators can EMIT on the new watermark — so this session
     * is ONLY for queries whose results never depend on it: complete-mode
@@ -278,32 +271,15 @@ object StreamOps {
     * watermarked query — pure fixed cost at bench scale, and at 100 TB
     * scale a real deployment's continuous triggers amortize eviction
     * into data batches anyway. */
-  private val noFlushSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
   private[graft] def noFlushSession(parent: SparkSession): SparkSession =
-    noFlushSessions.computeIfAbsent(parent, p => {
-      val spark = p.newSession()
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      spark
-    })
+    child(parent, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
-  /** The RocksDB sibling of [[streamSession]], with the same memoized-
-    * child convention and the same no-conf-mutation CONTRACT: the
-    * transformWithState family (five queries) needs the identical
-    * provider conf, so they share ONE warmed child instead of paying
-    * five session-state builds — each query still has its own
-    * checkpoints, sink names and feeds. */
-  private val rocksSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  /** The RocksDB child: the transformWithState family needs the
+    * identical provider conf, so its queries share ONE warmed child
+    * instead of paying a session-state build each. */
   private[graft] def rocksSession(parent: SparkSession): SparkSession =
-    rocksSessions.computeIfAbsent(parent, p => {
-      val spark = p.newSession()
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark
-    })
+    child(parent, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** COMPLETE events only: the typed stream's primitive fields reject
     * nulls, and an event without a time/key/value can't be windowed/
@@ -347,18 +323,8 @@ object StreamOps {
         lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
         lit(0.0).as("value"))
 
-  // ---- shared staged feeds -------------------------------------------
-  /** Bench hygiene at zero coverage cost: thirteen streaming queries over
-    * the same corpus each landed their OWN copy of the time-split feed —
-    * re-running the split-and-write job up to ~28 times per pass. A feed
-    * batch is now STAGED once per (sfDir, shape) by the same distributed
-    * coalesce(1) write, and every query's [[FileFeed]] lands a BYTE-COPY
-    * of the staged part file (same atomic-move visibility; no rows
-    * through the driver — the copy is file plumbing, like the move it
-    * already did). Only the redundant feed writes are shared: each query
-    * still builds its own session, checkpoint, triggers and state. */
-  // ---- fast ephemeral scratch ----------------------------------------
-  /** Root for streaming feeds/checkpoints/sink dirs. These are
+  /** The per-JVM directory every run root and the staged feeds live
+    * under; ONE shutdown hook deletes it at exit. These are
     * RE-CREATABLE per-run scratch (every query builds its own feed and
     * checkpoint from the batch corpus), so they belong on the fastest
     * local medium available: a micro-batch pays offset-log + commit-log
@@ -370,9 +336,9 @@ object StreamOps {
     * production stream checkpoints to reliable storage and pays that
     * latency for exactly-once recovery (the RocksDB changelog-checkpoint
     * recovery spec pins that path); the bench measures operator cost,
-    * not ext4 fsync. Every scratch root self-cleans at JVM exit. */
-  private lazy val scratchBase: Path = {
-    val pick = sys.env.get("SPARK_GRAFT_SCRATCH") match {
+    * not ext4 fsync. */
+  private lazy val runsRoot: Path = {
+    val base = sys.env.get("SPARK_GRAFT_SCRATCH") match {
       case Some(p) =>
         // explicit override fails FAST with a clear message rather than
         // erroring late inside the first query's checkpoint setup
@@ -383,28 +349,34 @@ object StreamOps {
       case None =>
         // /dev/shm is RAM-backed tmpfs (default cap ~half of RAM):
         // right for this scratch because feeds/checkpoints here are
-        // SMALL re-creatable per-query state at test SFs, and the
-        // shutdown hooks delete every tree at JVM exit. A deployment
+        // SMALL re-creatable per-query state at test SFs. A deployment
         // with big staged feeds sets SPARK_GRAFT_SCRATCH to NVMe to
         // opt out of tmpfs entirely.
         Option(Paths.get("/dev/shm"))
           .filter(p => Files.isDirectory(p) && Files.isWritable(p))
           .getOrElse(Paths.get(sys.props("java.io.tmpdir")))
     }
-    Files.createDirectories(pick)
-  }
-  private def scratchTmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(scratchBase, prefix)
+    val p = Files.createTempDirectory(Files.createDirectories(base), "graft_runs")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       graft.util.Fs.deleteRecursively(p)))
     p
   }
+  private def runRoot(tag: String): Path = Files.createTempDirectory(runsRoot, tag)
 
-  private lazy val stagedRoot: Path = scratchTmp("graft_staged_feeds")
+  // ---- shared staged feeds -------------------------------------------
+  private lazy val stagedRoot: Path = runRoot("graft_staged_feeds")
   private val stagedParts =
     scala.collection.concurrent.TrieMap[String, Option[Path]]()
   private val stagedN = new java.util.concurrent.atomic.AtomicInteger
 
+  /** Bench hygiene at zero coverage cost: the streaming queries over one
+    * corpus would each land their OWN copy of the same feed batch. A
+    * batch is STAGED once per (sfDir, shape) by one distributed
+    * coalesce(1) write (narrowed to a single task only to pin
+    * one-file-per-trigger boundaries), and every query's [[FileFeed]]
+    * lands a BYTE-COPY of the staged part file. Only the redundant feed
+    * writes are shared: each query still builds its own session,
+    * checkpoint, triggers and state. */
   private def staged(dir: String, tag: String)(mk: => DataFrame): Option[Path] =
     stagedParts.getOrElseUpdate(s"$dir|$tag", {
       val out = stagedRoot.resolve(s"${stagedN.incrementAndGet}_$tag")
@@ -419,12 +391,16 @@ object StreamOps {
       if (i == 1) b1 else b2
     }
 
-  /** Half 2 plus the ride-along watermark-flush sentinel, staged. */
-  private def stagedHalf2Sentinel(spark: SparkSession, dir: String): Option[Path] =
-    staged(dir, "b2s") {
-      val evs = completeEvents(spark, dir)
-      timeSplit(evs)._2.union(sentinel(evs, -1L, 30))
-    }
+  /** The two staged halves — the feed most streamed queries run; with
+    * `flush`, half 2 carries the ride-along watermark-flush sentinel. */
+  private def halves(spark: SparkSession, dir: String,
+      flush: Boolean = false): Seq[Option[Path]] =
+    Seq(stagedHalf(spark, dir, 1),
+      if (!flush) stagedHalf(spark, dir, 2)
+      else staged(dir, "b2s") {
+        val evs = completeEvents(spark, dir)
+        timeSplit(evs)._2.union(sentinel(evs, -1L, 30))
+      })
 
   /** Slice `q` (0..3) of the complete corpus by `event_id mod 4`,
     * staged — the deterministic epoch partition for the time-travel
@@ -439,86 +415,111 @@ object StreamOps {
   private def stagedFull(spark: SparkSession, dir: String): Option[Path] =
     staged(dir, "full")(completeEvents(spark, dir))
 
-  /** One event-type side of half `i`, staged (stream-stream feeds);
-    * optionally with a per-side sentinel (left-outer watermark flush). */
-  private def stagedSide(spark: SparkSession, dir: String, t: String, i: Int,
-      sentinelId: Option[Long] = None): Option[Path] =
-    staged(dir, s"$t$i${if (sentinelId.isDefined) "s" else ""}") {
-      val evs = completeEvents(spark, dir)
-      val half = (if (i == 1) timeSplit(evs)._1 else timeSplit(evs)._2)
-        .filter(col("event_type") === t)
-      sentinelId.fold(half)(id => half.union(sentinel(evs, id, 30)))
+  /** The click and purchase feeds of the stream-stream joins: each
+    * event-type side of the two halves, staged; with `flush`, each
+    * side's half 2 carries its own sentinel (-1 clicks, -2 purchases)
+    * for the outer joins' watermark flush. */
+  private def joinSides(spark: SparkSession, dir: String,
+      flush: Boolean): Seq[Seq[Option[Path]]] =
+    Seq("click" -> -1L, "purchase" -> -2L).map { case (t, id) =>
+      (1 to 2).map { i =>
+        val withSentinel = flush && i == 2
+        staged(dir, s"$t$i${if (withSentinel) "s" else ""}") {
+          val evs = completeEvents(spark, dir)
+          val half = (if (i == 1) timeSplit(evs)._1 else timeSplit(evs)._2)
+            .filter(col("event_type") === t)
+          if (withSentinel) half.union(sentinel(evs, id, 30)) else half
+        }
+      }
     }
 
-  /** Start `transform(fileSources)` into a memory sink, land staged
-    * batches round-robin (round j lands file j of EVERY source, then
-    * drains a trigger), and return the sink table. One watched dir per
-    * source — the multi-landing-zone shape of a stream-stream topology. */
-  private def runFileStreams(spark: SparkSession, schema: StructType,
-    sinkName: String, mode: OutputMode, feeds: Seq[Seq[Option[Path]]])(
-    transform: Seq[DataFrame] => DataFrame): DataFrame = {
-    val root = scratchTmp("graft_stream")
-    val fs = feeds.indices.map(i =>
-      new FileFeed(Files.createDirectories(root.resolve(s"src$i"))))
-    val srcs = fs.map(f => spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(f.watch.toString))
-    val query = transform(srcs)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode(mode).start()
+  /** The click and purchase sources of a stream-stream join, each
+    * watermarked by an hour and projected to its side's columns. */
+  private def clicksAndPurchases(srcs: Seq[DataFrame]): (DataFrame, DataFrame) =
+    (srcs(0).withWatermark("ts", "1 hour")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("event_id").as("click_id")),
+     srcs(1).withWatermark("ts", "1 hour")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("event_id").as("purchase_id")))
+
+  /** THE file-feed driver every file-fed streamed query runs through.
+    * Under a fresh run root it opens one watched [[FileFeed]] per entry
+    * of `feeds` and, over each, one `maxFilesPerTrigger=1` file source
+    * of the complete-events schema. `start` builds and starts the
+    * caller's query from those sources and the root (any sink or
+    * checkpoint directory goes under the root). The batches then land
+    * round-robin — round j lands batch j of EVERY feed, then drains
+    * with one `processAllAvailable` — so each landed file is one
+    * trigger. On every exit, failures included, the query is stopped
+    * and the feeds are deleted; the root, with what the query left in
+    * it, is returned for the caller to read its result from. */
+  private[graft] def feedRun(spark: SparkSession, dir: String, tag: String,
+      feeds: Seq[Seq[Option[Path]]])(
+      start: (Seq[DataFrame], Path) => StreamingQuery): Path = {
+    val root = runRoot(tag)
+    val fs = feeds.indices.map(i => new FileFeed(root.resolve(s"src$i")))
     try {
-      val rounds = feeds.map(_.length).max
-      for (j <- 0 until rounds) {
+      val schema = completeEvents(spark, dir).schema
+      val query = start(fs.map(f => spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(f.watch.toString)), root)
+      try for (j <- 0 until feeds.map(_.length).max) {
         feeds.lazyZip(fs).foreach((b, f) => if (j < b.length) f.landStaged(b(j)))
         query.processAllAvailable()
-      }
-    } finally { // sink rows live in memory
-      query.stop()
-      fs.foreach(_.close())
-      Files.deleteIfExists(root)
-    }
+      } finally query.stop()
+    } finally fs.foreach(_.close())
+    root
+  }
+
+  /** [[feedRun]] into a memory sink named `sinkName`; returns the sink
+    * table. One source per feed — the multi-landing-zone shape of a
+    * stream-stream topology. */
+  private def runFileStreams(spark: SparkSession, dir: String, sinkName: String,
+      mode: OutputMode, feeds: Seq[Seq[Option[Path]]])(
+      transform: Seq[DataFrame] => DataFrame): DataFrame = {
+    // the sink rows live in memory: nothing under the root outlives the run
+    graft.util.Fs.deleteRecursively(feedRun(spark, dir, sinkName, feeds) {
+      (srcs, _) => transform(srcs).writeStream.format("memory")
+        .queryName(sinkName).outputMode(mode).start()
+    })
     spark.table(sinkName)
   }
 
   /** Single-source form of [[runFileStreams]]. */
-  private def runFileStream(spark: SparkSession, schema: StructType,
-    sinkName: String, mode: OutputMode, batches: Seq[Option[Path]])(
-    transform: DataFrame => DataFrame): DataFrame =
-    runFileStreams(spark, schema, sinkName, mode, Seq(batches))(
+  private def runFileStream(spark: SparkSession, dir: String, sinkName: String,
+      mode: OutputMode, batches: Seq[Option[Path]])(
+      transform: DataFrame => DataFrame): DataFrame =
+    runFileStreams(spark, dir, sinkName, mode, Seq(batches))(
       srcs => transform(srcs.head))
 
-  /** File-source → transform → PARQUET FILE SINK (append mode, streaming
+  /** [[feedRun]] → transform → PARQUET FILE SINK (append mode, streaming
     * checkpoint, exactly-once via the sink's `_spark_metadata` commit
     * log), read back as a batch DataFrame. The durable-sink counterpart
     * of [[runFileStream]]'s memory sink — the full landing-zone →
     * incremental engine → lake-table round trip. */
-  private def runFileStreamToParquet(spark: SparkSession, schema: StructType,
-    batches: Seq[Option[Path]])(transform: DataFrame => DataFrame): DataFrame = {
-    val root = scratchTmp("graft_stream_sink")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val out = root.resolve("out").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
-    val streamed = transform(src)
-    val query = streamed
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append()).start()
-    try batches.foreach { b => feed.landStaged(b); query.processAllAvailable() }
-    finally {
-      query.stop()
-      // the sink dir out/ outlives the query (it IS the result); the
-      // feed copy and the checkpoint log are dead weight once stopped
-      feed.close()
-      graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
+  private def runFileStreamToParquet(spark: SparkSession, dir: String,
+      batches: Seq[Option[Path]])(transform: DataFrame => DataFrame): DataFrame = {
+    var rowType: StructType = null // of the sink, for an empty result
+    val root = feedRun(spark, dir, "graft_stream_sink", Seq(batches)) {
+      (srcs, root) =>
+        val streamed = transform(srcs.head)
+        rowType = streamed.schema
+        streamed.writeStream.format("parquet")
+          .option("path", root.resolve("out").toString)
+          .option("checkpointLocation", root.resolve("ckpt").toString)
+          .outputMode(OutputMode.Append()).start()
     }
+    // the sink dir out/ outlives the query (it IS the result); the
+    // checkpoint log is dead weight once stopped
+    graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
     // zero triggers (an empty/fully-incomplete corpus lands no files)
     // never create the sink dir — an empty result, not a read error
-    if (Files.exists(Path.of(out)))
-      spark.read.parquet(out)
+    val out = root.resolve("out")
+    if (Files.exists(out))
+      spark.read.parquet(out.toString)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        streamed.schema)
+        rowType)
   }
 
   /** [[tumblingCounts]] executed by the streaming engine end-to-end over
@@ -528,10 +529,9 @@ object StreamOps {
     * stream ≡ batch guarantee the engine makes for complete mode. */
   def tumblingHourStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_tumbling_sink",
+    runFileStream(spark, dir, "graft_stream_tumbling_sink",
       OutputMode.Complete(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       tumblingCounts(_, "1 hour", "1 hour"))
       .select(unix_micros(col("win_start")).as("win_start_us"),
         col("event_type"), col("n"), col("value_cents"))
@@ -547,10 +547,9 @@ object StreamOps {
     * gap < 30 min) is exactly `new session iff gap >= 30 min`. */
   def sessionStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_session_sink",
+    runFileStream(spark, dir, "graft_stream_session_sink",
       OutputMode.Append(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf2Sentinel(spark, dir)))(
+      halves(spark, dir, flush = true))(
       sessionCounts(_, "30 minutes", "1 hour"))
       .filter(col("user_id") >= 0)
       .select(unix_micros(col("sess_start")).as("sess_start_us"),
@@ -567,10 +566,9 @@ object StreamOps {
   def userTotalsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_totals_sink",
+    runFileStream(spark, dir, "graft_stream_totals_sink",
       RunningTotalsOutputMode,
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       src => runningUserTotals(src.as[Ev]).toDF())
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("total_cents"))).as("fin"))
@@ -638,10 +636,9 @@ object StreamOps {
   def recentEventsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = rocksSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_tws_list_sink",
+    runFileStream(spark, dir, "graft_stream_tws_list_sink",
       RunningTotalsOutputMode,
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       src => src.as[Ev].groupByKey(_.user_id)
         .transformWithState(new RecentEventsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
@@ -701,10 +698,9 @@ object StreamOps {
   def typeCountsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = rocksSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_tws_map_sink",
+    runFileStream(spark, dir, "graft_stream_tws_map_sink",
       RunningTotalsOutputMode,
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       src => src.as[Ev].groupByKey(_.user_id)
         .transformWithState(new TypeCountsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
@@ -782,10 +778,9 @@ object StreamOps {
   def timerTotalsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = rocksSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_tws_timer_sink",
+    runFileStream(spark, dir, "graft_stream_tws_timer_sink",
       OutputMode.Append(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf2Sentinel(spark, dir)))(
+      halves(spark, dir, flush = true))(
       src => src.withWatermark("ts", "1 hour").as[Ev]
         .groupByKey(_.user_id)
         .transformWithState(new TimerTotalsProcessor,
@@ -808,10 +803,9 @@ object StreamOps {
   def userTotalsTwsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = rocksSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_tws_sink",
+    runFileStream(spark, dir, "graft_stream_tws_sink",
       RunningTotalsOutputMode,
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       src => src.as[Ev].groupByKey(_.user_id)
         .transformWithState(new TotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
@@ -844,8 +838,8 @@ object StreamOps {
     * no-data batches (measured, not theorized). The one bounded way to
     * drive it is `Trigger.Once` — exactly one micro-batch per run, then
     * stop — so this query is two Once RUNS resuming from one
-    * checkpoint: the same land→batch→land→batch shape as the shared
-    * loop, with an engine restart between batches thrown in for free.
+    * checkpoint: the same land→batch→land→batch shape as
+    * [[feedRun]], with an engine restart between batches thrown in for free.
     * The RESULT is the final `totals` state read back through the
     * statestore source (a memory sink would reset between runs and
     * drop batch-1-only users): with nothing expired, state content ≡
@@ -855,8 +849,8 @@ object StreamOps {
     val spark = rocksSession(parent)
     import spark.implicits._
     val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp("graft_stream_tws_ttl")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
+    val root = runRoot("graft_stream_tws_ttl")
+    val feed = new FileFeed(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     try {
       for (half <- 1 to 2) {
@@ -901,12 +895,8 @@ object StreamOps {
   def userTotalsTwsInitStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = rocksSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
     val half1 = stagedHalf(spark, dir, 1)
       .getOrElse(throw new IllegalStateException("half 1 staged empty"))
-    val root = scratchTmp("graft_stream_tws_init")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val ckpt = root.resolve("ckpt").toString
     val init = spark.read.parquet(half1.toString).as[Ev]
       .groupByKey(_.user_id)
       .mapGroups { (uid, rows) =>
@@ -916,25 +906,20 @@ object StreamOps {
         }
       }
       .groupByKey(_.user_id)
-    val query = spark.readStream.schema(schema)
-      .parquet(feed.watch.toString)
-      .as[Ev].groupByKey(_.user_id)
-      .transformWithState(new TotalsProcessorWithInit,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        RunningTotalsOutputMode, init)
-      .toDF()
-      .writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .outputMode(RunningTotalsOutputMode)
-      .start()
-    try {
-      feed.landStaged(stagedHalf(spark, dir, 2))
-      query.processAllAvailable()
-    } finally {
-      query.stop()
-      feed.close()
+    val root = feedRun(spark, dir, "graft_stream_tws_init",
+      Seq(Seq(stagedHalf(spark, dir, 2)))) { (srcs, root) =>
+      srcs.head.as[Ev].groupByKey(_.user_id)
+        .transformWithState(new TotalsProcessorWithInit,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          RunningTotalsOutputMode, init)
+        .toDF()
+        .writeStream.format("noop")
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .outputMode(RunningTotalsOutputMode)
+        .start()
     }
-    spark.read.format("statestore").option("path", ckpt)
+    spark.read.format("statestore")
+      .option("path", root.resolve("ckpt").toString)
       .option("stateVarName", "totals").load()
       .select(col("value.user_id").as("user_id"),
         col("value.n_events").as("n_events"),
@@ -950,10 +935,9 @@ object StreamOps {
   def burstsStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_bursts_sink",
+    runFileStream(spark, dir, "graft_stream_bursts_sink",
       OutputMode.Append(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)))(
+      halves(spark, dir))(
       src => burstDetector(src.as[Ev]).toDF())
   }
 
@@ -966,9 +950,8 @@ object StreamOps {
     * the batch result is the engine's exactly-once guarantee. */
   def tumblingSinkStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStreamToParquet(spark, schema,
-      Seq(stagedHalf(spark, dir, 1), stagedHalf2Sentinel(spark, dir)))(
+    runFileStreamToParquet(spark, dir,
+      halves(spark, dir, flush = true))(
       tumblingCounts(_, "1 hour", "1 hour"))
       // drop ONLY the sentinel windows: a bare =!= would three-valued-NULL
       // away a legitimate NULL-event_type group the oracle keeps
@@ -1051,25 +1034,19 @@ object StreamOps {
     * q_stream_upsert — the final table IS the batch per-user totals. */
   def eqUpsertStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp("graft_stream_equp")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val table = root.resolve("totals").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
     import spark.implicits._
     val decoded0 = graft.sources.ManifestReadFactory.rowsDecoded.get()
-    val query = runningUserTotals(src.as[Ev]).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .queryName("graft_stream_equp_sink")
-      .format("graft.sources.ManifestSink")
-      .option("path", table)
-      .option("upsertKeys", "user_id")
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .start()
-    try Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2))
-      .foreach { b => feed.landStaged(b); query.processAllAvailable() }
-    finally { query.stop(); feed.close() }
+    val root = feedRun(spark, dir, "graft_stream_equp", Seq(halves(spark, dir))) {
+      (srcs, root) => runningUserTotals(srcs.head.as[Ev]).toDF()
+        .writeStream.outputMode(OutputMode.Update())
+        .queryName("graft_stream_equp_sink")
+        .format("graft.sources.ManifestSink")
+        .option("path", root.resolve("totals").toString)
+        .option("upsertKeys", "user_id")
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .start()
+    }
+    val table = root.resolve("totals").toString
     if (!Files.exists(Path.of(table)))
       return spark.emptyDataset[UserAgg].toDF() // empty corpus: no batches
     require(graft.sources.ManifestReadFactory.rowsDecoded.get() == decoded0,
@@ -1119,20 +1096,14 @@ object StreamOps {
   def upsertStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
     import spark.implicits._
-    val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp("graft_stream_upsert")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val table = root.resolve("totals").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
-    val query = runningUserTotals(src.as[Ev]).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertMerge(spark, table, batch, "user_id", UpsertBuckets)
-      }.start()
-    try Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2))
-      .foreach { b => feed.landStaged(b); query.processAllAvailable() }
-    finally { query.stop(); feed.close() }
+    val table = feedRun(spark, dir, "graft_stream_upsert", Seq(halves(spark, dir))) {
+      (srcs, root) => runningUserTotals(srcs.head.as[Ev]).toDF()
+        .writeStream.outputMode(OutputMode.Update())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          upsertMerge(spark, root.resolve("totals").toString, batch, "user_id",
+            UpsertBuckets)
+        }.start()
+    }.resolve("totals").toString
     // the table dir outlives the query — it IS the result
     if (Files.exists(Path.of(table)))
       spark.read.parquet(table).drop("bucket")
@@ -1151,18 +1122,9 @@ object StreamOps {
     * batch self-join with the same interval predicate. */
   def intervalJoinStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStreams(spark, schema, "graft_stream_ssjoin_sink",
-      OutputMode.Append(),
-      Seq(Seq(stagedSide(spark, dir, "click", 1), stagedSide(spark, dir, "click", 2)),
-        Seq(stagedSide(spark, dir, "purchase", 1),
-          stagedSide(spark, dir, "purchase", 2)))) { srcs =>
-      val c = srcs(0).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val p = srcs(1).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
+    runFileStreams(spark, dir, "graft_stream_ssjoin_sink",
+      OutputMode.Append(), joinSides(spark, dir, flush = false)) { srcs =>
+      val (c, p) = clicksAndPurchases(srcs)
       c.join(p, expr(
         "c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
     }
@@ -1191,19 +1153,9 @@ object StreamOps {
     * the same interval predicate. */
   def leftOuterJoinStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStreams(spark, schema, "graft_stream_lojoin_sink",
-      OutputMode.Append(),
-      Seq(Seq(stagedSide(spark, dir, "click", 1),
-          stagedSide(spark, dir, "click", 2, Some(-1L))),
-        Seq(stagedSide(spark, dir, "purchase", 1),
-          stagedSide(spark, dir, "purchase", 2, Some(-2L))))) { srcs =>
-      val c = srcs(0).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val p = srcs(1).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
+    runFileStreams(spark, dir, "graft_stream_lojoin_sink",
+      OutputMode.Append(), joinSides(spark, dir, flush = true)) { srcs =>
+      val (c, p) = clicksAndPurchases(srcs)
       c.join(p, expr(
         "c_user = p_user AND p_ts BETWEEN c_ts AND c_ts + INTERVAL 1 HOUR"),
         "left_outer")
@@ -1229,19 +1181,9 @@ object StreamOps {
     * predicate. */
   def fullOuterJoinStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStreams(spark, schema, "graft_stream_fojoin_sink",
-      OutputMode.Append(),
-      Seq(Seq(stagedSide(spark, dir, "click", 1),
-          stagedSide(spark, dir, "click", 2, Some(-1L))),
-        Seq(stagedSide(spark, dir, "purchase", 1),
-          stagedSide(spark, dir, "purchase", 2, Some(-2L))))) { srcs =>
-      val c = srcs(0).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-      val p = srcs(1).withWatermark("ts", "1 hour")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
+    runFileStreams(spark, dir, "graft_stream_fojoin_sink",
+      OutputMode.Append(), joinSides(spark, dir, flush = true)) { srcs =>
+      val (c, p) = clicksAndPurchases(srcs)
       c.join(p, expr(
         "c_user = p_user AND p_ts BETWEEN c_ts AND c_ts + INTERVAL 1 HOUR"),
         "full_outer")
@@ -1266,10 +1208,9 @@ object StreamOps {
     * double aggregation — group to hours, then group hours to days. */
   def cascadeStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_cascade_sink",
+    runFileStream(spark, dir, "graft_stream_cascade_sink",
       OutputMode.Append(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf2Sentinel(spark, dir))) { src =>
+      halves(spark, dir, flush = true)) { src =>
       val hourly = src.withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1322,7 +1263,6 @@ object StreamOps {
     * (stream ≡ batch for complete mode). */
   def enrichStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
-    val schema = completeEvents(spark, dir).schema
     val dim = broadcast(
       graft.sources.Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))
@@ -1330,9 +1270,9 @@ object StreamOps {
           .select(col("n_nationkey"), col("n_name")),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name")))
-    runFileStream(spark, schema, "graft_stream_enrich_sink",
+    runFileStream(spark, dir, "graft_stream_enrich_sink",
       OutputMode.Complete(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2))) { src =>
+      halves(spark, dir)) { src =>
       src.withWatermark("ts", "1 hour")
         .join(dim, col("user_id") === col("c_custkey")) // stream-static join
         .groupBy(window(col("ts"), "1 hour"), col("n_name"))
@@ -1349,10 +1289,9 @@ object StreamOps {
     * complete events. */
   def slidingStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_sliding_sink",
+    runFileStream(spark, dir, "graft_stream_sliding_sink",
       OutputMode.Complete(),
-      Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2))) { src =>
+      halves(spark, dir)) { src =>
       src.withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1372,8 +1311,7 @@ object StreamOps {
     * Oracle: DISTINCT event_id over complete events. */
   def dedupStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = noFlushSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    runFileStream(spark, schema, "graft_stream_dedup_sink",
+    runFileStream(spark, dir, "graft_stream_dedup_sink",
       OutputMode.Append(),
       Seq(stagedHalf(spark, dir, 1), stagedFull(spark, dir)))(
       dedupByEventId(_, "1 hour"))
@@ -1395,25 +1333,27 @@ object StreamOps {
     * q_stream_dedup.) */
   def stateReader(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp("graft_state_read")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val ckpt = root.resolve("ckpt").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
-    val query = src.dropDuplicates("event_id")
-      .writeStream.format("noop")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).start()
-    try Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)).foreach { b =>
-      feed.landStaged(b); query.processAllAvailable()
-    } finally {
-      query.stop()
-      feed.close()
-    }
+    val ckpt = feedRun(spark, dir, "graft_state_read", Seq(halves(spark, dir))) {
+      (srcs, root) => srcs.head.dropDuplicates("event_id")
+        .writeStream.format("noop")
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .outputMode(OutputMode.Append()).start()
+    }.resolve("ckpt").toString
     spark.read.format("statestore").option("path", ckpt).load()
       .select(col("key.event_id").as("event_id"))
   }
+
+  /** The row type the manifest-sink queries append: longs/strings only
+    * (the sink's CSV row format). */
+  private val SinkCols = "event_id LONG, user_id LONG, event_type STRING"
+
+  /** An append-mode [[graft.sources.ManifestSink]] writer of `src`'s
+    * [[SinkCols]] projection, nulls filtered the way the oracles do. */
+  private def manifestAppend(src: DataFrame) =
+    src.filter(col("event_type").isNotNull)
+      .select(col("event_id"), col("user_id"), col("event_type"))
+      .writeStream.format("graft.sources.ManifestSink")
+      .outputMode(OutputMode.Append())
 
   /** The custom DSv2 MANIFEST SINK as a STREAMING sink
     * ([[graft.sources.ManifestSink]]'s `StreamingWrite`): a stateless
@@ -1429,35 +1369,45 @@ object StreamOps {
     * row. Oracle: the same projection of the batch table. */
   def dsv2SinkStreamed(parent: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp("graft_stream_dsv2_sink")
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val out = root.resolve("out").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
-    // longs/strings only (the sink's CSV row format), nulls filtered the
-    // same way the oracle does
-    val streamed = src.filter(col("event_type").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-    val query = streamed.writeStream
-      .format("graft.sources.ManifestSink")
-      .option("path", out)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append()).start()
-    try Seq(stagedHalf(spark, dir, 1), stagedHalf(spark, dir, 2)).foreach { b =>
-      feed.landStaged(b); query.processAllAvailable()
-    } finally {
-      query.stop()
-      feed.close()
-      graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
+    val root = feedRun(spark, dir, "graft_stream_dsv2_sink", Seq(halves(spark, dir))) {
+      (srcs, root) => manifestAppend(srcs.head)
+        .option("path", root.resolve("out").toString)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .start()
     }
-    val files = graft.sources.ManifestSink.committedFiles(out)
+    graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
+    val files = graft.sources.ManifestSink.committedFiles(root.resolve("out").toString)
     if (files.isEmpty) // an empty corpus commits no epochs → empty result
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], streamed.schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType.fromDDL(SinkCols))
     else
-      spark.read.schema("event_id LONG, user_id LONG, event_type STRING")
-        .parquet(files: _*)
+      spark.read.schema(SinkCols).parquet(files: _*)
+  }
+
+  /** Shared epoch pipeline for the snap read-shape queries: stream the
+    * four deterministic event quarters (epoch i = the `event_id%4=i`
+    * slice) into a [[graft.sources.ManifestSink]] table `ev` under a
+    * fresh scratch root, one epoch per trigger, and point the PARENT
+    * session's `graft.snap` catalog at it (catalog confs are
+    * session-scoped there; the shared streaming child stays
+    * conf-clean). Returns the snap ROOT (the `ev` table lives under
+    * it). */
+  private def runSnapEpochs(parent: SparkSession, dir: String,
+      tag: String): java.nio.file.Path = {
+    val spark = streamSession(parent)
+    val root = feedRun(spark, dir, tag,
+      Seq((0 until 4).map(stagedQuarter(spark, dir, _)))) { (srcs, root) =>
+      manifestAppend(srcs.head)
+        .option("path", root.resolve("snap").resolve("ev").toString)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .queryName(s"${tag}_sink")
+        .start()
+    }
+    graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
+    val snapRoot = Files.createDirectories(root.resolve("snap"))
+    graft.sources.GraftCatalog.register(parent, dir, Some(snapRoot.toString),
+      Map("ev" -> SinkCols))
+    snapRoot
   }
 
   /** TIME TRAVEL end-to-end (`SELECT … FROM graft.snap.ev VERSION AS OF
@@ -1477,44 +1427,6 @@ object StreamOps {
     * `event_id % 4 <= 2`. Refusal paths (below the compaction horizon,
     * beyond the newest epoch) and compaction-boundary equivalence are
     * pinned in SnapshotSpec. */
-  /** Shared epoch pipeline for the snap read-shape queries: stream the
-    * four deterministic event quarters (epoch i = the `event_id%4=i`
-    * slice) into a [[graft.sources.ManifestSink]] table `ev` under a
-    * fresh scratch root, one epoch per trigger, and point the PARENT
-    * session's `graft.snap` catalog at it (catalog confs are
-    * session-scoped there; the shared streaming child stays
-    * conf-clean). Returns the snap ROOT (the `ev` table lives under
-    * it). */
-  private def runSnapEpochs(parent: SparkSession, dir: String,
-      tag: String): java.nio.file.Path = {
-    val spark = streamSession(parent)
-    val schema = completeEvents(spark, dir).schema
-    val root = scratchTmp(tag)
-    val snapRoot = Files.createDirectories(root.resolve("snap"))
-    val out = snapRoot.resolve("ev").toString
-    val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed.watch.toString)
-    val streamed = src.filter(col("event_type").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-    val query = streamed.writeStream
-      .format("graft.sources.ManifestSink")
-      .option("path", out)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .queryName(s"${tag}_sink")
-      .outputMode(OutputMode.Append()).start()
-    try (0 until 4).foreach { q =>
-      feed.landStaged(stagedQuarter(spark, dir, q)); query.processAllAvailable()
-    } finally {
-      query.stop()
-      feed.close()
-      graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
-    }
-    graft.sources.GraftCatalog.register(parent, dir, Some(snapRoot.toString),
-      Map("ev" -> "event_id LONG, user_id LONG, event_type STRING"))
-    snapRoot
-  }
-
   def timeTravel(parent: SparkSession, dir: String): DataFrame = {
     runSnapEpochs(parent, dir, "graft_snap_tt")
     parent.sql(
@@ -1554,10 +1466,10 @@ object StreamOps {
     val snapRoot = runSnapEpochs(parent, dir, "graft_snap_tl")
     val logDir = snapRoot.resolve("ev").toString
     val spark = streamSession(parent)
-    val root = scratchTmp("graft_snap_tl_read")
+    val root = runRoot("graft_snap_tl_read")
     val outDir = root.resolve("out").toString
     val tail = spark.readStream.format("graft.sources.ManifestSink")
-      .schema("event_id LONG, user_id LONG, event_type STRING")
+      .schema(SinkCols)
       .option("path", logDir)
       .option("maxEpochsPerTrigger", "1").load()
     val q = tail.writeStream.format("parquet")

@@ -126,8 +126,9 @@ object ScaleLadder {
     *    L docs per replica id-band with adjacent windows bridging the
     *    band seams — the literal cross-replica bridge edges. CC's
     *    pointer-jumping convergence is O(log diameter), so the rung
-    *    should cost ~log₂3 ≈ +1-2 cycles, not 3× the cycles — run
-    *    with GRAFT_CC_DEBUG=1 to record them. Replica copies of
+    *    should cost ~log₂3 ≈ +1-2 cycles, not 3× the cycles — the
+    *    rung's `jobs=` count records them (one convergence-count job
+    *    per cycle after cycle 0). Replica copies of
     *    doc_id 0 additionally keep the ORIGINAL (unshifted) text ⇒
     *    exact-dup bridge pairs (0, 10M), (0, 20M) proving shifted
     *    replicas merge where content recurs.

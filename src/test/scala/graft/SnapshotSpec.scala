@@ -4536,4 +4536,45 @@ class SnapshotSpec extends AnyFunSuite {
     assert(other != root, "two sf dirs must give two roots")
     assert(s.conf.get("spark.sql.catalog.graft.snap.dir") == other)
   }
+
+  test("the CREATE epoch records its commit time: version 0's clock is " +
+    "its #ts, not the epoch file's mtime") {
+    val root = Files.createTempDirectory("graft_create_ts")
+    val s = spark.newSession()
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
+    val beforeMs = System.currentTimeMillis()
+    s.sql("CREATE TABLE graft.snap.ct (k BIGINT)") // epoch 0
+    val afterMs = System.currentTimeMillis()
+    // an mtime-disturbing copy moves the file clock far into the past
+    Files.setLastModifiedTime(root.resolve("ct").resolve(epochName(0)),
+      java.nio.file.attribute.FileTime.fromMillis(1000L))
+    val v0 = s.sql("SELECT ts, kind FROM graft.snap.ct.history " +
+      "WHERE version = 0").head()
+    val tsMs = v0.getTimestamp(0).getTime
+    assert(tsMs >= beforeMs && tsMs <= afterMs,
+      s"version 0 must carry its recorded commit time, got $tsMs " +
+        s"(created in [$beforeMs, $afterMs])")
+    assert(v0.getString(1) == "metadata", "a #ts is not an #op: kind unchanged")
+    assert(graft.sources.ManifestSink.versionAtTimestamp(
+      root.resolve("ct").toString, afterMs * 1000L) == 0L)
+    graft.util.Fs.deleteRecursively(root)
+  }
+
+  test("ProcedureCatalog: listProcedures names exactly the procedures " +
+    "loadProcedure serves, and an unknown name's error lists them all") {
+    import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog}
+    val cat: ProcedureCatalog = new graft.sources.GraftCatalog
+    cat.initialize("graft",
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    val ns = Array("sys")
+    val served = Seq("vacuum", "compact_data", "set_partition_spec",
+      "rollback", "create_tag", "drop_tag", "create_branch", "drop_branch",
+      "fast_forward", "expire_snapshots", "register_feed", "unregister_feed")
+    served.foreach(n => assert(cat.loadProcedure(Identifier.of(ns, n)) != null))
+    assert(cat.listProcedures(ns).map(_.name()).toSeq.sorted == served.sorted)
+    val e = intercept[UnsupportedOperationException](
+      cat.loadProcedure(Identifier.of(ns, "no_such_procedure")))
+    served.foreach(n =>
+      assert(e.getMessage.contains(s"sys.$n"), s"missing $n: ${e.getMessage}"))
+  }
 }

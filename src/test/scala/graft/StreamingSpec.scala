@@ -781,6 +781,39 @@ class StreamingSpec extends AnyFunSuite {
     } finally children.foreach(_.streams.removeListener(listener))
   }
 
+  test("feedRun failure path: an exception inside micro-batch 1 reaches " +
+    "the caller, the query is stopped and the run's feeds are deleted") {
+    import scala.jdk.CollectionConverters._
+    val s = StreamOps.streamSession(spark)
+    val staged = java.nio.file.Files.createTempDirectory("graft_feed_fail")
+    graft.sources.Tables.events(spark, TestSpark.Sf0001)
+      .filter(col("event_id").isNotNull && col("ts").isNotNull &&
+        col("user_id").isNotNull && col("value").isNotNull)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .limit(20).coalesce(1).write.parquet(staged.resolve("b").toString)
+    val part = java.nio.file.Files.list(staged.resolve("b")).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-"))
+    assert(part.isDefined)
+    var root: java.nio.file.Path = null
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamOps.feedRun(s, TestSpark.Sf0001, "graft_feed_fail",
+        Seq(Seq(part, part))) { (srcs, r) =>
+        root = r
+        srcs.head.select(raise_error(lit("boom in micro-batch 1")))
+          .writeStream.format("noop").queryName("graft_feed_fail_sink")
+          .start()
+      }
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom in micro-batch 1")),
+      s"the batch's own failure must reach the caller: $e")
+    assert(!Seq(spark, s).exists(_.streams.active
+      .exists(_.name == "graft_feed_fail_sink")), "the failed query must be stopped")
+    assert(root != null && !java.nio.file.Files.exists(root.resolve("src0")),
+      "the run's feed directory must be deleted")
+    graft.util.Fs.deleteRecursively(staged)
+  }
+
   test("NON-APPEND EPOCHS in a streaming tail (round 17): strict mode " +
     "refuses loudly naming the opt-outs; ignoreDeletes skips a dv-only " +
     "epoch and resumes at the next offset across restarts (nothing " +
