@@ -1473,8 +1473,7 @@ object Materialize {
         .option("path", log).option("compactInterval", "2")
         .mode("append").save()
     }
-    require(graft.sources.ManifestSink
-      .planningCheckpoint(java.nio.file.Paths.get(log)).nonEmpty,
+    require(graft.sources.ManifestSink.snapshot(log).checkpoint.nonEmpty,
       s"q_snap_checkpoint: no planning checkpoint landed at $log")
     spark.conf.set("spark.graft.plan.distributedThreshold", "0")
     try {
@@ -1807,8 +1806,8 @@ object Materialize {
       .collect()
     // the publish really was ONE overwrite epoch with removes
     val log = new java.io.File(root, "docwov").toString
-    val pubV = graft.sources.ManifestSink.newestVersion(log)
-    val pub = graft.sources.ManifestSink.epochDeltas(log, pubV - 1, pubV).head
+    val snap = graft.sources.ManifestSink.snapshot(log)
+    val pub = snap.epochDeltas(snap.version - 1, snap.version).head
     require(pub.op == "overwrite" && pub.removes.nonEmpty &&
       pub.adds.nonEmpty,
       s"publish epoch shape: op=${pub.op} removes=${pub.removes.size} " +
@@ -1967,7 +1966,7 @@ object Materialize {
     * resolver reads — pinning them makes the oracle deterministic),
     * then the read travels to a wall-clock instant between the two:
     * the newest epoch committed at or before it serves
-    * ([[graft.sources.ManifestSink.versionAtTimestamp]]), so the
+    * ([[graft.sources.ManifestSink.Snapshot.versionAt]]), so the
     * aggregate equals the oracle over the good half. */
   def snapTsTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = snapFixture(spark, "graft_snap_tst", dir)
@@ -2566,12 +2565,11 @@ object Materialize {
     val log = new java.io.File(root, "doccowp").toString
     // in-query pins: the COW merge epoch and the rollback epoch both
     // declare per-row pairability, and every live file is id-tracked
-    val deltas = graft.sources.ManifestSink.epochDeltas(log, 1, 3)
-    require(deltas.forall(d => d.removes.isEmpty || d.paired),
+    val snap = graft.sources.ManifestSink.snapshot(log)
+    require(snap.epochDeltas(1, 3).forall(d => d.removes.isEmpty || d.paired),
       s"COW merge + rollback epochs must declare #cdcpair")
-    val bases = graft.sources.ManifestSink.rowIdBases(log)
-    require(graft.sources.ManifestSink.committedFiles(log).forall(f =>
-      bases.contains(new java.io.File(f).getName)),
+    require(snap.files.forall(f =>
+      snap.rowids.contains(new java.io.File(f).getName)),
       "every live file carries a #rowid base")
     graft.sources.ChangeFeed.tableChanges(spark, log, 1, Some(3L))
       .createOrReplaceTempView("graft_cowp_feed")

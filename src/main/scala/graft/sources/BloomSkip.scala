@@ -5,7 +5,7 @@ import java.util.Base64
 
 import org.apache.spark.util.sketch.BloomFilter
 
-/** PER-FILE BLOOM SKIPPING (round 18, the parquet-bloom /
+/** PER-FILE BLOOM SKIPPING (the parquet-bloom /
   * Iceberg-Puffin shape re-expressed at the manifest level): a point
   * read on a high-cardinality NON-partition column — the reference's
   * own `CLUSTER BY team_id, nationality_id` access intent
@@ -79,7 +79,7 @@ object BloomSkip {
     } catch { case _: Exception => None }
   }
 
-  /** The writer's PARQUET ROW-GROUP size for `path` (round 18): the
+  /** The writer's PARQUET ROW-GROUP size for `path`: the
     * `rowgroup.bytes` table property, 0 = the parquet default
     * (128 MiB). Smaller groups trade a little compression for
     * position-skipping granularity — the KEEP-mode CDC read and any
@@ -88,8 +88,8 @@ object BloomSkip {
     * a whole-file decode. */
   val MinRowGroupBytes: Int = 64 * 1024
   val MaxRowGroupBytes: Int = 512 * 1024 * 1024
-  def rowGroupBytesOf(path: String): Int =
-    ManifestSink.tableProperties(path).get("rowgroup.bytes")
+  def rowGroupBytesOf(snap: ManifestSink.Snapshot): Int =
+    snap.props.get("rowgroup.bytes")
       .flatMap(_.toIntOption).map { b =>
         require(b >= MinRowGroupBytes && b <= MaxRowGroupBytes,
           s"rowgroup.bytes must be in [$MinRowGroupBytes, " +
@@ -98,40 +98,34 @@ object BloomSkip {
       }.getOrElse(0)
 
   /** Shared logical→physical resolution for record-column configs. */
-  private[sources] def physCols(path: String, prop: String): Seq[String] = {
-    val cols = ManifestSink.tableProperties(path).get(prop).toSeq
+  private[sources] def physCols(snap: ManifestSink.Snapshot,
+      prop: String): Seq[String] = {
+    val physOfLogical = snap.colmap.collect {
+      case (p, l) if l != ManifestSink.DroppedColumn => l.toLowerCase -> p }
+    snap.props.get(prop).toSeq
       .flatMap(_.split(",").toSeq).map(_.trim).filter(_.nonEmpty)
-    if (cols.isEmpty) Seq.empty
-    else {
-      val physOfLogical = ManifestSink.columnMapping(path).collect {
-        case (p, l) if l != ManifestSink.DroppedColumn => l.toLowerCase -> p }
-      cols.map(c => physOfLogical.getOrElse(c.toLowerCase, c))
-    }
+      .map(c => physOfLogical.getOrElse(c.toLowerCase, c))
   }
 
-  /** The bloom config of writes against `path`: (PHYSICAL column
-    * names, numBits). Configured names are LOGICAL (the user-facing
-    * face) and resolve through the column mapping, so a renamed
-    * column keeps blooming under its fixed physical key — the same
-    * contract as `#stats`. */
-  def configOf(path: String): (Seq[String], Int) = {
-    val props = ManifestSink.tableProperties(path)
-    val cols = props.get("bloom.columns").toSeq
-      .flatMap(_.split(",").toSeq).map(_.trim).filter(_.nonEmpty)
+  /** The bloom config of writes against `snap`'s table: (PHYSICAL
+    * column names, numBits). Configured names are LOGICAL (the
+    * user-facing face) and resolve through the column mapping, so a
+    * renamed column keeps blooming under its fixed physical key — the
+    * same contract as `#stats`. */
+  def configOf(snap: ManifestSink.Snapshot): (Seq[String], Int) = {
+    val cols = physCols(snap, "bloom.columns")
     if (cols.isEmpty) (Seq.empty, DefaultBits)
     else {
-      val physOfLogical = ManifestSink.columnMapping(path).collect {
-        case (p, l) if l != ManifestSink.DroppedColumn => l.toLowerCase -> p }
-      val bits = props.get("bloom.bits").flatMap(_.toIntOption)
+      val bits = snap.props.get("bloom.bits").flatMap(_.toIntOption)
         .getOrElse(DefaultBits)
       require(bits >= MinBits && bits <= MaxBits,
         s"bloom.bits must be in [$MinBits, $MaxBits], got $bits")
-      (cols.map(c => physOfLogical.getOrElse(c.toLowerCase, c)), bits)
+      (cols, bits)
     }
   }
 }
 
-/** PER-FILE NDV SKETCHES (round 19, the Iceberg-Puffin theta-sketch
+/** PER-FILE NDV SKETCHES (the Iceberg-Puffin theta-sketch
   * shape via Apache DataSketches HLL, which Spark itself bundles for
   * `hll_sketch_agg`): opt-in `#ndv <file> <col>:<b64>[;…]` records —
   * the writer updates one HLL per configured column as rows stream
@@ -161,6 +155,6 @@ object NdvSketch {
     catch { case _: Exception => None } // undecodable: no estimate
 
   /** PHYSICAL columns of the `ndv.columns` table property. */
-  def configOf(path: String): Seq[String] =
-    BloomSkip.physCols(path, "ndv.columns")
+  def configOf(snap: ManifestSink.Snapshot): Seq[String] =
+    BloomSkip.physCols(snap, "ndv.columns")
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, struct, when}
 import org.apache.spark.sql.types.StructType
 
-/** CDC CHANGE FEED over a manifest table's epoch log (round 17, the
+/** CDC CHANGE FEED over a manifest table's epoch log (the
   * Delta `table_changes` / Iceberg changelog shape): serve the
   * row-level changes of any retained epoch window `(since, until]` as
   * a DataFrame of the table's (logical) columns plus
@@ -45,7 +45,7 @@ import org.apache.spark.sql.types.StructType
   * rewrote — the same bytes the rewrite itself moved, so the feed is
   * never more expensive than the write it describes). Windows at or
   * below the compaction horizon refuse loudly with the boundary named
-  * ([[ManifestSink.epochDeltas]]).
+  * ([[ManifestSink.Snapshot.epochDeltas]]).
   *
   * Reference anchor: this is the scaled form of the reference
   * pipeline's monthly full refresh (README.md:112) consumed
@@ -62,16 +62,21 @@ object ChangeFeed {
     * committed version. Columns: the table's LOGICAL schema (column
     * mapping applied) ++ (_change_type, _commit_version). */
   def tableChanges(spark: SparkSession, dir: String, since: Long,
-      until: Option[Long] = None): DataFrame = {
-    val asOf = until.getOrElse(ManifestSink.newestVersion(dir))
-    val deltas = ManifestSink.epochDeltas(dir, since, asOf)
+      until: Option[Long] = None): DataFrame =
+    ManifestSink.read(dir)(changesOf(spark, _, since, until))
+
+  private def changesOf(spark: SparkSession, snap: ManifestSink.Snapshot,
+      since: Long, until: Option[Long]): DataFrame = {
+    val dir = snap.path
+    val asOf = until.getOrElse(snap.newestVersion)
+    val deltas = snap.epochDeltas(since, asOf)
 
     val physSchema = StructType.fromDDL(
-      ManifestSink.widestRecordedSchema(dir).getOrElse(
+      snap.widestSchema.getOrElse(
         throw new IllegalStateException(
           s"manifest table $dir records no schema — cannot serve a " +
             "change feed")))
-    val colmap = ManifestSink.columnMapping(dir)
+    val colmap = snap.colmap
     val dropped = colmap.collect {
       case (p, l) if l == ManifestSink.DroppedColumn => p.toLowerCase }.toSet
     val served = physSchema.fields
@@ -93,21 +98,21 @@ object ChangeFeed {
     val cowEpochs = scala.collection.mutable.ArrayBuffer[
       (ManifestSink.EpochDelta, Map[String, Seq[(String, Long)]])]()
 
-    // RUNNING dv state across the window (round 18, the r17 watch
-    // item): ONE `deleteVectorsAsOf` walk at the window start, then
+    // RUNNING dv state across the window: ONE `dvsAsOf` walk at the
+    // window start, then
     // each epoch's own records evolve it in order — a COW-heavy window
     // of E epochs costs O(window records), not O(E × log-walk)
     val anyCow = deltas.exists(d =>
       (d.removes.nonEmpty || d.eqdels.nonEmpty) &&
         d.op != "compact" && d.op != "metadata")
-    // ONE mutable map across the window (round 19, the r18 efficiency
+    // ONE mutable map across the window (the r18 efficiency
     // nit): epochs mutate it in place — O(window + records) — and only
     // a COW epoch's capture pays an O(state) immutable snapshot (it
     // must: each COW's victims read under the state of the PREVIOUS
     // version, frozen at capture time)
     val dvState = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
     if (anyCow)
-      ManifestSink.deleteVectorsAsOf(dir, math.max(since, 0L))
+      snap.dvsAsOf(math.max(since, 0L))
         .foreach { case (k, v) => dvState(k) = v }
     def evolveState(d: ManifestSink.EpochDelta): Unit =
       if (anyCow && (d.dvs.nonEmpty || d.removes.nonEmpty)) {
@@ -150,7 +155,7 @@ object ChangeFeed {
         }
       }
     }
-    // KEYED-UPSERT epochs (round 19, equality deletes): the epoch's
+    // KEYED-UPSERT epochs (equality deletes): the epoch's
     // adds are plain inserts (exempt by the sequence rule); its
     // deleted rows are the PRE-state rows matching the key files —
     // captured with the dv state of the previous version
@@ -246,9 +251,9 @@ object ChangeFeed {
     }
 
     // ——— COW epochs: per-row PAIRING by row id when the epoch
-    // declares it (round 19, `#cdcpair` + full `#rowid` coverage),
+    // declares it (`#cdcpair` + full `#rowid` coverage),
     // else the multiset diff (pre-r19 epochs, untracked files)
-    lazy val rowIdBases = ManifestSink.rowIdBases(dir)
+    lazy val rowIdBases = snap.rowids
     val logicalNames = served.toSeq.map(f => logicalName(f.name))
     val cowDfs = cowEpochs.toSeq.map { case (d, preDvs) =>
       val addSet = d.adds.toSet
@@ -268,7 +273,7 @@ object ChangeFeed {
         (d.removes ++ d.adds).forall(rowIdBases.contains)
       val both =
         if (pairable) {
-          // PAIRED (round 19): one full-outer join on row IDENTITY —
+          // PAIRED: one full-outer join on row IDENTITY —
           // pre-only ids are deletes, post-only inserts, changed pairs
           // serve update_pre/postimage, identical pairs (carried
           // untouched) serve NOTHING. Work is O(rewritten bytes) like
@@ -334,7 +339,7 @@ object ChangeFeed {
         s"upsert epoch ${d.id} carries ${colsets.size} distinct key " +
           "column sets — the keyed sink writes exactly one per epoch")
       val keyCols = colsets.head
-      val preFiles = ManifestSink.committedFilesAsOf(dir, d.id - 1)
+      val preFiles = snap.filesAsOf(d.id - 1)
       val keys = spark.read.parquet(d.eqdels.map(e => dataPath(e._1)): _*)
         .select(keyCols.map(col): _*)
       val deletedRows =
@@ -357,7 +362,7 @@ object ChangeFeed {
 
   /** One top-level column projected to its LOGICAL form: renamed by
     * the flat entry, and — when dotted `#colmap` entries exist under
-    * it (rounds 17/18, nested evolution) — its struct VALUE (or its
+    * it (nested evolution) — its struct VALUE (or its
     * array's STRUCT ELEMENTS, via `transform`) rebuilt with inner
     * fields renamed/dropped recursively (outer and element nulls
     * preserved). */
@@ -419,17 +424,17 @@ object ChangeFeed {
   }
 
   /** The (logical schema ++ change columns) a CDC face serves. */
-  private[sources] def changeSchema(dir: String): (StructType, StructType) = {
+  private[sources] def changeSchema(snap: ManifestSink.Snapshot)
+      : (StructType, StructType) = {
     val phys = StructType.fromDDL(
-      ManifestSink.widestRecordedSchema(dir).getOrElse(
+      snap.widestSchema.getOrElse(
         throw new IllegalStateException(
-          s"manifest table $dir records no schema — cannot serve a " +
+          s"manifest table ${snap.path} records no schema — cannot serve a " +
             "change feed")))
-    val colmap = ManifestSink.columnMapping(dir)
-      .map { case (p, l) => p.toLowerCase -> l }
+    val colmap = snap.colmap.map { case (p, l) => p.toLowerCase -> l }
     val served = StructType(phys.fields.filterNot(f =>
       colmap.get(f.name.toLowerCase).contains(ManifestSink.DroppedColumn)))
-    // the logical side recurses (advisor r17): dotted #colmap entries
+    // the logical side recurses: dotted #colmap entries
     // rename/drop STRUCT INNER fields on this face exactly as on the
     // main table face — the unpruned read then physicalizes per level,
     // so nested-dropped data never resurfaces through the group reader
@@ -441,10 +446,10 @@ object ChangeFeed {
   }
 }
 
-/** `graft.snap.t.changes` (round 17) — the CDC feed as a CATALOG
+/** `graft.snap.t.changes` — the CDC feed as a CATALOG
   * TABLE: the table's logical columns plus `_change_type` /
   * `_commit_version`, served as a real DISTRIBUTED scan planned from
-  * [[ManifestSink.changePartitions]] — append adds read whole-file,
+  * [[ManifestSink.Snapshot.changePartitions]] — append adds read whole-file,
   * merge-on-read pre-images read the targeted files AT their new dv
   * positions (KEEP mode), `#op compact` epochs cost nothing.
   *
@@ -464,7 +469,10 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
   import org.apache.spark.sql.connector.catalog.TableCapability
   import scala.jdk.CollectionConverters._
 
-  private val (physSchema, servedSchema) = ChangeFeed.changeSchema(dir)
+  /** The load-time snapshot: it answers the feed's schema and column
+    * mapping; every scan reads a fresh one. */
+  private val meta = ManifestSink.snapshot(dir)
+  private val (physSchema, servedSchema) = ChangeFeed.changeSchema(meta)
   private def fieldNames: Array[String] =
     physSchema.fields.map(_.name) ++
       Array(ChangeFeed.ChangeTypeCol, ChangeFeed.CommitVersionCol,
@@ -486,13 +494,13 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
     val maxEpochs = options.getInt("maxEpochsPerTrigger", Int.MaxValue)
     require(maxEpochs >= 1,
       s"maxEpochsPerTrigger must be >= 1, got $maxEpochs")
-    val horizon = ManifestSink.compactionHorizon(dir)
+    val horizon = ManifestSink.snapshot(dir).horizon
     val since = Option(options.get("sinceVersion")).map(_.toLong)
       .getOrElse(horizon)
     new org.apache.spark.sql.connector.read.ScanBuilder
         with org.apache.spark.sql.connector.read
           .SupportsPushDownRequiredColumns {
-      // COLUMN PRUNING (round 17): a CDC consumer typically reads a
+      // COLUMN PRUNING: a CDC consumer typically reads a
       // key or two plus the change columns — decoding the full row
       // width for that is exactly the cost this face must not pay at
       // 100 TB. The group reader already projects by requested name,
@@ -508,8 +516,7 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
         // pseudo-columns passing through by their own names. A pruned
         // STRUCT type physicalizes its (possibly inner-pruned) shape —
         // the reader emits exactly the readSchema layout.
-        val colmapLower = ManifestSink.columnMapping(dir)
-          .map { case (p, l) => p.toLowerCase -> l }
+        val colmapLower = meta.colmap.map { case (p, l) => p.toLowerCase -> l }
         val byLogical = physSchema.fields.zip(servedSchema.fields)
           .map { case (p, l) => l.name.toLowerCase -> p }.toMap
         val fs = servedPruned.fields.map { f =>
@@ -558,11 +565,11 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
               : org.apache.spark.sql.connector.read.Batch = this
           override def planInputPartitions()
               : Array[org.apache.spark.sql.connector.read.InputPartition] = {
-            val until = Option(options.get("asOfVersion")).map(_.toLong)
-              .getOrElse(ManifestSink.newestVersion(dir))
-            ManifestSink.changePartitions(dir, since, until, cdf = true,
-              onChange)
-              .map(p => p: org.apache.spark.sql.connector.read.InputPartition)
+            ManifestSink.read(dir) { snap =>
+              val until = Option(options.get("asOfVersion")).map(_.toLong)
+                .getOrElse(snap.newestVersion)
+              snap.changePartitions(since, until, cdf = true, onChange)
+            }.map(p => p: org.apache.spark.sql.connector.read.InputPartition)
               .toArray
           }
           override def createReaderFactory()

@@ -90,7 +90,7 @@ private[graft] object DvOps {
       schema: org.apache.spark.sql.types.StructType, dir: String,
       files: Seq[String],
       dvMapOpt: Option[Map[String, Seq[(String, Long)]]] = None): DataFrame = {
-    val dvMap = dvMapOpt.getOrElse(ManifestSink.deleteVectors(dir))
+    val dvMap = dvMapOpt.getOrElse(ManifestSink.snapshot(dir).dvs)
     val base = spark.read.schema(schema).parquet(files: _*)
     dvPositions(spark, dir, files, dvMap) match {
       case None => base
@@ -118,7 +118,7 @@ private[graft] object DvOps {
       dvMapOpt: Option[Map[String, Seq[(String, Long)]]],
       bases: Map[String, Long]): DataFrame = {
     import spark.implicits._
-    val dvMap = dvMapOpt.getOrElse(ManifestSink.deleteVectors(dir))
+    val dvMap = dvMapOpt.getOrElse(ManifestSink.snapshot(dir).dvs)
     val withRid = schema.add(ManifestSink.RowIdColumnName, "long")
     val base = spark.read.schema(withRid).parquet(files: _*)
     val baseRel = broadcast(files.map(f =>

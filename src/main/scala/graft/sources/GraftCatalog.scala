@@ -46,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    partition-predicate `DELETE FROM` in metadata only (and refuses
   *    row-level predicates).
   *
-  * DDL (round 15): the `snap` namespace is fully DDL-operable —
+  * DDL: the `snap` namespace is fully DDL-operable —
   * `CREATE TABLE` / `CREATE TABLE … AS SELECT` writes epoch 0 with the
   * `#schema` record (the reference's signature materialization is
   * CTAS, reference `etl_kaggle_to_big_query.py:88-110`), `ALTER TABLE
@@ -166,7 +166,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         option("gen.columnar").getOrElse("false").toBoolean)
     case Seq(SnapNs) => snapTable(ident, None)
     case Seq(SnapNs, tname) if SnapMetaTable.Names.contains(ident.name()) =>
-      // METADATA TABLES (round 15): `graft.snap.t.files` /
+      // METADATA TABLES: `graft.snap.t.files` /
       // `graft.snap.t.history` surface the epoch log as queryable
       // relations — what did compaction do, what will vacuum reclaim,
       // how many files does the snapshot hold (the Iceberg
@@ -179,7 +179,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       val tdir = new java.io.File(root, tname)
       if (!tdir.isDirectory) throw new NoSuchTableException(ident)
       if (ident.name() == "changes")
-        // the CDC face (round 17): a real distributed table, not a
+        // the CDC face: a real distributed table, not a
         // driver-derived LocalScan like the other metadata tables
         new SnapChangesTable(tname, tdir.toString)
       else new SnapMetaTable(tname, tdir.toString, ident.name())
@@ -189,7 +189,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   /** TIME TRAVEL (`SELECT … FROM graft.snap.t VERSION AS OF n`): Spark
     * routes the AS OF clause here, and the snapshot IS the
     * [[ManifestSink]] epoch log — version n = the union of epoch
-    * manifests 0..n, reconstructed by [[ManifestSink.committedFilesAsOf]]
+    * manifests 0..n, reconstructed by [[ManifestSink.Snapshot.filesAsOf]]
     * (refused below the compaction-sweep horizon, the log-retention
     * contract). Only the `snap` namespace is versioned; everything else
     * keeps the default refusal. */
@@ -199,29 +199,30 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         version.toLongOption match {
           case Some(v) => snapTable(ident, Some(v))
           case None =>
-            // a non-numeric version is a BRANCH (round 17: main + the
-            // staged adds) or a TAG (round 16: a pinned epoch id)
+            // a non-numeric version is a BRANCH (main + the
+            // staged adds) or a TAG (a pinned epoch id)
             val tdir = new java.io.File(snapRoot(ident), ident.name())
             GraftCatalog.requireValidTableName(ident.name())
-            if (ManifestSink.tableBranches(tdir.toString).contains(version))
-              snapTable(ident, None, branch = Some(version))
+            val snap = ManifestSink.snapshot(tdir.toString)
+            if (snap.branches.contains(version))
+              snapTable(ident, None, branch = Some(version), loaded = Some(snap))
             else {
-              val tags = ManifestSink.tableTags(tdir.toString)
+              val tags = snap.tags
               val v = tags.getOrElse(version,
                 throw new IllegalArgumentException(
                   s"graft.snap.${ident.name()}: no tag or branch " +
                     s"'$version' (tags: ${if (tags.isEmpty) "none"
                       else tags.toSeq.sorted.map { case (n, e) => s"$n=$e" }
                         .mkString(", ")}; integers are epoch ids)"))
-              snapTable(ident, Some(v))
+              snapTable(ident, Some(v), loaded = Some(snap))
             }
         }
       case _ => super.loadTable(ident, version)
     }
 
-  /** `TIMESTAMP AS OF` (round 16): Spark passes the literal as UTC
+  /** `TIMESTAMP AS OF`: Spark passes the literal as UTC
     * MICROS; resolution picks the newest live epoch committed at or
-    * before it ([[ManifestSink.versionAtTimestamp]]) and serves that
+    * before it ([[ManifestSink.Snapshot.versionAt]]) and serves that
     * version through the same snapshot machinery VERSION AS OF uses.
     * Below the sweep horizon the historical commit times are gone
     * with the swept epochs, so the read refuses with the boundary
@@ -231,8 +232,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       case Seq(SnapNs) =>
         GraftCatalog.requireValidTableName(ident.name())
         val tdir = new java.io.File(snapRoot(ident), ident.name())
-        snapTable(ident,
-          Some(ManifestSink.versionAtTimestamp(tdir.toString, timestamp)))
+        val snap = ManifestSink.snapshot(tdir.toString)
+        snapTable(ident, Some(snap.versionAt(timestamp)), loaded = Some(snap))
       case _ => super.loadTable(ident, timestamp)
     }
 
@@ -252,9 +253,13 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     *     conf survives as an override for hand-built logs).
     *
     * Either way the declared schema is verified against every recorded
-    * `#schema` before serving ([[ManifestSink.verifyDeclaredSchema]]). */
+    * `#schema` before serving ([[ManifestSink.Snapshot.verifyDeclared]]).
+    * The table answers its metadata from ONE load-time snapshot —
+    * `loaded` when the caller already took it to resolve a tag, branch
+    * or timestamp. */
   private def snapTable(ident: Identifier, asOf: Option[Long],
-      branch: Option[String] = None): Table = {
+      branch: Option[String] = None,
+      loaded: Option[ManifestSink.Snapshot] = None): Table = {
     GraftCatalog.requireValidTableName(ident.name())
     val tdir = new java.io.File(snapRoot(ident), ident.name())
     if (!tdir.isDirectory) throw new NoSuchTableException(ident)
@@ -266,9 +271,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       return new RenamedTombstoneTable(ident.name(),
         new String(java.nio.file.Files.readAllBytes(marker),
           java.nio.charset.StandardCharsets.UTF_8).trim)
+    val snap = loaded.getOrElse(ManifestSink.snapshot(tdir.toString))
     val ddl = option(s"$SnapNs.${ident.name()}.schema")
       .orElse(option(s"$SnapNs.schema"))
-      .orElse(ManifestSink.widestRecordedSchema(tdir.toString))
+      .orElse(snap.widestSchema)
       .getOrElse(throw new IllegalArgumentException(
         s"graft.snap.${ident.name()}: the manifest log records no " +
           "servable #schema (hand-built log, or records no single " +
@@ -282,15 +288,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // property (TBLPROPERTIES at CREATE / ALTER SET) > cow.
     val mode = option(s"$SnapNs.${ident.name()}.deleteMode")
       .orElse(option(s"$SnapNs.deleteMode"))
-      .orElse(ManifestSink.tableProperties(tdir.toString).get("delete.mode"))
+      .orElse(snap.props.get("delete.mode"))
       .getOrElse("cow")
     require(mode == "cow" || mode == "mor",
       s"graft.snap.${ident.name()}: deleteMode must be cow|mor, got '$mode'")
     // COLUMN MAPPING: the declared/conf/log schema is the
     // PHYSICAL one (what files, #stats and #spec are keyed by); the
     // log's #colmap renames it to the LOGICAL schema users query
-    new SnapTable(ident.name(), tdir.toString, schema, asOf, mode,
-      ManifestSink.columnMapping(tdir.toString), branch)
+    new SnapTable(ident.name(), tdir.toString, schema, asOf, snap, mode, branch)
   }
 
   private def snapRoot(ident: Identifier): String =
@@ -362,8 +367,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     table => org.apache.spark.sql.types.StructType.fromDDL(
       option(s"$SnapNs.$table.schema")
         .orElse(option(s"$SnapNs.schema"))
-        .orElse(ManifestSink.widestRecordedSchema(
-          new java.io.File(snapDirOrFail(proc), table).toString))
+        .orElse(ManifestSink.snapshot(
+          new java.io.File(snapDirOrFail(proc), table).toString).widestSchema)
         .getOrElse(
           throw new IllegalArgumentException(
             s"graft.snap.$table records no servable #schema — set " +
@@ -387,7 +392,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     }
 
   /** `CREATE TABLE graft.snap.t (…)` / `CREATE TABLE … AS SELECT`
-    * (round 15) — the catalog's one writable-DDL namespace. Epoch 0 IS
+    * — the catalog's one writable-DDL namespace. Epoch 0 IS
     * the create record: the table is born as a pure-metadata epoch
     * carrying `#schema <ddl>` on its own fresh log, claimed with the
     * same atomic-exclusive link(2) every commit uses — so CREATE
@@ -412,7 +417,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // fail BEFORE claiming: every column must be sink-encodable
     ManifestWriters.parquetType(schema.fields.map(_.name),
       schema.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)))
-    // PARTITIONED BY (round 15): identity / days / bucket transforms,
+    // PARTITIONED BY: identity / days / bucket transforms,
     // recorded once as the immutable `#spec` next to the `#schema`
     val spec = partitions.toSeq.map(toPartField(name, schema, _))
     val tdir = new java.io.File(snapRoot(ident), name)
@@ -420,8 +425,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     def exists() = throw new org.apache.spark.sql.catalyst.analysis
       .TableAlreadyExistsException(
         Seq(catalogName, SnapNs, name).map(q => s"`$q`").mkString("."))
-    if (ManifestSink.newestVersion0(dir) >= 0) exists()
-    // TBLPROPERTIES (round 15): recorded as `#prop` lines in the
+    if (ManifestSink.snapshot(dir.toString).version >= 0) exists()
+    // TBLPROPERTIES: recorded as `#prop` lines in the
     // create epoch. Spark-injected bookkeeping keys are filtered;
     // `delete.mode` / `compact.interval` are validated, everything
     // else token-safe round-trips for the user.
@@ -471,7 +476,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
        else Some(ManifestLog.Spec(None, PartField.render(spec)))) ++
       props.map { case (k, v) => ManifestLog.Prop(k, v) }
     if (!ManifestSink.linkFirstEpoch(dir, seed)) exists()
-    new SnapTable(name, tdir.toString, schema, None)
+    new SnapTable(name, tdir.toString, schema, None,
+      ManifestSink.snapshot(tdir.toString))
   }
 
   /** Translate a Spark `Transform` to the log's spec model, validating
@@ -527,7 +533,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   }
 
   /** `ALTER TABLE graft.snap.t ADD COLUMN c T` / `SET TBLPROPERTIES`
-    * (round 15) / `RENAME COLUMN a TO b` (round 16): each appends a
+    * / `RENAME COLUMN a TO b`: each appends a
     * pure-metadata epoch — the widened `#schema`, `#prop` records, or
     * the `#colmap` physical→logical mapping (column-mapping rename:
     * zero bytes rewritten, files/stats/spec stay keyed by the fixed
@@ -538,7 +544,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       throw new UnsupportedOperationException(
         s"$catalogName: ALTER TABLE is supported only in the $SnapNs namespace")
     val cur = snapTable(ident, None).asInstanceOf[SnapTable]
-    val mapping = ManifestSink.columnMapping(cur.dir)
+    val mapping = cur.meta.colmap
     def logicalOf(p: String): String = mapping.getOrElse(p, p)
     val curLogicalNames = cur.physSchema.fields.map(f => logicalOf(f.name))
     val added = scala.collection.mutable.ArrayBuffer[
@@ -550,9 +556,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val addedNested = scala.collection.mutable.ArrayBuffer[
       (String, org.apache.spark.sql.types.StructField)]()
     var renames = mapping
-    // NESTED-FIELD EVOLUTION (rounds 17/18): resolve a (logical top,
+    // NESTED-FIELD EVOLUTION: resolve a (logical top,
     // logical inner) reference to physical names — the parent must be
-    // a live STRUCT column, or (round 18) the STRUCT ELEMENT of a live
+    // a live STRUCT column, or the STRUCT ELEMENT of a live
     // ARRAY column addressed as `col.element.field` (the Spark
     // field-path convention; dotted `#colmap` keys carry the same
     // shape). Map evolution still refuses; one parent level is the
@@ -648,7 +654,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         added += org.apache.spark.sql.types.StructField(
           a.fieldNames()(0), a.dataType(), nullable = true)
       case rn: TableChange.RenameColumn if rn.fieldNames().length > 1 =>
-        // nested RENAME (round 17): a dotted `#colmap` entry keyed by
+        // nested RENAME: a dotted `#colmap` entry keyed by
         // the PHYSICAL path — zero bytes rewritten, same contract as
         // the top-level rename applied one level down
         val (pt, pi, st) = resolveNested(rn.fieldNames(), "RENAME COLUMN")
@@ -669,7 +675,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           if (to == pi) renames - s"$pt.$pi"
           else renames + (s"$pt.$pi" -> to)
       case rn: TableChange.RenameColumn =>
-        // RENAME COLUMN (round 16, the Delta column-mapping shape): a
+        // RENAME COLUMN (the Delta column-mapping shape): a
         // pure-metadata `#colmap` epoch — the PHYSICAL name stays in
         // every file, #stats key and #spec forever; only the logical
         // name users query changes. Zero bytes rewritten, the skipping
@@ -700,7 +706,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           if (to == phys) renames - phys // renamed back: identity again
           else renames + (phys -> to)
       case d: TableChange.DeleteColumn if d.fieldNames().length > 1 =>
-        // nested DROP (round 17): `#colmap s.a=-` — the logical struct
+        // nested DROP: `#colmap s.a=-` — the logical struct
         // omits the field, new files lack it, zero bytes rewritten
         val (pt, pi, st) = resolveNested(d.fieldNames(), "DROP COLUMN")
         val liveLeft = st.fields.count(f =>
@@ -711,7 +717,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             s"struct '${d.fieldNames()(0)}' — drop the column itself")
         renames = renames + (s"$pt.$pi" -> ManifestSink.DroppedColumn)
       case d: TableChange.DeleteColumn =>
-        // DROP COLUMN (round 16): a `#colmap <phys>=-` tombstone — the
+        // DROP COLUMN: a `#colmap <phys>=-` tombstone — the
         // logical schema omits the column, new files simply lack it,
         // zero bytes rewritten. The physical name stays in the
         // `#schema` records forever, so ADD COLUMN can never rebind
@@ -726,7 +732,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             !renames.get(p).contains(ManifestSink.DroppedColumn))
           .getOrElse(throw new IllegalArgumentException(
             s"graft.snap.${ident.name()}: no column '$from' to drop"))
-        require(!ManifestSink.partitionSpecs(cur.dir).byId.values
+        require(!cur.meta.specs.byId.values
             .exists(_.exists(_.col.equalsIgnoreCase(phys))),
           s"graft.snap.${ident.name()}: cannot drop '$from' — a #spec " +
             "era references it (live files carry tuples keyed by it; " +
@@ -772,7 +778,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             ut.fieldNames()(1).equalsIgnoreCase("element") &&
             topTypeOf(physTopOf(ut.fieldNames()(0)))
               .isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-        // PRIMITIVE array-element WIDENING (round 18): `ALTER COLUMN
+        // PRIMITIVE array-element WIDENING: `ALTER COLUMN
         // arr.element TYPE T` — one `#schema` epoch with the element
         // widened; pre-evolution files promote per element exactly
         // like top-level widening
@@ -790,7 +796,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             ut.fieldNames()(1).equalsIgnoreCase("value") &&
             topTypeOf(physTopOf(ut.fieldNames()(0)))
               .isInstanceOf[org.apache.spark.sql.types.MapType] =>
-        // PRIMITIVE map-value WIDENING (round 18); map KEYS refuse —
+        // PRIMITIVE map-value WIDENING; map KEYS refuse —
         // key reinterpretation would re-bucket committed lookups
         val physTop = physTopOf(ut.fieldNames()(0))
         val m = topTypeOf(physTop)
@@ -802,7 +808,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             "— only WIDENING changes are supported")
         widened += (physTop -> m.copy(valueType = ut.newDataType()))
       case ut: TableChange.UpdateColumnType if ut.fieldNames().length > 1 =>
-        // nested WIDENING (round 17): one pure-metadata `#schema`
+        // nested WIDENING: one pure-metadata `#schema`
         // epoch with the inner field widened; pre-evolution files
         // serve through promotion exactly like top-level widening
         val (pt, pi, st) = resolveNested(ut.fieldNames(),
@@ -815,7 +821,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             "are supported")
         widened += (s"$pt.$pi" -> ut.newDataType())
       case ut: TableChange.UpdateColumnType =>
-        // TYPE WIDENING (round 16): integrals up to long, float to
+        // TYPE WIDENING: integrals up to long, float to
         // double — the safe-promotion set BOTH of Spark's parquet
         // readers and the sink's own group reader serve exactly from
         // the narrow committed bytes. One pure-metadata `#schema`
@@ -856,7 +862,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     }
     // the recorded #schema stays PHYSICAL; an added column's physical
     // name IS its logical name at birth; widened columns keep their
-    // physical name with the wider type. Nested widens/adds (round 17)
+    // physical name with the wider type. Nested widens/adds
     // rebuild the struct field under its dotted keys.
     def evolveStruct(s: org.apache.spark.sql.types.StructType,
         parentKey: String): org.apache.spark.sql.types.StructType = {
@@ -875,7 +881,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           case s: org.apache.spark.sql.types.StructType =>
             f.copy(dataType = evolveStruct(s, f.name))
           case a: org.apache.spark.sql.types.ArrayType =>
-            // ARRAY STRUCT elements (round 18): dotted keys under
+            // ARRAY STRUCT elements: dotted keys under
             // `<col>.element`
             a.elementType match {
               case es: org.apache.spark.sql.types.StructType =>
@@ -884,7 +890,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
               case _ => f
             }
           case m: org.apache.spark.sql.types.MapType =>
-            // MAP STRUCT values (round 18): dotted keys under
+            // MAP STRUCT values: dotted keys under
             // `<col>.value`
             m.valueType match {
               case vs: org.apache.spark.sql.types.StructType =>
@@ -905,10 +911,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (renames != mapping)
       ManifestSink.commitColmapEpoch(cur.dir, renames)
     new SnapTable(ident.name(), cur.dir, evolved, None,
-      colmap = renames)
+      ManifestSink.snapshot(cur.dir))
   }
 
-  /** `DROP TABLE graft.snap.t` (round 15): deletes the epoch log and
+  /** `DROP TABLE graft.snap.t`: deletes the epoch log and
     * the data plane outright. Retention is the operator's call at drop
     * time — this is the `DROP TABLE` contract (Delta's `VACUUM`-then-
     * drop is for un-dropping, which the manifest log does not offer);
@@ -923,7 +929,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     else { graft.util.Fs.deleteRecursively(tdir.toPath); true }
   }
 
-  /** `ALTER TABLE graft.snap.old RENAME TO new` (round 16) — the
+  /** `ALTER TABLE graft.snap.old RENAME TO new` — the
     * stage→promote pattern (CTAS a staging table, rename it into
     * place), as an ATOMIC directory move inside the namespace root
     * with a TOMBSTONE protocol for racing writers:
@@ -1008,7 +1014,7 @@ object GraftCatalog {
     * leading `.` would otherwise resolve OUTSIDE the namespace root —
     * on the read path that serves a foreign directory as a table, and
     * on `DROP TABLE` it recursively deletes an arbitrary directory
-    * (advisor r15). One validator for every face that turns a name
+    *. One validator for every face that turns a name
     * into a path (create/load/drop/metadata tables, procedures). */
   private[sources] def requireValidTableName(name: String): Unit =
     require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&
@@ -1061,10 +1067,61 @@ object GraftCatalog {
   def snapDir(spark: SparkSession): Option[String] = spark.conf.getOption(SnapDirKey)
 }
 
+/** A table's COLUMN MAPPING (the Delta column-mapping shape): the
+  * `#colmap` record over the PHYSICAL schema `phys` — the names files,
+  * `#stats` and `#spec` are keyed by, fixed for a column's lifetime —
+  * while users see and query the LOGICAL names. The one translation
+  * boundary the catalog faces share: filters and required columns
+  * logical→physical on the way in, schemas physical→logical on the way
+  * out; every writer writes physical. An empty mapping is identity. */
+private[sources] final case class ColumnMap(colmap: Map[String, String],
+    phys: org.apache.spark.sql.types.StructType) {
+  import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+  /** Physical (lowercased; dotted for nested fields) → logical name, or
+    * [[ManifestSink.DroppedColumn]]. */
+  val logicalOfPhys: Map[String, String] =
+    colmap.map { case (p, l) => p.toLowerCase -> l }
+  /** Logical (lowercased) → physical name of every live column. */
+  val physOfLogical: Map[String, String] =
+    colmap.collect { case (p, l) if l != ManifestSink.DroppedColumn =>
+      l.toLowerCase -> p }
+  def isEmpty: Boolean = colmap.isEmpty
+  def logicalName(c: String): String = logicalOfPhys.getOrElse(c.toLowerCase, c)
+  def logicalize(st: StructType): StructType =
+    ManifestSink.logicalizeStruct(st, logicalOfPhys)
+  def physicalize(st: StructType): StructType =
+    ManifestSink.physicalizeStruct(st, phys, logicalOfPhys)
+  /** The physical schema MINUS dropped columns (top-level AND nested) —
+    * what the parquet delegate (and any full-width read) is built with,
+    * so positions align with the logical schema. */
+  def served: StructType = dropDropped(phys, "")
+  private def dropDropped(st: StructType, prefix: String): StructType =
+    StructType(st.fields
+      .filterNot(f => logicalOfPhys.get((prefix + f.name).toLowerCase)
+        .contains(ManifestSink.DroppedColumn))
+      .map { f =>
+        f.dataType match {
+          case s: StructType =>
+            f.copy(dataType = dropDropped(s, prefix + f.name + "."))
+          case a: ArrayType => a.elementType match {
+            case es: StructType => f.copy(dataType = a.copy(elementType =
+              dropDropped(es, prefix + f.name + ".element.")))
+            case _ => f
+          }
+          case m: MapType => m.valueType match {
+            case vs: StructType => f.copy(dataType = m.copy(valueType =
+              dropDropped(vs, prefix + f.name + ".value.")))
+            case _ => f
+          }
+          case _ => f
+        }
+      })
+}
+
 /** A [[ManifestSink]]-committed table under `<snap.dir>/<name>` with
   * the committed-file list resolved at SCAN-BUILD time — which is what
   * lets one catalog table serve three read shapes off the same epoch
-  * log (round 14 adds the WRITE faces: `INSERT INTO` appends,
+  * log (plus the WRITE faces: `INSERT INTO` appends,
   * `UPDATE`/`MERGE INTO`/subquery-`DELETE` run group-based
   * copy-on-write through [[SnapRowLevelOperation]], and the `_file`
   * metadata column names a row's committed file on any batch read):
@@ -1073,7 +1130,7 @@ object GraftCatalog {
   *  - time travel: `VERSION AS OF n` (SQL routes through
   *    `loadTable(ident, version)`, which bakes `asOf` here), or its
   *    DataFrame twin `spark.read.option("asOfVersion", n).table(…)`
-  *  - INCREMENTAL read (round 11, the lake-CDC primitive):
+  *  - INCREMENTAL read (the lake-CDC primitive):
   *    `spark.read.option("sinceVersion", s).table(…)` → the files
   *    appended by epochs (s, asOfVersion|newest] via
   *    [[ManifestSink.committedFilesBetween]] — "process only what
@@ -1084,11 +1141,11 @@ object GraftCatalog {
   * The sink's data files are schema-less CSV rows (the landing format),
   * so the read schema comes from the `snap.<name>.schema` /
   * `snap.schema` catalog conf — VERIFIED against the `#schema` records
-  * the log carries for its committed epochs (round 12): a declared
+  * the log carries for its committed epochs: a declared
   * schema missing a recorded column (or changing its type) is refused
   * loudly instead of silently dropping data, while DECLARED columns no
   * epoch recorded are served as nulls from pre-evolution files
-  * (round 13 — additive schema evolution, the parquet by-name read's
+  * (additive schema evolution, the parquet by-name read's
   * native null-fill). The scan DELEGATES to the builtin CSV DSv2 provider — the
   * same naming-not-a-read-path contract as the `sf` namespace
   * (pushdown, pruning and the vectorized reader ride along) — behind a
@@ -1099,10 +1156,13 @@ object GraftCatalog {
   * full pass. */
 private[sources] class SnapTable(tname: String, val dir: String,
     tschema: org.apache.spark.sql.types.StructType, asOf: Option[Long],
+    /** The LOAD-TIME snapshot: it answers the table's metadata — column
+      * mapping, properties, partitioning, spec — for this table object's
+      * lifetime. Every data face takes a fresh snapshot per call. */
+    private[sources] val meta: ManifestSink.Snapshot,
     deleteMode: String = "cow",
-    colmap: Map[String, String] = Map.empty,
-    /** Branch READ face (round 17): `VERSION AS OF '<branch>'` serves
-      * main + the branch's staged adds; read-only like `asOf`. */
+    /** Branch READ face: `VERSION AS OF '<branch>'` serves main + the
+      * branch's staged adds; read-only like `asOf`. */
     branch: Option[String] = None)
     extends Table with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -1113,30 +1173,9 @@ private[sources] class SnapTable(tname: String, val dir: String,
   import org.apache.spark.sql.sources._
   override def name(): String = s"snap($tname)"
 
-  /** COLUMN MAPPING boundary (round 16): `tschema` is the PHYSICAL
-    * schema (file/stats/spec names, fixed for a column's lifetime);
-    * users see and query the LOGICAL names below. Translation happens
-    * exactly here — filters/required-columns logical→physical on the
-    * way in, schemas physical→logical on the way out; every writer
-    * writes physical. */
-  private val logicalOfPhys: Map[String, String] =
-    colmap.map { case (p, l) => p.toLowerCase -> l }
-  private val physOfLogical: Map[String, String] =
-    colmap.collect { case (p, l) if l != ManifestSink.DroppedColumn =>
-      l.toLowerCase -> p }
-  private[sources] def physName(c: String): String =
-    physOfLogical.getOrElse(c.toLowerCase, c)
-  private def logicalName(c: String): String =
-    logicalOfPhys.getOrElse(c.toLowerCase, c)
-  private def isDropped(phys: String): Boolean =
-    logicalOfPhys.get(phys.toLowerCase)
-      .contains(ManifestSink.DroppedColumn)
-  private def logicalize(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    ManifestSink.logicalizeStruct(st, logicalOfPhys)
-  private def physicalize(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    ManifestSink.physicalizeStruct(st, tschema, logicalOfPhys)
+  /** COLUMN MAPPING boundary: `tschema` is the PHYSICAL schema; users
+    * see and query the LOGICAL names ([[ColumnMap]]). */
+  private val cols = ColumnMap(meta.colmap, tschema)
 
   /** The physical (declared/recorded) schema — what every file-facing
     * op reads and writes under. */
@@ -1144,28 +1183,23 @@ private[sources] class SnapTable(tname: String, val dir: String,
     tschema
 
   override def schema(): org.apache.spark.sql.types.StructType =
-    logicalize(tschema)
-  /** The log-recorded partition spec (round 15) — read fresh per call:
-    * CatalogManager caches tables briefly, but the spec is immutable
-    * for a table's lifetime so staleness cannot occur. */
-  private[sources] def spec: Seq[PartField] = ManifestSink.partitionSpec(dir)
-  /** The log-recorded table properties, surfaced through the catalog
-    * face (DESCRIBE EXTENDED shows them). */
-  override def properties(): util.Map[String, String] =
-    ManifestSink.tableProperties(dir).asJava
-  /** The table's compaction cadence: the `compact.interval` property,
-    * else the default. */
-  private def tblCompactInterval: Int =
-    ManifestSink.tableProperties(dir).get("compact.interval")
-      .flatMap(_.toIntOption).getOrElse(ManifestSink.DefaultCompactInterval)
+    cols.logicalize(tschema)
+  /** The log-recorded CURRENT partition spec as of the load-time
+    * snapshot: a `set_partition_spec` committed later is seen by the
+    * next load (CatalogManager re-resolves the table per statement),
+    * and writes fan out under the spec of their own fresh snapshot. */
+  private[sources] def spec: Seq[PartField] = meta.specs.current
+  /** The log-recorded table properties as of the load-time snapshot,
+    * surfaced through the catalog face (DESCRIBE EXTENDED shows them). */
+  override def properties(): util.Map[String, String] = meta.props.asJava
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] =
     // display (and Spark's PARTITION-clause resolution) uses LOGICAL
     // names; the recorded #spec itself stays physical
     ManifestTable.transformsOf(spec.map {
-      case IdentityPart(c) => IdentityPart(logicalName(c))
-      case DaysPart(c) => DaysPart(logicalName(c))
-      case BucketPart(n, c) => BucketPart(n, logicalName(c))
+      case IdentityPart(c) => IdentityPart(cols.logicalName(c))
+      case DaysPart(c) => DaysPart(cols.logicalName(c))
+      case BucketPart(n, c) => BucketPart(n, cols.logicalName(c))
     })
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
@@ -1173,19 +1207,19 @@ private[sources] class SnapTable(tname: String, val dir: String,
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC).asJava
 
-  /** `_file`/`_pos` ride along on every face (rounds 14/16):
+  /** `_file`/`_pos` ride along on every face:
     * selectable on batch reads, the handle Spark's runtime group
     * filter names matched groups with (COW), and together the rowId
     * the merge-on-read delta operation keys its dv files on.
-    * `_row_id` (round 19) is the STABLE row identity row tracking
+    * `_row_id` is the STABLE row identity row tracking
     * maintains across copy-on-write moves. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(SnapFileColumn, SnapPosColumn, SnapRowIdColumn)
 
-  /** UPDATE / MERGE INTO / non-metadata DELETE route here (round 14):
+  /** UPDATE / MERGE INTO / non-metadata DELETE route here:
     * group-based copy-on-write ([[SnapRowLevelOperation]]) by default;
-    * under `delete.mode = mor` (round 16) the POSITION-DELTA operation
+    * under `delete.mode = mor` the POSITION-DELTA operation
     * ([[SnapDeltaOperation]]) instead — dv records + appended rows in
     * one atomic epoch, zero data files moved. Historical snapshots are
     * immutable — a `VERSION AS OF` table refuses. */
@@ -1199,7 +1233,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
       s"graft.snap.$tname VERSION AS OF '${branch.get}': the branch " +
         "READ face is immutable — stage writes by setting " +
         "spark.graft.wap.branch and writing to the main table name")
-    // STAGED ROW-LEVEL writes (round 18): merge-on-read DELETE/UPDATE/
+    // STAGED ROW-LEVEL writes: merge-on-read DELETE/UPDATE/
     // MERGE may stage on a WAP branch (`#dv` epochs tagged #forbranch,
     // replayed by fast_forward under the base fence). Copy-on-write
     // still refuses: its `#remove`s against a moving main are
@@ -1212,14 +1246,14 @@ private[sources] class SnapTable(tname: String, val dir: String,
           "deltas, or publish first")
     if (deleteMode == "mor")
       () => new SnapDeltaOperation(tname, dir, tschema, info.command(),
-        colmap, forBranch = wapBranch)
+        cols, forBranch = wapBranch)
     else
       () => new SnapRowLevelOperation(tname, dir, tschema, info.command(),
-        colmap)
+        cols)
   }
 
   /** `INSERT INTO graft.snap.t` — a plain batch APPEND epoch through
-    * the same manifest commit every other writer uses (round 14; the
+    * the same manifest commit every other writer uses (the
     * catalog face previously read, streamed, deleted and compacted but
     * could not append) — and `df.writeStream.toTable("graft.snap.t")`,
     * the STREAMING write face with the full per-writer `#txn` replay
@@ -1240,16 +1274,17 @@ private[sources] class SnapTable(tname: String, val dir: String,
       s"graft.snap.$tname VERSION AS OF '${branch.get}': the branch " +
         "READ face is immutable — stage writes by setting " +
         "spark.graft.wap.branch and writing to the main table name")
-    ManifestSink.verifyDeclaredSchema(dir, s"graft.snap.$tname INSERT", tschema)
-    val book = ManifestSink.partitionSpecs(dir)
-    ManifestTable(dir, tschema, compactInterval = tblCompactInterval,
+    val snap = ManifestSink.snapshot(dir)
+    snap.verifyDeclared(s"graft.snap.$tname INSERT", tschema)
+    val book = snap.specs
+    ManifestTable(dir, tschema, compactInterval = snap.compactInterval,
       spec = book.current, specId = book.currentId,
-      renameCols = physOfLogical,
-      colmapAll = logicalOfPhys,
+      renameCols = cols.physOfLogical,
+      colmapAll = cols.logicalOfPhys,
       forBranch = wapBranch).newWriteBuilder(info)
   }
 
-  /** The session's write-audit-publish target (round 17, the Iceberg
+  /** The session's write-audit-publish target (the Iceberg
     * `spark.wap.branch` shape): when set, every batch APPEND to this
     * table stages on that branch instead of publishing to main. */
   private def wapBranch: Option[String] =
@@ -1311,7 +1346,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     asOf.isEmpty && filters.forall(deletable)
 
-  /** Row-level DELETE by COPY-ON-WRITE (round 13, the Delta shape):
+  /** Row-level DELETE by COPY-ON-WRITE (the Delta shape):
     * resolve which committed files MAY hold matching rows (the same
     * conservative `#stats` envelope test the scan builder prunes
     * with — a file the stats exclude provably holds no matching row
@@ -1319,7 +1354,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
     * through a distributed scan-filter-write job, and commit survivors
     * + `#remove`s of the rewritten files as ONE atomic epoch. Rows
     * where the predicate is NULL survive (SQL DELETE removes only
-    * predicate-TRUE rows). Concurrency contract (round 14): concurrent
+    * predicate-TRUE rows). Concurrency contract: concurrent
     * APPENDS serialize safely against a delete (the claim race only
     * orders epochs), and two COW operations racing over shared files —
     * delete vs delete, delete vs compaction — are fenced at COMMIT
@@ -1330,7 +1365,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
     * so the loser publishes nothing and no deleted row is ever
     * resurrected through a stale rewrite. The rewrite itself reads
     * under the declared conf schema, which is VERIFIED against the
-    * log's `#schema` records first (advisor r13): a stale narrow conf
+    * log's `#schema` records first: a stale narrow conf
     * on this destructive path would otherwise silently drop an evolved
     * column from the survivor files it commits. */
   override def deleteWhere(logicalFilters: Array[Filter]): Unit = {
@@ -1338,7 +1373,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
       s"graft.snap.$tname VERSION AS OF '${branch.get}': the branch " +
         "READ face is immutable — stage writes by setting " +
         "spark.graft.wap.branch and writing to the main table name")
-    // STAGED merge-on-read DELETE (round 18): under a WAP branch the
+    // STAGED merge-on-read DELETE: under a WAP branch the
     // dv epoch tags #forbranch (invisible to main, applied by the
     // audit face, replayed by fast_forward); copy-on-write refuses
     if (wapBranch.isDefined && deleteMode != "mor")
@@ -1351,57 +1386,54 @@ private[sources] class SnapTable(tname: String, val dir: String,
     // the predicate arrives in LOGICAL names; everything below — the
     // stats/partition walks and the survivor/dv reads — is physical
     val filters = logicalFilters.map(
-      ManifestSink.renameFilterCols(_, physOfLogical))
-    ManifestSink.verifyDeclaredSchema(dir, s"graft.snap.$tname DELETE", tschema)
-    require(ManifestSink.equalityDeletes(dir).isEmpty,
+      ManifestSink.renameFilterCols(_, cols.physOfLogical))
+    val snap = ManifestSink.snapshot(dir)
+    snap.verifyDeclared(s"graft.snap.$tname DELETE", tschema)
+    require(snap.eqDeletes.isEmpty,
       s"graft.snap.$tname DELETE: the table carries live equality " +
         "deletes (a keyed streaming upsert is active) — CALL " +
         "graft.sys.compact_data to resolve them first")
-    // a staged delete targets the BRANCH's visible state (main +
-    // staged adds) — deleting a row appended on the same branch works
-    val files = wapBranch match {
-      case Some(b) => ManifestSink.branchFiles(dir, b)
-      case None => ManifestSink.committedFiles(dir)
-    }
-    if (files.isEmpty) return
-    val stats = ManifestSink.fileStats(dir)
-    val book = ManifestSink.partitionSpecs(dir)
-    val parts = ManifestSink.filePartitions(dir)
-    val affected = files.filter { f =>
-      val n = java.nio.file.Paths.get(f).getFileName.toString
-      val partOk = parts.get(n).forall(t =>
-        filters.forall(book.mayMatch(t, _)))
-      partOk && (stats.get(n) match {
-        case None => true // no stats: must assume it may match
-        case Some(st) => st.rows > 0 && filters.forall(SnapStats.mayMatch(st, _))
+    // the committed files of `s` that MAY hold matching rows; a staged
+    // delete targets the BRANCH's visible state (main + staged adds) —
+    // deleting a row appended on the same branch works
+    def candidates(s: ManifestSink.Snapshot): (Int, Seq[String]) = {
+      val files = wapBranch.fold(s.files)(s.branchFiles)
+      (files.size, files.filter { f =>
+        val n = java.nio.file.Paths.get(f).getFileName.toString
+        val partOk = s.parts.get(n).forall(t =>
+          filters.forall(s.specs.mayMatch(t, _)))
+        partOk && (s.stats.get(n) match {
+          case None => true // no stats: must assume it may match
+          case Some(st) => st.rows > 0 && filters.forall(SnapStats.mayMatch(st, _))
+        })
       })
     }
-    SnapTable.recordDelete(tname, files.size, affected.size)
+    def liveDvs(s: ManifestSink.Snapshot): Map[String, Seq[(String, Long)]] =
+      wapBranch.fold(s.dvs)(s.branchDvs)
+    val (listed, affected) = candidates(snap)
+    if (listed == 0) return
+    SnapTable.recordDelete(tname, listed, affected.size)
     if (affected.isEmpty) return
     val pred = filters.map(toColumn).reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
     if (deleteMode == "mor") {
-      // MERGE-ON-READ (round 15): write the matching ROW POSITIONS to
-      // small dv files — O(deleted rows), not O(touched files) — and
-      // publish them as one `#dv` epoch. No data file moves; readers
-      // apply the positions; a later rewrite/compaction resolves them.
-      // The commit carries the dv state this job computed against
-      // (round 16): a racing dv that landed in between trips the
-      // claim-time dv-vs-dv fence — the loser's positions could
-      // overlap the winner's and overcount — and this loop then
-      // RE-RESOLVES from the fresh log (a racing rewrite may also
-      // have moved rows to new files) and retries: concurrent trickle
-      // deletes serialize instead of failing the statement.
+      // MERGE-ON-READ: write the matching ROW POSITIONS to small dv
+      // files — O(deleted rows), not O(touched files) — and publish them
+      // as one `#dv` epoch. No data file moves; readers apply the
+      // positions; a later rewrite/compaction resolves them. The commit
+      // carries the dv state this job computed against: a racing dv
+      // that landed in between trips the claim-time dv-vs-dv fence — the
+      // loser's positions could overlap the winner's and overcount — and
+      // this loop then RE-RESOLVES against a fresh snapshot (a racing
+      // rewrite may also have moved rows to new files) and retries:
+      // concurrent trickle deletes serialize instead of failing the
+      // statement.
       var attempt = 0
       var pending = affected
+      var dvMap = liveDvs(snap)
       var committed = false
-      def liveDvs(): Map[String, Seq[(String, Long)]] = wapBranch match {
-        case Some(b) => ManifestSink.branchDeleteVectors(dir, b)
-        case None => ManifestSink.deleteVectors(dir)
-      }
       while (!committed && pending.nonEmpty) {
         attempt += 1
-        val dvMap = liveDvs()
         val records = DvOps.writeDeleteVectors(spark, tschema, dir,
           pending, pred, dvMap)
         if (records.isEmpty) committed = true
@@ -1410,7 +1442,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
             n -> dvMap.getOrElse(n, Seq.empty).map(_._1).toSet).toMap
           try {
             ManifestSink.commitDvEpoch(dir, tschema.toDDL, records,
-              tblCompactInterval, Some(observed), forBranch = wapBranch)
+              snap.compactInterval, Some(observed), forBranch = wapBranch)
             committed = true
           } catch {
             case e: ManifestConflictException =>
@@ -1424,22 +1456,9 @@ private[sources] class SnapTable(tname: String, val dir: String,
               // re-resolve against the current snapshot: drop targets
               // a racing rewrite removed, pick up the files that now
               // hold their rows
-              val freshFiles = wapBranch match {
-                case Some(b) => ManifestSink.branchFiles(dir, b)
-                case None => ManifestSink.committedFiles(dir)
-              }
-              val freshStats = ManifestSink.fileStats(dir)
-              val freshParts = ManifestSink.filePartitions(dir)
-              pending = freshFiles.filter { f =>
-                val n = java.nio.file.Paths.get(f).getFileName.toString
-                val partOk = freshParts.get(n).forall(t =>
-                  filters.forall(book.mayMatch(t, _)))
-                partOk && (freshStats.get(n) match {
-                  case None => true
-                  case Some(st) => st.rows > 0 &&
-                    filters.forall(SnapStats.mayMatch(st, _))
-                })
-              }
+              val fresh = ManifestSink.snapshot(dir)
+              pending = candidates(fresh)._2
+              dvMap = liveDvs(fresh)
           }
         }
       }
@@ -1451,7 +1470,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
     // aborts if a new dv landed on a rewritten file since this pin
     val affectedNames = affected
       .map(f => java.nio.file.Paths.get(f).getFileName.toString)
-    val dvMap = ManifestSink.deleteVectors(dir)
+    val dvMap = snap.dvs
     val consumed = affectedNames.map(n =>
       n -> dvMap.getOrElse(n, Seq.empty).map(_._1).toSet).toMap
     val survivors = DvOps.readExcludingDeleted(spark, tschema, dir, affected,
@@ -1460,7 +1479,7 @@ private[sources] class SnapTable(tname: String, val dir: String,
         pred <=> org.apache.spark.sql.functions.lit(true)))
     survivors.write.format("graft.sources.ManifestSink")
       .option("path", dir)
-      .option("compactInterval", tblCompactInterval.toString)
+      .option("compactInterval", snap.compactInterval.toString)
       .option("removeFiles", affectedNames.mkString(","))
       .option("consumedDvs", ManifestSink.encodeConsumedDvs(consumed))
       .option("graft.op", "delete") // COW row-level DELETE: the change
@@ -1478,7 +1497,15 @@ private[sources] class SnapTable(tname: String, val dir: String,
       }
     val upTo = longOpt("asOfVersion").orElse(asOf)
     val since = longOpt("sinceVersion")
-    /** Plan-input selection (round 16): a CURRENT-snapshot read of a
+    // ONE snapshot serves this scan: its file list, skipping index, dvs,
+    // row ids, equality deletes and ndv estimates are one version
+    ManifestSink.read(dir)(scanOf(_, options, upTo, since))
+  }
+
+  private def scanOf(snap: ManifestSink.Snapshot,
+      options: CaseInsensitiveStringMap, upTo: Option[Long],
+      since: Option[Long]): org.apache.spark.sql.connector.read.ScanBuilder = {
+    /** Plan-input selection: a CURRENT-snapshot read of a
       * table whose checkpoint crosses the distributed threshold plans
       * through a Spark job over the parquet checkpoint (driver cost
       * O(tail + kept), the Iceberg distributed-manifest shape);
@@ -1490,41 +1517,35 @@ private[sources] class SnapTable(tname: String, val dir: String,
         // live delete vectors, version-aligned with the file list: a
         // VERSION AS OF before the dv epoch serves the rows un-deleted;
         // a BRANCH read applies main's vectors PLUS the staged ones
-        // (round 18: staged row-level writes audit on the branch face)
+        // (staged row-level writes audit on the branch face)
         val dvs = (upTo, branch) match {
-          case (Some(v), _) => ManifestSink.deleteVectorsAsOf(dir, v)
-          case (None, Some(b)) => ManifestSink.branchDeleteVectors(dir, b)
-          case _ => ManifestSink.deleteVectors(dir)
+          case (Some(v), _) => snap.dvsAsOf(v)
+          case (None, Some(b)) => snap.branchDvs(b)
+          case _ => snap.dvs
         }
-        EagerPlanInput(fs, ManifestSink.fileStats(dir),
-          ManifestSink.partitionSpecs(dir),
-          ManifestSink.filePartitions(dir),
+        EagerPlanInput(fs, snap.stats, snap.specs, snap.parts,
           dvs.map { case (f, list) =>
             f -> list.map(e => new java.io.File(new java.io.File(dir, "data"),
               e._1).toString) })
       }
       if (branch.isDefined)
-        return eager(ManifestSink.branchFiles(dir, branch.get))
+        return eager(snap.branchFiles(branch.get))
       (since, upTo) match {
-        case (Some(s), Some(v)) =>
-          eager(ManifestSink.committedFilesBetween(dir, s, v))
-        case (Some(s), None) => eager(
-          ManifestSink.committedFilesBetween(dir, s,
-            ManifestSink.newestVersion(dir)))
-        case (None, Some(v)) => eager(ManifestSink.committedFilesAsOf(dir, v))
+        case (Some(s), Some(v)) => eager(snap.filesBetween(s, v))
+        case (Some(s), None) => eager(snap.filesBetween(s, snap.newestVersion))
+        case (None, Some(v)) => eager(snap.filesAsOf(v))
         case (None, None) =>
           val threshold = SparkSession.active.conf
             .getOption("spark.graft.plan.distributedThreshold")
             .flatMap(_.toLongOption).getOrElse(100000L)
-          ManifestSink.planningCheckpoint(java.nio.file.Paths.get(dir)) match {
-            case Some((h, p, n)) if n >= threshold =>
-              CheckpointPlanInput(dir, h, p.toString, n,
-                ManifestSink.partitionSpecs(dir))
-            case _ => eager(ManifestSink.committedFiles(dir))
+          snap.checkpoint match {
+            case Some((_, p, n)) if n >= threshold =>
+              CheckpointPlanInput(snap, p, n, snap.specs)
+            case _ => eager(snap.files)
           }
       }
     }
-    // SCHEMA-IN-LOG verification with ADDITIVE EVOLUTION (round 13):
+    // SCHEMA-IN-LOG verification with ADDITIVE EVOLUTION:
     // every epoch records the DDL it was written under, and the
     // declared schema must CONTAIN every recorded field (case-
     // insensitive name, equal type — nullability aside). Declared
@@ -1536,18 +1557,18 @@ private[sources] class SnapTable(tname: String, val dir: String,
     // silently drop or reinterpret committed data. Logs predating the
     // records (or hand-built fixtures) carry none and are served on
     // the conf's authority, the pre-r12 contract. ONE shared check
-    // ([[ManifestSink.verifyDeclaredSchema]], round 14) guards this
+    // ([[ManifestSink.Snapshot.verifyDeclared]]) guards this
     // read face and every copy-on-write REWRITE face (DELETE,
     // compaction, MERGE) identically.
-    ManifestSink.verifyDeclaredSchema(dir, s"graft.snap.$tname", tschema)
-    new SnapScanBuilder(tname, planInput(), tschema, options,
-      rowIdBases = () => ManifestSink.rowIdBases(dir),
+    snap.verifyDeclared(s"graft.snap.$tname", tschema)
+    new SnapScanBuilder(tname, planInput(), cols, options,
+      rowIdBases = () => snap.rowids,
       // ndv estimates describe the CURRENT snapshot — versioned and
       // windowed reads keep default sizing
       ndvState = () =>
         if (since.isDefined || upTo.isDefined || branch.isDefined)
           Map.empty
-        else ManifestSink.mergedNdv(dir),
+        else snap.ndv,
       eqState = () => {
         // incremental windows never need application: the window
         // refuses to cross an upsert epoch, and files of a window
@@ -1555,16 +1576,16 @@ private[sources] class SnapTable(tname: String, val dir: String,
         val eq =
           if (since.isDefined) Seq.empty
           else upTo match {
-            case Some(v) => ManifestSink.eqDeletesAsOf(dir, v)
-            case None => ManifestSink.equalityDeletes(dir)
+            case Some(v) => snap.eqDeletesAsOf(v)
+            case None => snap.eqDeletes
           }
         if (eq.isEmpty) (Seq.empty, Map.empty)
         else (eq.map(e => (e.epoch,
           new java.io.File(new java.io.File(dir, "data"), e.file).toString,
-          e.cols)), ManifestSink.looseAddEpochs(dir))
+          e.cols)), snap.looseAddEpochs)
       },
       streamSource = Some(readSchema => {
-        // STREAMING the catalog table (round 13): `readStream.table
+        // STREAMING the catalog table: `readStream.table
         // ("graft.snap.t")` tails the SAME epoch log the path-based
         // format face tails — one catalog name serves the current
         // snapshot, time travel, incremental windows AND the stream.
@@ -1584,24 +1605,15 @@ private[sources] class SnapTable(tname: String, val dir: String,
         // the tail reader resolves columns BY NAME, so a pruned read
         // schema simply reads fewer columns per file (under a column
         // mapping the lookup names are the PHYSICAL ones)
-        new ManifestMicroBatchStream(dir,
-          {
-            val prs = ManifestSink.physicalizeStruct(readSchema, tschema,
-              colmap.map { case (p, l) => p.toLowerCase -> l })
-            prs.fields.map(_.name)
-          },
-          {
-            val prs = ManifestSink.physicalizeStruct(readSchema, tschema,
-              colmap.map { case (p, l) => p.toLowerCase -> l })
-            prs.fields.map(f =>
-              graft.sources.ManifestSink.typeTokOf(f.dataType))
-          }, maxEpochs,
+        val prs = cols.physicalize(readSchema)
+        new ManifestMicroBatchStream(dir, prs.fields.map(_.name),
+          prs.fields.map(f => ManifestSink.typeTokOf(f.dataType)), maxEpochs,
           ManifestSink.onChangeOf(options))
-      }), colmap = colmap)
+      }))
   }
 }
 
-/** What a RENAMEd-away table name resolves to (round 16): a stub that
+/** What a RENAMEd-away table name resolves to: a stub that
   * lets `DROP TABLE` reclaim the tombstone while every read or write
   * path refuses with the new name spelled out. */
 private[sources] class RenamedTombstoneTable(tname: String, target: String)
@@ -1623,7 +1635,7 @@ private[sources] class RenamedTombstoneTable(tname: String, target: String)
 }
 
 /** A manifest table's epoch log surfaced as a queryable relation
-  * (round 15, the Iceberg metadata-table shape):
+  * (the Iceberg metadata-table shape):
   *
   *  - `graft.snap.t.files` — one row per committed data file of the
   *    CURRENT snapshot: (file, rows, bytes). `rows` comes from the
@@ -1696,14 +1708,19 @@ private[sources] object SnapMetaTable {
   val Names: Set[String] = Set("files", "history", "tags", "partitions",
     "changes", "branches", "stats")
 
+  /** The rows of metadata table `meta`, all derived from ONE snapshot —
+    * a commit landing mid-read can never tear them across versions. */
   private[sources] def rowsOf(dir: String, meta: String)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] =
+    ManifestSink.read(dir)(rowsOf(_, meta))
+
+  private def rowsOf(snap: ManifestSink.Snapshot, meta: String)
       : Array[org.apache.spark.sql.catalyst.InternalRow] = meta match {
     case "stats" =>
-      // the merged `#ndv` face (round 19): per-column distinct-count
-      // estimates of the LIVE snapshot, served under LOGICAL names
-      val colmap = ManifestSink.columnMapping(dir)
-        .map { case (pk, l) => pk.toLowerCase -> l }
-      ManifestSink.mergedNdv(dir).toSeq
+      // the merged `#ndv` face: per-column distinct-count estimates of
+      // the LIVE snapshot, served under LOGICAL names
+      val colmap = snap.colmap.map { case (pk, l) => pk.toLowerCase -> l }
+      snap.ndv.toSeq
         .filterNot { case (c, _) =>
           colmap.get(c.toLowerCase).contains(ManifestSink.DroppedColumn) }
         .map { case (c, nv) => (colmap.getOrElse(c.toLowerCase, c), nv) }
@@ -1713,9 +1730,9 @@ private[sources] object SnapMetaTable {
             org.apache.spark.unsafe.types.UTF8String.fromString(c), n, ndv)
         }.toArray
     case "files" =>
-      val stats = ManifestSink.fileStats(dir)
-      val dvs = ManifestSink.deleteVectors(dir)
-      ManifestSink.committedFiles(dir).map { f =>
+      val stats = snap.stats
+      val dvs = snap.dvs
+      snap.files.map { f =>
         val p = java.nio.file.Paths.get(f)
         val name = p.getFileName.toString
         val dvList = dvs.getOrElse(name, Seq.empty)
@@ -1727,22 +1744,22 @@ private[sources] object SnapMetaTable {
           dvList.size.toLong, dvList.map(_._2).sum)
       }.toArray
     case "history" =>
-      ManifestSink.logHistory(dir).map { case (v, kind, added, removed, ms) =>
+      snap.history.map { case (v, kind, added, removed, ms) =>
         org.apache.spark.sql.catalyst.InternalRow(
           v, ms * 1000L, // millis → micros (TimestampType payload)
           org.apache.spark.unsafe.types.UTF8String.fromString(kind),
           added, removed)
       }.toArray
     case "tags" =>
-      ManifestSink.tableTags(dir).toSeq.sortBy(_._1).map { case (n, v) =>
+      snap.tags.toSeq.sortBy(_._1).map { case (n, v) =>
         org.apache.spark.sql.catalyst.InternalRow(
           org.apache.spark.unsafe.types.UTF8String.fromString(n), v)
       }.toArray
     case "branches" =>
       // one row per live WAP ref with its staged footprint — what an
       // operator audits before deciding to publish or abandon
-      val staged = ManifestSink.stagedFootprint(dir)
-      ManifestSink.tableBranches(dir).toSeq.sortBy(_._1).map { case (n, v) =>
+      val staged = snap.stagedFootprint
+      snap.branches.toSeq.sortBy(_._1).map { case (n, v) =>
         val (ne, nf) = staged.getOrElse(n, (0L, 0L))
         org.apache.spark.sql.catalyst.InternalRow(
           org.apache.spark.unsafe.types.UTF8String.fromString(n), v, ne, nf)
@@ -1752,10 +1769,10 @@ private[sources] object SnapMetaTable {
       // RIGHT NOW, decoded human-readable (the Iceberg .partitions
       // shape) — after a spec evolution the era mix is visible here.
       // Files without a tuple group under a NULL partition.
-      val book = ManifestSink.partitionSpecs(dir)
-      val parts = ManifestSink.filePartitions(dir)
-      val stats = ManifestSink.fileStats(dir)
-      val dvs = ManifestSink.deleteVectors(dir)
+      val book = snap.specs
+      val parts = snap.parts
+      val stats = snap.stats
+      val dvs = snap.dvs
       def render(t: PartTuple): String = book.specOf(t) match {
         case Some(spec) if spec.size == t.toks.size =>
           spec.zip(t.toks).map {
@@ -1771,8 +1788,7 @@ private[sources] object SnapMetaTable {
           }.mkString("/")
         case _ => s"spec-${t.specId}:${t.toks.mkString(",")}" // unknown era
       }
-      ManifestSink.committedFiles(dir)
-        .map(f => java.nio.file.Paths.get(f).getFileName.toString)
+      snap.names
         .groupBy(n => parts.get(n))
         .toSeq
         .map { case (tup, names) =>
@@ -1798,7 +1814,7 @@ private[graft] object SnapTable {
   /** (filesListed, filesPlanned) of the most recent scan build PER
     * TABLE in this JVM — observability for the file-skipping contract.
     * SnapshotSpec pins that a filtered read plans strictly fewer files
-    * than the snapshot lists. Keyed by table name (advisor r12: one
+    * than the snapshot lists. Keyed by table name (one
     * JVM-global slot raced under concurrent snap scans, and an
     * asserting test could silently observe another table's prune). */
   private val prunes =
@@ -1948,7 +1964,7 @@ private[sources] object SnapStats {
     // provably all-null in this file admits no row regardless of bounds
     f match {
       // equality/IN additionally probe the file's `#bloom` filter
-      // (round 18) once the min/max envelope passes — the point-read
+      // once the min/max envelope passes — the point-read
       // shape min/max cannot prune under near-uniform per-file ranges
       case EqualTo(c, v) => !knownAllNull(st, c) &&
         cmp(c, v)((mn, mx, x) => x >= mn && x <= mx)(sEq) &&
@@ -2008,7 +2024,7 @@ private[sources] object SnapStats {
   * re-applies every predicate post-scan: file skipping is a strict
   * optimization, never a correctness dependency — a file with no
   * recorded stats simply cannot be skipped. */
-/** How a snap scan resolves its committed-file universe (round 16):
+/** How a snap scan resolves its committed-file universe:
   * EAGER carries the driver-derived maps (versioned reads, small
   * tables, logs without a checkpoint); CHECKPOINT defers to the
   * distributed planner over the compaction-time parquet checkpoint —
@@ -2019,19 +2035,18 @@ private[sources] case class EagerPlanInput(files: Seq[String],
     stats: Map[String, FileStat], book: SpecBook,
     parts: Map[String, PartTuple],
     dvs: Map[String, Seq[String]]) extends SnapPlanInput
-private[sources] case class CheckpointPlanInput(dir: String, horizon: Long,
-    parquet: String, rows: Long, book: SpecBook) extends SnapPlanInput
+private[sources] case class CheckpointPlanInput(snap: ManifestSink.Snapshot,
+    parquet: java.nio.file.Path, rows: Long, book: SpecBook) extends SnapPlanInput
 
 private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
-    tschema: org.apache.spark.sql.types.StructType,
+    cols: ColumnMap,
     options: CaseInsensitiveStringMap,
     streamSource: Option[org.apache.spark.sql.types.StructType =>
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None,
-    colmap: Map[String, String] = Map.empty,
-    /** file → `#rowid` base (round 19), consulted only by the
+    /** file → `#rowid` base, consulted only by the
       * metadata-column scan path when `_row_id` is requested. */
     rowIdBases: () => Map[String, Long] = () => Map.empty,
-    /** LIVE equality deletes (round 19): ((epoch, ABSOLUTE key-file
+    /** LIVE equality deletes: ((epoch, ABSOLUTE key-file
       * path, physical key cols)…, looseAddEpochs) — when non-empty,
       * the scan routes through the group reader and each planned file
       * carries its APPLICABLE key files (add-epoch < delete-epoch;
@@ -2039,7 +2054,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
       * take every delete). */
     eqState: () => (Seq[(Long, String, Seq[String])], Map[String, Long]) =
       () => (Seq.empty, Map.empty),
-    /** Merged `#ndv` estimates (round 19): physical column → (files
+    /** Merged `#ndv` estimates: physical column → (files
       * sketched, distinct estimate) — when non-empty, the scan
       * reports manifest statistics with equality predicates scaled by
       * 1/ndv. Empty for ndv-less tables (zero plan change). */
@@ -2049,61 +2064,13 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
   import org.apache.spark.sql.sources._
 
-  // logical↔physical boundary (round 16; empty maps = identity, the
-  // pre-rename fast path): pushed predicates and pruned columns arrive
-  // LOGICAL and are translated once here; every pruning face, the
-  // parquet delegate and the by-name reader operate PHYSICAL; the
-  // served readSchema translates back so output attribute names stay
-  // logical while rows pass through positionally
-  private val physOfLogical: Map[String, String] =
-    colmap.collect { case (p, l) if l != ManifestSink.DroppedColumn =>
-      l.toLowerCase -> p }
-  private val logicalOfPhys: Map[String, String] =
-    colmap.map { case (p, l) => p.toLowerCase -> l }
-  private def physName(c: String): String =
-    physOfLogical.getOrElse(c.toLowerCase, c)
-  private def isDropped(phys: String): Boolean =
-    logicalOfPhys.get(phys.toLowerCase)
-      .contains(ManifestSink.DroppedColumn)
-  private def logicalize(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    ManifestSink.logicalizeStruct(st, logicalOfPhys)
-  private def physicalize(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    ManifestSink.physicalizeStruct(st, tschema, logicalOfPhys)
-  /** The physical schema MINUS dropped columns (top-level AND nested,
-    * round 17) — what the parquet delegate (and any full-width read)
-    * is built with, so positions align with the logical schema. */
-  private def servedPhys(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    dropDropped(st, "")
-  private def dropDropped(st: org.apache.spark.sql.types.StructType,
-      prefix: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      st.fields.filterNot(f => logicalOfPhys
-          .get((prefix + f.name).toLowerCase)
-          .contains(ManifestSink.DroppedColumn))
-        .map { f =>
-          f.dataType match {
-            case s: org.apache.spark.sql.types.StructType =>
-              f.copy(dataType = dropDropped(s, prefix + f.name + "."))
-            case a: org.apache.spark.sql.types.ArrayType =>
-              a.elementType match {
-                case es: org.apache.spark.sql.types.StructType =>
-                  f.copy(dataType = a.copy(elementType =
-                    dropDropped(es, prefix + f.name + ".element.")))
-                case _ => f
-              }
-            case m: org.apache.spark.sql.types.MapType =>
-              m.valueType match {
-                case vs: org.apache.spark.sql.types.StructType =>
-                  f.copy(dataType = m.copy(valueType =
-                    dropDropped(vs, prefix + f.name + ".value.")))
-                case _ => f
-              }
-            case _ => f
-          }
-        })
+  // logical↔physical boundary (empty = identity): pushed predicates
+  // and pruned columns arrive LOGICAL and are translated once here;
+  // every pruning face, the parquet delegate and the by-name reader
+  // operate PHYSICAL; the served readSchema translates back so output
+  // attribute names stay logical while rows pass through positionally
+  private val physOfLogical = cols.physOfLogical
+  private def tschema = cols.phys
 
   private var catalystFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Seq.empty
   private var filters: Array[Filter] = Array.empty
@@ -2131,7 +2098,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     required = Some(requiredSchema)
 
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    // PARTITION pruning first (round 15: exact tuples, cheap), then
+    // PARTITION pruning first (exact tuples, cheap), then
     // the per-file #stats envelope test — the Iceberg planning order.
     // Both planners apply the SAME mayMatch model; only WHERE it runs
     // differs (driver walk vs a job over the checkpoint).
@@ -2149,8 +2116,8 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
         }
         (k, e.dvs, e.files.size)
       case c: CheckpointPlanInput =>
-        ManifestSink.distributedPlan(SparkSession.active, c.dir, c.horizon,
-          java.nio.file.Paths.get(c.parquet), c.rows, filters.toSeq, c.book)
+        c.snap.distributedPlan(SparkSession.active, c.parquet, c.rows,
+          filters.toSeq, c.book)
     }
     SnapTable.recordPrune(tname, listed, kept.size)
     // a read that references the `_file`/`_pos` metadata columns
@@ -2164,7 +2131,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
       f.name.equalsIgnoreCase(SnapFileColumn.name) ||
         f.name.equalsIgnoreCase(SnapPosColumn.name) ||
         f.name.equalsIgnoreCase(SnapRowIdColumn.name)))
-    // MERGE-ON-READ deletes (round 15): a kept file with live position
+    // MERGE-ON-READ deletes: a kept file with live position
     // deletes cannot ride the parquet delegate (it would serve the
     // deleted rows) — the sink's own reader applies the dv skip. The
     // table trades the vectorized reader WHILE dvs are live; a
@@ -2172,7 +2139,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     val dvName = (f: String) =>
       java.nio.file.Paths.get(f).getFileName.toString
     val hasDvs = kept.exists(f => dvs.get(dvName(f)).exists(_.nonEmpty))
-    // EQUALITY DELETES (round 19): live `#eqdel` records force the
+    // EQUALITY DELETES: live `#eqdel` records force the
     // group-reader path — the parquet delegate would serve the
     // deleted keys. compact_data is the resolution that returns the
     // table to the vectorized delegate.
@@ -2181,7 +2148,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     if (wantsFile || hasDvs || hasEq) {
       // readSchema stays LOGICAL; the by-name reader looks files up
       // under the PHYSICAL names (rows are positional)
-      val rs = required.getOrElse(logicalize(tschema))
+      val rs = required.getOrElse(cols.logicalize(tschema))
       return new org.apache.spark.sql.connector.read.Scan
           with org.apache.spark.sql.connector.read.Batch {
         override def readSchema(): org.apache.spark.sql.types.StructType = rs
@@ -2211,9 +2178,9 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
             : org.apache.spark.sql.connector.read.PartitionReaderFactory =
           {
             // physical lookup names AND physical inner struct names
-            // (round 17) — the by-name group reader resolves nested
+            // — the by-name group reader resolves nested
             // fields against the file's physical layout
-            val prs = physicalize(rs)
+            val prs = cols.physicalize(rs)
             ManifestReadFactory(prs.fields.map(_.name),
               prs.fields.map(f =>
                 graft.sources.ManifestSink.typeTokOf(f.dataType)))
@@ -2230,7 +2197,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     }
     // JSON-encode the path list ("paths" is the multi-path option every
     // file DSv2 source takes); manifest file names are uuid-safe. The
-    // delegate is the builtin PARQUET DSv2 (round 13 — the sink's data
+    // delegate is the builtin PARQUET DSv2 (the sink's data
     // plane is parquet), so a snap read gets the vectorized reader,
     // within-file column pruning and row-group stats on top of the
     // manifest-level #stats skipping above
@@ -2238,25 +2205,25 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
       .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
     val delegate = new ParquetDataSourceV2()
       .getTable(new CaseInsensitiveStringMap(
-        Map("paths" -> paths).asJava), servedPhys(tschema))
+        Map("paths" -> paths).asJava), cols.served)
       .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
       .newScanBuilder(options)
     org.apache.spark.sql.graftbridge.Bridge
       .pushCatalystFilters(delegate, catalystFilters)
     delegate match {
       case p: org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns =>
-        required.foreach(r => p.pruneColumns(physicalize(r)))
+        required.foreach(r => p.pruneColumns(cols.physicalize(r)))
       case _ =>
     }
     val dscan = delegate.build()
     val ndv = ndvState()
-    if (ndv.isEmpty && streamSource.isEmpty && colmap.isEmpty) dscan
+    if (ndv.isEmpty && streamSource.isEmpty && cols.isEmpty) dscan
     else
         // batch reads delegate untouched (modulo readSchema renamed
         // physical→logical under a column mapping — rows are
         // positional); a streaming read swaps in the epoch-log tail
         // (the same MicroBatchStream the path face uses). With `#ndv`
-        // records (round 19) the scan additionally REPORTS manifest
+        // records the scan additionally REPORTS manifest
         // statistics: row count from `#stats`, equality/IN predicates
         // scaled by 1/ndv — which is what lets Spark broadcast the
         // filtered side of a join that byte-size-only metadata would
@@ -2264,14 +2231,14 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
         new org.apache.spark.sql.connector.read.Scan
             with org.apache.spark.sql.connector.read.SupportsReportStatistics {
           override def readSchema(): org.apache.spark.sql.types.StructType =
-            logicalize(dscan.readSchema())
+            cols.logicalize(dscan.readSchema())
           override def description(): String = dscan.description()
           override def toBatch: org.apache.spark.sql.connector.read.Batch =
             dscan.toBatch
           override def toMicroBatchStream(checkpointLocation: String)
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
             streamSource match {
-              case Some(mk) => mk(logicalize(dscan.readSchema()))
+              case Some(mk) => mk(cols.logicalize(dscan.readSchema()))
               case None => throw new UnsupportedOperationException(
                 s"graft.snap.$tname: this face does not stream")
             }

@@ -85,7 +85,7 @@ class ManifestSink extends TableProvider {
     // the table's partition spec rides in the log, so even a path-based
     // append (or a COW rewrite through the DataFrameWriter face) fans
     // out and records `#part` tuples for the files it lands
-    val book = ManifestSink.partitionSpecs(path)
+    val book = ManifestSink.snapshot(path).specs
     ManifestTable(path, schema, interval, removes, book.current,
       Option(opts.get("consumedDvs")).map(ManifestSink.decodeConsumedDvs),
       specId = book.currentId,
@@ -117,6 +117,30 @@ class ManifestConflictException(val conflictingFiles: Seq[String], where: String
         "landed first; this operation committed nothing — re-plan against " +
         "the current snapshot and retry")
 
+/** The manifest log's reader and committer.
+  *
+  * SNAPSHOT: every read goes through ONE [[ManifestSink.Snapshot]] per
+  * table version — the log directory listed once, split into the newest
+  * compact file and the loose epoch tail, with every reader facet
+  * answered from that listing.
+  *
+  *  - LIFETIME: a snapshot never outlives the call that took it — a
+  *    scan build, a write, a DELETE attempt, a metadata-table read, one
+  *    claim attempt — so it never spans a commit. The one exception is
+  *    the catalog's load-time snapshot, which serves only table METADATA
+  *    (schema, properties, partitioning, column mapping). Snapshots are
+  *    not serializable: a closure shipped to executors carries the
+  *    facets it needs, never the snapshot. Streams tail the live log.
+  *  - VANISH: a compaction sweep may delete a listed fragment before a
+  *    lazy facet reads it. The facet then throws, and [[read]] re-runs
+  *    the WHOLE read against a fresh snapshot; a facet never re-lists on
+  *    its own, which would mix two versions.
+  *  - SIDECAR: the table-level facets (properties, schemas, specs,
+  *    column mapping, tags, branches) come from the checkpoint META
+  *    sidecar plus the tail when a sidecar matches the horizon — O(tail)
+  *    reads, the O(files) compact text never parsed. Facets are lazy:
+  *    taking a snapshot costs one listing, one stat per live fragment
+  *    and the (cached) decode of the loose tail. */
 object ManifestSink {
   /** Compact once this many LOOSE epoch manifests accumulate (table
     * option `compactInterval`). Keeps every snapshot derivation at
@@ -190,11 +214,12 @@ object ManifestSink {
   /** Parses performed (cache misses) — observability for the spec. */
   private[graft] val fragmentParses = new java.util.concurrent.atomic.AtomicLong
 
+  private type Attrs = java.nio.file.attribute.BasicFileAttributes
+  private def attrsOf(p: Path): Attrs = Files.readAttributes(p, classOf[Attrs])
+
   /** The decoded records of one fragment, in line order; lines that do
     * not decode (unknown or malformed `#` records) are skipped. */
-  private def records(p: Path): Seq[LogRecord] = {
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
+  private def records(p: Path, attrs: Attrs): Seq[LogRecord] = {
     val key = p.toAbsolutePath.toString
     val cached = fragmentCache.get(key)
     if (cached != null && cached._1 == attrs.fileKey &&
@@ -213,10 +238,6 @@ object ManifestSink {
     }
   }
 
-  /** Committed file NAMES in a fragment. */
-  private def readData(p: Path): Seq[String] =
-    records(p).collect { case Data(n) => n }
-
   /** DERIVED SNAPSHOT STATE, memoized per table on a fragment-set
     * fingerprint: every scan build needs the committed union, the
     * stats/partition/dv maps and the properties; one [[Replay]] builds
@@ -225,20 +246,26 @@ object ManifestSink {
     * identity the record cache trusts, so a commit, sweep, or
     * delete-recreate invalidates it exactly when it invalidates the
     * records. A fragment with a null fileKey is never fingerprintable —
-    * such tables simply rebuild per call. Per-plan driver CPU is
+    * such tables simply rebuild per snapshot. Per-plan driver CPU is
     * O(fragments) stat calls + map reuse — the "O(tail), not O(files)"
     * planning contract. */
-  private case class PlanState(
-      files: Seq[String], // committed file NAMES, union order
-      stats: Map[String, FileStat],
-      parts: Map[String, PartTuple],
-      dvs: Map[String, Seq[(String, Long)]],
-      meta: TableMeta,
+  private final class PlanState(
+      val files: Seq[String], // committed file NAMES, union order
+      val stats: Map[String, FileStat],
+      val parts: Map[String, PartTuple],
+      val dvs: Map[String, Seq[(String, Long)]],
+      val meta: TableMeta,
       /** file → base row id: collected WITHOUT remove-drops — bases are
         * immutable and names never reused, and a CDC window's removed
         * files need their bases after the remove. Records die only at
         * compaction, below every readable window. */
-      rowids: Map[String, Long])
+      val rowids: Map[String, Long],
+      mergeNdv: () => Map[String, (Long, Long)]) {
+    /** MERGED per-column NDV ([[NdvSketch]]), derived on first use and
+      * memoized with the rest of the state: physical column → (files
+      * sketched, estimate). */
+    lazy val ndv: Map[String, (Long, Long)] = mergeNdv()
+  }
 
   /** The table-level records of a replay. */
   private case class TableMeta(props: Map[String, String],
@@ -262,92 +289,26 @@ object ManifestSink {
       n -> blooms.get(n).fold(st)(b => st.copy(blooms = b)) }.toMap,
       r.parts.iterator.filterNot(e => r.partConflicts(e._1)).toMap)
 
+  private type Fingerprint = Seq[(String, Object, Long, java.nio.file.attribute.FileTime)]
   private val PlanCacheCap = 64
-  private val planCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Object, Long, java.nio.file.attribute.FileTime)],
-      PlanState)]()
+  private val planCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, PlanState)]()
 
   /** Default cap on driver-RESIDENT bloom payload bytes per table:
     * ~1500 default-size (44 KiB b64) filters. Overridable via the
     * `bloom.resident.bytes` table property. */
   private[graft] val DefaultResidentBloomBytes: Long = 64L << 20
 
-  /** Total base64 bloom payload bytes the table's cached plan state
-    * holds — observability for the residency cap (LakeLadder pins it
-    * flat as the bloomed-file count grows). */
-  private[graft] def residentBloomBytes(path: String): Long =
-    planState(Paths.get(path)).stats.valuesIterator
-      .flatMap(_.blooms.valuesIterator).map(_.length.toLong).sum
   /** Full snapshot-state derivations performed — observability: a
     * re-plan of an unchanged table must not increment this. */
   private[graft] val planDerivations = new java.util.concurrent.atomic.AtomicLong
+  /** Log-directory listings performed — observability: every
+    * [[Snapshot]] lists the log once, so a warm read of an unchanged
+    * table lists it once per snapshot it takes. */
+  private[graft] val logListings = new java.util.concurrent.atomic.AtomicLong
 
-  private def planState(dir: Path): PlanState = retryVanish() {
-    val frags = manifestFragments(dir)
-    val fp: Option[Seq[(String, Object, Long, java.nio.file.attribute.FileTime)]] =
-      try {
-        val entries = frags.map { p =>
-          val a = Files.readAttributes(p,
-            classOf[java.nio.file.attribute.BasicFileAttributes])
-          (p.toAbsolutePath.toString, a.fileKey, a.size, a.lastModifiedTime)
-        }
-        if (entries.exists(_._2 == null)) None else Some(entries)
-      } catch { case _: IOException => None }
-    val key = dir.toAbsolutePath.toString
-    fp.flatMap { f =>
-      Option(planCache.get(key)).collect { case (k, st) if k == f => st }
-    }.getOrElse {
-      planDerivations.incrementAndGet()
-      // BRANCH-STAGED epochs are invisible to the main snapshot: their
-      // whole content is skipped until published
-      val r = replay(frags.filter(branchOf(_).isEmpty).map(records))
-      // BLOOM RESIDENCY CAP: the cached planState would otherwise hold
-      // every file's base64 payload — at the default 2^18 bits (~44 KiB
-      // b64) × 10⁵–10⁶ files, GBs of driver heap for a table that still
-      // plans via the driver walk. `bloom.resident.bytes` (table
-      // property; default 64 MiB) bounds it: the NEWEST files' payloads
-      // stay resident up to the cap — the hot probe set of an
-      // append-mostly lake — and older files fall back to min/max-only
-      // pruning (blooms are false-positives-only, so eviction costs
-      // pruning, never correctness). The distributed checkpoint planner
-      // is unaffected: it probes each file's record from the
-      // checkpoint's own bloom column in tasks.
-      val bloomCap = r.props.get("bloom.resident.bytes")
-        .flatMap(_.toLongOption).getOrElse(DefaultResidentBloomBytes)
-      val residentBlooms: scala.collection.Map[String, Map[String, String]] = {
-        val keep = scala.collection.mutable.HashMap[String, Map[String, String]]()
-        var budget = bloomCap
-        val it = r.blooms.toSeq.reverseIterator // newest fragment order last
-        var full = false
-        while (it.hasNext && !full) {
-          val (f, m) = it.next()
-          val sz = m.valuesIterator.map(_.length.toLong).sum
-          if (sz <= budget) { budget -= sz; keep(f) = m }
-          else full = true // strict newest-suffix: predictable residency
-        }
-        keep
-      }
-      val (statMap, partMap) = skippingIndex(r, residentBlooms)
-      val st = PlanState(r.files.toSeq, statMap, partMap, r.dvs.toMap,
-        TableMeta.of(r), r.rowids.toMap)
-      fp.foreach { f =>
-        if (planCache.size >= PlanCacheCap) planCache.clear()
-        planCache.put(key, (f, st))
-      }
-      st
-    }
-  }
-
-  /** The committed file list (absolute paths), i.e. the current visible
-    * snapshot — empty if no commit ever published. Derived straight from
-    * the manifest fragments (no mutable derived listing to go stale or
-    * to pay O(total) rewrites for). */
-  def committedFiles(path: String): Seq[String] =
-    fragmentUnion(Paths.get(path)).map(f => Paths.get(path, "data", f).toString)
-
-  /** Directory listing by prefix; a missing table directory is simply an
-    * empty log (it used to escape as a raw
-    * NoSuchFileException after 8 futile vanish-retries). */
+  /** Directory entries by name prefix, in name order; a missing table
+    * directory is simply an empty log. */
   private def listPrefixed(dir: Path, prefix: String): Seq[Path] = {
     if (!Files.isDirectory(dir)) return Seq.empty
     val s = Files.list(dir)
@@ -355,33 +316,6 @@ object ManifestSink {
       .filter(_.getFileName.toString.startsWith(prefix))
       .sortBy(_.getFileName.toString)
     finally s.close()
-  }
-
-  /** Newest compacted manifest and the max epoch id it covers. */
-  private[sources] def latestCompact(dir: Path): Option[(Long, Path)] =
-    listPrefixed(dir, "compact-").lastOption.map(p => (idOf(p), p))
-
-  /** The compaction horizon as a VERSION (-1 if never swept) — the
-    * default exclusive lower bound of a `.changes` read: epochs at or
-    * below it are unrecoverable per-epoch. */
-  private[graft] def compactionHorizon(path: String): Long =
-    latestCompact(Paths.get(path)).map(_._1).getOrElse(-1L)
-
-  /** Loose (not-yet-compacted) epoch manifests NEWER than the compaction
-    * horizon, in epoch order. Stale loose files at or below the horizon
-    * (a crash mid-compaction) are subsets of the compact file and are
-    * ignored here, then swept by the next compaction. */
-  private[sources] def looseEpochs(dir: Path, compactedThrough: Long): Seq[(Long, Path)] =
-    listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-      .filter(_._1 > compactedThrough)
-
-  /** The manifest FRAGMENTS whose union is the committed snapshot: the
-    * newest compact file (if any) plus the loose epochs after it —
-    * O(epochs/compactInterval) files, not O(epochs). */
-  private[sources] def manifestFragments(dir: Path): Seq[Path] = {
-    val compact = latestCompact(dir)
-    val horizon = compact.map(_._1).getOrElse(-1L)
-    compact.map(_._2).toSeq ++ looseEpochs(dir, horizon).map(_._2)
   }
 
   /** Bounded retry for metadata reads racing a concurrent compaction
@@ -394,101 +328,887 @@ object ManifestSink {
         retryVanish(attempts - 1)(f)
     }
 
-  /** Union of the fragment contents (committed file names), applying
-    * each epoch's adds and `#remove`s IN EPOCH ORDER (a remove always
-    * targets a file added strictly earlier; removing an absent name is
-    * a no-op, which makes the crash window where a loose epoch
-    * survives alongside the compact that absorbed it idempotent —
-    * re-applying its adds dedupes, re-applying its removes does
-    * nothing). */
-  private[sources] def fragmentUnion(dir: Path): Seq[String] =
-    planState(dir).files
-
-  /** This streaming writer's committed ENGINE-epoch watermark: the max
-    * `#txn <writerId> <e>` record across the live fragments, -1 if the
-    * writer never committed. Compaction folds the max forward, so the
-    * watermark survives sweeps exactly like the data it describes.
-    *
-    * `#txn` records LEAD every fragment (writers emit them first;
-    * compaction re-emits them first), so the read stops at the first
-    * non-txn line — O(writers) bytes per fragment, never O(committed
-    * files). This is what keeps the per-commit replay check flat as the
-    * table ages (LakeLadder measures it at 1,000 epochs). */
-  private[sources] def txnWatermark(dir: Path, writerId: String): Long = retryVanish() {
-    manifestFragments(dir).flatMap { p =>
-      val in = Files.newBufferedReader(p, java.nio.charset.StandardCharsets.UTF_8)
-      try leadingTxns(in.lines.iterator.asScala) finally in.close()
-    }.collect { case Txn(w, e) if w == writerId => e }
-      .maxOption.getOrElse(-1L)
+  /** The table at `path` as of ONE listing of its log: see [[Snapshot]]. */
+  def snapshot(path: String): Snapshot = retryVanish() {
+    logListings.incrementAndGet()
+    new Snapshot(path, listPrefixed(Paths.get(path), ""))
   }
 
-  /** Every file name ANY live fragment lists as an add — the
-    * REFERENCED set, removes deliberately NOT applied: a `#remove`d
-    * file stays referenced while its remove epoch is still loose,
-    * because every retained pre-delete version (`VERSION AS OF`) still
-    * serves it. Once compaction resolves the remove into the union, the
-    * name disappears from every fragment — and time travel below the
-    * horizon is refused anyway — so the file becomes reclaimable
-    * exactly when no servable version can reach it. Position-delete
-    * (`#dv`) files and equality-delete KEY files (`#eqdel`) are
-    * referenced on the same terms: they live in the data plane while
-    * their epochs are loose. */
-  private[sources] def referencedFiles(dir: Path): Set[String] = retryVanish() {
-    manifestFragments(dir).flatMap(p => records(p).collect {
-      case Data(n) => n
-      case Dv(_, dv, _) => dv
-      case EqDel(f, _, _) => f
-    }).toSet
+  /** Run `f` against one snapshot of `path`. A fragment vanishing under
+    * a compaction sweep while `f` derives a facet re-runs the WHOLE read
+    * against a fresh snapshot — never one facet against a newer listing,
+    * which would mix two versions. */
+  private[graft] def read[T](path: String)(f: Snapshot => T): T =
+    retryVanish()(f(snapshot(path)))
+
+  def committedFiles(path: String): Seq[String] = read(path)(_.files)
+  def fileStats(path: String): Map[String, FileStat] = read(path)(_.stats)
+  def newestVersion(path: String): Long = read(path)(_.newestVersion)
+
+  /** The COMMIT TIME of a fragment in micros: the persisted `#ts`
+    * header when present (it survives mtime-disturbing copies), the
+    * fragment mtime for logs without one. */
+  private def commitTimeMicros(rs: Seq[LogRecord], a: Attrs): Long =
+    rs.collectFirst { case Ts(m) => m }
+      .getOrElse(a.lastModifiedTime.toMillis * 1000L)
+
+  /** One loose epoch manifest of a snapshot's tail, decoded at listing
+    * time, with the branch it is staged on (if any). */
+  private[sources] final case class Loose(id: Long, path: Path, attrs: Attrs,
+      recs: Seq[LogRecord]) {
+    val branch: Option[String] = recs.collectFirst { case ForBranch(b) => b }
   }
 
-  /** The branch a BRANCH-STAGED (`#forbranch`) epoch is staged on —
-    * invisible to every main-table face (union, time travel,
-    * incremental windows, the change feed, the checkpoint) until
-    * `CALL graft.sys.fast_forward` republishes its content as one
-    * ordinary epoch. Branch epochs stay LOOSE (the sweep's horizon
-    * stops below the oldest live one), so their adds remain
-    * vacuum-referenced and the publish can re-list them by name; a
-    * DROPPED branch's epochs absorb into the next sweep as nothing —
-    * the staged files age out through vacuum. */
-  private[sources] def branchOf(p: Path): Option[String] =
-    records(p).collectFirst { case ForBranch(b) => b }
+  /** ONE TABLE VERSION (the Delta `Snapshot` / Iceberg `TableMetadata`
+    * shape): the log directory listed ONCE, split into the newest
+    * compact file and the loose epoch tail after it, and every reader
+    * facet — files, stats, partitions, dvs, row ids, properties,
+    * schemas, specs, column mapping, tags, branches, time travel,
+    * windows, history — answered from that one listing. Lifetime,
+    * vanish and sidecar rules: the [[ManifestSink]] object doc. */
+  final class Snapshot private[ManifestSink] (val path: String,
+      listing: Seq[Path]) {
+    private val dir = Paths.get(path)
+    private def named(prefix: String): Seq[Path] =
+      listing.filter(_.getFileName.toString.startsWith(prefix))
+    private def listed(name: String): Boolean =
+      listing.exists(_.getFileName.toString == name)
+    private val compactFile: Option[(Path, Attrs)] =
+      named("compact-").lastOption.map(p => (p, attrsOf(p)))
 
-  /** Live branch refs: name → base version. */
-  def tableBranches(path: String): Map[String, Long] =
-    planState(Paths.get(path)).meta.branches
+    /** The compaction horizon as a VERSION (-1 if never swept) — the
+      * default exclusive lower bound of a `.changes` read: epochs at or
+      * below it are unrecoverable per-epoch. */
+    val horizon: Long = compactFile.fold(-1L)(c => idOf(c._1))
+
+    /** Every listed epoch manifest in id order, including stale ones at
+      * or below the horizon (a crash mid-sweep leaves them; they are
+      * subsets of the compact file and the next sweep removes them). */
+    private val epochs: Seq[(Long, Path)] = named("epoch-").map(p => (idOf(p), p))
+
+    /** Newest committed epoch id — the snapshot's version; -1 for an
+      * empty or absent log. */
+    val version: Long = (horizon +: epochs.map(_._1)).max
+
+    /** [[version]], refusing an empty log. */
+    def newestVersion: Long =
+      if (version >= 0) version
+      else throw new IllegalArgumentException(
+        s"manifest table $path has no committed epochs")
+
+    /** The loose (not-yet-compacted) epochs NEWER than the horizon, in
+      * epoch order: with the compact file, the fragments whose union is
+      * the committed snapshot — O(epochs/compactInterval) files. */
+    private val tail: Seq[Loose] = epochs.filter(_._1 > horizon).map {
+      case (id, p) => val a = attrsOf(p); Loose(id, p, a, records(p, a))
+    }
+    private val tailOf: Map[Path, Loose] = tail.map(l => l.path -> l).toMap
+    /** The tail's MAIN epochs: branch-staged ones are invisible to every
+      * main face until published. */
+    private def mainTail: Seq[Loose] = tail.filter(_.branch.isEmpty)
+
+    private def compactRecs: Seq[LogRecord] =
+      compactFile.fold(Seq.empty[LogRecord]) { case (p, a) => records(p, a) }
+    private def recsOf(p: Path): Seq[LogRecord] =
+      tailOf.get(p).map(_.recs).getOrElse {
+        compactFile.filter(_._1 == p).fold(records(p, attrsOf(p)))(c =>
+          records(c._1, c._2))
+      }
+    private def branchOf(p: Path): Option[String] =
+      tailOf.get(p).fold(recsOf(p).collectFirst { case ForBranch(b) => b })(_.branch)
+    private def dataPath(n: String): String = Paths.get(path, "data", n).toString
+
+    private val fingerprint: Option[Fingerprint] = {
+      val entries = (compactFile.toSeq ++ tail.map(l => (l.path, l.attrs)))
+        .map { case (p, a) =>
+          (p.toAbsolutePath.toString, a.fileKey, a.size, a.lastModifiedTime) }
+      if (entries.exists(_._2 == null)) None else Some(entries)
+    }
+
+    private lazy val state: PlanState = {
+      val key = dir.toAbsolutePath.toString
+      fingerprint.flatMap { f =>
+        Option(planCache.get(key)).collect { case (k, st) if k == f => st }
+      }.getOrElse {
+        planDerivations.incrementAndGet()
+        val r = replay(compactRecs +: mainTail.map(_.recs))
+        // BLOOM RESIDENCY CAP: the cached state would otherwise hold
+        // every file's base64 payload — at the default 2^18 bits (~44 KiB
+        // b64) × 10⁵–10⁶ files, GBs of driver heap for a table that still
+        // plans via the driver walk. `bloom.resident.bytes` (table
+        // property; default 64 MiB) bounds it: the NEWEST files' payloads
+        // stay resident up to the cap — the hot probe set of an
+        // append-mostly lake — and older files fall back to min/max-only
+        // pruning (blooms are false-positives-only, so eviction costs
+        // pruning, never correctness). The distributed checkpoint planner
+        // is unaffected: it probes each file's record from the
+        // checkpoint's own bloom column in tasks.
+        val bloomCap = r.props.get("bloom.resident.bytes")
+          .flatMap(_.toLongOption).getOrElse(DefaultResidentBloomBytes)
+        val residentBlooms: scala.collection.Map[String, Map[String, String]] = {
+          val keep = scala.collection.mutable.HashMap[String, Map[String, String]]()
+          var budget = bloomCap
+          val it = r.blooms.toSeq.reverseIterator // newest fragment order last
+          var full = false
+          while (it.hasNext && !full) {
+            val (f, m) = it.next()
+            val sz = m.valuesIterator.map(_.length.toLong).sum
+            if (sz <= budget) { budget -= sz; keep(f) = m }
+            else full = true // strict newest-suffix: predictable residency
+          }
+          keep
+        }
+        val (statMap, partMap) = skippingIndex(r, residentBlooms)
+        val live = r.files.toSet
+        val frags = (() => compactRecs) +: mainTail.map(l => () => l.recs)
+        val st = new PlanState(r.files.toSeq, statMap, partMap, r.dvs.toMap,
+          TableMeta.of(r), r.rowids.toMap, () => mergedNdv(live, frags))
+        fingerprint.foreach { f =>
+          if (planCache.size >= PlanCacheCap) planCache.clear()
+          planCache.put(key, (f, st))
+        }
+        st
+      }
+    }
+
+    /** Committed file NAMES, union order: each epoch's adds and
+      * `#remove`s applied IN EPOCH ORDER (a remove always targets a
+      * file added strictly earlier; removing an absent name is a no-op,
+      * which makes the crash window where a loose epoch survives
+      * alongside the compact that absorbed it idempotent). */
+    private[sources] def names: Seq[String] = state.files
+    /** The committed files (absolute paths) — empty if no commit ever
+      * published. Derived straight from the manifest fragments (no
+      * mutable derived listing to go stale or to pay O(total) rewrites
+      * for). */
+    def files: Seq[String] = names.map(dataPath)
+    /** Per-file statistics recorded at write time — the data-skipping
+      * index, keyed by file NAME; files without a record simply cannot
+      * be pruned, and a CONFLICTING duplicate loses its entry: an
+      * unpruned file is a slow read, a mispruned file is a wrong
+      * answer. */
+    def stats: Map[String, FileStat] = state.stats
+    /** Encoded partition-value tuples per committed file name, from the
+      * `#part <file> [<specId>@]<tok1,tok2>` records (absent spec id
+      * means spec 0). Files without a record have no tuple: pruning
+      * treats them as unprunable and partition-scoped overwrite refuses
+      * to touch them. */
+    def parts: Map[String, PartTuple] = state.parts
+    /** The LIVE delete vectors per data file: `#dv` records accumulated
+      * in fragment order, cleared when the data file itself is
+      * `#remove`d (a rewrite resolves the deletes). Values are
+      * (dvFile, nDeleted) in record order. */
+    def dvs: Map[String, Seq[(String, Long)]] = state.dvs
+    /** Every live file's base row id (immutable once assigned; records
+      * of removed files survive until a compaction drops them, which is
+      * at or below every CDC-readable window by construction). */
+    def rowids: Map[String, Long] = state.rowids
+    /** MERGED per-column NDV of the live files' HLL sketches (HLL union
+      * is lossless): physical column → (files sketched, estimate). */
+    def ndv: Map[String, (Long, Long)] = state.ndv
+    /** Total base64 bloom payload bytes the table's cached plan state
+      * holds — observability for the residency cap (LakeLadder pins it
+      * flat as the bloomed-file count grows). */
+    private[graft] def residentBloomBytes: Long =
+      stats.valuesIterator.flatMap(_.blooms.valuesIterator).map(_.length.toLong).sum
+
+    /** The table-level records via the checkpoint META sidecar plus the
+      * tail when a sidecar matching the horizon is listed; otherwise the
+      * memoized state's (identical values, derived the expensive way).
+      * With no compact at all, the loose log IS the tail. */
+    private lazy val meta: TableMeta =
+      if (compactFile.isDefined && listed(checkpointMetaName(horizon))) {
+        val mp = dir.resolve(checkpointMetaName(horizon))
+        TableMeta.of(replay(records(mp, attrsOf(mp)) +: mainTail.map(_.recs)))
+      } else state.meta
+
+    /** TABLE PROPERTIES from `#prop <key> <value>` records, last record
+      * per key winning — `ALTER TABLE SET TBLPROPERTIES` is an appended
+      * record. Known keys: `delete.mode` (cow|mor), `compact.interval`,
+      * the bloom/ndv/row-group keys and `feed.reserve.*`; unknown keys
+      * round-trip for the user. */
+    def props: Map[String, String] = meta.props
+    /** The distinct schema DDLs the live fragments record, in fragment
+      * order (oldest compact record first). */
+    def schemas: Seq[String] = meta.schemas
+    /** The live physical→logical column mapping (empty = identity). */
+    def colmap: Map[String, String] = meta.colmap
+    /** SNAPSHOT TAGS: name → epoch id, for `VERSION AS OF 'name'`. Tags
+      * are pointers, not retention pins. */
+    def tags: Map[String, Long] = meta.tags
+    /** Live branch refs: name → base version. */
+    def branches: Map[String, Long] = meta.branches
+    /** The table's compaction cadence: `compact.interval`, else the
+      * default. */
+    def compactInterval: Int = props.get("compact.interval")
+      .flatMap(_.toIntOption).getOrElse(DefaultCompactInterval)
+
+    /** CDC RETENTION RESERVATIONS: `feed.reserve.<consumer>` properties
+      * (`CALL graft.sys.register_feed`) — each names a change-feed
+      * consumer and the MINIMUM epoch window every sweep keeps loose for
+      * it. Unregistering tombstones the value to `-`; non-numeric values
+      * never reserve. Consumer → minimum window. */
+    def feeds: Map[String, Long] = props.collect {
+      case (k, v) if k.startsWith("feed.reserve.") &&
+          v.toLongOption.exists(_ >= 1) =>
+        k.stripPrefix("feed.reserve.") -> v.toLong
+    }
+
+    /** The recorded `#schema` DDL that CONTAINS every other recorded one
+      * — the log's self-describing declared schema: under additive
+      * evolution the newest record is the widest and wins; a log whose
+      * records have no single containing schema (mixed subset-schema
+      * writers through the path face), or with an unparsable record
+      * (hand-built fixtures), resolves to None and the caller falls back
+      * to the conf. */
+    lazy val widestSchema: Option[String] = {
+      val parsed = schemas.flatMap { d =>
+        try Some(d -> StructType.fromDDL(d)) catch { case _: Exception => None }
+      }
+      if (parsed.size != schemas.size) None
+      else parsed.find { case (_, cand) =>
+        parsed.forall { case (_, other) => containsSchema(cand, other) }
+      }.map(_._1)
+    }
+
+    /** The partition-spec HISTORY: every `#spec` record, parsed into a
+      * [[SpecBook]] whose highest id is the CURRENT spec new writes fan
+      * out under. Record grammar is `#spec [<id>=]t1;t2` with t ∈
+      * `identity:<col>` | `days:<col>` | `bucket:<n>:<col>`; the CREATE
+      * epoch writes the id-less form (spec 0). Two distinct records
+      * claiming ONE id is a corruption and refuses — files carry that id
+      * and pruning must not guess their layout. */
+    lazy val specs: SpecBook = {
+      val parsed = meta.specs.map(r => (r.specId, r.body))
+      val dup = parsed.groupBy(_._1)
+        .collect { case (id, rs) if rs.map(_._2).distinct.size > 1 => id }
+      if (dup.nonEmpty) throw new IllegalStateException(
+        s"manifest table $path records conflicting partition specs for " +
+          s"id(s) ${dup.toSeq.sorted.mkString(", ")} — files carry these " +
+          "ids; refusing to guess which layout their tuples follow")
+      SpecBook(parsed.map { case (id, s) =>
+        id -> (if (s == "-") Seq.empty[PartField]
+               else s.split(";").toSeq.map(PartField.parse)) }.toMap)
+    }
+
+    /** Enforce the additive-evolution CONTAINMENT contract before
+      * trusting a declared (catalog-conf) schema: every field the log's
+      * `#schema` records carry must appear in `declared` with its
+      * recorded type (appending NEW nullable columns is the one
+      * supported evolution). One shared check for every face: the scan
+      * refuses to SERVE under a stale narrow conf, and the copy-on-write
+      * rewriters refuse to REWRITE under one — a rewrite through a narrow
+      * conf would silently drop an evolved column from the survivors. */
+    def verifyDeclared(what: String, declared: StructType): Unit =
+      schemas.foreach { ddl =>
+        if (!containsSchema(declared, StructType.fromDDL(ddl)))
+          throw new IllegalArgumentException(
+            s"$what: declared schema '${declared.toDDL}' does not match the " +
+              s"schema the log records for committed epochs ('$ddl') — every " +
+              "recorded column must appear in the declared schema with its " +
+              "recorded type (appending NEW nullable columns is the one " +
+              "supported evolution); update the catalog schema conf (the log " +
+              "refuses rather than drop or reinterpret committed data)")
+      }
+
+    /** LIVE equality deletes: records in loose main epochs minus the
+      * `#eqdrop`-consumed set, with their epoch ids — O(tail). Live
+      * records exist only in the tail by construction (sweeps clamp
+      * below them). */
+    lazy val eqDeletes: Seq[EqDelete] = eqDeletesAsOf(Long.MaxValue)
+
+    /** Equality deletes visible AS OF `version` (time travel): records
+      * at or below it, minus drops at or below it. */
+    def eqDeletesAsOf(version: Long): Seq[EqDelete] = {
+      val recs = scala.collection.mutable.ArrayBuffer[EqDelete]()
+      val dropped = scala.collection.mutable.HashSet[String]()
+      mainTail.filter(_.id <= version).foreach { l =>
+        l.recs.foreach {
+          case EqDel(f, cols, n) => recs += EqDelete(l.id, f, cols, n)
+          case EqDrop(f) => dropped += f
+          case _ =>
+        }
+      }
+      recs.toSeq.filterNot(e => dropped.contains(e.file))
+    }
+
+    /** Add-epoch of every LOOSE-added data file — the sequence info
+      * equality-delete applicability needs. A file absent here was added
+      * at or below the horizon (every live eqdel applies to it). Branch-
+      * staged adds are included: main reads never plan them, and the
+      * branch AUDIT face needs their epochs so a main eqdel landing after
+      * a staged add cannot mis-apply to it. */
+    lazy val looseAddEpochs: Map[String, Long] = {
+      val acc = scala.collection.mutable.LinkedHashMap[String, Long]()
+      tail.foreach(l => l.recs.foreach {
+        case Data(n) => acc.getOrElseUpdate(n, l.id)
+        case _ =>
+      })
+      acc.toMap
+    }
+
+    /** The records of a branch's staged epochs, in epoch order. */
+    private def stagedOn(name: String): Seq[Seq[LogRecord]] =
+      tail.filter(_.branch.contains(name)).map(_.recs)
+    private def requireBranch(name: String): Unit =
+      require(branches.contains(name), s"no branch '$name' on $path")
+
+    /** The files a BRANCH read serves: the main union FOLDED with the
+      * branch's staged epochs in order — adds join, staged `#remove`s
+      * (a staged OVERWRITE) leave. Absolute paths. */
+    def branchFiles(name: String): Seq[String] = {
+      requireBranch(name)
+      val acc = scala.collection.mutable.LinkedHashSet[String]()
+      names.foreach(acc.add)
+      stagedOn(name).foreach(_.foreach {
+        case Remove(n) => acc.remove(n)
+        case Data(n) => acc.add(n)
+        case _ =>
+      })
+      acc.toSeq.map(dataPath)
+    }
+
+    /** The partition tuples a BRANCH-staged overwrite decides on: main's
+      * tuples plus the staged epochs' own `#part` records. */
+    def branchParts(name: String): Map[String, PartTuple] =
+      parts ++ stagedOn(name).flatten.collect { case Part(f, t) => f -> t }
+
+    /** The dv state a BRANCH read applies: main's live vectors plus the
+      * branch's staged `#dv` records in epoch order; a staged
+      * overwrite's removes clear the victims' dv state. */
+    def branchDvs(name: String): Map[String, Seq[(String, Long)]] = {
+      val acc = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
+      dvs.foreach { case (d, l) => acc(d) = l }
+      stagedOn(name).foreach(_.foreach {
+        case Remove(n) => acc.remove(n)
+        case Dv(d, v, n) => acc(d) = acc.getOrElse(d, Seq.empty) :+ ((v, n))
+        case _ =>
+      })
+      acc.toMap
+    }
+
+    /** Per-branch (staged epoch count, staged file count) of the loose
+      * tail — the `.branches` metadata table's footprint columns. */
+    lazy val stagedFootprint: Map[String, (Long, Long)] =
+      tail.flatMap(l => l.branch.map(b => (b, l.recs.count(_.isInstanceOf[Data]))))
+        .groupBy(_._1).view
+        .mapValues(es => (es.size.toLong, es.map(_._2).sum.toLong)).toMap
+
+    private def requireVersion(v: Long): Unit =
+      if (version < 0 || v > version) throw new IllegalArgumentException(
+        s"manifest table $path has no version $v " +
+          s"(newest committed epoch: ${if (version < 0) "none" else version})")
+
+    /** The fragments serving epoch `v`: the compact (a union through the
+      * horizon) plus the loose epochs up to `v` when `v` is at or above
+      * the horizon; below it only the pre-sweep crash window can serve —
+      * the loose epochs at or below the horizon, provably complete when
+      * they hold no remove and union to EXACTLY the compact's content
+      * (every task file is listed by exactly one epoch manifest, so a
+      * missing non-empty epoch shrinks the union). Once the sweep lands
+      * the version is refused: log retention bounds time travel. */
+    private def fragmentsAsOf(v: Long): Seq[Path] =
+      if (v >= horizon)
+        compactFile.map(_._1).toSeq ++ tail.filter(_.id <= v).map(_.path)
+      else {
+        val looseBelow = epochs.filter(_._1 <= horizon).map(_._2)
+        val removesBelow = looseBelow.exists(p =>
+          recsOf(p).exists(_.isInstanceOf[Remove]))
+        val compactContent = compactRecs.collect { case Data(n) => n }.toSet
+        if (!removesBelow && unionOf(looseBelow).toSet == compactContent)
+          epochs.filter(_._1 <= v).map(_._2)
+        else throw new IllegalStateException(
+          s"version $v predates the compaction horizon $horizon " +
+            "and its epoch manifests were swept — retained time travel " +
+            s"starts at epoch $horizon")
+      }
+    private def replayOf(fragments: Seq[Path]): Replay =
+      replay(fragments.filter(branchOf(_).isEmpty).map(recsOf))
+    private def unionOf(fragments: Seq[Path]): Seq[String] =
+      replayOf(fragments).files.toSeq
+
+    /** TIME TRAVEL: the committed files (absolute paths) AS OF epoch
+      * `version` — every historical snapshot is reconstructible as long
+      * as its epochs survive; versions below the compaction horizon whose
+      * epochs were swept, and versions past the newest commit, refuse
+      * (the Delta/Iceberg contract that log retention bounds time
+      * travel, surfaced instead of silently serving a wrong snapshot). */
+    def filesAsOf(version: Long): Seq[String] = {
+      require(version >= 0, s"version must be >= 0, got $version")
+      requireVersion(version)
+      unionOf(fragmentsAsOf(version)).map(dataPath)
+    }
+
+    /** [[dvs]] as of epoch `version` — the dv state a `VERSION AS OF`
+      * read applies, with [[filesAsOf]]'s fragment selection (and
+      * refusal). */
+    def dvsAsOf(version: Long): Map[String, Seq[(String, Long)]] =
+      replayOf(fragmentsAsOf(version)).dvs.toMap
+
+    /** INCREMENTAL READ (the Delta CDF / Iceberg incremental-scan
+      * analog): the files appended by epochs in (`since`, `asOf`] — each
+      * epoch manifest IS that epoch's append delta. `since` = -1 reads
+      * from the beginning. A swept epoch's delta is unrecoverable from
+      * the compact union, so a window reaching past the sweep REFUSES
+      * naming the missing epochs, as does a window crossing a row-level
+      * delete/rewrite/upsert epoch (not an append delta). */
+    def filesBetween(since: Long, asOf: Long): Seq[String] = {
+      require(since >= -1, s"since must be >= -1 (exclusive lower bound), got $since")
+      require(since <= asOf, s"empty window: since $since > asOf $asOf")
+      requireVersion(asOf)
+      val window = epochs.filter(e => e._1 > since && e._1 <= asOf)
+      // an absent epoch id is fine only if it NEVER EXISTED: above the
+      // horizon and below the first loose epoch (ids start wherever a
+      // restarted query's first batch lands, and commit contiguously
+      // from there)
+      val firstLoose = epochs.map(_._1).minOption.getOrElse(Long.MaxValue)
+      val missing = ((since + 1) to asOf)
+        .filterNot(window.map(_._1).toSet)
+        .filterNot(id => id > horizon && id < firstLoose)
+      if (missing.nonEmpty)
+        throw new IllegalStateException(
+          s"incremental read ($since, $asOf] needs epoch manifests " +
+            s"${missing.mkString(", ")} which are gone " +
+            s"(compaction horizon $horizon) — per-epoch deltas are " +
+            "unrecoverable from the compact union; re-read the full " +
+            "snapshot instead")
+      val main = window.map(_._2).filter(branchOf(_).isEmpty)
+      val removing = main.filter(p => recsOf(p).exists {
+        case _: Remove | _: Dv | _: EqDel => true
+        case _ => false
+      }).map(idOf)
+      if (removing.nonEmpty)
+        throw new IllegalStateException(
+          s"incremental read ($since, $asOf] crosses row-level " +
+            s"DELETE/rewrite/upsert epoch(s) ${removing.mkString(", ")} — " +
+            "a delete rewrites or retro-deletes rather than appending; " +
+            "re-read the full snapshot instead")
+      main.flatMap(p => recsOf(p).collect { case Data(n) => n }).distinct
+        .map(dataPath)
+    }
+
+    /** (id, commit micros) of each loose epoch, in epoch order. */
+    private[sources] lazy val commitTimes: Seq[(Long, Long)] =
+      tail.map(l => (l.id, commitTimeMicros(l.recs, l.attrs)))
+
+    /** TIMESTAMP AS OF resolution: the newest epoch whose COMMIT time
+      * (the persisted `#ts`, mtime for logs without one) is <= `micros`.
+      * The compact is itself a candidate at the SWEEP time (every
+      * absorbed commit happened at or before it); a timestamp below the
+      * oldest live epoch refuses with the retention boundary spelled
+      * out. */
+    def versionAt(micros: Long): Long = {
+      val loose = commitTimes
+      if (loose.isEmpty && horizon < 0) throw new IllegalArgumentException(
+        s"manifest table $path has no committed version")
+      val compactCand = compactFile.map { case (p, a) =>
+        (idOf(p), a.lastModifiedTime.toMillis * 1000L) }
+      (compactCand.toSeq ++ loose).filter(_._2 <= micros).map(_._1)
+        .maxOption.getOrElse {
+          val boundary = loose.headOption.map(_._2)
+          throw new IllegalArgumentException(
+            s"manifest table $path: no live epoch committed at or before " +
+              s"timestamp $micros us — " +
+              (if (horizon >= 0)
+                s"epochs <= $horizon were compacted (their commit times are " +
+                  "gone with them); timestamp travel covers the un-swept " +
+                  s"tail${boundary.map(b => s" from $b us").getOrElse("")}"
+              else s"the first commit landed at ${boundary.getOrElse(-1L)} us"))
+        }
+    }
+
+    /** Per-epoch CHANGE DELTAS of the window `(since, asOf]` (the CDC
+      * read): each epoch's adds, `#remove`s and `#dv` records plus its
+      * `#op` classification — the raw material [[ChangeFeed]] turns into
+      * labeled change rows. A window reaching below the horizon, or a
+      * gap in the loose tail, refuses loudly. Epochs without `#op`
+      * classify structurally: remove-carrying → `rewrite`, dv-carrying
+      * → `delete`, adds-only → `append`, else `metadata`. */
+    def epochDeltas(since: Long, asOf: Long): Seq[EpochDelta] = {
+      require(since >= -1, s"since must be >= -1 (exclusive lower bound), got $since")
+      require(since <= asOf, s"empty window: since $since > asOf $asOf")
+      requireVersion(asOf)
+      if (since < horizon)
+        throw new IllegalStateException(
+          s"change feed ($since, $asOf] reaches below the compaction " +
+            s"horizon $horizon — per-epoch changes are unrecoverable " +
+            "from the compact union; start the feed at or after the " +
+            "horizon (or re-read the full snapshot)")
+      val window = tail.filter(l => l.id > since && l.id <= asOf)
+      val missing = ((since + 1) to asOf).filterNot(window.map(_.id).toSet)
+      if (missing.nonEmpty)
+        throw new IllegalStateException(
+          s"change feed ($since, $asOf] needs epoch manifests " +
+            s"${missing.mkString(", ")} which are gone " +
+            s"(compaction horizon $horizon)")
+      window.map { l =>
+        if (l.branch.isDefined)
+          // staged on a branch: invisible to the main feed until the
+          // publish epoch re-lists the rows (the WAP contract)
+          EpochDelta(l.id, "metadata", Seq.empty, Seq.empty, Seq.empty)
+        else {
+          val rs = l.recs
+          val removes = rs.collect { case Remove(n) => n }
+          val dvs = rs.collect { case Dv(d, v, n) => (d, v, n) }
+          val adds = rs.collect { case Data(n) => n }
+          val op = rs.collectFirst { case Op(k) => k }.getOrElse {
+            if (removes.nonEmpty) "rewrite"
+            else if (dvs.nonEmpty) "delete"
+            else if (adds.nonEmpty) "append"
+            else "metadata"
+          }
+          EpochDelta(l.id, op, adds, removes, dvs, commitTimeMicros(rs, l.attrs),
+            rs.collect { case Cdc(f, r) => f -> r }.toMap,
+            paired = rs.contains(CdcPair),
+            eqdels = rs.collect { case EqDel(f, c, n) => (f, c, n) })
+        }
+      }
+    }
+
+    /** The window `(since, asOf]` as CHANGE PARTITIONS — the per-file
+      * read specs both the `.changes` batch face and the streaming faces
+      * plan from, so batch CDF, streaming CDF and the rate-limited tail
+      * agree on semantics by construction:
+      *
+      *  - `cdf = true`: append adds → `insert` partitions; a
+      *    merge-on-read epoch's new dv files → KEEP-position partitions
+      *    over the targeted data files (`delete` / `update_preimage` by
+      *    `#op`) plus its adds (`insert` / `update_postimage`);
+      *    `#op compact` epochs → nothing (file rewrite ≠ row change);
+      *    copy-on-write epochs REFUSE — their change set is a multiset
+      *    diff (a join), not a per-file read; [[ChangeFeed.tableChanges]]
+      *    serves it exactly — unless `onChange = ignoreChanges`
+      *    re-delivers their adds as `insert`s (the Delta opt-out).
+      *  - `cdf = false` (the plain tail): append adds pass through;
+      *    remove/dv-carrying epochs REFUSE with the options named —
+      *    `ignoreDeletes` skips DELETE-ONLY epochs (no adds), and
+      *    `ignoreChanges` additionally re-delivers rewrite epochs' adds
+      *    (consumers must tolerate duplicates, exactly Delta's
+      *    contract). */
+    def changePartitions(since: Long, asOf: Long, cdf: Boolean,
+        onChange: String): Seq[ManifestFilePartition] = {
+      def adds(d: EpochDelta, label: String): Seq[ManifestFilePartition] =
+        d.adds.map(n => ManifestFilePartition(dataPath(n),
+          changeType = if (cdf) label else null,
+          commitVersion = if (cdf) d.id else -1L,
+          commitTsMicros = if (cdf) d.tsMicros else -1L))
+      def refuse(d: EpochDelta): Nothing = throw new IllegalStateException(
+        s"${if (cdf) "change-feed" else "incremental"} read ($since, " +
+          s"$asOf] on $path crosses a non-append epoch ${d.id} " +
+          s"(#op ${d.op}: ${d.removes.size} removes, ${d.dvs.size} dv " +
+          s"records, ${d.eqdels.size} equality-delete records)" + (if (cdf)
+            " whose change set is a multiset diff — serve it exactly " +
+              "with ChangeFeed.tableChanges, or set ignoreChanges=true " +
+              "to re-deliver its added files as inserts"
+          else
+            " — set ignoreDeletes=true to skip delete-only epochs, or " +
+              "ignoreChanges=true to also re-deliver rewrite epochs' " +
+              "added files (duplicates possible); for exact row-level " +
+              "changes read the change feed"))
+      epochDeltas(since, asOf).flatMap { d =>
+        val deleteOnly = d.adds.isEmpty && (d.removes.nonEmpty || d.dvs.nonEmpty)
+        d.op match {
+          case "compact" | "metadata" => Seq.empty
+          case _ if d.eqdels.nonEmpty =>
+            // a keyed-upsert epoch's delete half is a key anti-join —
+            // not a per-file read; ChangeFeed.tableChanges serves it
+            // exactly
+            if (onChange == "ignoreChanges") adds(d, "insert")
+            else refuse(d)
+          case "append" => adds(d, "insert")
+          case _ if d.removes.nonEmpty || (!cdf && d.dvs.nonEmpty) =>
+            if (onChange == "ignoreChanges") adds(d, "insert")
+            else if (onChange == "ignoreDeletes" && deleteOnly) Seq.empty
+            else refuse(d)
+          case op => // merge-on-read epoch under cdf: exact per-file reads
+            val (preLabel, postLabel) =
+              if (op == "update") ("update_preimage", "update_postimage")
+              else ("delete", "insert")
+            // dvs targeting THE EPOCH'S OWN adds (a published branch's
+            // staged update of its own staged append) mark rows that were
+            // never visible — no pre-image partition, and the add reads
+            // with those positions as a SKIP set. `#cdc` role tags
+            // override the defaults (a merge's update halves serve
+            // update_pre/postimage); one data file's delete-dvs and
+            // pre-dvs split into separately-labeled partitions.
+            val addSet = d.adds.toSet
+            def dvLabel(dv: String): String =
+              if (d.cdcRoles.get(dv).contains("pre")) "update_preimage"
+              else preLabel
+            def addLabel(n: String): String =
+              if (d.cdcRoles.get(n).contains("post")) "update_postimage"
+              else postLabel
+            val pre = d.dvs.filterNot(r => addSet.contains(r._1))
+              .groupBy(r => (r._1, dvLabel(r._2))).toSeq
+              .sortBy { case ((data, label), _) => (data, label) }.map {
+              case ((data, label), recs) => ManifestFilePartition(
+                dataPath(data),
+                recs.map(r => dataPath(r._2)), keepPositions = true,
+                changeType = label, commitVersion = d.id,
+                commitTsMicros = d.tsMicros)
+            }
+            val selfDvd = d.dvs.filter(r => addSet.contains(r._1))
+              .groupBy(_._1).view.mapValues(_.map(r => dataPath(r._2))).toMap
+            val post = d.adds.map(n => ManifestFilePartition(dataPath(n),
+              selfDvd.getOrElse(n, Seq.empty),
+              changeType = if (cdf) addLabel(n) else null,
+              commitVersion = if (cdf) d.id else -1L,
+              commitTsMicros = if (cdf) d.tsMicros else -1L))
+            pre ++ post
+        }
+      }
+    }
+
+    /** One row per LIVE log fragment, for the `.history` metadata table:
+      * (version, kind, nAdded, nRemoved, commit millis). Loose epochs
+      * classify by their records — `append`, `rewrite` (carries
+      * `#remove`s), `upsert` (`#eqdel`), `delete` (`#dv` only), `branch`
+      * (staged), `metadata` — and the compact reports as one
+      * `checkpoint` row at the horizon carrying the resolved union size:
+      * history below the horizon is collapsed into it, the log retains
+      * exactly what time travel can still serve. */
+    def history: Seq[(Long, String, Long, Long, Long)] = {
+      val compactRow = compactFile.map { case (p, a) =>
+        (horizon, "checkpoint", compactRecs.count(_.isInstanceOf[Data]).toLong,
+          0L, a.lastModifiedTime.toMillis)
+      }
+      val looseRows = tail.map { l =>
+        val rs = l.recs
+        val adds = rs.count(_.isInstanceOf[Data]).toLong
+        val removes = rs.count(_.isInstanceOf[Remove]).toLong
+        val kind =
+          if (l.branch.isDefined) "branch" // staged, not yet visible
+          else if (removes > 0) "rewrite"
+          else if (rs.exists(_.isInstanceOf[EqDel])) "upsert"
+          else if (rs.exists(_.isInstanceOf[Dv])) "delete"
+          else if (adds > 0) "append"
+          else "metadata"
+        (l.id, kind, adds, removes, commitTimeMicros(rs, l.attrs) / 1000L)
+      }
+      compactRow.toSeq ++ looseRows
+    }
+
+    /** Every listed epoch as (id, fileCount, rowCount-if-known) in epoch
+      * order — the admission-control view a rate-limited tailing stream
+      * sizes its next batch with. rowCount is None when any listed file
+      * lacks a `#stats` record; branch-staged epochs count as empty. */
+    def epochSizes: Seq[(Long, Int, Option[Long])] = epochs.map { case (id, p) =>
+      if (branchOf(p).isDefined) (id, 0, Some(0L))
+      else {
+        val rs = recsOf(p)
+        val data = rs.collect { case Data(n) => n }
+        val stats = rs.collect { case s: Stats => s.file -> s.stat }.toMap
+        (id, data.size,
+          if (data.forall(stats.contains)) Some(data.map(stats(_).rows).sum)
+          else None)
+      }
+    }
+
+    /** A streaming writer's committed ENGINE-epoch watermark: the max
+      * `#txn <writerId> <e>` record across the live fragments, -1 if the
+      * writer never committed. `#txn` records LEAD every fragment, so
+      * the compact is read only up to its first non-txn line —
+      * O(writers) bytes, never O(committed files), which keeps the
+      * per-commit replay check flat as the table ages. */
+    def txnWatermark(writerId: String): Long = {
+      val compactTxns = compactFile.toSeq.flatMap { case (p, _) =>
+        val in = Files.newBufferedReader(p, java.nio.charset.StandardCharsets.UTF_8)
+        try leadingTxns(in.lines.iterator.asScala) finally in.close()
+      }
+      (compactTxns ++ tail.flatMap(_.recs)).collect {
+        case Txn(w, e) if w == writerId => e
+      }.maxOption.getOrElse(-1L)
+    }
+
+    /** Every file name ANY live fragment lists as an add — the
+      * REFERENCED set vacuum keeps, removes deliberately NOT applied: a
+      * `#remove`d file stays referenced while its remove epoch is still
+      * loose (every retained pre-delete version still serves it), and
+      * becomes reclaimable once compaction resolves the remove. Dv files
+      * and equality-delete key files are referenced on the same terms;
+      * branch-staged adds are referenced too. */
+    lazy val referenced: Set[String] =
+      (compactRecs ++ tail.flatMap(_.recs)).collect {
+        case Data(n) => n
+        case Dv(_, dv, _) => dv
+        case EqDel(f, _, _) => f
+      }.toSet
+
+    /** The row-id HIGH WATERMARK: the max `#rowidhwm` across ALL live
+      * fragments — branch-staged epochs included, whose reserved ids must
+      * never be reissued. 0 on a log that never assigned. */
+    def rowIdHwm: Long = (compactRecs ++ tail.flatMap(_.recs))
+      .collect { case RowIdHwm(n) => n }.maxOption.getOrElse(0L)
+
+    /** Did a commit carrying `cow` land in a live fragment? */
+    private[sources] def carriesCow(cow: Cow): Boolean =
+      compactRecs.contains(cow) || tail.exists(_.recs.contains(cow))
+
+    /** The planning checkpoint matching the horizon — (horizon,
+      * parquetPath, rowCount). None when absent or stale (a newer
+      * compact landed without one): strictly a fallback decision, never
+      * a correctness one. */
+    lazy val checkpoint: Option[(Long, Path, Long)] =
+      if (compactFile.isEmpty || !listed(checkpointParquetName(horizon))) None
+      else {
+        val p = dir.resolve(checkpointParquetName(horizon))
+        try {
+          val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
+            new org.apache.parquet.io.LocalInputFile(p))
+          val n = try fr.getRecordCount finally fr.close()
+          Some((horizon, p, n))
+        } catch { case _: Exception => None }
+      }
+
+    /** DISTRIBUTED PLANNING (the Iceberg distributed-manifest shape):
+      * prune the CHECKPOINTED portion with a Spark job over the parquet
+      * checkpoint — executors decode each row's `#stats`/`#part` lines
+      * with the codec the text path uses and apply the SAME `mayMatch`
+      * model, so the two planners cannot disagree — while the loose tail
+      * is applied driver-side in epoch order, O(tail). Driver cost:
+      * O(tail) + O(kept) collected names, never O(all files).
+      *
+      * Returns (kept absolute paths in checkpoint-then-tail order, live
+      * dv paths per kept file name, listedCount for the prune record). */
+    private[sources] def distributedPlan(spark: org.apache.spark.sql.SparkSession,
+        parquet: Path, ckptRows: Long,
+        filters: Seq[org.apache.spark.sql.sources.Filter], book: SpecBook)
+        : (Seq[String], Map[String, Seq[String]], Int) = {
+      // —— the tail, applied in epoch order; its removes of checkpointed
+      // files are the replay's `removedElsewhere`
+      val tailReplay = replay(mainTail.map(_.recs))
+      val (tailStats, tailParts) = skippingIndex(tailReplay, tailReplay.blooms)
+      val removedCkpt = tailReplay.removedElsewhere
+      // —— the checkpointed portion: one job, collect (kept name, dv lines)
+      val keptCkpt = prunedCheckpoint(spark, parquet, removedCkpt.toSet,
+        filters, book)
+      // —— tail adds pruned driver-side with the same rule
+      val keptTail = tailReplay.files.toSeq.filter { n =>
+        val partOk = tailParts.get(n).forall(t =>
+          filters.forall(book.mayMatch(t, _)))
+        partOk && (tailStats.get(n) match {
+          case None => true
+          case Some(st) => st.rows > 0 && filters.forall(SnapStats.mayMatch(st, _))
+        })
+      }
+      // —— live dvs per kept file: checkpoint rows carry their own, the
+      // tail may have landed more (on checkpointed AND tail files)
+      val dvByName = scala.collection.mutable.HashMap[String, Seq[String]]()
+      keptCkpt.foreach { case (f, dvLines) =>
+        val own = dvLines.split("\n").toSeq.flatMap(decode)
+          .collect { case Dv(_, v, _) => v }
+        val all = own ++ tailReplay.dvs.getOrElse(f, Seq.empty).map(_._1)
+        if (all.nonEmpty) dvByName(f) = all.map(dataPath)
+      }
+      keptTail.foreach { n =>
+        val dvs = tailReplay.dvs.getOrElse(n, Seq.empty).map(_._1)
+        if (dvs.nonEmpty) dvByName(n) = dvs.map(dataPath)
+      }
+      val listedCount = (ckptRows - removedCkpt.size + tailReplay.files.size).toInt
+      val kept = (keptCkpt.map(_._1).toSeq ++ keptTail).map(dataPath)
+      (kept, dvByName.toMap, listedCount)
+    }
+
+    /** The loose tail (branch-staged epochs included), for a sweep or
+      * a publish. */
+    private[sources] def looseTail: Seq[Loose] = tail
+    private[sources] def compactRecords: Seq[LogRecord] = compactRecs
+    /** The listed entries a sweep through `upTo` supersedes: every epoch
+      * at or below it, every older compact and its checkpoint artifacts. */
+    private[sources] def supersededBy(upTo: Long): Seq[Path] =
+      epochs.filter(_._1 <= upTo).map(_._2) ++ listing.filter { p =>
+        val n = p.getFileName.toString
+        (n.startsWith("compact-") || n.startsWith("checkpoint-")) &&
+          n.dropWhile(!_.isDigit).takeWhile(_.isDigit).toLongOption.exists(_ < upTo)
+      }
+  }
+
+  /** The checkpoint rows that survive partition and stats pruning (and
+    * were not removed by the tail): one Spark job whose closure carries
+    * only the removed set, the filters and the spec book. Returns (kept
+    * file name, its encoded dv lines). */
+  private def prunedCheckpoint(spark: org.apache.spark.sql.SparkSession,
+      parquet: Path, removed: Set[String],
+      filters: Seq[org.apache.spark.sql.sources.Filter], book: SpecBook)
+      : Array[(String, String)] = {
+    val removedB = spark.sparkContext.broadcast(removed)
+    import org.apache.spark.sql.Encoders
+    val enc5 = Encoders.tuple(Encoders.STRING, Encoders.STRING,
+      Encoders.STRING, Encoders.STRING, Encoders.STRING)
+    val enc2 = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+    spark.read
+      .schema("file STRING, stats STRING, part STRING, dvs STRING, " +
+        "bloom STRING") // checkpoints without bloom: by-name null = no filter
+      .parquet(parquet.toString)
+      .as(enc5)
+      .mapPartitions { it =>
+        it.flatMap { case (f, statLine, partLine, dvLines, bloomLine) =>
+          if (removedB.value.contains(f)) None
+          else {
+            val partOk = Option(partLine).flatMap(decode) match {
+              case Some(Part(_, t)) => filters.forall(book.mayMatch(t, _))
+              case _ => true
+            }
+            val statsOk = Option(statLine).flatMap(decode) match {
+              case Some(s: Stats) =>
+                val st = Option(bloomLine).flatMap(decode) match {
+                  case Some(Bloom(_, b)) => s.stat.copy(blooms = b.toMap)
+                  case _ => s.stat
+                }
+                st.rows > 0 && filters.forall(SnapStats.mayMatch(st, _))
+              case _ => true
+            }
+            if (partOk && statsOk) Some((f, Option(dvLines).getOrElse("")))
+            else None
+          }
+        }
+      }(enc2)
+      .collect()
+  }
+
+  /** MERGED per-column NDV of the live files ([[NdvSketch]]): their HLL
+    * sketches unioned in fragment order, each payload heapified
+    * TRANSIENTLY (never retained — the bloom-residency lesson) at
+    * O(live sketched files) CPU. */
+  private def mergedNdv(live: Set[String], frags: Seq[() => Seq[LogRecord]])
+      : Map[String, (Long, Long)] = {
+    val seen = scala.collection.mutable.HashSet[(String, String)]()
+    val unions = scala.collection.mutable.LinkedHashMap[String,
+      (Long, org.apache.datasketches.hll.Union)]()
+    frags.foreach(_().foreach {
+      case Ndv(f, m) if live.contains(f) => m.foreach { case (c, b64) =>
+        if (seen.add((c, f)))
+          NdvSketch.fromB64(b64).foreach { sk =>
+            val (n, u) = unions.getOrElseUpdate(c,
+              (0L, new org.apache.datasketches.hll.Union(NdvSketch.LgK)))
+            u.update(sk)
+            unions(c) = (n + 1, u)
+          }
+      }
+      case _ =>
+    })
+    unions.map { case (c, (n, u)) => c -> ((n, math.round(u.getEstimate))) }.toMap
+  }
 
   private[sources] def commitBranchEpoch(path: String, name: String,
       create: Boolean): Long = {
     val dir = Files.createDirectories(Paths.get(path))
-    claimEpoch(dir, () => {
-      val branches = tableBranches(path)
+    claimEpoch(dir, snap => {
       if (create) {
-        require(!branches.contains(name),
+        require(!snap.branches.contains(name),
           s"branch '$name' already exists on $path")
-        require(!tableTags(path).contains(name),
+        require(!snap.tags.contains(name),
           s"'$name' names a TAG on $path — branches and tags share " +
             "the VERSION AS OF namespace")
-        Seq(Branch(name, Some(newestVersion0(dir))))
+        Seq(Branch(name, Some(snap.version)))
       } else {
-        require(branches.contains(name),
+        require(snap.branches.contains(name),
           s"no branch '$name' on $path to drop " +
-            s"(branches: ${branches.keys.toSeq.sorted.mkString(", ") match {
+            s"(branches: ${snap.branches.keys.toSeq.sorted.mkString(", ") match {
               case "" => "none"; case b => b }})")
         Seq(Branch(name, None))
       }
     })
-  }
-
-  /** Per-branch (staged epoch count, staged file count) of the loose
-    * tail — the `.branches` metadata table's footprint columns. */
-  private[sources] def stagedFootprint(path: String)
-      : Map[String, (Long, Long)] = retryVanish() {
-    val dir = Paths.get(path)
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-    looseEpochs(dir, horizon)
-      .flatMap(e => branchOf(e._2).map(b => (b, readData(e._2).size)))
-      .groupBy(_._1).view
-      .mapValues(es => (es.size.toLong, es.map(_._2).sum.toLong)).toMap
   }
 
   /** PUBLISH a branch (the Iceberg `fast_forward` shape):
@@ -512,29 +1232,27 @@ object ManifestSink {
     // zero published file names
     val pubToken = java.util.UUID.randomUUID.toString
     var lastPublishedRemoves: Seq[String] = Seq.empty
-    val id = claimEpoch(dir, () => {
-      val base = tableBranches(path).getOrElse(name,
+    val id = claimEpoch(dir, snap => {
+      val base = snap.branches.getOrElse(name,
         throw new IllegalArgumentException(
           s"no branch '$name' on $path to publish"))
-      val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-      if (horizon > base) throw new IllegalStateException(
+      if (snap.horizon > base) throw new IllegalStateException(
         s"fast_forward('$name') on $path: the compaction horizon " +
-          s"($horizon) moved past the branch base ($base) — main's " +
+          s"(${snap.horizon}) moved past the branch base ($base) — main's " +
           "state changed since the fork; nothing was published")
-      val tail = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-        .filter(_._1 > base).sortBy(_._1)
+      val tail = snap.looseTail.filter(_.id > base)
       val moved = tail.filter { e =>
-        branchOf(e._2).isEmpty && records(e._2).exists {
+        e.branch.isEmpty && e.recs.exists {
           case _: Data | _: Remove | _: Dv => true
           case _ => false
         }
       }
       if (moved.nonEmpty) throw new IllegalStateException(
         s"fast_forward('$name') on $path: main data epoch(s) " +
-          s"${moved.map(_._1).mkString(", ")} landed after the branch " +
+          s"${moved.map(_.id).mkString(", ")} landed after the branch " +
           s"base $base — the branch no longer fast-forwards; re-stage " +
           "against the current snapshot (nothing was published)")
-      val mine = tail.filter(e => branchOf(e._2).contains(name))
+      val mine = tail.filter(_.branch.contains(name))
       nEpochs = mine.size
       // RESOLVE staged epochs in order (staged OVERWRITE):
       // a staged remove of a MAIN file publishes as a `#remove`; a
@@ -545,7 +1263,7 @@ object ManifestSink {
       val removesOfMain = scala.collection.mutable.LinkedHashSet[String]()
       val dvAcc = scala.collection.mutable.ArrayBuffer[Dv]()
       mine.foreach { e =>
-        val rs = records(e._2)
+        val rs = e.recs
         rs.foreach {
           case Remove(r) =>
             if (addAcc.contains(r)) addAcc.remove(r)
@@ -585,7 +1303,7 @@ object ManifestSink {
       // dv files (pre) — a pre-tag survives with its dv record.
       val surviveDvNames = dvAcc.map(_.dv).toSet
       val carried = mine.flatMap { e =>
-        val rs = records(e._2)
+        val rs = e.recs
         val selfUpdating = rs.exists {
           case Cdc(f, "pre") => rs.exists {
             case Dv(d, v, _) => v == f && branchAdds.contains(d)
@@ -617,11 +1335,11 @@ object ManifestSink {
       // writer (leading the content — the records-lead contract), so a
       // post-publish restart's replayed engine epochs still detect
       // even after the sweep absorbs the dropped branch epochs.
-      val txns = mine.flatMap(e => records(e._2))
+      val txns = mine.flatMap(_.recs)
         .collect { case Txn(w, e) => (w, e) }
         .groupMapReduce(_._1)(_._2)(math.max)
         .toSeq.sortBy(_._1).map { case (w, e) => Txn(w, e) }
-      val ddl = widestRecordedSchema(path).getOrElse(
+      val ddl = snap.widestSchema.getOrElse(
         throw new IllegalStateException(
           s"manifest table $path records no #schema"))
       // the #cow token rides UNCONDITIONALLY: with carried
@@ -652,60 +1370,8 @@ object ManifestSink {
       try Files.setLastModifiedTime(Paths.get(path, "data", n), now)
       catch { case _: IOException => } // already reclaimed
     }
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
+    maybeCompact(dir, compactInterval)
     (id, nEpochs, nFiles)
-  }
-
-  /** The records of a branch's staged epochs, in epoch order. */
-  private def stagedOn(dir: Path, name: String): Seq[Seq[LogRecord]] =
-    looseEpochs(dir, latestCompact(dir).map(_._1).getOrElse(-1L))
-      .filter(e => branchOf(e._2).contains(name)).sortBy(_._1)
-      .map(e => records(e._2))
-
-  /** The files a BRANCH read serves: the main union FOLDED with the
-    * branch's staged epochs in order — adds join, staged `#remove`s
-    * (a staged OVERWRITE) leave. Absolute paths. */
-  def branchFiles(path: String, name: String): Seq[String] = retryVanish() {
-    val dir = Paths.get(path)
-    require(tableBranches(path).contains(name),
-      s"no branch '$name' on $path")
-    val acc = scala.collection.mutable.LinkedHashSet[String]()
-    fragmentUnion(dir).foreach(acc.add)
-    stagedOn(dir, name).foreach(_.foreach {
-      case Remove(n) => acc.remove(n)
-      case Data(n) => acc.add(n)
-      case _ =>
-    })
-    acc.toSeq.map(f => Paths.get(path, "data", f).toString)
-  }
-
-  /** The partition tuples a BRANCH-staged overwrite decides on: main's
-    * recorded tuples plus the staged epochs' own `#part` records — a
-    * staged add is overwritable by a later staged dynamic/filtered
-    * overwrite exactly like a main file. */
-  private[sources] def branchFilePartitions(path: String, name: String)
-      : Map[String, PartTuple] = retryVanish() {
-    filePartitions(path) ++ stagedOn(Paths.get(path), name).flatten
-      .collect { case Part(f, t) => f -> t }
-  }
-
-  /** The dv state a BRANCH read applies (staged row-level writes):
-    * main's live vectors plus the branch's staged `#dv` records in
-    * epoch order — a staged MOR DELETE/UPDATE is visible on the audit
-    * face and invisible to main, exactly like a staged append. A staged
-    * overwrite's removes clear the victims' dv state — their rows are
-    * gone from the branch face whole. */
-  def branchDeleteVectors(path: String, name: String)
-      : Map[String, Seq[(String, Long)]] = retryVanish() {
-    val acc = scala.collection.mutable.LinkedHashMap[String, Seq[(String, Long)]]()
-    deleteVectors(path).foreach { case (d, l) => acc(d) = l }
-    stagedOn(Paths.get(path), name).foreach(_.foreach {
-      case Remove(n) => acc.remove(n)
-      case Dv(d, v, n) => acc(d) = acc.getOrElse(d, Seq.empty) :+ ((v, n))
-      case _ =>
-    })
-    acc.toMap
   }
 
   /** EQUALITY DELETES (the Iceberg-v2 equality-delete /
@@ -727,36 +1393,6 @@ object ManifestSink {
   private[graft] case class EqDelete(epoch: Long, file: String,
       cols: Seq[String], rows: Long)
 
-  /** LIVE equality deletes: records in loose (non-branch) epochs minus
-    * the `#eqdrop`-consumed set, with their epoch ids — O(tail). Live
-    * records exist only in the loose tail by construction (sweeps
-    * clamp below them). */
-  private[graft] def equalityDeletes(path: String): Seq[EqDelete] =
-    eqDeletesThrough(path, Long.MaxValue)
-
-  /** Equality deletes visible AS OF `version` (time travel): records
-    * at or below it, minus drops at or below it. */
-  private[graft] def eqDeletesAsOf(path: String, version: Long)
-      : Seq[EqDelete] = eqDeletesThrough(path, version)
-
-  private def eqDeletesThrough(path: String, version: Long)
-      : Seq[EqDelete] = retryVanish() {
-    val dir = Paths.get(path)
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-    val recs = scala.collection.mutable.ArrayBuffer[EqDelete]()
-    val dropped = scala.collection.mutable.HashSet[String]()
-    looseEpochs(dir, horizon).filter(_._1 <= version)
-      .filter(e => branchOf(e._2).isEmpty).sortBy(_._1).foreach {
-        case (id, p) =>
-          records(p).foreach {
-            case EqDel(f, cols, n) => recs += EqDelete(id, f, cols, n)
-            case EqDrop(f) => dropped += f
-            case _ =>
-          }
-      }
-    recs.toSeq.filterNot(e => dropped.contains(e.file))
-  }
-
   /** Drop every live equality-delete record in ONE metadata epoch
     * — the no-applicable-files resolution arm of
     * `compact_data` (every row the records could delete is already
@@ -766,71 +1402,9 @@ object ManifestSink {
   private[graft] def commitEqDropEpoch(path: String,
       compactInterval: Int): Unit = {
     val dir = Paths.get(path)
-    claimEpoch(dir, () =>
-      Op("metadata") +: equalityDeletes(path).map(e => EqDrop(e.file)))
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
-  }
-
-  /** Add-epoch of every LOOSE-added (non-branch) data file — the
-    * sequence info equality-delete applicability needs. A file absent
-    * here was added at or below the horizon (every live eqdel applies
-    * to it; sweeps clamp below live eqdels, so the distinction is
-    * always derivable). */
-  private[sources] def looseAddEpochs(path: String): Map[String, Long] =
-    retryVanish() {
-      val dir = Paths.get(path)
-      val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-      val acc = scala.collection.mutable.LinkedHashMap[String, Long]()
-      // branch-staged adds included: main reads never plan them, and
-      // the branch AUDIT face needs their (staged) epochs so a main
-      // eqdel landing after a staged add cannot mis-apply to it
-      looseEpochs(dir, horizon)
-        .sortBy(_._1).foreach { case (id, p) =>
-          readData(p).foreach(n => acc.getOrElseUpdate(n, id))
-        }
-      acc.toMap
-    }
-
-  /** MERGED per-column NDV of the LIVE snapshot ([[NdvSketch]]): the
-    * live files' HLL sketches unioned (HLL union is lossless) —
-    * physical column → (files sketched, estimate).
-    * Cached per newest version; a rebuild heapifies each payload
-    * TRANSIENTLY (never retained — the bloom-residency lesson applied
-    * from day one) at O(live sketched files) CPU. */
-  private val ndvCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Map[String, (Long, Long)])]()
-  def mergedNdv(path: String): Map[String, (Long, Long)] = retryVanish() {
-    val dir = Paths.get(path)
-    val v = try newestVersion0(dir) catch { case _: Exception => -1L }
-    val key = dir.toAbsolutePath.toString
-    val hit = ndvCache.get(key)
-    if (hit != null && hit._1 == v) hit._2
-    else {
-      val live = fragmentUnion(dir).toSet
-      val seen = scala.collection.mutable.HashSet[(String, String)]()
-      val unions = scala.collection.mutable.LinkedHashMap[String,
-        (Long, org.apache.datasketches.hll.Union)]()
-      manifestFragments(dir).filter(branchOf(_).isEmpty).foreach { p =>
-        records(p).foreach { case Ndv(f, m) =>
-          if (live.contains(f)) m.foreach { case (c, b64) =>
-            if (seen.add((c, f)))
-              NdvSketch.fromB64(b64).foreach { sk =>
-                val (n, u) = unions.getOrElseUpdate(c,
-                  (0L, new org.apache.datasketches.hll.Union(NdvSketch.LgK)))
-                u.update(sk)
-                unions(c) = (n + 1, u)
-              }
-          }
-          case _ =>
-        }
-      }
-      val res = unions.map { case (c, (n, u)) =>
-        c -> ((n, math.round(u.getEstimate))) }.toMap
-      if (ndvCache.size >= 64) ndvCache.clear()
-      ndvCache.put(key, (v, res))
-      res
-    }
+    claimEpoch(dir, snap =>
+      Op("metadata") +: snap.eqDeletes.map(e => EqDrop(e.file)))
+    maybeCompact(dir, compactInterval)
   }
 
   /** ROW TRACKING (the Delta row-tracking / Iceberg-v3
@@ -850,57 +1424,6 @@ object ManifestSink {
     * compaction (the records ride like `#stats`), the watermark rides
     * as one line. */
   private[sources] val RowIdColumnName = "_graft_rowid"
-
-  /** The table's row-id HIGH WATERMARK: the max `#rowidhwm` across ALL
-    * fragments — including branch-staged epochs, whose reserved ids
-    * must never be reissued even though their rows are not yet (or
-    * never) visible. 0 on a log that never assigned. */
-  private[sources] def rowIdWatermark(dir: Path): Long = retryVanish() {
-    // manifestFragments includes branch-staged loose epochs — exactly
-    // right here: staged reservations must hold even before publish
-    manifestFragments(dir).flatMap(p => records(p).collect {
-      case RowIdHwm(n) => n }).maxOption.getOrElse(0L)
-  }
-
-  /** Every live file's base row id (immutable once assigned; records
-    * of removed files survive until a compaction drops them, which is
-    * at or below every CDC-readable window by construction). */
-  def rowIdBases(path: String): Map[String, Long] =
-    planState(Paths.get(path)).rowids
-
-  /** The LIVE delete vectors per data file: `#dv` records accumulated
-    * in fragment order, cleared when the data file itself is
-    * `#remove`d (a rewrite/compaction RESOLVES the deletes — the
-    * replacement files physically lack the rows, and the dv files age
-    * into vacuum candidates). Values are (dvFile, nDeleted) in record
-    * order. */
-  def deleteVectors(path: String): Map[String, Seq[(String, Long)]] =
-    planState(Paths.get(path)).dvs
-
-  /** [[deleteVectors]] as of epoch `version` — the dv state a
-    * `VERSION AS OF` read applies: versions before a dv epoch serve
-    * the rows un-deleted; versions at/after apply it; versions after
-    * the resolving rewrite have no dv left to apply. Same fragment
-    * selection (and the same below-horizon refusal) as
-    * [[committedFilesAsOf]]. */
-  def deleteVectorsAsOf(path: String, version: Long): Map[String, Seq[(String, Long)]] =
-    retryVanish() {
-      val dir = Paths.get(path)
-      val loose = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-      val compact = latestCompact(dir)
-      val horizon = compact.map(_._1).getOrElse(-1L)
-      val fragments: Seq[Path] =
-        if (version >= horizon)
-          compact.map(_._2).toSeq ++
-            loose.filter(e => e._1 > horizon && e._1 <= version)
-              .sortBy(_._1).map(_._2)
-        else
-          // the pre-sweep crash window committedFilesAsOf validates; if
-          // it refused there we never get here (callers resolve files
-          // first), so resolving from the loose prefix is consistent
-          loose.filter(_._1 <= version).sortBy(_._1).map(_._2)
-      replay(fragments.filter(branchOf(_).isEmpty).map(records)).dvs.toMap
-    }
 
   /** COLUMN MAPPING (the Delta column-mapping shape for
     * RENAME COLUMN without rewriting a byte): the `#colmap
@@ -922,16 +1445,12 @@ object ManifestSink {
     * safe: it gets a fresh physical name). */
   val DroppedColumn = "-"
 
-  /** The live physical→logical column mapping (empty = identity). */
-  def columnMapping(path: String): Map[String, String] =
-    tableMeta(Paths.get(path)).colmap
-
   /** Append a pure-metadata epoch carrying the full `#colmap` record —
     * the ALTER TABLE RENAME COLUMN commit. */
   private[sources] def commitColmapEpoch(path: String,
       mapping: Map[String, String]): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => Seq(Colmap(mapping.toSeq.sortBy(_._1))))
+      _ => Seq(Colmap(mapping.toSeq.sortBy(_._1))))
 
   /** Rename v1 filter column references through `m` (case-insensitive
     * keys) — how a LOGICAL predicate becomes the PHYSICAL one every
@@ -961,28 +1480,6 @@ object ManifestSink {
       case other => other
     }
   }
-
-  /** The table-level records via the checkpoint META sidecar plus the
-    * loose tail, when a sidecar matching the current horizon exists:
-    * O(tail) reads, the O(files) compact text never parsed. Otherwise
-    * the memoized [[planState]]'s (identical values, derived the
-    * expensive way); with no compact at all, the loose log IS the tail
-    * and planState is already O(tail). */
-  private def tableMeta(dir: Path): TableMeta =
-    latestCompact(dir).flatMap { case (h, _) =>
-      val mp = dir.resolve(checkpointMetaName(h))
-      if (!Files.isRegularFile(mp)) None
-      else retryVanish() {
-        Some(TableMeta.of(replay(records(mp) +: looseEpochs(dir, h)
-          .sortBy(_._1).map(_._2).filter(branchOf(_).isEmpty).map(records))))
-      }
-    }.getOrElse(planState(dir).meta)
-
-  /** The distinct schema DDLs the live fragments record — what the log
-    * says it was written under. Order is fragment order (oldest compact
-    * record first). */
-  def recordedSchemas(path: String): Seq[String] =
-    tableMeta(Paths.get(path)).schemas
 
   /** May a column recorded as `from` be SERVED as `to` without
     * reinterpreting committed bytes (type widening — the
@@ -1115,52 +1612,6 @@ object ManifestSink {
       df.name.equalsIgnoreCase(rf.name) &&
         (df.dataType == rf.dataType || widens(rf.dataType, df.dataType))))
 
-  /** The recorded `#schema` DDL that CONTAINS every other recorded one
-    * — the log's self-describing declared schema: under
-    * additive evolution the newest record is the widest and wins; a
-    * log whose records have no single containing schema (mixed
-    * subset-schema writers through the path face) resolves to None and
-    * the caller falls back to the conf. Unparsable records (hand-built
-    * fixtures) also resolve to None rather than throw. */
-  def widestRecordedSchema(path: String): Option[String] = {
-    val ddls = recordedSchemas(path)
-    val parsed = ddls.flatMap { d =>
-      try Some(d -> StructType.fromDDL(d)) catch { case _: Exception => None }
-    }
-    if (parsed.size != ddls.size) None
-    else parsed.find { case (_, cand) =>
-      parsed.forall { case (_, other) => containsSchema(cand, other) }
-    }.map(_._1)
-  }
-
-  /** The table's CURRENT partition spec — what new writes fan out
-    * under: the highest-id record of [[partitionSpecs]]. Empty for
-    * unpartitioned tables. */
-  def partitionSpec(path: String): Seq[PartField] =
-    partitionSpecs(path).current
-
-  /** The table's full partition-spec HISTORY (spec
-    * evolution): every `#spec` record the log carries, parsed into a
-    * [[SpecBook]]. Record grammar is `#spec [<id>=]t1;t2` with t ∈
-    * `identity:<col>` | `days:<col>` | `bucket:<n>:<col>`; the CREATE
-    * epoch writes the id-less form (spec 0), each
-    * `CALL graft.sys.set_partition_spec` appends the next id. Two
-    * distinct records claiming ONE id is a corruption and refuses —
-    * files carry that id and pruning must not guess their layout. */
-  def partitionSpecs(path: String): SpecBook = retryVanish() {
-    val dir = Paths.get(path)
-    val parsed = tableMeta(dir).specs.map(r => (r.specId, r.body))
-    val dup = parsed.groupBy(_._1)
-      .collect { case (id, rs) if rs.map(_._2).distinct.size > 1 => id }
-    if (dup.nonEmpty) throw new IllegalStateException(
-      s"manifest table $path records conflicting partition specs for " +
-        s"id(s) ${dup.toSeq.sorted.mkString(", ")} — files carry these " +
-        "ids; refusing to guess which layout their tuples follow")
-    SpecBook(parsed.map { case (id, s) =>
-      id -> (if (s == "-") Seq.empty[PartField]
-             else s.split(";").toSeq.map(PartField.parse)) }.toMap)
-  }
-
   /** Append a pure-metadata epoch evolving the partition spec — the
     * `CALL graft.sys.set_partition_spec` commit. The next
     * spec id is derived INSIDE the claim's content generator, so two
@@ -1175,33 +1626,22 @@ object ManifestSink {
     // record must still occupy its id — files never carry it (no
     // tuples under an empty spec), but the id sequence stays dense
     val body = if (spec.isEmpty) "-" else PartField.render(spec)
-    val epoch = claimEpoch(dir, () => {
-      val id = partitionSpecs(path).currentId + 1
+    val epoch = claimEpoch(dir, snap => {
+      val id = snap.specs.currentId + 1
       claimedSpecId.set(id)
       Seq(Spec(Some(id), body))
     })
     (epoch, claimedSpecId.get)
   }
 
-  /** Encoded partition-value tuples per committed file name, from the
-    * `#part <file> [<specId>@]<tok1,tok2>` records (the spec-id
-    * prefix is spec EVOLUTION — absent means spec 0, so pre-evolution
-    * logs parse unchanged). Files without a record
-    * (pre-partitioning files, COW rewrites from older builds) simply
-    * have no tuple: pruning treats them as unprunable and
-    * partition-scoped overwrite refuses to touch them. Compaction
-    * carries records forward for files still in the union. */
-  def filePartitions(path: String): Map[String, PartTuple] =
-    planState(Paths.get(path)).parts
-
   /** The `#forbranch` header of an epoch staged on `forBranch`,
     * validated against the live refs per claim attempt — writing to a
     * dropped branch refuses. */
-  private[sources] def stagedHeader(path: String,
+  private[sources] def stagedHeader(snap: Snapshot,
       forBranch: Option[String]): Seq[ForBranch] =
     forBranch.map { b =>
-      require(tableBranches(path).contains(b),
-        s"no branch '$b' on $path — create it with " +
+      require(snap.branches.contains(b),
+        s"no branch '$b' on ${snap.path} — create it with " +
           "CALL graft.sys.create_branch first")
       ForBranch(b)
     }.toSeq
@@ -1229,13 +1669,12 @@ object ManifestSink {
       forBranch: Option[String] = None): Long = {
     val dir = Files.createDirectories(Paths.get(path))
     val token = java.util.UUID.randomUUID.toString
-    def content(): Seq[LogRecord] =
+    def content(snap: Snapshot): Seq[LogRecord] =
       Seq(Schema(schemaDdl), Op("delete"), Cow(token)) ++
-        stagedHeader(path, forBranch) ++
+        stagedHeader(snap, forBranch) ++
         records.sortBy(_._1).map { case (d, v, n) => Dv(d, v, n) }
     val id = claimEpoch(dir, content _, observedDvs = observedDvs)
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
+    maybeCompact(dir, compactInterval)
     id
   }
 
@@ -1267,20 +1706,19 @@ object ManifestSink {
     val dir = Files.createDirectories(Paths.get(path))
     val token = java.util.UUID.randomUUID.toString
     val sortedAdds = adds.sortBy(_.name)
-    def content(): Seq[LogRecord] =
+    def content(snap: Snapshot): Seq[LogRecord] =
       Seq(Schema(schemaDdl), Op(op), Cow(token)) ++
-        stagedHeader(path, forBranch) ++ fileRecords(sortedAdds, specId) ++
+        stagedHeader(snap, forBranch) ++ fileRecords(sortedAdds, specId) ++
         cdcRoles.sortBy(_._1).map { case (f, r) => Cdc(f, r) } ++
         dvRecords.sortBy(_._1).map { case (d, v, n) => Dv(d, v, n) } ++
         sortedAdds.map(f => Data(f.name))
     val id = claimEpoch(dir, content _, observedDvs = Some(observedDvs))
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
+    maybeCompact(dir, compactInterval)
     id
   }
 
-  /** RESTORE the table to snapshot `version` as ONE new epoch (round
-    * 16, the Delta RESTORE / Iceberg rollback-to-snapshot shape): the
+  /** RESTORE the table to snapshot `version` as ONE new epoch (the
+    * Delta RESTORE / Iceberg rollback-to-snapshot shape): the
     * epoch `#remove`s every file the target snapshot lacks, re-ADDS
     * every file it has that the current one dropped — the bytes are
     * still on disk until vacuum's remove-time age gate passes, which
@@ -1290,7 +1728,7 @@ object ManifestSink {
     * is preserved: the restore is a NEW version (time travel keeps
     * serving every pre-restore snapshot, and a second rollback can
     * roll FORWARD again). Refusals, all loud: a version past the
-    * retention horizon (committedFilesAsOf's contract), re-added data
+    * retention horizon ([[Snapshot.filesAsOf]]'s contract), re-added data
     * or dv files whose bytes vacuum already reclaimed, and a SURVIVING
     * file whose dv state moved since `version` — resetting it would
     * need a same-epoch remove+re-add of one name, which the log's
@@ -1304,7 +1742,7 @@ object ManifestSink {
     // EQUALITY DELETES: a rollback across (or under) live
     // `#eqdel` records re-adds files whose re-add epoch postdates the
     // deletes — old rows would escape them; resolve first.
-    if (equalityDeletes(path).nonEmpty)
+    if (snapshot(path).eqDeletes.nonEmpty)
       throw new UnsupportedOperationException(
         s"rollback($path, $version): the table carries live equality " +
           "deletes (a keyed streaming upsert is active) — CALL " +
@@ -1312,14 +1750,14 @@ object ManifestSink {
     val token = java.util.UUID.randomUUID.toString
     var nAdd = 0
     var nRem = 0
-    claimEpoch(dir, () => {
-      val target = committedFilesAsOf(path, version)
+    claimEpoch(dir, snap => {
+      val target = snap.filesAsOf(version)
         .map(f => Paths.get(f).getFileName.toString)
       val targetSet = target.toSet
-      val current = fragmentUnion(dir)
+      val current = snap.names
       val curSet = current.toSet
-      val dvsV = deleteVectorsAsOf(path, version)
-      val dvsC = deleteVectors(path)
+      val dvsV = snap.dvsAsOf(version)
+      val dvsC = snap.dvs
       val removes = current.filterNot(targetSet.contains)
       val readds = target.filterNot(curSet.contains)
       // SET compare: a compaction sweep or fragment-
@@ -1354,7 +1792,7 @@ object ManifestSink {
       // pairable — the feed then serves the rollback as per-row
       // update_pre/postimage + insert/delete instead of net effect.
       // Any file without a row-id base keeps the diff fallback.
-      val bases = rowIdBases(path)
+      val bases = snap.rowids
       val rowids = readds.sorted.flatMap(n => bases.get(n).map(RowId(n, _)))
       val pairHdr =
         if (removes.nonEmpty && (removes ++ readds).forall(bases.contains))
@@ -1364,8 +1802,7 @@ object ManifestSink {
         removes.sorted.map(Remove(_)) ++ dvs ++ rowids ++
         readds.sorted.map(Data(_))
     })
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
+    maybeCompact(dir, compactInterval)
     (nAdd, nRem)
   }
 
@@ -1385,47 +1822,28 @@ object ManifestSink {
       f -> dvs
     }.toMap
 
-  /** TABLE PROPERTIES from `#prop <key> <value>` records:
-    * last record per key wins in fragment order, so `ALTER TABLE SET
-    * TBLPROPERTIES` is an appended record, not a rewrite. Known keys:
-    * `delete.mode` (cow|mor — the DELETE strategy, overridable by the
-    * session conf) and `compact.interval` (the log's compaction
-    * cadence). Unknown keys round-trip for the user. Keys and values
-    * must be token-safe (`[A-Za-z0-9._/=-]`, no spaces). */
-  def tableProperties(path: String): Map[String, String] =
-    tableMeta(Paths.get(path)).props
-
-  /** SNAPSHOT TAGS (the Iceberg tag shape): `#tag <name>
-    * <version>` names an epoch id so `VERSION AS OF 'name'` reads it;
-    * `#tag <name> -` is the drop tombstone. Last record per name wins
-    * in fragment order. Tags are POINTERS, not retention pins: a tag
-    * whose version falls below the compaction horizon refuses at read
-    * with the standard retention message. */
-  def tableTags(path: String): Map[String, Long] =
-    tableMeta(Paths.get(path)).tags
-
   /** Append a pure-metadata epoch creating or dropping a tag. The
     * target version is validated against the log INSIDE the claim's
     * content generator, so a tag can never be born dangling. */
   private[sources] def commitTagEpoch(path: String, name: String,
       version: Option[Long]): Long = {
     val dir = Files.createDirectories(Paths.get(path))
-    claimEpoch(dir, () => {
+    claimEpoch(dir, snap => {
       version.foreach { v =>
-        val newest = newestVersion(path)
+        val newest = snap.newestVersion
         require(v >= 0 && v <= newest,
           s"tag '$name' on $path: version $v does not exist " +
             s"(newest committed epoch: $newest)")
         // symmetric with commitBranchEpoch's tag check:
         // a tag shadowed by a live branch would silently change what
         // `VERSION AS OF '<name>'` means once the branch drops
-        require(!tableBranches(path).contains(name),
+        require(!snap.branches.contains(name),
           s"'$name' names a BRANCH on $path — branches and tags share " +
             "the VERSION AS OF namespace")
       }
-      if (version.isEmpty) require(tableTags(path).contains(name),
+      if (version.isEmpty) require(snap.tags.contains(name),
         s"no tag '$name' on $path to drop " +
-          s"(tags: ${tableTags(path).keys.toSeq.sorted.mkString(", ") match {
+          s"(tags: ${snap.tags.keys.toSeq.sorted.mkString(", ") match {
             case "" => "none"; case t => t }})")
       Seq(Tag(name, version))
     })
@@ -1436,23 +1854,7 @@ object ManifestSink {
   private[sources] def commitPropsEpoch(path: String,
       props: Seq[(String, String)]): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => props.map { case (k, v) => Prop(k, v) })
-
-  /** CDC RETENTION RESERVATIONS: `feed.reserve.<consumer>`
-    * properties, committed by `CALL graft.sys.register_feed` — each
-    * names a change-feed consumer and the MINIMUM epoch window that
-    * must stay loose for it: every sweep (routine compaction AND
-    * `expire_snapshots`) clamps its horizon at `newest - window`, so a
-    * consumer lagging at most `window` epochs can never hit the
-    * below-horizon retention refusal. Unregistering tombstones the
-    * value to `-` (properties are last-wins); non-numeric values never
-    * reserve. Returns consumer → minimum window. */
-  def registeredFeeds(path: String): Map[String, Long] =
-    tableProperties(path).collect {
-      case (k, v) if k.startsWith("feed.reserve.") &&
-          v.toLongOption.exists(_ >= 1) =>
-        k.stripPrefix("feed.reserve.") -> v.toLong
-    }
+      _ => props.map { case (k, v) => Prop(k, v) })
 
   /** Append a pure-metadata DDL epoch carrying `#schema <ddl>` — the
     * ALTER TABLE ADD COLUMN record: additive evolution is
@@ -1460,44 +1862,7 @@ object ManifestSink {
     * so declaring it is one log record, no data rewritten. */
   private[sources] def commitSchemaEpoch(path: String, ddl: String): Long =
     claimEpoch(Files.createDirectories(Paths.get(path)),
-      () => Seq(Schema(ddl)))
-
-  /** Enforce the additive-evolution CONTAINMENT contract before
-    * trusting a declared (catalog-conf) schema: every field the log's
-    * `#schema` records carry must appear in `declared` with its
-    * recorded type (case-insensitive name; appending NEW nullable
-    * columns is the one supported evolution). One shared check for
-    * every face: the scan refuses to SERVE under a stale
-    * narrow conf, and the copy-on-write rewriters — row-level DELETE,
-    * `compact_data`, MERGE — refuse to REWRITE under one, because a
-    * rewrite that read through a narrow conf would silently drop an
-    * evolved column from the survivor files it commits: permanent data
-    * loss on a destructive path, not just a wrong query answer. */
-  def verifyDeclaredSchema(path: String, what: String,
-      declared: StructType): Unit = {
-    recordedSchemas(path).foreach { ddl =>
-      val recorded = StructType.fromDDL(ddl)
-      val ok = containsSchema(declared, recorded)
-      if (!ok) throw new IllegalArgumentException(
-        s"$what: declared schema '${declared.toDDL}' does not match the " +
-          s"schema the log records for committed epochs ('$ddl') — every " +
-          "recorded column must appear in the declared schema with its " +
-          "recorded type (appending NEW nullable columns is the one " +
-          "supported evolution); update the catalog schema conf (the log " +
-          "refuses rather than drop or reinterpret committed data)")
-    }
-  }
-
-  /** Per-file statistics recorded at write time — the data-skipping
-    * index, keyed by file NAME (unique for a table's lifetime); files
-    * without a record simply cannot be pruned. Duplicates across a
-    * crash window carry identical content; a CONFLICTING duplicate (two
-    * writers claiming one name — a naming bug the run tokens are
-    * designed out of) must never feed the skipping index, so its name
-    * simply loses its stats: an unpruned file is a slow read, a
-    * mispruned file is a wrong answer. */
-  def fileStats(path: String): Map[String, FileStat] =
-    planState(Paths.get(path)).stats
+      _ => Seq(Schema(ddl)))
 
   /** CLAIM the next epoch id on the log and publish `content` under it —
     * the one write path both faces share. `Files.createLink` is
@@ -1546,7 +1911,8 @@ object ManifestSink {
     * concurrent deletes over one file could both publish survivors and
     * resurrect each other's deleted rows.
     *
-    * `contentGen` is re-evaluated on EVERY claim attempt:
+    * `contentGen` is re-evaluated on EVERY claim attempt, against that
+    * attempt's snapshot:
     * a full-snapshot overwrite computes its `#remove` set from the
     * union it is about to replace, and a racing append landing between
     * two attempts must be absorbed into the refreshed remove set — with
@@ -1583,177 +1949,184 @@ object ManifestSink {
     * set and aborts with a retryable [[ManifestConflictException]]
     * otherwise — the loser recomputes against the winner's records
     * (which its anti-join then excludes) and retries. */
-  private[sources] def claimEpoch(dir: Path, contentGen: () => Seq[LogRecord],
+  private[sources] def claimEpoch(dir: Path, contentGen: Snapshot => Seq[LogRecord],
       consumedDvs: Option[Map[String, Set[String]]] = None,
       observedDvs: Option[Map[String, Set[String]]] = None): Long = {
     var claimed = -1L
+    var vanished = 0
     while (claimed < 0) {
       checkRenamed(dir)
-      // COMMIT-TIME header: `#ts <micros>` is stamped at claim time so
-      // TIMESTAMP AS OF reads a PERSISTED clock instead of fragment
-      // mtimes, which any mtime-disturbing copy (cp/rsync without -a,
-      // backup restore, some object-store mounts) silently shifts. It
-      // rides AFTER the leading `#txn` records — their records-lead
-      // contract is what keeps the replay check O(writers) bytes — and
-      // before everything else; logs without it fall back to mtime.
-      val generated = contentGen()
-      generated.foreach(check)
-      val (txnLead, restContent) = generated.span(_.isInstanceOf[Txn])
-      val content0 = txnLead ++
-        (Ts(System.currentTimeMillis() * 1000L) +: restContent)
-      // ROW-ID ASSIGNMENT: every data line with an
-      // in-content `#stats` record (i.e. a freshly written file) and no
-      // caller-declared `#rowid` gets a base from the table watermark,
-      // reserving its row count. Re-adds (rollback — no in-content
-      // stats) keep their original bases; BRANCH-STAGED epochs skip
-      // (invisible rows need no identity yet — the publish re-lists and
-      // assigns). `hwmRead` is fence-verified before the link below.
-      val stagingBranch = content0.collectFirst { case ForBranch(b) => b }
-      val dataNames = content0.collect { case Data(n) => n }
-      val assignable =
-        if (stagingBranch.isDefined) Seq.empty
-        else {
-          val statRows = content0.collect { case s: Stats => s.file -> s.rows }.toMap
-          val declared = content0.collect { case RowId(f, _) => f }.toSet
-          dataNames.filter(n => statRows.contains(n) && !declared.contains(n))
-            .map(n => (n, statRows(n)))
+      // ONE snapshot per attempt: the content, the next id, the row-id
+      // watermark and every fence below read this one listing, and a
+      // successful link at `next` proves no commit landed after it (the
+      // racer would have taken `next` first) — so the content applies to
+      // exactly the pre-state the fences validated
+      val snap = snapshot(dir.toString)
+      claimed =
+        try claimAttempt(dir, snap, contentGen(snap), consumedDvs, observedDvs)
+        catch {
+          // a listed fragment vanished under a sweep before anything was
+          // linked: re-run the attempt against a fresh listing
+          case e: java.nio.file.NoSuchFileException =>
+            vanished += 1
+            if (vanished >= 8) throw e
+            -1L
         }
-      val hwmRead = if (assignable.isEmpty) -1L else rowIdWatermark(dir)
-      val content =
-        if (assignable.isEmpty) content0
-        else {
-          var next = hwmRead
-          val ids = assignable.map { case (n, rows) =>
-            val b = next; next += rows; RowId(n, b) }
-          content0 ++ ids :+ RowIdHwm(next)
-        }
-      val bytes = content.map(encode).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val txn = content.collectFirst { case t: Txn => t }
-      val removes = content.collect { case Remove(n) => n }
-      val cowToken = content.collectFirst { case Cow(t) => t }
-      def absorbedByCompact: Boolean =
-        (dataNames.nonEmpty && {
-          val union = fragmentUnion(dir).toSet
-          dataNames.forall(union.contains)
-        }) || txn.exists(t => txnWatermark(dir, t.writer) >= t.epoch) ||
-          cowToken.exists(t =>
-            manifestFragments(dir).exists(records(_).contains(Cow(t))))
-      val tmp = Files.createTempFile(dir, ".epoch", ".tmp")
-      Files.write(tmp, bytes)
-      val dvTargets = content.collect { case Dv(d, _, _) => d }
-      // SPEC-ID fence: a spec-evolution claim computed its
-      // id when the content was GENERATED; a commit landing between
-      // generation and this attempt's epoch-id read does not collide
-      // on the link (the id moved past it), so the claimed spec id
-      // must re-verify as still next-in-sequence — one spec id can
-      // never bind two layouts. Any state change after this check and
-      // before the link necessarily claims THIS epoch id first, so
-      // the link collision re-runs the check.
-      val claimedSpecIds = content.collect { case Spec(Some(id), _) => id }
-      try {
-        val next = nextEpochId(dir)
-        if (claimedSpecIds.nonEmpty && claimedSpecIds.exists(
-            _ != partitionSpecs(dir.toString).currentId + 1)) {
-          // stale id: fall through to the next loop pass, which
-          // regenerates the content against the fresh log
-        } else if (hwmRead >= 0 && rowIdWatermark(dir) != hwmRead) {
-          // ROW-ID fence (the spec-id fence reasoning): a
-          // commit that landed between our watermark read and this
-          // attempt may have reserved the same id range. Any state
-          // change after THIS check and before the link necessarily
-          // claims our epoch id first, so the link collision re-runs
-          // the check — one id range can never be issued twice.
-        } else {
-        if (removes.nonEmpty || dvTargets.nonEmpty) {
-          // a BRANCH-STAGED dv epoch fences against the
-          // BRANCH's visible state: its targets may be staged adds
-          // (invisible to main) and its observed dv set includes
-          // earlier staged records — main-state fencing would refuse
-          // valid staged writes and miss same-branch races
-          val live = stagingBranch match {
-            case Some(b) => branchFiles(dir.toString, b)
-              .map(p => Paths.get(p).getFileName.toString).toSet
-            case None => fragmentUnion(dir).toSet
-          }
-          def curDvState: Map[String, Seq[(String, Long)]] =
-            stagingBranch match {
-              case Some(b) => branchDeleteVectors(dir.toString, b)
-              case None => deleteVectors(dir.toString)
-            }
-          // a dv record may target a file THIS epoch re-adds (rollback
-          // restoring a historical dv state): inherently consistent —
-          // the add and the record flip visibility together. The
-          // exemption is DV-ONLY: a same-epoch
-          // remove+re-add of one name is exactly the ambiguous
-          // construct rollbackTo refuses to emit, so removes stay on
-          // the strict live-set check
-          val gone = removes.filterNot(live.contains) ++
-            dvTargets.filterNot(n =>
-              live.contains(n) || dataNames.contains(n))
-          if (gone.nonEmpty)
-            throw new ManifestConflictException(gone.sorted, dir.toString)
-          // COW-vs-DV fence: every dv currently attached to a removed
-          // file must have been applied by this rewrite
-          consumedDvs.foreach { m =>
-            val cur = curDvState
-            val stale = removes.flatMap { f =>
-              cur.getOrElse(f, Seq.empty).map(_._1)
-                .filterNot(m.getOrElse(f, Set.empty).contains)
-                .map(dv => s"$f#$dv")
-            }
-            if (stale.nonEmpty)
-              throw new ManifestConflictException(stale.sorted, dir.toString)
-          }
-          // DV-vs-DV fence: each `#dv` target's CURRENT dv set must be
-          // exactly the set this operation computed its positions
-          // against — a racing dv that landed in between may overlap,
-          // and the loser must recompute (its anti-join then excludes
-          // the winner's positions) rather than publish overcounts
-          observedDvs.foreach { m =>
-            val cur = curDvState
-            val raced = dvTargets.flatMap { f =>
-              val now = cur.getOrElse(f, Seq.empty).map(_._1).toSet
-              (now -- m.getOrElse(f, Set.empty)).toSeq.sorted
-                .map(dv => s"$f#$dv")
-            }
-            if (raced.nonEmpty)
-              throw new ManifestConflictException(raced.sorted, dir.toString)
-          }
-        }
-        // EQUALITY-DELETE fence: a remove- or dv-carrying
-        // commit under LIVE equality deletes would move or replace
-        // rows into files EXEMPT from them (add-epoch past the
-        // delete) — resurrecting deleted keys. Only a commit that
-        // RESOLVES every live record (`#eqdrop` lines covering the
-        // set — compact_data) may proceed; everything else aborts
-        // retryably, and the race window between an operation's pin
-        // and its claim closes here.
-        val eqDrops = content.collect { case EqDrop(f) => f }.toSet
-        if (removes.nonEmpty || dvTargets.nonEmpty || eqDrops.nonEmpty) {
-          val unresolved = equalityDeletes(dir.toString).map(_.file)
-            .filterNot(eqDrops.contains)
-          if (unresolved.nonEmpty)
-            throw new ManifestConflictException(
-              unresolved.sorted.map(f => s"eqdel:$f"), dir.toString)
-        }
-        try {
-          Files.createLink(dir.resolve(epochName(next)), tmp)
-          if (latestCompact(dir).map(_._1).getOrElse(-1L) >= next
-              && !absorbedByCompact) {
-            // stale claim raced a compaction sweep: unpublishable — retry
-            Files.deleteIfExists(dir.resolve(epochName(next)))
-          } else {
-            metadataBytes.addAndGet(bytes.length.toLong)
-            claimed = next
-          }
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => // lost; retry
-        }
-        }
-      } finally Files.deleteIfExists(tmp)
     }
     claimed
+  }
+
+  /** One claim attempt against `snap`: the epoch id it linked, or -1
+    * when it lost a race and must re-run. */
+  private def claimAttempt(dir: Path, snap: Snapshot, generated: Seq[LogRecord],
+      consumedDvs: Option[Map[String, Set[String]]],
+      observedDvs: Option[Map[String, Set[String]]]): Long = {
+    // COMMIT-TIME header: `#ts <micros>` is stamped at claim time so
+    // TIMESTAMP AS OF reads a PERSISTED clock instead of fragment
+    // mtimes, which any mtime-disturbing copy (cp/rsync without -a,
+    // backup restore, some object-store mounts) silently shifts. It
+    // rides AFTER the leading `#txn` records — their records-lead
+    // contract is what keeps the replay check O(writers) bytes — and
+    // before everything else; logs without it fall back to mtime.
+    generated.foreach(check)
+    val (txnLead, restContent) = generated.span(_.isInstanceOf[Txn])
+    val content0 = txnLead ++
+      (Ts(System.currentTimeMillis() * 1000L) +: restContent)
+    // ROW-ID ASSIGNMENT: every data line with an
+    // in-content `#stats` record (i.e. a freshly written file) and no
+    // caller-declared `#rowid` gets a base from the table watermark,
+    // reserving its row count. Re-adds (rollback — no in-content
+    // stats) keep their original bases; BRANCH-STAGED epochs skip
+    // (invisible rows need no identity yet — the publish re-lists and
+    // assigns). The watermark is the attempt snapshot's, so a commit
+    // that reserved ids after it necessarily took `next` first.
+    val stagingBranch = content0.collectFirst { case ForBranch(b) => b }
+    val dataNames = content0.collect { case Data(n) => n }
+    val assignable =
+      if (stagingBranch.isDefined) Seq.empty
+      else {
+        val statRows = content0.collect { case s: Stats => s.file -> s.rows }.toMap
+        val declared = content0.collect { case RowId(f, _) => f }.toSet
+        dataNames.filter(n => statRows.contains(n) && !declared.contains(n))
+          .map(n => (n, statRows(n)))
+      }
+    val content =
+      if (assignable.isEmpty) content0
+      else {
+        var next = snap.rowIdHwm
+        val ids = assignable.map { case (n, rows) =>
+          val b = next; next += rows; RowId(n, b) }
+        content0 ++ ids :+ RowIdHwm(next)
+      }
+    val bytes = content.map(encode).mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val txn = content.collectFirst { case t: Txn => t }
+    val removes = content.collect { case Remove(n) => n }
+    val cowToken = content.collectFirst { case Cow(t) => t }
+    def absorbedBy(after: Snapshot): Boolean =
+      (dataNames.nonEmpty && {
+        val union = after.names.toSet
+        dataNames.forall(union.contains)
+      }) || txn.exists(t => after.txnWatermark(t.writer) >= t.epoch) ||
+        cowToken.exists(t => after.carriesCow(Cow(t)))
+    val dvTargets = content.collect { case Dv(d, _, _) => d }
+    val next = snap.version + 1
+    // SPEC-ID fence: a spec-evolution claim computed its id from this
+    // attempt's snapshot, so the id must be next-in-sequence there; a
+    // commit landing after the snapshot claims `next` first, and the
+    // link collision re-runs the attempt — one spec id can never bind
+    // two layouts.
+    val claimedSpecIds = content.collect { case Spec(Some(id), _) => id }
+    if (claimedSpecIds.exists(_ != snap.specs.currentId + 1)) return -1L
+    if (removes.nonEmpty || dvTargets.nonEmpty) {
+      // a BRANCH-STAGED dv epoch fences against the
+      // BRANCH's visible state: its targets may be staged adds
+      // (invisible to main) and its observed dv set includes
+      // earlier staged records — main-state fencing would refuse
+      // valid staged writes and miss same-branch races
+      val live = stagingBranch match {
+        case Some(b) => snap.branchFiles(b)
+          .map(p => Paths.get(p).getFileName.toString).toSet
+        case None => snap.names.toSet
+      }
+      val curDvState = stagingBranch match {
+        case Some(b) => snap.branchDvs(b)
+        case None => snap.dvs
+      }
+      // a dv record may target a file THIS epoch re-adds (rollback
+      // restoring a historical dv state): inherently consistent —
+      // the add and the record flip visibility together. The
+      // exemption is DV-ONLY: a same-epoch
+      // remove+re-add of one name is exactly the ambiguous
+      // construct rollbackTo refuses to emit, so removes stay on
+      // the strict live-set check
+      val gone = removes.filterNot(live.contains) ++
+        dvTargets.filterNot(n =>
+          live.contains(n) || dataNames.contains(n))
+      if (gone.nonEmpty)
+        throw new ManifestConflictException(gone.sorted, dir.toString)
+      // COW-vs-DV fence: every dv currently attached to a removed
+      // file must have been applied by this rewrite
+      consumedDvs.foreach { m =>
+        val stale = removes.flatMap { f =>
+          curDvState.getOrElse(f, Seq.empty).map(_._1)
+            .filterNot(m.getOrElse(f, Set.empty).contains)
+            .map(dv => s"$f#$dv")
+        }
+        if (stale.nonEmpty)
+          throw new ManifestConflictException(stale.sorted, dir.toString)
+      }
+      // DV-vs-DV fence: each `#dv` target's CURRENT dv set must be
+      // exactly the set this operation computed its positions
+      // against — a racing dv that landed in between may overlap,
+      // and the loser must recompute (its anti-join then excludes
+      // the winner's positions) rather than publish overcounts
+      observedDvs.foreach { m =>
+        val raced = dvTargets.flatMap { f =>
+          val now = curDvState.getOrElse(f, Seq.empty).map(_._1).toSet
+          (now -- m.getOrElse(f, Set.empty)).toSeq.sorted
+            .map(dv => s"$f#$dv")
+        }
+        if (raced.nonEmpty)
+          throw new ManifestConflictException(raced.sorted, dir.toString)
+      }
+    }
+    // EQUALITY-DELETE fence: a remove- or dv-carrying
+    // commit under LIVE equality deletes would move or replace
+    // rows into files EXEMPT from them (add-epoch past the
+    // delete) — resurrecting deleted keys. Only a commit that
+    // RESOLVES every live record (`#eqdrop` lines covering the
+    // set — compact_data) may proceed; everything else aborts
+    // retryably, and the race window between an operation's pin
+    // and its claim closes here.
+    val eqDrops = content.collect { case EqDrop(f) => f }.toSet
+    if (removes.nonEmpty || dvTargets.nonEmpty || eqDrops.nonEmpty) {
+      val unresolved = snap.eqDeletes.map(_.file).filterNot(eqDrops.contains)
+      if (unresolved.nonEmpty)
+        throw new ManifestConflictException(
+          unresolved.sorted.map(f => s"eqdel:$f"), dir.toString)
+    }
+    val tmp = Files.createTempFile(dir, ".epoch", ".tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.createLink(dir.resolve(epochName(next)), tmp)
+      // the link landed: from here on a vanish must escape, never re-run
+      // the attempt (that would publish the content twice)
+      val stale =
+        try read(dir.toString)(after => after.horizon >= next && !absorbedBy(after))
+        catch { case e: java.nio.file.NoSuchFileException =>
+          throw new java.io.UncheckedIOException(e) }
+      if (stale) {
+        // stale claim raced a compaction sweep: unpublishable — retry
+        Files.deleteIfExists(dir.resolve(epochName(next)))
+        -1L
+      } else {
+        metadataBytes.addAndGet(bytes.length.toLong)
+        next
+      }
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => -1L // lost; retry
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Publish a table's CREATE epoch (epoch 0) carrying `seed`; false
@@ -1768,92 +2141,26 @@ object ManifestSink {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** TIME TRAVEL: the table's committed file list AS OF epoch
-    * `version` — the union of epoch manifests with id <= version. The
-    * epoch manifests ARE the snapshot log (each one is an atomic
-    * commit), so every historical snapshot is reconstructible for free
-    * as long as its epochs survive: a compact file serves any version
-    * >= its horizon exactly (it is the union through the horizon, plus
-    * the loose epochs up to the version); versions BELOW the horizon
-    * need the swept loose epochs and are REFUSED with the retention
-    * boundary spelled out — the Delta/Iceberg contract that log
-    * retention bounds time travel, surfaced instead of silently
-    * serving a wrong snapshot. A version beyond the newest commit is
-    * refused too (it names a snapshot that never existed). */
-  def committedFilesAsOf(path: String, version: Long): Seq[String] = retryVanish() {
-    require(version >= 0, s"version must be >= 0, got $version")
-    val dir = Paths.get(path)
-    val loose = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-    val compact = latestCompact(dir)
-    val horizon = compact.map(_._1).getOrElse(-1L)
-    val newest = (horizon +: loose.map(_._1)).max
-    if (newest < 0 || version > newest)
-      throw new IllegalArgumentException(
-        s"manifest table $path has no version $version " +
-          s"(newest committed epoch: ${if (newest < 0) "none" else newest})")
-    // branch-staged epochs are invisible to main time travel too
-    def applyInOrder(fragments: Seq[Path]): Seq[String] =
-      replay(fragments.filter(branchOf(_).isEmpty).map(records)).files.toSeq
-    val names =
-      if (version >= horizon)
-        applyInOrder(compact.map(_._2).toSeq ++
-          loose.filter(e => e._1 > horizon && e._1 <= version)
-            .sortBy(_._1).map(_._2))
-      else {
-        // below the horizon, ONLY the pre-sweep crash window can serve:
-        // the sweep deletes absorbed epoch manifests AFTER the compact
-        // move, so if the loose epochs at-or-below the horizon still
-        // union to EXACTLY the compact's content, the loose log is
-        // provably complete (every task file is listed by exactly one
-        // epoch manifest, so a missing non-empty epoch shrinks the
-        // union) and any prefix of it is an exact snapshot — including
-        // tables whose first epoch is > 0 (a checkpointed query
-        // restarted into a fresh dir). Each fragment is
-        // read ONCE. Once the sweep lands, the union shrinks below the
-        // compact set and the version is refused: log retention bounds
-        // time travel (the Delta/Iceberg contract), surfaced instead of
-        // silently serving a wrong snapshot.
-        val compactContent = compact.map(_._2).toSeq.flatMap(readData).toSet
-        val looseBelow = loose.filter(_._1 <= horizon).sortBy(_._1)
-        // the completeness proof needs ADD-ONLY epochs: with a remove
-        // below the horizon, a partially-swept log can resolve to the
-        // compact content while missing an add epoch whose file the
-        // remove later covered (the prefix would silently lack it) —
-        // so a remove anywhere below the horizon refuses instead
-        val removesBelow = looseBelow.exists(e =>
-          records(e._2).exists(_.isInstanceOf[Remove]))
-        if (!removesBelow &&
-            applyInOrder(looseBelow.map(_._2)).toSet == compactContent)
-          applyInOrder(loose.filter(_._1 <= version).sortBy(_._1).map(_._2))
-        else throw new IllegalStateException(
-          s"version $version predates the compaction horizon $horizon " +
-            "and its epoch manifests were swept — retained time travel " +
-            s"starts at epoch $horizon")
-      }
-    names.map(f => Paths.get(path, "data", f).toString)
-  }
-
   /** Fold the loose epoch manifests into ONE compact file once
     * `compactInterval` of them accumulate — the `_spark_metadata`
     * compaction pattern. Durability order makes every crash window
     * benign: (1) the compact file lands by atomic link FIRST, so the
     * union is never less than the committed set; (2) only then are the
     * absorbed fragments deleted — a crash in between leaves duplicates
-    * that [[ManifestSink.fragmentUnion]] de-dupes and the NEXT
+    * that the snapshot's union de-dupes and the NEXT
     * compaction sweeps. Header records are carried forward: the max
     * `#txn` watermark per writer, the distinct `#schema` set, and the
     * `#stats` of every file still in the union. */
-  private[sources] def maybeCompact(dir: Path, priorHorizon: Long,
-      compactInterval: Int,
+  private[sources] def maybeCompact(dir: Path, compactInterval: Int,
       /** EXPIRY mode: absorb only epochs <= `through` and
         * ignore the interval — `expire_snapshots` forces a bounded
         * sweep; the live-branch cap still applies on top. */
       through: Long = Long.MaxValue,
-      force: Boolean = false): Unit = retryVanish() {
-    // retryVanish: a concurrent committer's sweep can delete a listed
-    // fragment mid-read here; re-running from a fresh listing is always
+      force: Boolean = false): Unit = read(dir.toString) { snap =>
+    // a concurrent committer's sweep can delete a listed fragment
+    // mid-read here; re-running from a fresh snapshot is always
     // consistent (and usually a no-op — the racer compacted for us)
-    val looseAll = looseEpochs(dir, priorHorizon)
+    val looseAll = snap.looseTail
     // LIVE branch refs CAP the sweep: a staged epoch must
     // stay loose — the publish re-lists its adds by name, and vacuum
     // keeps the staged files referenced — so the horizon stops below
@@ -1865,28 +2172,26 @@ object ManifestSink {
     // branches' epochs absorb as NOTHING (published content was
     // re-listed by the publish epoch; abandoned content ages into
     // vacuum).
-    val liveBranches = planState(dir).meta.branches
+    val liveBranches = snap.branches
     val stagedCap = looseAll
-      .filter(e => branchOf(e._2).exists(liveBranches.keySet.contains))
-      .map(_._1 - 1).minOption.getOrElse(Long.MaxValue)
+      .filter(_.branch.exists(liveBranches.keySet.contains))
+      .map(_.id - 1).minOption.getOrElse(Long.MaxValue)
     val baseCap = liveBranches.values.minOption.getOrElse(Long.MaxValue)
     // REGISTERED FEED consumers clamp every sweep: the last
     // `window` epochs stay loose so a consumer lagging at most that
     // many epochs never hits the below-horizon CDC refusal
-    val feedCap = registeredFeeds(dir.toString).values.minOption
-      .map(w => newestVersion0(dir) - w).getOrElse(Long.MaxValue)
+    val feedCap = snap.feeds.values.minOption
+      .map(w => snap.version - w).getOrElse(Long.MaxValue)
     // LIVE equality deletes clamp too: their per-epoch
     // applicability (add-epoch < delete-epoch) is derivable only
     // while the loose tail holds them; compact_data's `#eqdrop`
     // resolution is what releases the sweep
-    val eqCap = equalityDeletes(dir.toString).map(_.epoch - 1)
+    val eqCap = snap.eqDeletes.map(_.epoch - 1)
       .minOption.getOrElse(Long.MaxValue)
     val cap = math.min(math.min(stagedCap, baseCap),
       math.min(feedCap, eqCap))
-    val loose = looseAll.filter(e => e._1 <= cap && e._1 <= through)
-    if (loose.isEmpty || (!force && loose.size < compactInterval)) return
-    val prior = latestCompact(dir)
-    val absorbed = loose.sortBy(_._1).map(_._2)
+    val absorbed = looseAll.filter(e => e.id <= cap && e.id <= through)
+    if (absorbed.isEmpty || (!force && absorbed.size < compactInterval)) return
     // one replay of the prior compact and the absorbed main epochs: the
     // compact carries the RESOLVED union (and no remove records — a
     // removed file below the horizon is simply gone from the log, which
@@ -1894,8 +2199,8 @@ object ManifestSink {
     // `#txn` per writer, the distinct `#schema`/`#spec` records, the
     // last `#prop` per key, `#colmap`, `#tag` and `#branch`, and the
     // per-file records and live dvs of files still in the union
-    val r = replay((prior.map(_._2).toSeq ++
-      absorbed.filter(branchOf(_).isEmpty)).map(records))
+    val r = replay(snap.compactRecords +:
+      absorbed.filter(_.branch.isEmpty).map(_.recs))
     // refuse to fold CONFLICTING stats for one name into the compact:
     // first-seen-wins would freeze stats that may describe different
     // bytes than the file holds, and skipping would silently go wrong —
@@ -1921,7 +2226,7 @@ object ManifestSink {
     // The bound is TWO SWEEPS: a zero-survivor COW committer whose claim
     // loop spans two full sweeps would see a spurious (retryable)
     // conflict — narrow, since a sweep needs `compactInterval` epochs.
-    val cows = absorbed.flatMap(records).collect { case c: Cow => c }.distinct
+    val cows = absorbed.flatMap(_.recs).collect { case c: Cow => c }.distinct
     val stats = live(r.stats).map { case (f, st) => sortedStats(f, st) }
     val blooms = live(r.blooms).map { case (f, m) => Bloom(f, m.toSeq.sortBy(_._1)) }
     val ndvs = live(r.ndvs).map { case (f, m) => Ndv(f, m.toSeq.sortBy(_._1)) }
@@ -1932,7 +2237,7 @@ object ManifestSink {
       r.rowIdHwm.map(RowIdHwm(_))
     val dvs = live(r.dvs).flatMap { case (d, l) => l.map { case (v, n) => Dv(d, v, n) } }
     val names = r.files.toSeq
-    val upTo = loose.map(_._1).max
+    val upTo = absorbed.map(_.id).max
     // unique temp per attempt (concurrent committers can both trigger
     // this compaction); the compact-<upTo> content is deterministic —
     // the union through upTo — so when a racer already landed it, the
@@ -1960,21 +2265,7 @@ object ManifestSink {
     // superseded fragments: every loose epoch now covered, every older
     // compact (and its checkpoint artifacts), and any stale leftovers
     // from a previously-crashed sweep
-    looseEpochs(dir, -1L).filter(_._1 <= upTo)
-      .foreach(p => Files.deleteIfExists(p._2))
-    val s = Files.list(dir)
-    try {
-      val all = s.iterator().asScala.toSeq
-      val keepCompact = all.filter(_.getFileName.toString.startsWith("compact-"))
-        .sortBy(_.getFileName.toString).lastOption
-        .map(_.getFileName.toString.stripPrefix("compact-"))
-      all.filter { p =>
-        val n = p.getFileName.toString
-        (n.startsWith("compact-") && !keepCompact.contains(n.stripPrefix("compact-"))) ||
-          (n.startsWith("checkpoint-") &&
-            !keepCompact.contains(n.stripPrefix("checkpoint-").takeWhile(_ != '.')))
-      }.foreach(Files.deleteIfExists(_))
-    } finally s.close()
+    snap.supersededBy(upTo).foreach(Files.deleteIfExists(_))
   }
 
   private def checkpointParquetName(id: Long): String =
@@ -2027,125 +2318,6 @@ object ManifestSink {
     finally Files.deleteIfExists(dir.resolve(tmpName))
   }
 
-  /** The planning checkpoint matching the CURRENT compaction horizon —
-    * (horizon, parquetPath, rowCount). None when absent (no checkpoint yet,
-    * crashed checkpoint write) or stale (newer compact landed without
-    * one): strictly a fallback decision, never a correctness one. */
-  private[graft] def planningCheckpoint(dir: Path)
-      : Option[(Long, Path, Long)] =
-    latestCompact(dir).map(_._1).flatMap { h =>
-      val p = dir.resolve(checkpointParquetName(h))
-      if (!Files.isRegularFile(p)) None
-      else try {
-        val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          new org.apache.parquet.io.LocalInputFile(p))
-        val n = try fr.getRecordCount finally fr.close()
-        Some((h, p, n))
-      } catch { case _: Exception => None }
-    }
-
-  /** DISTRIBUTED PLANNING (the Iceberg distributed-manifest
-    * shape): prune the CHECKPOINTED portion of the snapshot with a
-    * Spark job over the parquet checkpoint — executors decode each
-    * row's `#stats`/`#part` lines with the codec the text path uses
-    * and apply the SAME `mayMatch` predicate model, so the two
-    * planners cannot disagree — while the loose tail (adds, removes,
-    * dvs landed since the horizon) is applied driver-side in epoch
-    * order, O(tail). Driver cost: O(tail) text + O(kept) collected
-    * names, never O(all files) parse/walk; the checkpoint rows it
-    * would have walked stay in executor memory.
-    *
-    * Returns (kept absolute paths in checkpoint-then-tail order, live
-    * dv paths per kept file name, listedCount for the prune record). */
-  private[sources] def distributedPlan(spark: org.apache.spark.sql.SparkSession,
-      path: String, horizon: Long, parquet: Path, ckptRows: Long,
-      filters: Seq[org.apache.spark.sql.sources.Filter], book: SpecBook)
-      : (Seq[String], Map[String, Seq[String]], Int) = retryVanish() {
-    val dir = Paths.get(path)
-    // —— the tail, applied in epoch order; its removes of checkpointed
-    // files are the replay's `removedElsewhere`
-    val tail = replay(looseEpochs(dir, horizon).sortBy(_._1).map(_._2)
-      .filter(branchOf(_).isEmpty).map(records))
-    val (tailStats, tailParts) = skippingIndex(tail, tail.blooms)
-    val removedCkpt = tail.removedElsewhere
-    // —— the checkpointed portion: one job, collect (kept name, dv lines)
-    val removedB = spark.sparkContext.broadcast(removedCkpt.toSet)
-    val filtersB = filters
-    val specB = book
-    import org.apache.spark.sql.Encoders
-    val enc5 = Encoders.tuple(Encoders.STRING, Encoders.STRING,
-      Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    val enc2 = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    val keptCkpt = spark.read
-      .schema("file STRING, stats STRING, part STRING, dvs STRING, " +
-        "bloom STRING") // checkpoints without bloom: by-name null = no filter
-      .parquet(parquet.toString)
-      .as(enc5)
-      .mapPartitions { it =>
-        it.flatMap { case (f, statLine, partLine, dvLines, bloomLine) =>
-          if (removedB.value.contains(f)) None
-          else {
-            val partOk = Option(partLine).flatMap(decode) match {
-              case Some(Part(_, t)) => filtersB.forall(specB.mayMatch(t, _))
-              case _ => true
-            }
-            val statsOk = Option(statLine).flatMap(decode) match {
-              case Some(s: Stats) =>
-                val st = Option(bloomLine).flatMap(decode) match {
-                  case Some(Bloom(_, b)) => s.stat.copy(blooms = b.toMap)
-                  case _ => s.stat
-                }
-                st.rows > 0 && filtersB.forall(SnapStats.mayMatch(st, _))
-              case _ => true
-            }
-            if (partOk && statsOk) Some((f, Option(dvLines).getOrElse("")))
-            else None
-          }
-        }
-      }(enc2)
-      .collect()
-    // —— tail adds pruned driver-side with the same rule
-    val keptTail = tail.files.toSeq.filter { n =>
-      val partOk = tailParts.get(n).forall(t =>
-        filters.forall(book.mayMatch(t, _)))
-      partOk && (tailStats.get(n) match {
-        case None => true
-        case Some(st) => st.rows > 0 && filters.forall(SnapStats.mayMatch(st, _))
-      })
-    }
-    // —— live dvs per kept file: checkpoint rows carry their own, the
-    // tail may have landed more (on checkpointed AND tail files)
-    def dvPaths(names: Seq[String]): Seq[String] =
-      names.map(n => Paths.get(path, "data", n).toString)
-    val dvByName = scala.collection.mutable.HashMap[String, Seq[String]]()
-    keptCkpt.foreach { case (f, dvLines) =>
-      val own = dvLines.split("\n").toSeq.flatMap(decode)
-        .collect { case Dv(_, v, _) => v }
-      val all = own ++ tail.dvs.getOrElse(f, Seq.empty).map(_._1)
-      if (all.nonEmpty) dvByName(f) = dvPaths(all)
-    }
-    keptTail.foreach { n =>
-      val dvs = tail.dvs.getOrElse(n, Seq.empty).map(_._1)
-      if (dvs.nonEmpty) dvByName(n) = dvPaths(dvs)
-    }
-    val listed = (ckptRows - removedCkpt.size + tail.files.size).toInt
-    val kept = (keptCkpt.map(_._1).toSeq ++ keptTail)
-      .map(n => Paths.get(path, "data", n).toString)
-    (kept, dvByName.toMap, listed)
-  }
-
-  /** The one BATCH commit path, shared by `mode("append")` writes and
-    * the row-level COW writers (DELETE via removeFiles, UPDATE/MERGE
-    * via [[SnapRowLevelWrite]]): publish task files + optional
-    * `#remove`s as ONE atomic epoch (claimEpoch runs the remove-
-    * liveness CONFLICT check), stamp the victims' mtime with the
-    * REMOVE time (vacuum's age gate counts retention from removal —
-    * the Delta convention — so an in-flight reader holding the
-    * pre-rewrite file list keeps its files for the full window even
-    * after compaction resolves the remove), then maybe compact. A
-    * remove-carrying epoch also publishes a run-unique `#cow` token so
-    * a claim racing a compaction sweep can recognize its own absorbed
-    * commit even with zero survivor files. */
   /** Flatten commit messages to their [[CommittedFile]]s (fan-out
     * tasks report a [[CommittedFileSet]]). */
   private[sources] def committedFilesOf(messages: Array[WriterCommitMessage])
@@ -2166,8 +2338,20 @@ object ManifestSink {
       case _ => Seq.empty
     }
 
+  /** The one BATCH commit path, shared by `mode("append")` writes and
+    * the row-level COW writers (DELETE via removeFiles, UPDATE/MERGE
+    * via [[SnapRowLevelWrite]]): publish task files + optional
+    * `#remove`s as ONE atomic epoch (claimEpoch runs the remove-
+    * liveness CONFLICT check), stamp the victims' mtime with the
+    * REMOVE time (vacuum's age gate counts retention from removal —
+    * the Delta convention — so an in-flight reader holding the
+    * pre-rewrite file list keeps its files for the full window even
+    * after compaction resolves the remove), then maybe compact. A
+    * remove-carrying epoch also publishes a run-unique `#cow` token so
+    * a claim racing a compaction sweep can recognize its own absorbed
+    * commit even with zero survivor files. */
   private[sources] def commitBatchEpoch(path: String, schemaDdl0: String,
-      messages: Array[WriterCommitMessage], removeFilesGen: () => Seq[String],
+      messages: Array[WriterCommitMessage], removeFilesGen: Snapshot => Seq[String],
       compactInterval: Int,
       consumedDvs: Option[Map[String, Set[String]]] = None,
       specId: Int = 0, op: String = "append",
@@ -2196,15 +2380,15 @@ object ManifestSink {
     // a truncate/overwrite derives it from the union it replaces, and a
     // retry after a lost race must absorb the racer's files
     var lastRemoves: Seq[String] = Seq.empty
-    def content(): Seq[LogRecord] = {
-      lastRemoves = removeFilesGen()
+    def content(snap: Snapshot): Seq[LogRecord] = {
+      lastRemoves = removeFilesGen(snap)
       // a plain append whose remove set came back empty stays an
       // append no matter what op the face declared (e.g. an
       // overwrite-by-filter matching no files replaces nothing)
       val effOp = if (lastRemoves.isEmpty && op != "append") "append" else op
       val pairHdr = if (cdcPair && lastRemoves.nonEmpty) Seq(CdcPair) else Seq.empty
       val cow = if (lastRemoves.isEmpty) Seq.empty else Seq(Cow(cowToken))
-      Seq(Schema(schemaDdl), Op(effOp)) ++ stagedHeader(path, forBranch) ++
+      Seq(Schema(schemaDdl), Op(effOp)) ++ stagedHeader(snap, forBranch) ++
         pairHdr ++ cow ++ fileRecords(files, specId) ++
         eqDrops.sorted.map(EqDrop(_)) ++ lastRemoves.sorted.map(Remove(_)) ++
         files.map(f => Data(f.name))
@@ -2216,8 +2400,7 @@ object ManifestSink {
       try Files.setLastModifiedTime(Paths.get(path, "data", n), now)
       catch { case _: IOException => } // already reclaimed: nothing to shield
     }
-    maybeCompact(dir, latestCompact(dir).map(_._1).getOrElse(-1L),
-      compactInterval)
+    maybeCompact(dir, compactInterval)
   }
 
   /** `ignoreDeletes`/`ignoreChanges` reader options → the tail's
@@ -2228,10 +2411,48 @@ object ManifestSink {
     else if (options.getBoolean("ignoreDeletes", false)) "ignoreDeletes"
     else "refuse"
 
-  /** The next unclaimed epoch id (one past the newest committed). */
-  private[sources] def nextEpochId(dir: Path): Long =
-    (latestCompact(dir).map(_._1).getOrElse(-1L) +:
-      listPrefixed(dir, "epoch-").map(idOf)).max + 1
+  /** EXPIRE SNAPSHOTS (the Iceberg `expire_snapshots`
+    * shape): retire history by COUNT (`keep_last` versions stay
+    * travel-servable) or AGE (epochs committed at or before the
+    * cutoff retire, measured by the persisted `#ts` commit clock) by
+    * forcing a bounded compaction sweep — travel below the new
+    * horizon then refuses with the boundary named (the standing
+    * retention contract), and the newly-unreferenced bytes become
+    * vacuum candidates. REF-PROTECTED: the sweep clamps at the oldest
+    * TAG target and the oldest BRANCH base (a horizon at the tag's
+    * version keeps it servable — `filesAsOf` serves any
+    * version at or above the horizon), and live branches' staged
+    * epochs keep their own cap inside the sweep. Returns (new
+    * horizon, epochs retired, what clamped — "none" if nothing). */
+  private[graft] def expireSnapshots(path: String,
+      keepLast: Option[Long], olderThanMicros: Option[Long])
+      : (Long, Long, String) = {
+    require(keepLast.isDefined != olderThanMicros.isDefined,
+      "expire_snapshots: give exactly one of keep_last / older_than_ms")
+    keepLast.foreach(k => require(k >= 1,
+      s"expire_snapshots: keep_last must be >= 1, got $k"))
+    val dir = Paths.get(path)
+    val snap = snapshot(path)
+    val prior = snap.horizon
+    val newest = snap.version
+    require(newest >= 0, s"manifest table $path has no committed version")
+    val requested = keepLast.map(k => newest - k).getOrElse {
+      val cut = olderThanMicros.get
+      (prior +: snap.commitTimes.filter(_._2 <= cut).map(_._1)).max
+    }
+    val caps: Seq[(Long, String)] =
+      snap.tags.toSeq.map { case (n, v) => (v, s"tag:$n") } ++
+        snap.branches.toSeq.map { case (n, v) => (v, s"branch:$n") } ++
+        snap.feeds.toSeq.map { case (c, w) =>
+          (newest - w, s"feed:$c") } // reserved CDC windows
+    val binding = caps.filter(_._1 < requested).minByOption(_._1)
+    val effective = binding.map(_._1).getOrElse(requested)
+    val protectedBy = binding.map(_._2).getOrElse("none")
+    if (effective <= prior) return (prior, 0L, protectedBy)
+    maybeCompact(dir, 1, through = effective, force = true)
+    val now = snapshot(path).horizon
+    (now, math.max(0L, now - prior), protectedBy)
+  }
 
   /** STORAGE RECLAMATION (the VACUUM contract): delete data files NOT
     * referenced by any committed manifest fragment AND older than
@@ -2240,7 +2461,7 @@ object ManifestSink {
     * an epoch still committing (task files land before the manifest
     * flips them visible), while crash orphans (a driver that died
     * before abort(), a replaced speculative attempt) only ever age.
-    * The keep set is [[referencedFiles]] — every add ANY live fragment
+    * The keep set is [[Snapshot.referenced]] — every add ANY live fragment
     * lists, `#remove`s deliberately NOT applied: a row-level DELETE's
     * victim is still served by every
     * retained pre-delete `VERSION AS OF`, so it stays unreclaimable
@@ -2255,51 +2476,6 @@ object ManifestSink {
     * timestamp). Returns the deleted names. Also operable from pure
     * SQL: `CALL graft.sys.vacuum(table, older_than_ms)`
     * ([[VacuumProcedure]]). */
-  /** EXPIRE SNAPSHOTS (the Iceberg `expire_snapshots`
-    * shape): retire history by COUNT (`keep_last` versions stay
-    * travel-servable) or AGE (epochs committed at or before the
-    * cutoff retire, measured by the persisted `#ts` commit clock) by
-    * forcing a bounded compaction sweep — travel below the new
-    * horizon then refuses with the boundary named (the standing
-    * retention contract), and the newly-unreferenced bytes become
-    * vacuum candidates. REF-PROTECTED: the sweep clamps at the oldest
-    * TAG target and the oldest BRANCH base (a horizon at the tag's
-    * version keeps it servable — `committedFilesAsOf` serves any
-    * version at or above the horizon), and live branches' staged
-    * epochs keep their own cap inside the sweep. Returns (new
-    * horizon, epochs retired, what clamped — "none" if nothing). */
-  private[graft] def expireSnapshots(path: String,
-      keepLast: Option[Long], olderThanMicros: Option[Long])
-      : (Long, Long, String) = {
-    require(keepLast.isDefined != olderThanMicros.isDefined,
-      "expire_snapshots: give exactly one of keep_last / older_than_ms")
-    keepLast.foreach(k => require(k >= 1,
-      s"expire_snapshots: keep_last must be >= 1, got $k"))
-    val dir = Paths.get(path)
-    val prior = latestCompact(dir).map(_._1).getOrElse(-1L)
-    val newest = newestVersion0(dir)
-    require(newest >= 0, s"manifest table $path has no committed version")
-    val requested = keepLast.map(k => newest - k).getOrElse {
-      val cut = olderThanMicros.get
-      (prior +: looseEpochs(dir, prior)
-        .filter(e => commitTimeMicros(e._2) <= cut).map(_._1)).max
-    }
-    val tags = tableTags(path)
-    val branches = tableBranches(path)
-    val caps: Seq[(Long, String)] =
-      tags.toSeq.map { case (n, v) => (v, s"tag:$n") } ++
-        branches.toSeq.map { case (n, v) => (v, s"branch:$n") } ++
-        registeredFeeds(path).toSeq.map { case (c, w) =>
-          (newest - w, s"feed:$c") } // reserved CDC windows
-    val binding = caps.filter(_._1 < requested).minByOption(_._1)
-    val effective = binding.map(_._1).getOrElse(requested)
-    val protectedBy = binding.map(_._2).getOrElse("none")
-    if (effective <= prior) return (prior, 0L, protectedBy)
-    maybeCompact(dir, prior, 1, through = effective, force = true)
-    val now = latestCompact(dir).map(_._1).getOrElse(-1L)
-    (now, math.max(0L, now - prior), protectedBy)
-  }
-
   def vacuum(path: String, olderThanMs: Long): Seq[String] = {
     require(olderThanMs >= 0, s"olderThanMs must be >= 0, got $olderThanMs")
     val dir = Paths.get(path)
@@ -2321,7 +2497,7 @@ object ManifestSink {
     val dataDir = dir.resolve("data")
     if (!Files.isDirectory(dataDir))
       return litter.map(_.getFileName.toString).sorted
-    val keep = referencedFiles(dir)
+    val keep = read(path)(_.referenced)
     // the listing STREAMS (no toSeq materialization of the directory):
     // driver memory stays O(committed snapshot) — the keep set — not
     // O(total files in the dir); walltime is one flat-directory pass,
@@ -2337,109 +2513,6 @@ object ManifestSink {
     } finally s.close()
     (litter.map(_.getFileName.toString) ++ victims).sorted
   }
-
-  /** Newest committed epoch id — the current snapshot's version. */
-  def newestVersion(path: String): Long = {
-    val newest = newestVersion0(Paths.get(path))
-    if (newest < 0) throw new IllegalArgumentException(
-      s"manifest table $path has no committed epochs")
-    newest
-  }
-
-  /** Newest committed epoch id, or -1 for an empty/absent log — the
-    * non-throwing form CREATE TABLE's existence check uses. */
-  private[sources] def newestVersion0(dir: Path): Long =
-    (latestCompact(dir).map(_._1).getOrElse(-1L) +:
-      listPrefixed(dir, "epoch-").map(idOf)).max
-
-  /** INCREMENTAL READ (the lake-CDC primitive — Delta CDF / Iceberg
-    * incremental-scan analog, the "process only what landed since
-    * yesterday's run" story a training pipeline lives on): the files
-    * appended by epochs in (`since`, `asOf`] — each epoch manifest IS
-    * that epoch's append delta, so the window is their concatenation.
-    * `since` = -1 reads from the beginning (≡ snapshot `asOf`).
-    * Unlike a snapshot, a swept epoch's DELTA is unrecoverable from
-    * the compact union (which collapses epoch boundaries), so every
-    * epoch in the window must still be loose — a window reaching past
-    * the sweep is REFUSED naming the missing epochs (log retention
-    * bounds incremental reads exactly as it bounds time travel;
-    * consumers that fall too far behind re-read the full snapshot). */
-  def committedFilesBetween(path: String, since: Long, asOf: Long): Seq[String] = retryVanish() {
-    require(since >= -1, s"since must be >= -1 (exclusive lower bound), got $since")
-    require(since <= asOf, s"empty window: since $since > asOf $asOf")
-    val dir = Paths.get(path)
-    val loose = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-    val newest = (horizon +: loose.map(_._1)).max
-    if (newest < 0 || asOf > newest)
-      throw new IllegalArgumentException(
-        s"manifest table $path has no version $asOf " +
-          s"(newest committed epoch: ${if (newest < 0) "none" else newest})")
-    val window = loose.filter(e => e._1 > since && e._1 <= asOf).sortBy(_._1)
-    // an absent epoch id is fine only if it NEVER EXISTED: above the
-    // horizon (id <= horizon means it committed and was absorbed) and
-    // below the first loose epoch (ids start wherever a restarted
-    // query's first batch lands — and commit contiguously
-    // from there, so an absent id at-or-after firstLoose is a swept gap)
-    val firstLoose = loose.map(_._1).minOption.getOrElse(Long.MaxValue)
-    val missing = ((since + 1) to asOf)
-      .filterNot(window.map(_._1).toSet)
-      .filterNot(id => id > horizon && id < firstLoose)
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"incremental read ($since, $asOf] needs epoch manifests " +
-          s"${missing.mkString(", ")} which are gone " +
-          s"(compaction horizon $horizon) — per-epoch deltas are " +
-          "unrecoverable from the compact union; re-read the full " +
-          "snapshot instead")
-    // a row-level DELETE epoch is NOT an append delta — it swaps files
-    // (its adds duplicate surviving rows of the files it removes), so
-    // an incremental consumer crossing one would double-count; refuse
-    // loudly, the same contract Delta CDF applies to non-CDF rewrites.
-    // A merge-on-read `#dv` epoch is equally not an append (it
-    // retro-deletes rows from files delivered in EARLIER windows).
-    val removing = window.filter(e => branchOf(e._2).isEmpty &&
-      records(e._2).exists {
-        case _: Remove | _: Dv | _: EqDel => true
-        case _ => false
-      }).map(_._1)
-    if (removing.nonEmpty)
-      throw new IllegalStateException(
-        s"incremental read ($since, $asOf] crosses row-level " +
-          s"DELETE/rewrite/upsert epoch(s) ${removing.mkString(", ")} — " +
-          "a delete rewrites or retro-deletes rather than appending; " +
-          "re-read the full snapshot instead")
-    window.filter(e => branchOf(e._2).isEmpty)
-      .flatMap(e => readData(e._2)).distinct
-      .map(f => Paths.get(path, "data", f).toString)
-  }
-
-  /** One row per LIVE log fragment, for the `graft.snap.t.history`
-    * metadata table: (version, kind, nAdded, nRemoved,
-    * mtimeMillis). Loose epochs classify by their records — `append`
-    * (data adds only), `rewrite` (carries `#remove`s: COW delete/
-    * update/merge, compaction, overwrite), `metadata` (schema-only:
-    * CREATE/ALTER) — and the newest compact fragment reports as one
-    * `checkpoint` row at the horizon carrying the resolved union size.
-    * History below the horizon is deliberately collapsed into that row:
-    * the log retains exactly what time travel can still serve. */
-  /** TIMESTAMP AS OF resolution: the newest epoch whose
-    * commit time (fragment mtime, this host's clock) is <= `micros`.
-    * Resolution covers only the UN-SWEPT tail: a compaction sweep
-    * rewrites absorbed epochs into one compact file whose mtime is the
-    * SWEEP time, not the historical commits' — so a timestamp below
-    * the oldest live epoch's mtime refuses with the retention boundary
-    * spelled out (the same contract version-id travel has, expressed
-    * in time). A timestamp at/after the newest commit serves the
-    * newest snapshot. Ties/ordering: epochs are claimed sequentially
-    * on one host, so mtimes are non-decreasing in id up to filesystem
-    * granularity; the max qualifying id wins. */
-  /** The COMMIT TIME of a fragment in micros: the persisted `#ts`
-    * header when present (it survives mtime-disturbing copies), the
-    * fragment mtime for logs without one. */
-  private[sources] def commitTimeMicros(p: Path): Long =
-    records(p).collectFirst { case Ts(m) => m }
-      .getOrElse(Files.getLastModifiedTime(p).toMillis * 1000L)
 
   /** Rewrite epoch `version`'s `#ts` header (and mtime, the fallback
     * of logs without one) to a PINNED instant — the deterministic-clock hook the
@@ -2465,41 +2538,11 @@ object ManifestSink {
       java.nio.file.attribute.FileTime.fromMillis(micros / 1000L))
   }
 
-  def versionAtTimestamp(path: String, micros: Long): Long = retryVanish() {
-    val dir = Paths.get(path)
-    val compact = latestCompact(dir)
-    val horizon = compact.map(_._1).getOrElse(-1L)
-    val loose = looseEpochs(dir, horizon).sortBy(_._1).map { case (id, p) =>
-      (id, commitTimeMicros(p))
-    }
-    if (loose.isEmpty && horizon < 0) throw new IllegalArgumentException(
-      s"manifest table $path has no committed version")
-    // the compact is itself a candidate at the SWEEP time: every
-    // absorbed commit happened at or before it, so a timestamp at or
-    // after the sweep soundly serves the horizon version even when
-    // the loose tail is empty
-    val compactCand = compact.map { case (id, p) =>
-      (id, Files.getLastModifiedTime(p).toMillis * 1000L) }
-    val qualifying = (compactCand.toSeq ++ loose)
-      .filter(_._2 <= micros).map(_._1)
-    qualifying.maxOption.getOrElse {
-      val boundary = loose.headOption.map(_._2)
-      throw new IllegalArgumentException(
-        s"manifest table $path: no live epoch committed at or before " +
-          s"timestamp $micros us — " +
-          (if (horizon >= 0)
-            s"epochs <= $horizon were compacted (their commit times are " +
-              "gone with them); timestamp travel covers the un-swept " +
-              s"tail${boundary.map(b => s" from $b us").getOrElse("")}"
-          else s"the first commit landed at ${boundary.getOrElse(-1L)} us"))
-    }
-  }
-
   /** Per-epoch CHANGE DELTAS of the window `(since, asOf]` (the CDC
     * read): each live epoch's adds, `#remove`s and `#dv`
     * records plus its `#op` classification — the raw material
     * [[ChangeFeed]] turns into labeled change rows. Same retention
-    * contract as [[committedFilesBetween]]: a window reaching at or
+    * contract as [[Snapshot.filesBetween]]: a window reaching at or
     * below the compaction horizon refuses loudly (per-epoch deltas are
     * unrecoverable from the compact union), as does a gap in the
     * loose tail that ever existed. Unlike the incremental APPEND read,
@@ -2526,208 +2569,6 @@ object ManifestSink {
         * keyed upsert epoch's delete-by-key half. */
       eqdels: Seq[(String, Seq[String], Long)] = Seq.empty)
 
-  private[graft] def epochDeltas(path: String, since: Long,
-      asOf: Long): Seq[EpochDelta] = retryVanish() {
-    require(since >= -1, s"since must be >= -1 (exclusive lower bound), got $since")
-    require(since <= asOf, s"empty window: since $since > asOf $asOf")
-    val dir = Paths.get(path)
-    val loose = listPrefixed(dir, "epoch-").map(p => (idOf(p), p))
-    val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-    val newest = (horizon +: loose.map(_._1)).max
-    if (newest < 0 || asOf > newest)
-      throw new IllegalArgumentException(
-        s"manifest table $path has no version $asOf " +
-          s"(newest committed epoch: ${if (newest < 0) "none" else newest})")
-    if (since < horizon)
-      throw new IllegalStateException(
-        s"change feed ($since, $asOf] reaches below the compaction " +
-          s"horizon $horizon — per-epoch changes are unrecoverable " +
-          "from the compact union; start the feed at or after the " +
-          "horizon (or re-read the full snapshot)")
-    val window = loose.filter(e => e._1 > since && e._1 <= asOf).sortBy(_._1)
-    val missing = ((since + 1) to asOf).filterNot(window.map(_._1).toSet)
-    if (missing.nonEmpty) {
-      // NO silent excuse for gaps: a missing id usually
-      // means a concurrent sweep deleted the manifest after our listing
-      // but before its compact file was observed — re-read the horizon;
-      // if it advanced, re-derive from a fresh listing (which then
-      // refuses loudly at the new horizon when `since` predates it).
-      // Only a gap under a STABLE horizon is unrecoverable, and a CDC
-      // feed must refuse rather than silently omit an epoch's changes.
-      val fresh = latestCompact(dir).map(_._1).getOrElse(-1L)
-      if (fresh > horizon) return epochDeltas(path, since, asOf)
-      throw new IllegalStateException(
-        s"change feed ($since, $asOf] needs epoch manifests " +
-          s"${missing.mkString(", ")} which are gone " +
-          s"(compaction horizon $horizon)")
-    }
-    window.map { case (id, p) =>
-      if (branchOf(p).isDefined)
-        // staged on a branch: invisible to the main feed until the
-        // publish epoch re-lists the rows (which then serve as inserts
-        // at the PUBLISH version — the WAP contract: nothing is a
-        // change until it is audited and published)
-        EpochDelta(id, "metadata", Seq.empty, Seq.empty, Seq.empty)
-      else {
-        val rs = records(p)
-        val removes = rs.collect { case Remove(n) => n }
-        val dvs = rs.collect { case Dv(d, v, n) => (d, v, n) }
-        val adds = rs.collect { case Data(n) => n }
-        val op = rs.collectFirst { case Op(k) => k }.getOrElse {
-          if (removes.nonEmpty) "rewrite"
-          else if (dvs.nonEmpty) "delete"
-          else if (adds.nonEmpty) "append"
-          else "metadata"
-        }
-        EpochDelta(id, op, adds, removes, dvs, commitTimeMicros(p),
-          rs.collect { case Cdc(f, r) => f -> r }.toMap,
-          paired = rs.contains(CdcPair),
-          eqdels = rs.collect { case EqDel(f, c, n) => (f, c, n) })
-      }
-    }
-  }
-
-  /** The window `(since, asOf]` as CHANGE PARTITIONS — the
-    * per-file read specs both the `.changes` batch face and the
-    * streaming faces plan from, so batch CDF, streaming CDF and the
-    * rate-limited tail agree on semantics by construction:
-    *
-    *  - `cdf = true`: append adds → `insert` partitions; a
-    *    merge-on-read epoch's new dv files → KEEP-position partitions
-    *    over the targeted data files (`delete` / `update_preimage` by
-    *    `#op`) plus its adds (`insert` / `update_postimage`);
-    *    `#op compact` epochs → nothing (file rewrite ≠ row change);
-    *    copy-on-write epochs REFUSE — their change set is a multiset
-    *    diff (a join), not a per-file read; [[ChangeFeed.tableChanges]]
-    *    serves it exactly — unless `onChange = ignoreChanges`
-    *    re-delivers their adds as `insert`s (the Delta opt-out).
-    *  - `cdf = false` (the plain tail): append adds pass through;
-    *    remove/dv-carrying epochs REFUSE with the options named —
-    *    `ignoreDeletes` skips DELETE-ONLY epochs (no adds), and
-    *    `ignoreChanges` additionally re-delivers rewrite epochs' adds
-    *    (consumers must tolerate duplicates, exactly Delta's
-    *    contract). */
-  private[sources] def changePartitions(path: String, since: Long,
-      asOf: Long, cdf: Boolean, onChange: String)
-      : Seq[ManifestFilePartition] = {
-    def dataPath(n: String): String = Paths.get(path, "data", n).toString
-    def adds(d: EpochDelta, label: String): Seq[ManifestFilePartition] =
-      d.adds.map(n => ManifestFilePartition(dataPath(n),
-        changeType = if (cdf) label else null,
-        commitVersion = if (cdf) d.id else -1L,
-        commitTsMicros = if (cdf) d.tsMicros else -1L))
-    def refuse(d: EpochDelta): Nothing = throw new IllegalStateException(
-      s"${if (cdf) "change-feed" else "incremental"} read ($since, " +
-        s"$asOf] on $path crosses a non-append epoch ${d.id} " +
-        s"(#op ${d.op}: ${d.removes.size} removes, ${d.dvs.size} dv " +
-        s"records, ${d.eqdels.size} equality-delete records)" + (if (cdf)
-          " whose change set is a multiset diff — serve it exactly " +
-            "with ChangeFeed.tableChanges, or set ignoreChanges=true " +
-            "to re-deliver its added files as inserts"
-        else
-          " — set ignoreDeletes=true to skip delete-only epochs, or " +
-            "ignoreChanges=true to also re-deliver rewrite epochs' " +
-            "added files (duplicates possible); for exact row-level " +
-            "changes read the change feed"))
-    epochDeltas(path, since, asOf).flatMap { d =>
-      val deleteOnly = d.adds.isEmpty && (d.removes.nonEmpty || d.dvs.nonEmpty)
-      d.op match {
-        case "compact" | "metadata" => Seq.empty
-        case _ if d.eqdels.nonEmpty =>
-          // a keyed-upsert epoch's delete half is a key anti-join —
-          // not a per-file read; ChangeFeed.tableChanges serves it
-          // exactly
-          if (onChange == "ignoreChanges") adds(d, "insert")
-          else refuse(d)
-        case "append" => adds(d, "insert")
-        case _ if d.removes.nonEmpty || (!cdf && d.dvs.nonEmpty) =>
-          if (onChange == "ignoreChanges") adds(d, "insert")
-          else if (onChange == "ignoreDeletes" && deleteOnly) Seq.empty
-          else refuse(d)
-        case op => // merge-on-read epoch under cdf: exact per-file reads
-          val (preLabel, postLabel) =
-            if (op == "update") ("update_preimage", "update_postimage")
-            else ("delete", "insert")
-          // dvs targeting THE EPOCH'S OWN adds (a published
-          // branch's staged update of its own staged append) mark rows
-          // that were never visible — no pre-image partition, and the
-          // add reads with those positions as a SKIP set. `#cdc` role
-          // tags override the defaults (a merge's update halves serve
-          // update_pre/postimage); one data file's delete-dvs and
-          // pre-dvs split into separately-labeled partitions.
-          val addSet = d.adds.toSet
-          def dvLabel(dv: String): String =
-            if (d.cdcRoles.get(dv).contains("pre")) "update_preimage"
-            else preLabel
-          def addLabel(n: String): String =
-            if (d.cdcRoles.get(n).contains("post")) "update_postimage"
-            else postLabel
-          val pre = d.dvs.filterNot(r => addSet.contains(r._1))
-            .groupBy(r => (r._1, dvLabel(r._2))).toSeq
-            .sortBy { case ((data, label), _) => (data, label) }.map {
-            case ((data, label), recs) => ManifestFilePartition(
-              dataPath(data),
-              recs.map(r => dataPath(r._2)), keepPositions = true,
-              changeType = label, commitVersion = d.id,
-              commitTsMicros = d.tsMicros)
-          }
-          val selfDvd = d.dvs.filter(r => addSet.contains(r._1))
-            .groupBy(_._1).view.mapValues(_.map(r => dataPath(r._2))).toMap
-          val post = d.adds.map(n => ManifestFilePartition(dataPath(n),
-            selfDvd.getOrElse(n, Seq.empty),
-            changeType = if (cdf) addLabel(n) else null,
-            commitVersion = if (cdf) d.id else -1L,
-            commitTsMicros = if (cdf) d.tsMicros else -1L))
-          pre ++ post
-      }
-    }
-  }
-
-  def logHistory(path: String): Seq[(Long, String, Long, Long, Long)] =
-    retryVanish() {
-      val dir = Paths.get(path)
-      val compactRow = latestCompact(dir).map { case (id, p) =>
-        (id, "checkpoint", readData(p).size.toLong, 0L,
-          Files.getLastModifiedTime(p).toMillis)
-      }
-      val horizon = latestCompact(dir).map(_._1).getOrElse(-1L)
-      val looseRows = looseEpochs(dir, horizon).map { case (id, p) =>
-        val rs = records(p)
-        val adds = rs.count(_.isInstanceOf[Data]).toLong
-        val removes = rs.count(_.isInstanceOf[Remove]).toLong
-        val dvs = rs.count(_.isInstanceOf[Dv])
-        val eqdels = rs.count(_.isInstanceOf[EqDel])
-        val kind =
-          if (branchOf(p).isDefined) "branch" // staged, not yet visible
-          else if (removes > 0) "rewrite"
-          else if (eqdels > 0) "upsert" // keyed delete-by-key + appends
-          else if (dvs > 0) "delete" // merge-on-read: #dv records only
-          else if (adds > 0) "append"
-          else "metadata"
-        (id, kind, adds, removes, commitTimeMicros(p) / 1000L)
-      }
-      (compactRow.toSeq ++ looseRows).sortBy(_._1)
-    }
-
-  /** Loose epoch manifests as (id, fileCount, rowCount-if-known) in
-    * epoch order — the admission-control view a rate-limited tailing
-    * stream sizes its next batch with. rowCount is None when any listed
-    * file lacks a `#stats` record (pre-stats epochs). */
-  private[sources] def epochSizes(dir: Path): Seq[(Long, Int, Option[Long])] =
-    retryVanish() {
-      looseEpochs(dir, -1L).map { case (id, p) =>
-        if (branchOf(p).isDefined) (id, 0, Some(0L)) // staged: invisible
-        else {
-          val data = readData(p)
-          val stats = records(p).collect { case s: Stats => s.file -> s.stat }.toMap
-          val rows =
-            if (data.forall(stats.contains))
-              Some(data.map(stats(_).rows).sum)
-            else None
-          (id, data.size, rows)
-        }
-      }
-    }
 }
 
 /** Row count plus per-column bounds for one committed file: `cols` is
@@ -2827,7 +2668,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
 
   /** TABLE-AS-A-STREAM: `spark.readStream` on the SAME
     * format/path TAILS the epoch log — offsets are epoch ids, each
-    * micro-batch is [[ManifestSink.committedFilesBetween]] of its
+    * micro-batch is [[ManifestSink.Snapshot.changePartitions]] of its
     * offset window, so replay-from-checkpoint is exactly the committed
     * append deltas (the Delta "streaming from a table" shape: batch
     * writers, streaming writers and streaming readers all share one
@@ -2949,13 +2790,13 @@ case class ManifestTable(path: String, writeSchema: StructType,
           if (upsertKeys.nonEmpty) throw new UnsupportedOperationException(
             "upsertKeys is a STREAMING sink option (keyed micro-batch " +
               "upsert); for batch row-level changes use MERGE INTO")
-          val removes: () => Seq[String] =
-            if (truncating)
-              () => (forBranch match {
-                case Some(b) => ManifestSink.branchFiles(path, b)
-                case None => ManifestSink.committedFiles(path)
-              }).map(f => Paths.get(f).getFileName.toString)
-            else () => removeFiles
+          val removes: ManifestSink.Snapshot => Seq[String] =
+            if (truncating) snap => forBranch match {
+              case Some(b) =>
+                snap.branchFiles(b).map(f => Paths.get(f).getFileName.toString)
+              case None => snap.names
+            }
+            else _ => removeFiles
           val op = declaredOp.getOrElse {
             if (truncating || overwriteWhere.isDefined || dynamic)
               "overwrite"
@@ -3102,7 +2943,7 @@ object StrColStat {
 
 case class ManifestBatchWrite(path: String, schema: StructType,
     compactInterval: Int = ManifestSink.DefaultCompactInterval,
-    removeFiles: () => Seq[String] = () => Seq.empty,
+    removeFiles: ManifestSink.Snapshot => Seq[String] = _ => Seq.empty,
     spec: Seq[PartField] = Seq.empty,
     overwriteWhere: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
     dynamicOverwrite: Boolean = false,
@@ -3111,11 +2952,12 @@ case class ManifestBatchWrite(path: String, schema: StructType,
     forBranch: Option[String] = None,
     eqDrops: Seq[String] = Seq.empty) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val (bloomCols, bloomBits) = BloomSkip.configOf(path)
+    val snap = ManifestSink.snapshot(path)
+    val (bloomCols, bloomBits) = BloomSkip.configOf(snap)
     ManifestWriterFactory(path, schema.fields.map(_.name),
       schema.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)),
       java.util.UUID.randomUUID.toString.take(8), spec, bloomCols, bloomBits,
-      BloomSkip.rowGroupBytesOf(path), NdvSketch.configOf(path))
+      BloomSkip.rowGroupBytesOf(snap), NdvSketch.configOf(snap))
   }
 
   private def baseName(f: String): String = Paths.get(f).getFileName.toString
@@ -3133,23 +2975,24 @@ case class ManifestBatchWrite(path: String, schema: StructType,
   /** The write's VISIBLE state: a branch-staged overwrite
     * sees — and removes from — the branch's files and tuples, exactly
     * as its reads do. */
-  private def liveFiles: Seq[String] = forBranch match {
-    case Some(b) => ManifestSink.branchFiles(path, b)
-    case None => ManifestSink.committedFiles(path)
+  private def liveNames(snap: ManifestSink.Snapshot): Seq[String] = forBranch match {
+    case Some(b) => snap.branchFiles(b).map(baseName)
+    case None => snap.names
   }
-  private def livePartitions: Map[String, PartTuple] = forBranch match {
-    case Some(b) => ManifestSink.branchFilePartitions(path, b)
-    case None => ManifestSink.filePartitions(path)
-  }
+  private def livePartitions(snap: ManifestSink.Snapshot): Map[String, PartTuple] =
+    forBranch match {
+      case Some(b) => snap.branchParts(b)
+      case None => snap.parts
+    }
 
-  private def filteredRemoves(fs: Seq[org.apache.spark.sql.sources.Filter])
-      : Seq[String] = {
+  private def filteredRemoves(snap: ManifestSink.Snapshot,
+      fs: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
     val pred = andOf(fs)
-    val book = ManifestSink.partitionSpecs(path)
-    val parts = livePartitions
-    liveFiles.map(baseName).filter { n =>
-      // each file decides under the spec it was WRITTEN under (round
-      // 16) — a predicate on a column that is identity in BOTH eras
+    val book = snap.specs
+    val parts = livePartitions(snap)
+    liveNames(snap).filter { n =>
+      // each file decides under the spec it was WRITTEN under — a
+      // predicate on a column that is identity in BOTH eras
       // stays decidable across an evolution
       parts.get(n).flatMap(t => book.evalExact(t, pred)).getOrElse(
         throw new UnsupportedOperationException(
@@ -3165,11 +3008,12 @@ case class ManifestBatchWrite(path: String, schema: StructType,
   /** Dynamic partition overwrite's remove set: committed files whose
     * tuple equals a tuple the new data wrote. Every committed file
     * must carry a tuple (else its membership is unknowable). */
-  private def dynamicRemoves(written: Set[Seq[String]]): Seq[String] = {
+  private def dynamicRemoves(snap: ManifestSink.Snapshot,
+      written: Set[Seq[String]]): Seq[String] = {
     if (spec.isEmpty) throw new UnsupportedOperationException(
       s"dynamic partition overwrite on $path: the table is unpartitioned")
-    val parts = livePartitions
-    liveFiles.map(baseName).filter { n =>
+    val parts = livePartitions(snap)
+    liveNames(snap).filter { n =>
       parts.get(n) match {
         case Some(t) if t.specId == specId => written.contains(t.toks)
         case Some(t) => throw new UnsupportedOperationException(
@@ -3216,11 +3060,11 @@ case class ManifestBatchWrite(path: String, schema: StructType,
         }
       }
     }
-    val removesGen: () => Seq[String] =
+    val removesGen: ManifestSink.Snapshot => Seq[String] =
       if (dynamicOverwrite)
-        () => dynamicRemoves(adds.map(_.part).filter(_.nonEmpty).toSet)
+        dynamicRemoves(_, adds.map(_.part).filter(_.nonEmpty).toSet)
       else overwriteWhere match {
-        case Some(fs) => () => filteredRemoves(fs)
+        case Some(fs) => filteredRemoves(_, fs)
         case None => removeFiles
       }
     ManifestSink.commitBatchEpoch(path, schema.toDDL, messages,
@@ -3268,27 +3112,28 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
       * streaming aggregate become a keyed table upsert. */
     upsertKeys: Seq[String] = Seq.empty) extends StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val (bloomCols, bloomBits) = BloomSkip.configOf(path)
+    val snap = ManifestSink.snapshot(path)
+    val (bloomCols, bloomBits) = BloomSkip.configOf(snap)
     ManifestStreamingWriterFactory(path, schema.fields.map(_.name),
       schema.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)),
       runToken, spec, bloomCols, bloomBits,
-      BloomSkip.rowGroupBytesOf(path), upsertKeys,
-      NdvSketch.configOf(path))
+      BloomSkip.rowGroupBytesOf(snap), upsertKeys,
+      NdvSketch.configOf(snap))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dir = Files.createDirectories(Paths.get(path))
-    if (epochId <= ManifestSink.txnWatermark(dir, writerId)) {
+    if (epochId <= ManifestSink.read(path)(_.txnWatermark(writerId))) {
       // replayed engine epoch: the first commit already published this
       // epoch's files under a claimed log id; discard the replay's
       // output (idempotence). NEVER delete a name ANY fragment
-      // references (referencedFiles, not the main union —
+      // references (the referenced set, not the main union —
       // a BRANCH-STAGED epoch's adds are invisible to the union but
       // just as committed): run-unique tokens make a collision
       // impossible among this sink's own files, and the guard keeps a
       // foreign file (or a future naming bug) from turning the replay
       // cleanup into committed-data loss.
-      val published = ManifestSink.referencedFiles(dir)
+      val published = ManifestSink.read(path)(_.referenced)
       (ManifestSink.committedFilesOf(messages).map(_.name) ++
         ManifestSink.eqFilesOf(messages).map(_._1)).foreach { n =>
         if (!published.contains(n))
@@ -3304,15 +3149,14 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
           "(upsertKeys) cannot stage on a branch — its delete-by-key " +
           "half retro-applies against a moving main; publish first or " +
           "stream to main")
-    def content(): Seq[LogRecord] =
+    def content(snap: ManifestSink.Snapshot): Seq[LogRecord] =
       Seq(Txn(writerId, epochId), Schema(schema.toDDL),
         Op(if (eqFiles.nonEmpty) "upsert" else "append")) ++
-        ManifestSink.stagedHeader(path, forBranch) ++
+        ManifestSink.stagedHeader(snap, forBranch) ++
         eqFiles.map { case (n, rows) => EqDel(n, upsertKeys, rows) } ++
         ManifestSink.fileRecords(files, specId) ++ files.map(f => Data(f.name))
     ManifestSink.claimEpoch(dir, content _)
-    ManifestSink.maybeCompact(dir,
-      ManifestSink.latestCompact(dir).map(_._1).getOrElse(-1L), compactInterval)
+    ManifestSink.maybeCompact(dir, compactInterval)
   }
 
   /** Abort must clean THIS attempt's orphans without ever touching
@@ -3322,10 +3166,10 @@ case class ManifestStreamingWrite(path: String, schema: StructType,
     * leave the manifest pointing at nothing. */
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val dir = Paths.get(path)
-    // referencedFiles, not the main union: a BRANCH-STAGED
+    // the referenced set, not the main union: a BRANCH-STAGED
     // epoch's adds are committed but union-invisible
     val published =
-      if (Files.exists(dir)) ManifestSink.referencedFiles(dir)
+      if (Files.exists(dir)) ManifestSink.read(path)(_.referenced)
       else Set.empty[String]
     (ManifestSink.committedFilesOf(messages).map(_.name) ++
       ManifestSink.eqFilesOf(messages).map(_._1)).foreach { n =>
@@ -3472,7 +3316,7 @@ private[graft] object ManifestWriters {
 
   /** The TYPE TOKEN a field travels the writer/reader plumbing as:
     * `typeName` for primitives, the compact JSON form for STRUCTs,
-    * ARRAYs and MAPs (rounds 17/18 — `typeName` alone loses the inner
+    * ARRAYs and MAPs (`typeName` alone loses the inner
     * shape). */
   private[sources] def typeTok(dt: org.apache.spark.sql.types.DataType): String =
     dt match {
@@ -3489,11 +3333,6 @@ private[graft] object ManifestWriters {
       : Option[org.apache.spark.sql.types.DataType] =
     if (!tok.startsWith("{")) None
     else Some(org.apache.spark.sql.types.DataType.fromJson(tok))
-
-  private[sources] def structOf(tok: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    compositeOf(tok).collect {
-      case s: org.apache.spark.sql.types.StructType => s }
 
   private def primitiveField(n: String, tok: String)
       : org.apache.parquet.schema.Type = tok match {
@@ -3828,7 +3667,7 @@ private[graft] object ManifestWriters {
       // written schema is what makes an ABSENT record in a
       // null-accounting file prove the column postdates the file
       private val nullCnt = Array.fill(fieldTypes.length)(0L)
-      // COMPOSITE (struct/array) columns (rounds 17/18): parsed once;
+      // COMPOSITE (struct/array) columns: parsed once;
       // value writes recurse. No stats (bounds over composites never
       // prune), top-level null counts still recorded.
       private val compositeTypes: Array[org.apache.spark.sql.types.DataType] =
@@ -4001,7 +3840,7 @@ case class ManifestFilePartition(file: String,
   * batch is a pure function of the checkpoint + the log — a restart
   * resumes at the committed epoch with nothing re-read and nothing
   * skipped, because `planInputPartitions` resolves the SAME
-  * (start, end] window through [[ManifestSink.committedFilesBetween]]
+  * (start, end] window through [[ManifestSink.Snapshot.changePartitions]]
   * every time (epoch manifests are immutable once published).
   *
   * Admission honors BOTH the table's `maxEpochsPerTrigger` option and
@@ -4031,9 +3870,7 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows}
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  private def newest: Long =
-    try ManifestSink.newestVersion(path)
-    catch { case _: IllegalArgumentException => -1L } // no commits yet
+  private def newest: Long = ManifestSink.snapshot(path).version // -1: no commits yet
 
   override def initialOffset(): Offset = EpochOffset(startAt)
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
@@ -4052,7 +3889,7 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
 
   private def admitBy(start: Long, end: Long, budget: Long,
       measure: ((Long, Int, Option[Long])) => Long): Long = {
-    val window = ManifestSink.epochSizes(Paths.get(path))
+    val window = ManifestSink.read(path)(_.epochSizes)
       .filter(e => e._1 > start && e._1 <= end)
     // an unreadable window (epochs swept into the compact) must NOT
     // silently stall at `start` — admit through `end` so the downstream
@@ -4091,7 +3928,7 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
     val s = start.asInstanceOf[EpochOffset].id
     val e = end.asInstanceOf[EpochOffset].id
     if (e <= s) Array.empty
-    else ManifestSink.changePartitions(path, s, e, cdf, onChange)
+    else ManifestSink.read(path)(_.changePartitions(s, e, cdf, onChange))
       .map(p => p: InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -4173,7 +4010,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
       mp.eqFiles.map { case (p, cols) =>
         (cols, ManifestReadFactory.eqKeySet(p, cols)) }
     val eqColsNeeded: Seq[String] = mp.eqFiles.flatMap(_._2).distinct
-    // STRUCT/ARRAY columns ride as JSON type tokens (rounds 17/18)
+    // STRUCT/ARRAY columns ride as JSON type tokens
     val compositeTypes: Array[org.apache.spark.sql.types.DataType] =
       fieldTypes.map(t => ManifestWriters.compositeOf(t).orNull)
     val wanted = fieldNames.filterNot(n =>
@@ -4408,7 +4245,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
               else null
             }
             else if (fidx(i) < 0) {
-              // `_file`/`_pos` metadata columns (rounds 14/16): the file
+              // `_file`/`_pos` metadata columns: the file
               // carries no such field, so serve the partition's base
               // name / the row's physical ordinal — a file with a REAL
               // column of that name resolves above and wins
@@ -4430,7 +4267,7 @@ case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[Stri
               val fi = fidx(i)
               if (cur.getFieldRepetitionCount(fi) == 0) null
               else if (compositeTypes(i) != null) compositeTypes(i) match {
-                // STRUCT/ARRAY/MAP column (rounds 17/18): inner fields
+                // STRUCT/ARRAY/MAP column: inner fields
                 // resolve BY NAME against the file's group — a
                 // pre-evolution file missing an added inner field
                 // serves null, a pre-widening narrow inner primitive

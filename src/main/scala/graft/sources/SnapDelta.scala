@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** MERGE-ON-READ row-level UPDATE / MERGE on a manifest table
-  * (round 16) — Spark's `SupportsDelta` position-delta contract (the
+  * — Spark's `SupportsDelta` position-delta contract (the
   * Iceberg `SparkPositionDeltaOperation` shape), selected when the
   * table's `delete.mode` is `mor`:
   *
@@ -43,55 +43,45 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * vectorized parquet delegate path returns. */
 private[sources] class SnapDeltaOperation(val tname: String,
     val dir: String, val tschema: StructType, cmd: Command,
-    colmap: Map[String, String] = Map.empty,
-    /** Write-audit-publish (round 18): stage this operation on a
+    cols: ColumnMap,
+    /** Write-audit-publish: stage this operation on a
       * BRANCH — the scan targets the branch's visible state (main +
       * staged adds, staged dvs applied) and the dv epoch carries
       * `#forbranch`, invisible to main until `fast_forward`. */
     val forBranch: Option[String] = None)
     extends RowLevelOperation with SupportsDelta {
-  ManifestSink.verifyDeclaredSchema(dir,
-    s"graft.snap.$tname $cmd (merge-on-read)", tschema)
-  // EQUALITY DELETES (round 19): a MOR delta's replacement rows land
+  /** The snapshot this operation reads and dv-marks — pinned once, for
+    * the operation's lifetime. */
+  private[sources] val pinned = ManifestSink.snapshot(dir)
+  pinned.verifyDeclared(s"graft.snap.$tname $cmd (merge-on-read)", tschema)
+  // EQUALITY DELETES: a MOR delta's replacement rows land
   // in files EXEMPT from live `#eqdel` records — racing a keyed
   // upsert would resurrect deleted keys (claim fence backstops).
-  require(ManifestSink.equalityDeletes(dir).isEmpty,
+  require(pinned.eqDeletes.isEmpty,
     s"graft.snap.$tname $cmd: the table carries live equality " +
       "deletes (a keyed streaming upsert is active) — CALL " +
       "graft.sys.compact_data to resolve them first")
 
-  // column-mapping boundary (round 16): same contract as the COW op —
-  // `tschema` is PHYSICAL, Spark speaks LOGICAL, translation lives here
-  private[sources] val physOfLogical: Map[String, String] =
-    colmap.collect { case (p, l) if l != ManifestSink.DroppedColumn =>
-      l.toLowerCase -> p }
-  private[sources] def physName(c: String): String =
-    physOfLogical.getOrElse(c.toLowerCase, c)
-  private[sources] def logicalSchema: StructType =
-    ManifestSink.logicalizeStruct(tschema,
-      colmap.map { case (p, l) => p.toLowerCase -> l })
+  // column-mapping boundary: same contract as the COW op — `tschema`
+  // is PHYSICAL, Spark speaks LOGICAL, translation lives here
+  private[sources] def physOfLogical: Map[String, String] = cols.physOfLogical
+  private[sources] def logicalSchema: StructType = cols.logicalize(tschema)
   private[sources] def physicalize(st: StructType): StructType =
-    ManifestSink.physicalizeStruct(st, tschema,
-      colmap.map { case (p, l) => p.toLowerCase -> l })
+    cols.physicalize(st)
 
-  /** The snapshot this operation reads and dv-marks — pinned once;
-    * under a WAP branch, the branch's VISIBLE state. */
-  private[sources] val snapshotFiles: Seq[String] = forBranch match {
-    case Some(b) => ManifestSink.branchFiles(dir, b)
-    case None => ManifestSink.committedFiles(dir)
-  }
-  private[sources] val stats: Map[String, FileStat] = ManifestSink.fileStats(dir)
-  private[sources] val specBook: SpecBook = ManifestSink.partitionSpecs(dir)
+  /** The pinned files — under a WAP branch, the branch's VISIBLE
+    * state. */
+  private[sources] val snapshotFiles: Seq[String] =
+    forBranch.fold(pinned.files)(pinned.branchFiles)
+  private[sources] val stats: Map[String, FileStat] = pinned.stats
+  private[sources] val specBook: SpecBook = pinned.specs
   private[sources] def spec: Seq[PartField] = specBook.current
-  private[sources] val parts: Map[String, PartTuple] =
-    ManifestSink.filePartitions(dir)
+  private[sources] val parts: Map[String, PartTuple] = pinned.parts
   /** Live dvs at pin time: the scan applies them (a marked row never
     * re-matches), and the commit passes them as the OBSERVED state the
     * dv-vs-dv fence compares against. */
-  private[sources] val dvs: Map[String, Seq[(String, Long)]] = forBranch match {
-    case Some(b) => ManifestSink.branchDeleteVectors(dir, b)
-    case None => ManifestSink.deleteVectors(dir)
-  }
+  private[sources] val dvs: Map[String, Seq[(String, Long)]] =
+    forBranch.fold(pinned.dvs)(pinned.branchDvs)
   private[sources] def dvPathsOf(name: String): Seq[String] =
     dvs.getOrElse(name, Seq.empty).map(e =>
       new java.io.File(new java.io.File(dir, "data"), e._1).toString)
@@ -105,7 +95,7 @@ private[sources] class SnapDeltaOperation(val tname: String,
     Array(Expressions.column(SnapFileColumn.name),
       Expressions.column(SnapPosColumn.name))
 
-  /** UPDATE rows arrive WHOLE (round 18): the writer's update() gets
+  /** UPDATE rows arrive WHOLE: the writer's update() gets
     * the pre-image position and the replacement row together, which is
     * what lets the commit tag the two halves (`#cdc pre`/`#cdc post`)
     * so a MERGE's change feed serves update_pre/postimage instead of
@@ -195,7 +185,7 @@ private[sources] class SnapDeltaWrite(op: SnapDeltaOperation,
     // logical width check; physical form for the writer + #schema.
     // A pure DELETE writes NO rows (positions only), and Spark hands
     // it an EMPTY row schema — a predicate the filter-pushdown face
-    // cannot express (round 17: `doc_id % 3 = 0`) plans this delta
+    // cannot express (`doc_id % 3 = 0`) plans this delta
     // DELETE instead of [[SnapTable.deleteWhere]], so empty is legal
     // exactly for DELETE; the insert-carrying commands keep the strict
     // full-width check (a narrower schema would silently drop data).
@@ -244,12 +234,12 @@ private[sources] class SnapDeltaWrite(op: SnapDeltaOperation,
       SortDirection.ASCENDING))
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
-    val (bloomCols, bloomBits) = BloomSkip.configOf(op.dir)
+    val (bloomCols, bloomBits) = BloomSkip.configOf(op.pinned)
     SnapDeltaWriterFactory(op.dir, rowSchema.fields.map(_.name),
       rowSchema.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)), fileIdx, posIdx,
       java.util.UUID.randomUUID.toString.take(8), op.spec,
-      bloomCols, bloomBits, BloomSkip.rowGroupBytesOf(op.dir),
-      NdvSketch.configOf(op.dir))
+      bloomCols, bloomBits, BloomSkip.rowGroupBytesOf(op.pinned),
+      NdvSketch.configOf(op.pinned))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -257,7 +247,7 @@ private[sources] class SnapDeltaWrite(op: SnapDeltaOperation,
     val adds = results.flatMap(_.adds) ++ results.flatMap(_.postAdds)
     val dvRecords = results.flatMap(_.dvs) ++ results.flatMap(_.preDvs)
     if (adds.isEmpty && dvRecords.isEmpty) return // nothing matched
-    // CDC role tags (round 18): update halves label as
+    // CDC role tags: update halves label as
     // update_pre/postimage in the feed; everything untagged keeps the
     // epoch op's default labels (delete / insert)
     val roles = results.flatMap(_.preDvs).map(r => r._2 -> "pre") ++
@@ -271,9 +261,7 @@ private[sources] class SnapDeltaWrite(op: SnapDeltaOperation,
     ManifestSink.commitDeltaEpoch(op.dir,
       (if (rowSchema.fields.isEmpty) op.tschema else rowSchema).toDDL,
       dvRecords.toSeq, adds.toSeq,
-      ManifestSink.tableProperties(op.dir).get("compact.interval")
-        .flatMap(_.toIntOption)
-        .getOrElse(ManifestSink.DefaultCompactInterval),
+      op.pinned.compactInterval,
       observed, op.specBook.currentId,
       op.command() match {
         case Command.UPDATE => "update"
@@ -321,7 +309,7 @@ private[sources] case class SnapDeltaWriterFactory(path: String,
       // inserted/updated rows: ordinary stats-carrying task writers
       // (spec fan-out for partitioned tables), opened on first row.
       // UPDATE postimages land in SEPARATE files from NOT-MATCHED
-      // inserts (round 18): the commit tags them `#cdc <file> post` so
+      // inserts: the commit tags them `#cdc <file> post` so
       // the change feed serves update_postimage instead of insert.
       private var inserts: DataWriter[InternalRow] = _
       private var updates: DataWriter[InternalRow] = _
@@ -348,7 +336,7 @@ private[sources] case class SnapDeltaWriterFactory(path: String,
       // file run (a file reappearing after a run break simply opens a
       // SECOND dv file, which the format supports). DELETE positions
       // and UPDATE pre-image positions stream as SEPARATE dv files
-      // (round 18): the commit tags the latter `#cdc <file> pre` so
+      //: the commit tags the latter `#cdc <file> pre` so
       // the feed serves update_preimage instead of delete. A failed/
       // retried attempt leaves orphan dv files no manifest references —
       // vacuum's age gate reclaims them, the task-file convention.
@@ -407,7 +395,7 @@ private[sources] case class SnapDeltaWriterFactory(path: String,
         insertWriter().write(row)
       }
 
-      /** UPDATE arrives WHOLE (round 18,
+      /** UPDATE arrives WHOLE (
         * `representUpdateAsDeleteAndInsert = false`): the pre-image
         * position and the replacement row in one call — which is what
         * lets the commit tag both sides for the change feed's

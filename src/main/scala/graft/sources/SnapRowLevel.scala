@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** GROUP-BASED copy-on-write row-level operation on a manifest table —
   * what turns `UPDATE graft.snap.t SET …` and `MERGE INTO graft.snap.t
-  * USING … WHEN MATCHED …` into plain Spark SQL (round 14, the
+  * USING … WHEN MATCHED …` into plain Spark SQL (the
   * Iceberg `SparkCopyOnWriteOperation` shape, built on Spark's
   * `SupportsRowLevelOperations` planner contract: the reference's own
   * cadence is a monthly UPSERT refresh, reference `README.md:112`,
@@ -46,50 +46,43 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * is correct and exactly what Delta does without file-level stats.
   * The declared conf schema is verified against the log's `#schema`
   * records at construction: a REWRITE under a stale narrow conf would
-  * silently drop an evolved column (advisor r13). */
+  * silently drop an evolved column. */
 private[sources] class SnapRowLevelOperation(val tname: String,
     val dir: String, val tschema: StructType, cmd: Command,
-    colmap: Map[String, String] = Map.empty)
+    cols: ColumnMap)
     extends RowLevelOperation {
-  ManifestSink.verifyDeclaredSchema(dir, s"graft.snap.$tname $cmd", tschema)
-  // EQUALITY DELETES (round 19): a COW rewrite under live `#eqdel`
+  /** The snapshot this operation reads AND replaces — pinned once, for
+    * the operation's lifetime. */
+  private[sources] val pinned = ManifestSink.snapshot(dir)
+  pinned.verifyDeclared(s"graft.snap.$tname $cmd", tschema)
+  // EQUALITY DELETES: a COW rewrite under live `#eqdel`
   // records would carry old rows into files EXEMPT from them
   // (add-epoch past the delete) — resurrecting deleted keys. The
   // claim-time fence backstops the race; this refusal names the fix.
-  require(ManifestSink.equalityDeletes(dir).isEmpty,
+  require(pinned.eqDeletes.isEmpty,
     s"graft.snap.$tname $cmd: the table carries live equality " +
       "deletes (a keyed streaming upsert is active) — CALL " +
       "graft.sys.compact_data to resolve them first")
 
-  // column-mapping boundary (round 16): `tschema` is PHYSICAL; Spark
-  // plans this operation against the table's LOGICAL schema, so pushed
-  // filters translate in, the write's declared-width check compares
-  // logically, and the reader/writer speak physical
-  private[sources] val physOfLogical: Map[String, String] =
-    colmap.collect { case (p, l) if l != ManifestSink.DroppedColumn =>
-      l.toLowerCase -> p }
-  private[sources] def physName(c: String): String =
-    physOfLogical.getOrElse(c.toLowerCase, c)
-  private[sources] def logicalSchema: StructType =
-    ManifestSink.logicalizeStruct(tschema,
-      colmap.map { case (p, l) => p.toLowerCase -> l })
+  // column-mapping boundary: `tschema` is PHYSICAL; Spark plans this
+  // operation against the table's LOGICAL schema, so pushed filters
+  // translate in, the write's declared-width check compares logically,
+  // and the reader/writer speak physical
+  private[sources] def physOfLogical: Map[String, String] = cols.physOfLogical
+  private[sources] def logicalSchema: StructType = cols.logicalize(tschema)
   private[sources] def physicalize(st: StructType): StructType =
-    ManifestSink.physicalizeStruct(st, tschema,
-      colmap.map { case (p, l) => p.toLowerCase -> l })
+    cols.physicalize(st)
 
-  /** The snapshot this operation reads AND replaces — pinned once. */
-  private[sources] val snapshotFiles: Seq[String] = ManifestSink.committedFiles(dir)
-  private[sources] val stats: Map[String, FileStat] = ManifestSink.fileStats(dir)
-  private[sources] val specBook: SpecBook = ManifestSink.partitionSpecs(dir)
+  private[sources] val snapshotFiles: Seq[String] = pinned.files
+  private[sources] val stats: Map[String, FileStat] = pinned.stats
+  private[sources] val specBook: SpecBook = pinned.specs
   private[sources] def spec: Seq[PartField] = specBook.current
-  private[sources] val parts: Map[String, PartTuple] =
-    ManifestSink.filePartitions(dir)
-  /** Live delete vectors at pin time (round 15): the rewrite's reads
+  private[sources] val parts: Map[String, PartTuple] = pinned.parts
+  /** Live delete vectors at pin time: the rewrite's reads
     * apply them (a COW over a dv'd file must not resurrect its deleted
     * rows), and the commit declares them CONSUMED — the claim-time
     * fence aborts if a new dv landed on a rewritten file since. */
-  private[sources] val dvs: Map[String, Seq[(String, Long)]] =
-    ManifestSink.deleteVectors(dir)
+  private[sources] val dvs: Map[String, Seq[(String, Long)]] = pinned.dvs
   private[sources] def dvPathsOf(name: String): Seq[String] =
     dvs.getOrElse(name, Seq.empty).map(e =>
       new java.io.File(new java.io.File(dir, "data"), e._1).toString)
@@ -110,7 +103,7 @@ private[sources] class SnapRowLevelOperation(val tname: String,
     snapshotFiles.map(baseName)
 
   /** The runtime group filter's allowed `_file` set, recorded ON THE
-    * OPERATION when any scan instance receives it (advisor r15): the
+    * OPERATION when any scan instance receives it: the
     * commit intersects [[rewriteNames]] with it, so a plan invocation
     * that happens AFTER the executed replacement read (group-filter
     * subquery reuse, an EXPLAIN, an AQE re-plan that never sees the
@@ -136,13 +129,12 @@ private[sources] class SnapRowLevelOperation(val tname: String,
   override def command(): Command = cmd
   override def description(): String = s"graft.snap.$tname $cmd (copy-on-write)"
 
-  /** Live `#rowid` bases at pin time (round 19): the scan serves
+  /** Live `#rowid` bases at pin time: the scan serves
     * `_row_id` from them and the writer materializes it back. */
-  private[sources] val rowIdBases: Map[String, Long] =
-    ManifestSink.rowIdBases(dir)
+  private[sources] val rowIdBases: Map[String, Long] = pinned.rowids
 
   /** `_file` is how Spark's group-filter subquery names groups back to
-    * this scan; `_row_id` (round 19) rides with every row through the
+    * this scan; `_row_id` rides with every row through the
     * rewrite — Spark's ReplaceData delivers both to the writer via the
     * metadata projection (`DataWriter.write(meta, row)`), which is how
     * a carried row's identity survives the copy-on-write move. */
@@ -172,7 +164,7 @@ private[sources] object SnapFileColumn
     "base name of the committed data file the row lives in"
 }
 
-/** The `_pos` metadata column (round 16): a row's PHYSICAL ordinal
+/** The `_pos` metadata column: a row's PHYSICAL ordinal
   * within its committed data file — the second half of the
   * (file, position) row identity every position-delete design keys on
   * (Delta/Iceberg expose the same pair). Ordinals are physical, so a
@@ -191,7 +183,7 @@ private[sources] object SnapPosColumn
     "physical row ordinal within the row's committed data file"
 }
 
-/** The `_row_id` metadata column (round 19, ROW TRACKING — the Delta
+/** The `_row_id` metadata column (ROW TRACKING — the Delta
   * row-tracking / Iceberg-v3 row-lineage shape): a row's STABLE
   * identity — `coalesce(materialized _graft_rowid, file base + _pos)`.
   * Fresh appends store nothing (the id IS the position under the
@@ -270,7 +262,7 @@ private[sources] class SnapRowLevelScan(op: SnapRowLevelOperation,
         keep.contains(Paths.get(f).getFileName.toString))
       case None => candidates
     }
-    // the REMOVE set is this planned list (advisor r14): the group-
+    // the REMOVE set is this planned list: the group-
     // filter subquery scan assigns first and the main replacement scan
     // — planned last, at write execution — assigns the final value, so
     // the commit's `#remove`s are exactly the files whose rows the
@@ -368,18 +360,18 @@ private[sources] class SnapRowLevelWrite(op: SnapRowLevelOperation,
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
     // the rewrite fans out under the table's spec, so COW survivors of
     // a partitioned table keep carrying their `#part` tuples (and
-    // their `#bloom` filters, round 18). ROW TRACKING (round 19): the
+    // their `#bloom` filters, round 18). ROW TRACKING: the
     // inner writers carry one extra hidden long column — the
     // materialized `_graft_rowid` the wrapper fills from each row's
     // delivered metadata, preserving carried rows' identity.
-    val (bloomCols, bloomBits) = BloomSkip.configOf(op.dir)
+    val (bloomCols, bloomBits) = BloomSkip.configOf(op.pinned)
     RowIdMaterializingFactory(ManifestWriterFactory(op.dir,
       ws.fields.map(_.name) :+ ManifestSink.RowIdColumnName,
       ws.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType))
         :+ "long",
       java.util.UUID.randomUUID.toString.take(8), op.spec,
-      bloomCols, bloomBits, BloomSkip.rowGroupBytesOf(op.dir),
-      NdvSketch.configOf(op.dir)))
+      bloomCols, bloomBits, BloomSkip.rowGroupBytesOf(op.pinned),
+      NdvSketch.configOf(op.pinned)))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -391,10 +383,7 @@ private[sources] class SnapRowLevelWrite(op: SnapRowLevelOperation,
     val consumed = removed.map(n =>
       n -> op.dvs.getOrElse(n, Seq.empty).map(_._1).toSet).toMap
     ManifestSink.commitBatchEpoch(op.dir, ws.toDDL, messages,
-      () => op.effectiveRewrite,
-      ManifestSink.tableProperties(op.dir).get("compact.interval")
-        .flatMap(_.toIntOption)
-        .getOrElse(ManifestSink.DefaultCompactInterval),
+      _ => op.effectiveRewrite, op.pinned.compactInterval,
       Some(consumed), op.specBook.currentId,
       op.command() match {
         case org.apache.spark.sql.connector.write.RowLevelOperation
@@ -404,7 +393,7 @@ private[sources] class SnapRowLevelWrite(op: SnapRowLevelOperation,
         case _ => "delete"
       },
       // every carried row's id was materialized above → the feed may
-      // serve this epoch as per-row PAIRED changes (round 19)
+      // serve this epoch as per-row PAIRED changes
       cdcPair = true)
   }
 
@@ -416,7 +405,7 @@ private[sources] class SnapRowLevelWrite(op: SnapRowLevelOperation,
     }
 }
 
-/** ROW-ID MATERIALIZING writer (round 19): wraps the shared parquet
+/** ROW-ID MATERIALIZING writer: wraps the shared parquet
   * task writer (created with one extra trailing `_graft_rowid` long
   * column) and fills that column from each row's DELIVERED metadata —
   * Spark's ReplaceData tags carried/updated rows

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** VACUUM as a catalog STORED PROCEDURE — the retention story operable
-  * from pure SQL (round 12; it was library-only before):
+  * from pure SQL (it was library-only before):
   *
   * {{{ CALL graft.sys.vacuum('ev', 86400000) }}}
   *
@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * invariants through this SQL path). This is the Delta `VACUUM`
   * shape: storage reclamation is an operator-invoked, retention-gated
   * command, not a side effect of reads or writes. */
-/** Small-file COMPACTION as a catalog STORED PROCEDURE (round 13) —
+/** Small-file COMPACTION as a catalog STORED PROCEDURE —
   * the bin-packing maintenance op a long-lived streaming table needs
   * (every micro-batch lands a file; a year of 1-minute triggers is
   * half a million tiny files whose per-file open/footer cost dominates
@@ -44,7 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fewer than two undersized files is a no-op. Returns one row:
   * (compacted_files, new_files, n_rows).
   *
-  * CLUSTERED compaction (round 14, the Delta `OPTIMIZE ... ZORDER BY` /
+  * CLUSTERED compaction (the Delta `OPTIMIZE ... ZORDER BY` /
   * clustering-columns shape):
   *
   * {{{ CALL graft.sys.compact_data('ev', 1000000, 'user_id') }}}
@@ -61,7 +61,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * that quietly makes every filtered scan a full pass.
   *
   * The rewrite reads under the conf-declared schema, VERIFIED against
-  * the log's `#schema` records first (advisor r13): a stale narrow
+  * the log's `#schema` records first: a stale narrow
   * conf would otherwise silently destroy an evolved column across
   * every undersized file in the table. Concurrency: the COW commit
   * carries `#remove`s, so [[ManifestSink.claimEpoch]]'s conflict check
@@ -104,8 +104,11 @@ class CompactProcedure(snapDir: () => String,
       require(dir.isDirectory, s"graft.snap.$table: no manifest table at $dir")
       // sort_cols arrive in LOGICAL names; the rewrite reads/writes
       // the physical schema, so translate through the column mapping
-      val toPhys = ManifestSink.columnMapping(dir.toString)
-        .map { case (p, l) => l.toLowerCase -> p }
+      // ONE snapshot: the rewrite's candidates, dvs, tuples, equality
+      // deletes and row ids are one version, which the commit's fences
+      // re-verify at claim time
+      val snap = ManifestSink.snapshot(dir.toString)
+      val toPhys = snap.colmap.map { case (p, l) => l.toLowerCase -> p }
       val sortCols =
         if (input.numFields < 3 || input.isNullAt(2)) Seq.empty[String]
         else input.getUTF8String(2).toString.split(",").toSeq
@@ -116,26 +119,25 @@ class CompactProcedure(snapDir: () => String,
         s"compact_data sort_cols: '$c' is not a column of " +
           s"graft.snap.$table (${schema.fieldNames.mkString(", ")})"))
       // refuse to rewrite under a conf schema narrower than what the
-      // log records — this path is DESTRUCTIVE (advisor r13: a stale
+      // log records — this path is DESTRUCTIVE (a stale
       // conf would drop an evolved column from every rewritten file)
-      ManifestSink.verifyDeclaredSchema(dir.toString,
-        s"graft.snap.$table compact_data", schema)
-      val files = ManifestSink.committedFiles(dir.toString)
-      val stats = ManifestSink.fileStats(dir.toString)
+      snap.verifyDeclared(s"graft.snap.$table compact_data", schema)
+      val files = snap.files
+      val stats = snap.stats
       def fname(f: String) = java.nio.file.Paths.get(f).getFileName.toString
       // candidates: undersized files, plus any file carrying live
-      // POSITION DELETES (round 15) — compaction is what RESOLVES a
+      // POSITION DELETES — compaction is what RESOLVES a
       // merge-on-read delete into rewritten files, regardless of size
-      val dvMap = ManifestSink.deleteVectors(dir.toString)
+      val dvMap = snap.dvs
       // ... and any file whose partition tuple is under a RETIRED spec
-      // id (round 16) — compaction is the declared migration step
+      // id — compaction is the declared migration step
       // after a spec evolution: the rewrite fans out (and stamps
       // tuples) under the CURRENT spec, which is what re-enables
       // dynamic partition overwrite on the table
-      val book = ManifestSink.partitionSpecs(dir.toString)
-      val parts = ManifestSink.filePartitions(dir.toString)
+      val book = snap.specs
+      val parts = snap.parts
       // gate on EVOLUTION HAVING HAPPENED (currentId > 0), not record
-      // count (advisor r16): an unpartitioned CREATE writes no #spec
+      // count: an unpartitioned CREATE writes no #spec
       // record, so its first evolution leaves byId = {1: spec} — size
       // 1 — yet its tuple-less pre-evolution files are exactly the
       // migration candidates dynamic partition overwrite's refusal
@@ -146,16 +148,15 @@ class CompactProcedure(snapDir: () => String,
           case None => book.current.nonEmpty
         }
       }
-      // EQUALITY DELETES (round 19): compaction is the RESOLUTION —
+      // EQUALITY DELETES: compaction is the RESOLUTION —
       // every file a live `#eqdel` applies to is a rewrite candidate
       // (the keys anti-join out during the read), and the commit
       // publishes `#eqdrop` records releasing the sweep clamp and the
       // COW/MOR refusals. Files exempt from every record (added after
       // the newest delete) stay put.
-      val eqLive = ManifestSink.equalityDeletes(dir.toString)
+      val eqLive = snap.eqDeletes
       val eqAddEp: Map[String, Long] =
-        if (eqLive.isEmpty) Map.empty
-        else ManifestSink.looseAddEpochs(dir.toString)
+        if (eqLive.isEmpty) Map.empty else snap.looseAddEpochs
       def applEq(n: String): Seq[ManifestSink.EqDelete] =
         eqLive.filter(e => eqAddEp.get(n).forall(_ < e.epoch))
       val small = files.filter(f =>
@@ -169,17 +170,14 @@ class CompactProcedure(snapDir: () => String,
         // no applicable file left (all rewritten or exempt): the
         // records are dead weight — drop them in one metadata epoch
         // (the claim fence verifies coverage per attempt)
-        ManifestSink.commitEqDropEpoch(dir.toString,
-          ManifestSink.tableProperties(dir.toString)
-            .get("compact.interval").flatMap(_.toIntOption)
-            .getOrElse(ManifestSink.DefaultCompactInterval))
+        ManifestSink.commitEqDropEpoch(dir.toString, snap.compactInterval)
       }
       val result: (Long, Long, Long) =
         if (!worthIt) (0L, 0L, 0L)
         else {
           // candidates without a #stats record (dv-carrying files from
           // pre-stats logs) fall back to the parquet footer's row count
-          // (advisor r15: counting them as 0 undersized the repartition
+          // (counting them as 0 undersized the repartition
           // target, so output files could exceed the requested size)
           val totalRows = small.map(f =>
             stats.get(fname(f)).map(_.rows).getOrElse {
@@ -192,7 +190,7 @@ class CompactProcedure(snapDir: () => String,
           val spark = org.apache.spark.sql.SparkSession.active
           // the rewrite read EXCLUDES live dv positions — this is the
           // resolution step; the commit declares them consumed. ROW
-          // TRACKING (round 19): each carried row's id rides the
+          // TRACKING: each carried row's id rides the
           // rewrite as the hidden materialized column, so identity
           // survives compaction — a later CDC pairing or rollback
           // still recognizes the row. Untracked (pre-r19) rows carry
@@ -211,7 +209,7 @@ class CompactProcedure(snapDir: () => String,
                 .select(cols.map(org.apache.spark.sql.functions.col): _*)
               d.join(keys, cols, "left_anti")
             }
-          val bases = ManifestSink.rowIdBases(dir.toString)
+          val bases = snap.rowids
           val df = small.groupBy(f => applEq(fname(f)).map(_.file).sorted)
             .toSeq.sortBy(_._1.mkString(","))
             .map { case (_, fs) =>
@@ -290,7 +288,7 @@ class VacuumProcedure(snapDir: () => String) extends UnboundProcedure {
   }
 }
 
-/** PARTITION-SPEC EVOLUTION as a catalog STORED PROCEDURE (round 16,
+/** PARTITION-SPEC EVOLUTION as a catalog STORED PROCEDURE (
   * the Iceberg spec-evolution shape — a table that outgrows its layout
   * no longer has to be rebuilt):
   *
@@ -364,7 +362,8 @@ class SetPartitionSpecProcedure(snapDir: () => String,
       require(dir.isDirectory, s"graft.snap.$table: no manifest table at $dir")
       val schema = schemaOf(table) // PHYSICAL names (the log's own)
       // the caller names LOGICAL columns; the recorded spec is physical
-      val colmap = ManifestSink.columnMapping(dir.toString)
+      val snap = ManifestSink.snapshot(dir.toString)
+      val colmap = snap.colmap
       def physOf(logical: String): String = schema.fields.map(_.name)
         .find { p =>
           val l = colmap.getOrElse(p, p)
@@ -413,7 +412,7 @@ class SetPartitionSpecProcedure(snapDir: () => String,
               s"or string column, got ${typeOf(p)}")
           IdentityPart(p)
       }
-      val cur = ManifestSink.partitionSpecs(dir.toString)
+      val cur = snap.specs
       require(PartField.render(spec) != PartField.render(cur.current),
         s"graft.snap.$table: '${specStr}' is already the current " +
           s"partition spec (id ${cur.currentId})")
@@ -431,7 +430,7 @@ class SetPartitionSpecProcedure(snapDir: () => String,
   }
 }
 
-/** ROLLBACK / RESTORE as a catalog STORED PROCEDURE (round 16, the
+/** ROLLBACK / RESTORE as a catalog STORED PROCEDURE (the
   * Delta `RESTORE TABLE … VERSION AS OF` / Iceberg
   * `rollback_to_snapshot` shape — the operational undo every lake
   * needs after a bad load):
@@ -477,13 +476,10 @@ class RollbackProcedure(snapDir: () => String,
       val schema = schemaOf(table)
       // the restore is a (metadata-only) rewrite of the snapshot: the
       // same stale-conf guard every destructive path runs
-      ManifestSink.verifyDeclaredSchema(dir.toString,
-        s"graft.snap.$table rollback", schema)
-      val interval = ManifestSink.tableProperties(dir.toString)
-        .get("compact.interval").flatMap(_.toIntOption)
-        .getOrElse(ManifestSink.DefaultCompactInterval)
+      val snap = ManifestSink.snapshot(dir.toString)
+      snap.verifyDeclared(s"graft.snap.$table rollback", schema)
       val (added, removed) = ManifestSink.rollbackTo(dir.toString, version,
-        schema.toDDL, interval)
+        schema.toDDL, snap.compactInterval)
       val scan: Scan = new LocalScan {
         override def readSchema(): StructType = new StructType()
           .add("restored_version", LongType, nullable = false)
@@ -497,7 +493,7 @@ class RollbackProcedure(snapDir: () => String,
   }
 }
 
-/** SNAPSHOT TAGS as catalog STORED PROCEDURES (round 16, the Iceberg
+/** SNAPSHOT TAGS as catalog STORED PROCEDURES (the Iceberg
   * create_tag/drop_tag shape — deployments name the snapshots they
   * bless instead of passing epoch ids around):
   *
@@ -549,12 +545,13 @@ class TagProcedure(snapDir: () => String, create: Boolean)
       val tag = input.getUTF8String(1).toString
       val dir = new java.io.File(snapDir(), table)
       require(dir.isDirectory, s"graft.snap.$table: no manifest table at $dir")
+      val snap = ManifestSink.snapshot(dir.toString)
       val version: Long =
-        if (!create) ManifestSink.tableTags(dir.toString).getOrElse(tag, -1L)
+        if (!create) snap.tags.getOrElse(tag, -1L)
         else {
           val v = if (input.numFields < 3 || input.isNullAt(2)) -1L
                   else input.getLong(2)
-          if (v == -1L) ManifestSink.newestVersion(dir.toString) else v
+          if (v == -1L) snap.newestVersion else v
         }
       ManifestSink.commitTagEpoch(dir.toString, tag,
         if (create) Some(version) else None)
@@ -570,8 +567,8 @@ class TagProcedure(snapDir: () => String, create: Boolean)
   }
 }
 
-/** `CALL graft.sys.create_branch(table, name)` / `drop_branch` (round
-  * 17, write-audit-publish): a branch is a `#branch <name> <base>` ref
+/** `CALL graft.sys.create_branch(table, name)` / `drop_branch`
+  * (write-audit-publish): a branch is a `#branch <name> <base>` ref
   * — writes staged under `spark.graft.wap.branch` land as
   * `#forbranch` epochs invisible to main, `VERSION AS OF '<name>'`
   * reads main + the staged adds for auditing, and
@@ -607,10 +604,10 @@ class BranchProcedure(snapDir: () => String, create: Boolean)
       require(dir.isDirectory, s"graft.snap.$table: no manifest table at $dir")
       val base: Long =
         if (create) -1L // recorded inside the claim; reported below
-        else ManifestSink.tableBranches(dir.toString).getOrElse(branch, -1L)
+        else ManifestSink.snapshot(dir.toString).branches.getOrElse(branch, -1L)
       ManifestSink.commitBranchEpoch(dir.toString, branch, create)
       val reported =
-        if (create) ManifestSink.tableBranches(dir.toString)(branch)
+        if (create) ManifestSink.snapshot(dir.toString).branches(branch)
         else base
       val scan: Scan = new LocalScan {
         override def readSchema(): StructType = new StructType()
@@ -652,11 +649,8 @@ class FastForwardProcedure(snapDir: () => String) extends UnboundProcedure {
       val branch = input.getUTF8String(1).toString
       val dir = new java.io.File(snapDir(), table)
       require(dir.isDirectory, s"graft.snap.$table: no manifest table at $dir")
-      val interval = ManifestSink.tableProperties(dir.toString)
-        .get("compact.interval").flatMap(_.toIntOption)
-        .getOrElse(ManifestSink.DefaultCompactInterval)
-      val (v, nEpochs, nFiles) =
-        ManifestSink.fastForward(dir.toString, branch, interval)
+      val (v, nEpochs, nFiles) = ManifestSink.fastForward(dir.toString,
+        branch, ManifestSink.snapshot(dir.toString).compactInterval)
       val scan: Scan = new LocalScan {
         override def readSchema(): StructType = new StructType()
           .add("published_version", LongType, nullable = false)
@@ -671,7 +665,7 @@ class FastForwardProcedure(snapDir: () => String) extends UnboundProcedure {
 }
 
 /** `CALL graft.sys.register_feed(table, consumer, min_window)` /
-  * `unregister_feed(table, consumer)` (round 18): RESERVE a minimum
+  * `unregister_feed(table, consumer)`: RESERVE a minimum
   * retained epoch window for a named change-feed consumer. Every sweep
   * — routine compaction and `expire_snapshots` — then clamps its
   * horizon at `newest - min_window` (result names `feed:<consumer>`
@@ -726,7 +720,7 @@ class FeedProcedure(snapDir: () => String, register: Boolean)
             "register_feed: min_window must be >= 1")
           input.getLong(2)
         } else {
-          val cur = ManifestSink.registeredFeeds(dir.toString)
+          val cur = ManifestSink.snapshot(dir.toString).feeds
           require(cur.contains(consumer),
             s"no registered feed consumer '$consumer' on graft.snap." +
               s"$table (registered: ${cur.keys.toSeq.sorted.mkString(", ")
@@ -749,7 +743,7 @@ class FeedProcedure(snapDir: () => String, register: Boolean)
 }
 
 /** `CALL graft.sys.expire_snapshots(table, keep_last := N)` /
-  * `(table, older_than_ms := T)` (round 17): retire history by count
+  * `(table, older_than_ms := T)`: retire history by count
   * or age via a forced bounded sweep — travel below the new horizon
   * refuses with the boundary named, the retired epochs' unreferenced
   * bytes become vacuum candidates, and TAG targets / BRANCH bases

@@ -1051,9 +1051,9 @@ object StreamOps {
       return spark.emptyDataset[UserAgg].toDF() // empty corpus: no batches
     require(graft.sources.ManifestReadFactory.rowsDecoded.get() == decoded0,
       "the keyed upsert sink must never read the target table")
-    val live = graft.sources.ManifestSink.equalityDeletes(table)
-    val upserts = graft.sources.ManifestSink.logHistory(table)
-      .count(_._2 == "upsert")
+    val snap = graft.sources.ManifestSink.snapshot(table)
+    val live = snap.eqDeletes
+    val upserts = snap.history.count(_._2 == "upsert")
     require(upserts >= 1 && live.size >= upserts,
       s"every data batch commits an upsert epoch: epochs=$upserts " +
         s"liveRecords=${live.size}")
@@ -1078,7 +1078,7 @@ object StreamOps {
     // resolution: compaction rewrites the applicable files with the
     // keys anti-joined out and drops the records — value-invisible
     cat.sql("CALL graft.sys.compact_data('totals', 1000000)").collect()
-    require(graft.sources.ManifestSink.equalityDeletes(table).isEmpty,
+    require(graft.sources.ManifestSink.snapshot(table).eqDeletes.isEmpty,
       "compact_data resolves every live equality delete")
     require(fingerprint() == pre,
       "eq-applying read == resolved read (value-invisible resolution)")
@@ -1418,7 +1418,7 @@ object StreamOps {
     * snapshot through pure SQL: Spark routes the `VERSION AS OF` clause
     * to [[graft.sources.GraftCatalog.loadTable(ident,version)]], which
     * reconstructs snapshot 2 as the union of epoch manifests 0..2
-    * ([[graft.sources.ManifestSink.committedFilesAsOf]]). This is the
+    * ([[graft.sources.ManifestSink.Snapshot.filesAsOf]]). This is the
     * lake-table "reproduce yesterday's training set" contract: version
     * n is a durable prefix of the append log, served by the same
     * pushdown-capable CSV DSv2 scan as a current-snapshot read — the
@@ -1441,7 +1441,7 @@ object StreamOps {
     * since the last run"): `sinceVersion`/`asOfVersion` read options
     * resolve the (1, 3] epoch window at scan-build time through the
     * catalog ([[graft.sources.SnapTable]] →
-    * [[graft.sources.ManifestSink.committedFilesBetween]]), so the
+    * [[graft.sources.ManifestSink.Snapshot.filesBetween]]), so the
     * consumed rows are exactly the `event_id%4 ∈ {2,3}` slices. */
   def incrementalRead(parent: SparkSession, dir: String): DataFrame = {
     runSnapEpochs(parent, dir, "graft_snap_ir")

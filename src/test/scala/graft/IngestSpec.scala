@@ -355,9 +355,9 @@ class IngestSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
     assert(idsOf(graft.sources.ManifestSink.committedFiles(vdir)) ==
       Set(1L, 2L, 3L), "append did not union")
-    assert(idsOf(graft.sources.ManifestSink.committedFilesAsOf(vdir, 0)) ==
+    assert(idsOf(graft.sources.ManifestSink.snapshot(vdir).filesAsOf(0)) ==
       Set(1L, 2L), "version 0 is the first append alone")
-    assert(idsOf(graft.sources.ManifestSink.committedFilesBetween(vdir, 0, 1)) ==
+    assert(idsOf(graft.sources.ManifestSink.snapshot(vdir).filesBetween(0, 1)) ==
       Set(3L), "the (0,1] delta is the second append alone")
     graft.util.Fs.deleteRecursively(Paths.get(vdir))
     // CONCURRENT committers: the link(2)-exclusive epoch claim means

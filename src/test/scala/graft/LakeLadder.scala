@@ -99,7 +99,7 @@ object LakeLadder {
     // space is exactly the reserved row count (1 row per file here):
     // bases 0..epochs-1 with no range ever issued twice, across THREE
     // interleaved writers racing the same log.
-    val rtBases = ManifestSink.rowIdBases(log)
+    val rtBases = ManifestSink.snapshot(log).rowids
     require(rtBases.size == epochs,
       s"every live file has a #rowid base: ${rtBases.size}/$epochs")
     require(rtBases.values.toSet == (0L until epochs.toLong).toSet,
@@ -109,16 +109,16 @@ object LakeLadder {
 
     // ——— reads at table age: AS-OF, incremental window, replay check
     val t1 = System.nanoTime()
-    val full = ManifestSink.committedFilesAsOf(log, epochs - 1)
+    val full = ManifestSink.snapshot(log).filesAsOf(epochs - 1)
     val asOfWall = nowS(t1)
     require(full.size == epochs, s"as-of newest lists ${full.size}")
     val t2 = System.nanoTime()
-    val window = ManifestSink.committedFilesBetween(log, epochs - 6, epochs - 1)
+    val window = ManifestSink.snapshot(log).filesBetween(epochs - 6, epochs - 1)
     val incrWall = nowS(t2)
     require(window.size == 5, s"(n-6, n-1] window lists ${window.size}")
     // a window reaching past the sweep refuses loudly (retention bounds
     // incremental reads — never a silently-wrong delta)
-    val swept = try { ManifestSink.committedFilesBetween(log, 0, 20); false }
+    val swept = try { ManifestSink.snapshot(log).filesBetween(0, 20); false }
     catch { case e: IllegalStateException =>
       e.getMessage.contains("re-read the full snapshot") }
     require(swept, "swept incremental window did not refuse")
@@ -174,7 +174,7 @@ object LakeLadder {
     val dvWall = nowS(t7)
     require(ManifestSink.committedFiles(log).toSet == preDelete,
       "merge-on-read delete moved data files")
-    val dvMap = ManifestSink.deleteVectors(log)
+    val dvMap = ManifestSink.snapshot(log).dvs
     require(dvMap.size == dvKeys.size &&
       dvMap.values.flatten.map(_._2).sum == dvKeys.size,
       s"ten 1-position dvs expected: $dvMap")
@@ -214,7 +214,7 @@ object LakeLadder {
       "merge-on-read upsert moved original data files")
     require(ManifestSink.newestVersion(log) == preMergeVersion + 1,
       "the upsert must land as ONE atomic epoch")
-    val dvMap2 = ManifestSink.deleteVectors(log)
+    val dvMap2 = ManifestSink.snapshot(log).dvs
     val newDvs = dvMap2.values.flatten.size - preMergeDvs
     require(newDvs == updKeys.size &&
       dvMap2.values.flatten.map(_._2).sum == (dvKeys.size + updKeys.size).toLong,
@@ -283,7 +283,7 @@ object LakeLadder {
       wideBatch.commit(msgs.toArray)
     }
     val wideBuild = nowS(tw)
-    require(ManifestSink.planningCheckpoint(Paths.get(wideLog))
+    require(ManifestSink.snapshot(wideLog).checkpoint
       .exists(_._3 == wideN.toLong),
       "the 10k-file table must carry a full planning checkpoint")
     spark.conf.set("spark.sql.catalog.graft.snap.wide.schema",
@@ -323,7 +323,7 @@ object LakeLadder {
     // one #spec record + the r17 #ts commit-time header
     require(evoBytes <= 64L, s"spec evolution wrote $evoBytes B of metadata")
     spark.sql(s"INSERT INTO graft.snap.wide VALUES ($wideN, 'n$wideN')")
-    require(ManifestSink.filePartitions(wideLog).values
+    require(ManifestSink.snapshot(wideLog).parts.values
       .exists(_.specId == 1), "the post-evolution file must stamp spec id 1")
     val (vE2, pruneE2, _) = widePoint() // an era-0 file: #stats prune
     spark.conf.set("spark.graft.plan.distributedThreshold", "1")
@@ -414,13 +414,13 @@ object LakeLadder {
     // bloom-prune to exactly 1); evicted older files fall back to the
     // min/max envelope (38 planned, the ctl baseline) with values
     // still exact — eviction costs pruning, never correctness.
-    val uncappedResident = ManifestSink.residentBloomBytes(blLog)
+    val uncappedResident = ManifestSink.snapshot(blLog).residentBloomBytes
     val blCap = 100000L // ~36 of the ~2.8 KB b64 payloads
     require(uncappedResident > 10L * blCap,
       s"rung needs a 10× overrun: uncapped=$uncappedResident cap=$blCap")
     spark.sql("ALTER TABLE graft.snap.blwide " +
       s"SET TBLPROPERTIES ('bloom.resident.bytes'='$blCap')")
-    val cappedResident = ManifestSink.residentBloomBytes(blLog)
+    val cappedResident = ManifestSink.snapshot(blLog).residentBloomBytes
     require(cappedResident <= blCap && cappedResident > 0L,
       s"resident bloom bytes under cap: $cappedResident <= $blCap")
     // the NEWEST ~36 files' payloads fit under the cap

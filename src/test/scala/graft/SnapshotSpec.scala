@@ -33,7 +33,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   private def asOfNames(dir: Path, v: Long): Seq[String] =
-    graft.sources.ManifestSink.committedFilesAsOf(dir.toString, v)
+    graft.sources.ManifestSink.snapshot(dir.toString).filesAsOf(v)
       .map(p => Paths.get(p).getFileName.toString).sorted
 
   test("committedFilesAsOf: first-epoch>0 logs (a checkpointed query " +
@@ -120,7 +120,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!names.contains(epochName(0)) && !names.contains(epochName(3)),
       s"absorbed loose epochs not swept: $names")
     def asOfIds(v: Long): Set[Long] = {
-      val files = graft.sources.ManifestSink.committedFilesAsOf(out, v)
+      val files = graft.sources.ManifestSink.snapshot(out).filesAsOf(v)
       spark.read.schema("event_id LONG, user_id LONG, event_type STRING")
         .parquet(files: _*).collect().map(_.getLong(0)).toSet
     }
@@ -129,7 +129,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(asOfIds(3) == prefixIds(3), "as-of at the horizon diverged")
     assert(asOfIds(4) == prefixIds(4), "as-of above the horizon diverged")
     assert(graft.sources.ManifestSink.committedFiles(out).toSet ==
-      graft.sources.ManifestSink.committedFilesAsOf(out, 4).toSet,
+      graft.sources.ManifestSink.snapshot(out).filesAsOf(4).toSet,
       "newest snapshot != current committed snapshot")
     val below = intercept[IllegalStateException](asOfIds(2))
     assert(below.getMessage.contains("predates the compaction horizon 3"), below)
@@ -301,7 +301,7 @@ class SnapshotSpec extends AnyFunSuite {
     // engine epochs were REMAPPED onto claimed log ids, not reused
     val delta = spark.read
       .schema("event_id LONG, user_id LONG, event_type STRING")
-      .parquet(graft.sources.ManifestSink.committedFilesBetween(log, 2, 3): _*)
+      .parquet(graft.sources.ManifestSink.snapshot(log).filesBetween(2, 3): _*)
       .collect().map(_.getLong(0)).toSet
     assert(delta == slice(2).map(_._1).toSet,
       s"restarted stream's epoch is not log epoch 3: $delta")
@@ -495,10 +495,10 @@ class SnapshotSpec extends AnyFunSuite {
     val ghost = root.resolve("nope").toString
     assert(graft.sources.ManifestSink.committedFiles(ghost).isEmpty)
     val eA = intercept[IllegalArgumentException](
-      graft.sources.ManifestSink.committedFilesAsOf(ghost, 0))
+      graft.sources.ManifestSink.snapshot(ghost).filesAsOf(0))
     assert(eA.getMessage.contains("no version"), eA)
     val eB = intercept[IllegalArgumentException](
-      graft.sources.ManifestSink.committedFilesBetween(ghost, -1, 0))
+      graft.sources.ManifestSink.snapshot(ghost).filesBetween(-1, 0))
     assert(eB.getMessage.contains("no version"), eB)
     graft.util.Fs.deleteRecursively(root)
   }
@@ -553,7 +553,7 @@ class SnapshotSpec extends AnyFunSuite {
     def sliceEpochs(log: String, n: Int): Seq[graft.sources.FileStat] = {
       val stats = graft.sources.ManifestSink.fileStats(log)
       (0 until n).map { v =>
-        val adds = graft.sources.ManifestSink.committedFilesBetween(log, v - 1, v)
+        val adds = graft.sources.ManifestSink.snapshot(log).filesBetween(v - 1, v)
         assert(adds.size == 1, s"epoch $v of $log adds ${adds.size} files")
         stats(Paths.get(adds.head).getFileName.toString)
       }
@@ -736,10 +736,10 @@ class SnapshotSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 12)
     // an incremental window CROSSING the delete epoch refuses loudly
     val crossed = intercept[IllegalStateException](
-      graft.sources.ManifestSink.committedFilesBetween(log, 3, 4))
+      graft.sources.ManifestSink.snapshot(log).filesBetween(3, 4))
     assert(crossed.getMessage.contains("row-level DELETE"), crossed.getMessage)
     // windows before the delete still serve
-    assert(graft.sources.ManifestSink.committedFilesBetween(log, 2, 3).size == 1)
+    assert(graft.sources.ManifestSink.snapshot(log).filesBetween(2, 3).size == 1)
     // the removed (pre-rewrite) file is unlisted from the CURRENT
     // union but still REFERENCED by the retained pre-delete versions
     // (round 14): vacuum must reclaim NOTHING while the remove epoch
@@ -882,7 +882,7 @@ class SnapshotSpec extends AnyFunSuite {
     "serves") {
     val base = Files.createTempDirectory("graft_between_unit")
     def betweenNames(dir: Path, s: Long, a: Long): Seq[String] =
-      graft.sources.ManifestSink.committedFilesBetween(dir.toString, s, a)
+      graft.sources.ManifestSink.snapshot(dir.toString).filesBetween(s, a)
         .map(p => Paths.get(p).getFileName.toString).sorted
     // loose 5,6,7 — every window is its manifest concatenation
     val a = base.resolve("a")
@@ -1147,7 +1147,7 @@ class SnapshotSpec extends AnyFunSuite {
     // an incremental window crossing the rewrite epoch refuses (a COW
     // epoch swaps files — its adds duplicate surviving rows)
     val crossed = intercept[IllegalStateException](
-      graft.sources.ManifestSink.committedFilesBetween(log, 3, 4))
+      graft.sources.ManifestSink.snapshot(log).filesBetween(3, 4))
     assert(crossed.getMessage.contains("DELETE"), crossed.getMessage)
     // MERGE upsert: one matched update (file 2), one insert
     s.createDataFrame(Seq((201L, "merged"), (999L, "inserted")))
@@ -1528,7 +1528,7 @@ class SnapshotSpec extends AnyFunSuite {
     val dl = root.resolve("dl").toString
     val committed = graft.sources.ManifestSink.committedFiles(dl)
       .map(f => Paths.get(f).getFileName.toString)
-    val parts = graft.sources.ManifestSink.filePartitions(dl)
+    val parts = graft.sources.ManifestSink.snapshot(dl).parts
     assert(committed.forall(parts.contains),
       s"every committed file keeps a partition tuple after COW: " +
         s"$committed vs ${parts.keySet}")
@@ -1567,7 +1567,7 @@ class SnapshotSpec extends AnyFunSuite {
       "a merge-on-read delete must not move data files")
     assert(dataFiles.map(f => Files.size(Paths.get(f))).sum == bytesBefore,
       "a merge-on-read delete must not rewrite data bytes")
-    val dvs1 = graft.sources.ManifestSink.deleteVectors(log)
+    val dvs1 = graft.sources.ManifestSink.snapshot(log).dvs
     assert(dvs1.values.flatten.size == 1 && dvs1.values.flatten.head._2 == 1L,
       s"one dv file, one position: $dvs1")
     val dvPath = root.resolve("mv").resolve("data")
@@ -1594,14 +1594,14 @@ class SnapshotSpec extends AnyFunSuite {
     // a second delete over an overlapping predicate does NOT re-mark
     // k=42 (already deleted): positions are disjoint across dv files
     s.sql("DELETE FROM graft.snap.mv WHERE k >= 40 AND k < 45")
-    val dvs2 = graft.sources.ManifestSink.deleteVectors(log)
+    val dvs2 = graft.sources.ManifestSink.snapshot(log).dvs
     assert(dvs2.values.flatten.map(_._2).sum == 5L,
       s"42 once + 40,41,43,44: $dvs2")
     assert(s.sql("SELECT count(*) FROM graft.snap.mv").head().getLong(0) == 195)
 
     // incremental windows crossing the dv epoch refuse loudly
     val inc = intercept[IllegalStateException](
-      graft.sources.ManifestSink.committedFilesBetween(log, 0,
+      graft.sources.ManifestSink.snapshot(log).filesBetween(0,
         graft.sources.ManifestSink.newestVersion(log)))
     assert(inc.getMessage.contains("retro-deletes") ||
       inc.getMessage.contains("rewrites"), inc.getMessage)
@@ -1619,14 +1619,14 @@ class SnapshotSpec extends AnyFunSuite {
     assert(s.sql("SELECT name FROM graft.snap.mv WHERE k = 50")
       .head().getString(0) == "bumped")
     // the rewritten file's dvs are resolved (removed with the file)
-    val dvs3 = graft.sources.ManifestSink.deleteVectors(log)
+    val dvs3 = graft.sources.ManifestSink.snapshot(log).dvs
     assert(dvs3.values.flatten.map(_._2).sum < 5L,
       s"the rewritten file's dvs must be resolved: $dvs3")
 
     // compaction resolves the REMAINING dvs: read stays identical,
     // no dv records survive, and the dv files become vacuumable
     s.sql("CALL graft.sys.compact_data('mv', 1000000)")
-    assert(graft.sources.ManifestSink.deleteVectors(log).isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.isEmpty,
       "compaction must resolve every live dv")
     assert(s.sql("SELECT count(*) FROM graft.snap.mv").head().getLong(0) == 195)
     assert(s.sql("SELECT sum(k) FROM graft.snap.mv").head().getLong(0) ==
@@ -1687,7 +1687,7 @@ class SnapshotSpec extends AnyFunSuite {
       }
     }
     val log = root.resolve("evp").toString
-    val parts = graft.sources.ManifestSink.filePartitions(log)
+    val parts = graft.sources.ManifestSink.snapshot(log).parts
     val committed = graft.sources.ManifestSink.committedFiles(log)
       .map(f => Paths.get(f).getFileName.toString)
     assert(committed.forall(parts.contains),
@@ -1771,7 +1771,7 @@ class SnapshotSpec extends AnyFunSuite {
             |  'compact.interval'='50')""".stripMargin)
     s.sql("INSERT INTO graft.snap.pt VALUES (1,'a'), (2,'b'), (3,'c')")
     val log = root.resolve("pt").toString
-    val props = graft.sources.ManifestSink.tableProperties(log)
+    val props = graft.sources.ManifestSink.snapshot(log).props
     assert(props.get("delete.mode").contains("mor") &&
       props.get("team").contains("graft-lake") &&
       props.get("compact.interval").contains("50"), props)
@@ -1781,13 +1781,13 @@ class SnapshotSpec extends AnyFunSuite {
     s.sql("DELETE FROM graft.snap.pt WHERE k = 2")
     assert(graft.sources.ManifestSink.committedFiles(log).sorted == filesBefore,
       "delete.mode=mor property must make DELETE merge-on-read")
-    assert(graft.sources.ManifestSink.deleteVectors(log).nonEmpty)
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.nonEmpty)
     assert(s.sql("SELECT count(*) FROM graft.snap.pt").head().getLong(0) == 2)
 
     // ALTER SET TBLPROPERTIES flips the mode: the next delete is COW
     // (resolves the dv'd file too — consumed-dv fence allows it)
     s.sql("ALTER TABLE graft.snap.pt SET TBLPROPERTIES ('delete.mode'='cow')")
-    assert(graft.sources.ManifestSink.tableProperties(log)
+    assert(graft.sources.ManifestSink.snapshot(log).props
       .get("delete.mode").contains("cow"))
     s.sql("DELETE FROM graft.snap.pt WHERE k = 3")
     assert(graft.sources.ManifestSink.committedFiles(log).sorted != filesBefore,
@@ -1814,6 +1814,45 @@ class SnapshotSpec extends AnyFunSuite {
     graft.util.Fs.deleteRecursively(root)
   }
 
+  test("ONE VERSION PER READ: a held snapshot answers its own version " +
+    "across later commits, and the .files metadata table is one " +
+    "snapshot's files x stats x dvs") {
+    val root = Files.createTempDirectory("graft_snap_onever")
+    val s = spark.newSession()
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001, Some(root.toString))
+    s.sql("CREATE TABLE graft.snap.ov (k BIGINT) " +
+      "TBLPROPERTIES ('delete.mode'='mor')")
+    s.sql("INSERT INTO graft.snap.ov VALUES (1), (2), (3)")
+    val dir = root.resolve("ov").toString
+    val pre = graft.sources.ManifestSink.snapshot(dir)
+    val (preFiles, preStats, preDvs, preVersion) =
+      (pre.files, pre.stats, pre.dvs, pre.version)
+    // taken at the same version, read only after the commits below
+    val held = graft.sources.ManifestSink.snapshot(dir)
+    s.sql("INSERT INTO graft.snap.ov VALUES (4), (5)")
+    s.sql("DELETE FROM graft.snap.ov WHERE k = 1")
+    assert(held.files == preFiles && held.stats == preStats &&
+      held.dvs == preDvs && held.version == preVersion,
+      "a held snapshot must keep answering its own version")
+    assert(preDvs.isEmpty)
+    val fresh = graft.sources.ManifestSink.snapshot(dir)
+    assert(fresh.version == preVersion + 2, "a fresh snapshot sees both commits")
+    assert(preFiles.forall(fresh.files.contains) &&
+      fresh.files.size > preFiles.size)
+    assert(fresh.dvs.nonEmpty, "the MOR DELETE landed a dv")
+    val rows = s.sql(
+      "SELECT file, rows, dvs, deleted_rows FROM graft.snap.ov.files")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    val expected = fresh.files.map { f =>
+      val n = Paths.get(f).getFileName.toString
+      val dl = fresh.dvs.getOrElse(n, Seq.empty)
+      (n, fresh.stats(n).rows, dl.size.toLong, dl.map(_._2).sum)
+    }.toSet
+    assert(rows == expected, ".files rows must be one snapshot's facets")
+    graft.util.Fs.deleteRecursively(root)
+  }
+
   test("FRAGMENT PARSE CACHE (round 15): re-planning an unchanged " +
     "table parses zero fragment bytes; a table dir recreated at the " +
     "same path (same epoch names, different content) serves the NEW " +
@@ -1828,7 +1867,10 @@ class SnapshotSpec extends AnyFunSuite {
     assert(q() == 6)
     val before = graft.sources.ManifestSink.fragmentParses.get()
     val beforeDeriv = graft.sources.ManifestSink.planDerivations.get()
+    val beforeListings = graft.sources.ManifestSink.logListings.get()
     assert(q() == 6) // identical re-plan: every fragment cache-hits
+    assert(graft.sources.ManifestSink.logListings.get() - beforeListings <= 2,
+      "a warm read lists the log at most twice: the load and the scan")
     assert(graft.sources.ManifestSink.fragmentParses.get() == before,
       "re-planning an unchanged table must parse no fragments")
     // round 16: the DERIVED maps (union/stats/parts/dvs/props) are
@@ -1938,7 +1980,7 @@ class SnapshotSpec extends AnyFunSuite {
     // exactly one appended replacement file, one dv with one position
     val added = after.filterNot(dataFiles.contains)
     assert(added.size == 1, s"one replacement file expected: $added")
-    val dvs = graft.sources.ManifestSink.deleteVectors(log)
+    val dvs = graft.sources.ManifestSink.snapshot(log).dvs
     assert(dvs.values.flatten.size == 1 &&
       dvs.values.flatten.head._2 == 1L, s"one dv, one position: $dvs")
     val stats = graft.sources.ManifestSink.fileStats(log)
@@ -1967,7 +2009,7 @@ class SnapshotSpec extends AnyFunSuite {
 
     // compaction resolves dvs; values unchanged, delegate path returns
     s.sql("CALL graft.sys.compact_data('mu', 1000000)")
-    assert(graft.sources.ManifestSink.deleteVectors(log).isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.isEmpty,
       "compaction must resolve the dvs")
     assert(s.sql("SELECT name FROM graft.snap.mu WHERE k = 42")
       .collect().map(_.getString(0)).toSeq == Seq("patched2"))
@@ -2005,7 +2047,7 @@ class SnapshotSpec extends AnyFunSuite {
     val after = graft.sources.ManifestSink.committedFiles(log).sorted
     assert(dataFiles.forall(after.contains),
       "a merge-on-read MERGE must keep every original data file")
-    val dvs = graft.sources.ManifestSink.deleteVectors(log)
+    val dvs = graft.sources.ManifestSink.snapshot(log).dvs
     assert(dvs.size == 2 && dvs.values.flatten.map(_._2).sum == 2L,
       s"each matched file carries one 1-position dv: $dvs")
     assert(graft.sources.ManifestSink.newestVersion(log) == preVersion + 1,
@@ -2051,7 +2093,7 @@ class SnapshotSpec extends AnyFunSuite {
             |WHEN MATCHED THEN UPDATE SET *
             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     val plog = root.resolve("mp").toString
-    val parts = graft.sources.ManifestSink.filePartitions(plog)
+    val parts = graft.sources.ManifestSink.snapshot(plog).parts
     val committed = graft.sources.ManifestSink.committedFiles(plog)
       .map(f => Paths.get(f).getFileName.toString)
     assert(committed.forall(parts.contains),
@@ -2136,7 +2178,7 @@ class SnapshotSpec extends AnyFunSuite {
     // dv-vs-dv at the commit layer: an epoch computed against a stale
     // (empty) observed state while a dv already lives on the target
     s.sql("DELETE FROM graft.snap.rr WHERE k = 5") // mor: lands a dv
-    val target = graft.sources.ManifestSink.deleteVectors(log).keys.head
+    val target = graft.sources.ManifestSink.snapshot(log).dvs.keys.head
     val ex2 = intercept[graft.sources.ManifestConflictException] {
       graft.sources.ManifestSink.commitDeltaEpoch(log, "k BIGINT, name STRING",
         Seq((target, "dv-stale0000000001.txt", 1L)), Seq.empty, 10,
@@ -2164,7 +2206,7 @@ class SnapshotSpec extends AnyFunSuite {
     // accumulate MANY dv files: 8 single-row deletes → 8+ dv files
     (0 until 8).foreach(i => s.sql(
       s"DELETE FROM graft.snap.fan WHERE k = ${i * 13 + 1}"))
-    val dvMap = graft.sources.ManifestSink.deleteVectors(log)
+    val dvMap = graft.sources.ManifestSink.snapshot(log).dvs
     val nDvFiles = dvMap.values.flatten.size
     assert(nDvFiles >= 8, s"expected many dv files: $dvMap")
     val files = graft.sources.ManifestSink.committedFiles(log)
@@ -2212,7 +2254,7 @@ class SnapshotSpec extends AnyFunSuite {
 
     // compaction resolves the dv pile-up
     s.sql("CALL graft.sys.compact_data('fan', 1000000)")
-    assert(graft.sources.ManifestSink.deleteVectors(log).isEmpty)
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.isEmpty)
     assert(s.sql("SELECT count(*) FROM graft.snap.fan").head().getLong(0)
       == 192)
     graft.util.Fs.deleteRecursively(root)
@@ -2246,7 +2288,7 @@ class SnapshotSpec extends AnyFunSuite {
     }
     assert(ckptFiles().size == 2, s"parquet + meta expected: ${ckptFiles()}")
     // the meta sidecar serves resolution without the compact text
-    assert(graft.sources.ManifestSink.tableProperties(log)
+    assert(graft.sources.ManifestSink.snapshot(log).props
       .get("delete.mode").contains("mor"))
 
     // tail traffic on top of the checkpoint: a mor delete (tail dv on
@@ -2427,7 +2469,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(graft.sources.ManifestSink.fileStats(log)(newName)
       .cols.keySet == Set("k", "n"),
       "new files must keep the PHYSICAL stats keys")
-    assert(graft.sources.ManifestSink.filePartitions(log).contains(newName))
+    assert(graft.sources.ManifestSink.snapshot(log).parts.contains(newName))
     assert(s.sql("SELECT chars FROM graft.snap.cm WHERE id = 500")
       .head().getLong(0) == 50)
 
@@ -2438,13 +2480,13 @@ class SnapshotSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graft.snap.cm.deleteMode", "mor")
     s.sql("DELETE FROM graft.snap.cm WHERE id = 205")
     s.conf.unset("spark.sql.catalog.graft.snap.cm.deleteMode")
-    assert(graft.sources.ManifestSink.deleteVectors(log).nonEmpty)
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.nonEmpty)
     assert(s.sql("SELECT count(*) FROM graft.snap.cm").head().getLong(0) == 8)
 
     // compaction carries the mapping (and resolves the dv); the
     // checkpoint planner agrees with the driver walk post-rename
     s.sql("CALL graft.sys.compact_data('cm', 1000000, 'id')")
-    assert(graft.sources.ManifestSink.deleteVectors(log).isEmpty)
+    assert(graft.sources.ManifestSink.snapshot(log).dvs.isEmpty)
     assert(s.table("graft.snap.cm").schema.fieldNames.toSeq ==
       Seq("id", "language", "chars"),
       "the mapping must survive compaction")
@@ -2467,7 +2509,7 @@ class SnapshotSpec extends AnyFunSuite {
     intercept[Exception](
       s.sql("ALTER TABLE graft.snap.cm RENAME COLUMN chars TO `bad name`"))
     s.sql("ALTER TABLE graft.snap.cm RENAME COLUMN chars TO n")
-    assert(graft.sources.ManifestSink.columnMapping(log).get("n").isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(log).colmap.get("n").isEmpty,
       "renaming back to the physical name must restore identity mapping")
     assert(s.sql("SELECT sum(n) FROM graft.snap.cm").head().getLong(0) > 0)
 
@@ -2534,7 +2576,7 @@ class SnapshotSpec extends AnyFunSuite {
       Seq((1L, "days:ts")), "claimed spec id 1")
     assert(graft.sources.ManifestSink.committedFiles(log).toSet == filesBefore,
       "spec evolution moves zero data files")
-    val book = graft.sources.ManifestSink.partitionSpecs(log)
+    val book = graft.sources.ManifestSink.snapshot(log).specs
     assert(book.currentId == 1 && book.byId.keySet == Set(0, 1))
 
     // era 1: days(ts) — two files (day 1, day 2), each spanning langs
@@ -2542,7 +2584,7 @@ class SnapshotSpec extends AnyFunSuite {
       Seq((5L, ts(1), "de"), (6L, ts(1), "es"), (7L, ts(2), "de"),
         (8L, ts(2), "es")).toDF("k", "ts", "lang")
         .repartition(col("ts")).writeTo("graft.snap.se").append() }
-    val parts = graft.sources.ManifestSink.filePartitions(log)
+    val parts = graft.sources.ManifestSink.snapshot(log).parts
     assert(parts.values.map(_.specId).toSet == Set(0, 1),
       s"both eras' ids on file tuples: $parts")
     // the log text carries the id-prefixed grammar for era-1 files only
@@ -2594,7 +2636,7 @@ class SnapshotSpec extends AnyFunSuite {
     s.sql("CALL graft.sys.compact_data('se', 1000000)").collect()
     val liveAfter = graft.sources.ManifestSink.committedFiles(log)
       .map(f => Paths.get(f).getFileName.toString).toSet
-    val partsAfter = graft.sources.ManifestSink.filePartitions(log)
+    val partsAfter = graft.sources.ManifestSink.snapshot(log).parts
       .filter { case (n, _) => liveAfter.contains(n) }
     assert(partsAfter.keySet == liveAfter &&
       partsAfter.values.forall(_.specId == 1),
@@ -2669,21 +2711,21 @@ class SnapshotSpec extends AnyFunSuite {
     pool.shutdown()
     assert(ids.toSet.size == 2 && ids.forall(i => i == 1L || i == 2L),
       s"racing evolutions claimed distinct ids: $ids")
-    val rcBook = graft.sources.ManifestSink.partitionSpecs(
-      root.resolve("rc").toString)
+    val rcBook = graft.sources.ManifestSink.snapshot(
+      root.resolve("rc").toString).specs
     assert(rcBook.byId.keySet == Set(0, 1, 2), s"all eras recorded: $rcBook")
 
     // evolving to UNPARTITIONED: the empty spec takes an id; new files
     // carry no tuples and plain appends stop fanning out
     s.sql("CALL graft.sys.set_partition_spec('rc', '')").collect()
-    assert(graft.sources.ManifestSink.partitionSpecs(
-      root.resolve("rc").toString).current.isEmpty)
+    assert(graft.sources.ManifestSink.snapshot(
+      root.resolve("rc").toString).specs.current.isEmpty)
     locally { import s.implicits._
       Seq((1L, "x"), (2L, "y")).toDF("a", "b")
         .coalesce(1).writeTo("graft.snap.rc").append() }
     assert(s.sql("SELECT count(*) FROM graft.snap.rc").head().getLong(0) == 2)
-    assert(graft.sources.ManifestSink.filePartitions(
-      root.resolve("rc").toString).isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(
+      root.resolve("rc").toString).parts.isEmpty,
       "no tuples under the empty spec")
     graft.util.Fs.deleteRecursively(root)
   }
@@ -2703,14 +2745,14 @@ class SnapshotSpec extends AnyFunSuite {
       Seq((1L, "de"), (2L, "es")).toDF("k", "lang")
         .coalesce(1).writeTo("graft.snap.up").append() }
     s.sql("CALL graft.sys.set_partition_spec('up', 'lang')").collect()
-    val book = graft.sources.ManifestSink.partitionSpecs(log)
+    val book = graft.sources.ManifestSink.snapshot(log).specs
     assert(book.byId.keySet == Set(1) && book.currentId == 1,
       s"no spec-0 record was ever written: ${book.byId.keySet}")
     // the pre-evolution file is tuple-less and LARGE relative to the
     // target — only the staleSpec gate can make it a candidate
     val r = s.sql("CALL graft.sys.compact_data('up', 1)").collect().head
     assert(r.getLong(0) >= 1, s"the tuple-less file must migrate: $r")
-    val parts = graft.sources.ManifestSink.filePartitions(log)
+    val parts = graft.sources.ManifestSink.snapshot(log).parts
     assert(parts.nonEmpty && parts.values.forall(_.specId == 1),
       s"post-migration tuples all under spec 1: $parts")
     // dynamic partition overwrite now works (the advertised resolution)
@@ -2793,7 +2835,7 @@ class SnapshotSpec extends AnyFunSuite {
     // bytes, by which point the version already refuses at the
     // retention horizon — so the check is the defense against
     // out-of-band loss: hand-cleaned data dirs, partial restores.)
-    val vBaseFile = graft.sources.ManifestSink.committedFilesAsOf(log, vBase)
+    val vBaseFile = graft.sources.ManifestSink.snapshot(log).filesAsOf(vBase)
       .map(f => Paths.get(f).getFileName.toString)
       .filterNot(graft.sources.ManifestSink.committedFiles(log)
         .map(f => Paths.get(f).getFileName.toString).toSet)
@@ -3338,7 +3380,7 @@ class SnapshotSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
     assert(feed == Set((2L, "insert", pubV), (3L, "insert", pubV)),
       s"the feed serves the audited rows AT the publish version: $feed")
-    assert(graft.sources.ManifestSink.tableBranches(log).isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(log).branches.isEmpty,
       "the ref dropped atomically with the publish")
 
     // RACE PIN: main moves after the fork -> publish refuses
@@ -3403,7 +3445,7 @@ class SnapshotSpec extends AnyFunSuite {
     s.conf.set("spark.graft.wap.branch", "fresh")
     s.sql("INSERT INTO graft.snap.bc VALUES (10, 's')")          // epoch 5
     s.conf.unset("spark.graft.wap.branch")
-    val horizon = graft.sources.ManifestSink.compactionHorizon(log)
+    val horizon = graft.sources.ManifestSink.snapshot(log).horizon
     assert(horizon <= 3L,
       s"the sweep must clamp at the branch base 3, horizon: $horizon")
     val pub = s.sql("CALL graft.sys.fast_forward('bc', 'fresh')")
@@ -3415,7 +3457,7 @@ class SnapshotSpec extends AnyFunSuite {
     // ref dropped with the publish: the next commits sweep freely
     (1 to 4).foreach(i =>
       s.sql(s"INSERT INTO graft.snap.bc VALUES (${20 + i}, 'm')"))
-    assert(graft.sources.ManifestSink.compactionHorizon(log) > 3L,
+    assert(graft.sources.ManifestSink.snapshot(log).horizon > 3L,
       "sweeps proceed past the old base once the ref is gone")
     graft.util.Fs.deleteRecursively(root)
   }
@@ -3766,7 +3808,7 @@ class SnapshotSpec extends AnyFunSuite {
     // protects the replay now
     (1 to 12).foreach(i =>
       s.sql(s"INSERT INTO graft.snap.sw VALUES (${100 + i}, 'f')"))
-    assert(graft.sources.ManifestSink.compactionHorizon(log) > pub.getLong(0),
+    assert(graft.sources.ManifestSink.snapshot(log).horizon > pub.getLong(0),
       "the sweep absorbed the staged epochs")
     val vBefore = graft.sources.ManifestSink.newestVersion(log)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -4057,7 +4099,7 @@ class SnapshotSpec extends AnyFunSuite {
       "the publish flips the backfill into main atomically")
     val pubV = graft.sources.ManifestSink.newestVersion(log)
     val pubDelta = graft.sources.ManifestSink
-      .epochDeltas(log, pubV - 1, pubV).head
+      .snapshot(log).epochDeltas(pubV - 1, pubV).head
     assert(pubDelta.op == "overwrite" && pubDelta.removes.size == 1 &&
       pubDelta.adds.size == 1,
       s"ONE overwrite epoch: op=${pubDelta.op} " +
@@ -4171,14 +4213,14 @@ class SnapshotSpec extends AnyFunSuite {
     // below epoch 2
     (1 to 5).foreach(i =>
       s.sql(s"INSERT INTO graft.snap.eq VALUES (${100 + i}, 'z')"))
-    assert(graft.sources.ManifestSink.compactionHorizon(log) < 2L,
+    assert(graft.sources.ManifestSink.snapshot(log).horizon < 2L,
       s"sweeps clamp below live eqdels: " +
-        s"${graft.sources.ManifestSink.compactionHorizon(log)}")
+        s"${graft.sources.ManifestSink.snapshot(log).horizon}")
     // RESOLUTION: compact_data anti-joins the keys out, publishes
     // #eqdrop, and the table returns to plain files — value-invisible
     val before = state()
     s.sql("CALL graft.sys.compact_data('eq', 1000000)").collect()
-    assert(graft.sources.ManifestSink.equalityDeletes(log).isEmpty,
+    assert(graft.sources.ManifestSink.snapshot(log).eqDeletes.isEmpty,
       "compact_data resolves every live record")
     assert(state() == before, "resolution is value-invisible")
     // ... the refusals lift ...
@@ -4186,9 +4228,9 @@ class SnapshotSpec extends AnyFunSuite {
     assert(state().contains((1L, "x")))
     // ... and the sweep is free again (the update + appends push the
     // horizon past the old clamp)
-    assert(graft.sources.ManifestSink.compactionHorizon(log) >= 2L,
+    assert(graft.sources.ManifestSink.snapshot(log).horizon >= 2L,
       s"resolution releases the sweep clamp: " +
-        s"${graft.sources.ManifestSink.compactionHorizon(log)}")
+        s"${graft.sources.ManifestSink.snapshot(log).horizon}")
     graft.util.Fs.deleteRecursively(root)
   }
 
@@ -4309,7 +4351,7 @@ class SnapshotSpec extends AnyFunSuite {
     // clamp at newest - 6 — the consumer's window stays loose
     (1 to 14).foreach(i => s.sql(s"INSERT INTO graft.snap.fr VALUES ($i)"))
     val newest = graft.sources.ManifestSink.newestVersion(log)
-    val horizon = graft.sources.ManifestSink.compactionHorizon(log)
+    val horizon = graft.sources.ManifestSink.snapshot(log).horizon
     assert(horizon <= newest - 6,
       s"routine sweeps clamp at newest-6: horizon=$horizon newest=$newest")
     // a consumer lagging exactly min_window epochs still reads its feed
@@ -4555,8 +4597,8 @@ class SnapshotSpec extends AnyFunSuite {
       s"version 0 must carry its recorded commit time, got $tsMs " +
         s"(created in [$beforeMs, $afterMs])")
     assert(v0.getString(1) == "metadata", "a #ts is not an #op: kind unchanged")
-    assert(graft.sources.ManifestSink.versionAtTimestamp(
-      root.resolve("ct").toString, afterMs * 1000L) == 0L)
+    assert(graft.sources.ManifestSink.snapshot(
+      root.resolve("ct").toString).versionAt(afterMs * 1000L) == 0L)
     graft.util.Fs.deleteRecursively(root)
   }
 
