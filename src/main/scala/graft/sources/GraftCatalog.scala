@@ -1133,7 +1133,7 @@ private[sources] final case class ColumnMap(colmap: Map[String, String],
   *  - INCREMENTAL read (the lake-CDC primitive):
   *    `spark.read.option("sinceVersion", s).table(…)` → the files
   *    appended by epochs (s, asOfVersion|newest] via
-  *    [[ManifestSink.committedFilesBetween]] — "process only what
+  *    [[ManifestSink.Snapshot.filesBetween]] — "process only what
   *    landed since the last run"; refused when the window crosses the
   *    compaction sweep (per-epoch deltas are unrecoverable from the
   *    compact union), mirroring Delta CDF's log-retention contract.

@@ -407,7 +407,8 @@ object ManifestSink {
       * main face until published. */
     private def mainTail: Seq[Loose] = tail.filter(_.branch.isEmpty)
 
-    private def compactRecs: Seq[LogRecord] =
+    /** The compact file's records (parsed on first use, then cached). */
+    private[sources] def compactRecs: Seq[LogRecord] =
       compactFile.fold(Seq.empty[LogRecord]) { case (p, a) => records(p, a) }
     private def recsOf(p: Path): Seq[LogRecord] =
       tailOf.get(p).map(_.recs).getOrElse {
@@ -1112,7 +1113,6 @@ object ManifestSink {
     /** The loose tail (branch-staged epochs included), for a sweep or
       * a publish. */
     private[sources] def looseTail: Seq[Loose] = tail
-    private[sources] def compactRecords: Seq[LogRecord] = compactRecs
     /** The listed entries a sweep through `upTo` supersedes: every epoch
       * at or below it, every older compact and its checkpoint artifacts. */
     private[sources] def supersededBy(upTo: Long): Seq[Path] =
@@ -1605,7 +1605,7 @@ object ManifestSink {
   /** Does `outer` contain every field of `inner` (case-insensitive
     * name; equal type or a recorded-narrow type the declared one
     * WIDENS — nullability aside)? The additive-evolution containment
-    * test shared by [[verifyDeclaredSchema]] and the widest-schema
+    * test shared by [[Snapshot.verifyDeclared]] and the widest-schema
     * resolution. */
   private[sources] def containsSchema(outer: StructType, inner: StructType): Boolean =
     inner.fields.forall(rf => outer.fields.exists(df =>
@@ -2199,7 +2199,7 @@ object ManifestSink {
     // `#txn` per writer, the distinct `#schema`/`#spec` records, the
     // last `#prop` per key, `#colmap`, `#tag` and `#branch`, and the
     // per-file records and live dvs of files still in the union
-    val r = replay(snap.compactRecords +:
+    val r = replay(snap.compactRecs +:
       absorbed.filter(_.branch.isEmpty).map(_.recs))
     // refuse to fold CONFLICTING stats for one name into the compact:
     // first-seen-wins would freeze stats that may describe different
@@ -3893,7 +3893,7 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
       .filter(e => e._1 > start && e._1 <= end)
     // an unreadable window (epochs swept into the compact) must NOT
     // silently stall at `start` — admit through `end` so the downstream
-    // committedFilesBetween read refuses loudly, the documented contract
+    // changePartitions read refuses loudly, the documented contract
     if (window.isEmpty) return end
     var spent = 0L
     var last = start
